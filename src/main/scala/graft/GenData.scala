@@ -127,12 +127,7 @@ object GenData {
     require(unknown.isEmpty,
       s"unknown table(s) ${unknown.mkString(",")}; known: ${known.toSeq.sorted.mkString(",")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, None).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     gen(spark, out, mult, tables)
     spark.stop()

@@ -1,95 +1,102 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-/** Measurement harness for the optimization rounds (guide §1): per-JOB
-  * wall-clock breakdown of selected catalog queries, after a warm pass, under
-  * the SAME session configuration as [[Bench]]. A 235-query bench total only
-  * says WHICH query is slow; this says which job/stage inside it — the
+/** Measurement harness for the optimization rounds (guide §1): where a
+  * selected catalog query's time goes, after a warm pass, under the SAME
+  * session configuration as [[Bench]]. A 235-query bench total only says
+  * WHICH query is slow; this says which phase or job inside it — the
   * empirical half of the guide's measure-first loop.
   *
-  * Usage: runMain graft.Profile <name-substring>[,<substring>...] [passes]
+  * Per query, each rep times the Catalyst phases — DataFrame construction
+  * (incl. eager analysis per op), analysis, optimization, physical planning
+  * (guide §7.3: driver-side single-threaded work, paid on every bench pass
+  * because the bench re-plans every query) — then executes the plan the way
+  * Bench does. It prints the per-phase minimum over reps, then the per-job
+  * breakdown of the fastest rep.
+  *
+  * Usage: runMain graft.Profile [name-substring[,substring...]] [reps]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
   */
 object Profile {
+  private final case class Job(id: Int, desc: String, ms: Double, stages: Int)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val sel = args.headOption.map(_.split(',').toSeq).getOrElse(Seq.empty)
-    val passes = args.drop(1).headOption.map(_.toInt).getOrElse(1)
-    val fixtureBytes = {
-      def sz(f: java.io.File): Long =
-        if (java.nio.file.Files.isSymbolicLink(f.toPath)) 0L
-        else if (f.isDirectory) Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
-        else f.length()
-      sz(new java.io.File(sfDir))
-    }
-    val initParts = math.min(4096L,
-      math.max(cpus.toLong, fixtureBytes / (8L << 20))).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.toString)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "52428800")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
+    val spark = GraftSession.builder(cpus, Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // job-level capture: (jobId, description, nanos, nStages, nTasks)
-    case class Rec(id: Int, desc: String, var ms: Double = 0, var stages: Int = 0)
-    val jobs = new scala.collection.mutable.ArrayBuffer[Rec]()
+    // job-level capture of the current execution
+    val jobs = new scala.collection.mutable.ArrayBuffer[Job]()
     val starts = new scala.collection.mutable.HashMap[Int, (Long, String, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.synchronized {
         val d = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
         starts(js.jobId) = (System.nanoTime(), d, js.stageInfos.size)
       }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = jobs.synchronized {
         starts.remove(je.jobId).foreach { case (t0, d, ns) =>
-          val r = Rec(je.jobId, d, (System.nanoTime() - t0) / 1e6, ns)
-          jobs += r
+          jobs += Job(je.jobId, d, (System.nanoTime() - t0) / 1e6, ns)
         }
       }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    def materialize(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
+    })
 
     val names = SparkEntry.queries.toSeq
       .filter(kv => sel.isEmpty || sel.exists(kv._1.contains)).sortBy(_._1)
-    // warm pass (codegen + at-rest index builds), untimed
+    // warm pass (codegen, at-rest index builds, FileIndex caches), untimed
     names.foreach { case (n, fn) =>
-      try materialize(fn(spark, sfDir)) catch {
+      try fn(spark, sfDir).queryExecution.toRdd.count() catch {
         case t: Throwable => System.err.println(s"[profile] warm $n: ${t.getMessage}")
       }
     }
-    for (p <- 1 to passes; (n, fn) <- names) {
-      jobs.clear()
-      val t0 = System.nanoTime()
+
+    val phases = Seq("construct", "analyze", "optimize", "plan", "execute")
+    val sums = Array.fill(phases.size)(0.0)
+    names.foreach { case (n, fn) =>
       try {
-        materialize(fn(spark, sfDir))
-        val total = (System.nanoTime() - t0) / 1e9
-        println(f"\n== $n pass $p: $total%.3f s, ${jobs.size} jobs ==")
-        val sumJobs = jobs.map(_.ms).sum
-        jobs.foreach { r =>
+        val best = Array.fill(phases.size)(Double.MaxValue)
+        var bestJobs = Seq.empty[Job]
+        var bestTotal = Double.MaxValue
+        for (_ <- 1 to reps) {
+          jobs.synchronized(jobs.clear())
+          val t0 = System.nanoTime()
+          val qe = fn(spark, sfDir).queryExecution
+          val t1 = System.nanoTime()
+          qe.analyzed
+          val t2 = System.nanoTime()
+          qe.optimizedPlan
+          val t3 = System.nanoTime()
+          qe.executedPlan
+          val t4 = System.nanoTime()
+          qe.toRdd.count()
+          val t5 = System.nanoTime()
+          val cur = Seq(t0, t1, t2, t3, t4, t5).sliding(2).map(p => (p(1) - p(0)) / 1e6).toArray
+          // construction may run jobs too (eager counts, iterative loops),
+          // so the job breakdown belongs to the whole rep, not to execute
+          if (cur.sum < bestTotal) {
+            bestTotal = cur.sum
+            bestJobs = jobs.synchronized(jobs.toList)
+          }
+          for (i <- phases.indices) best(i) = math.min(best(i), cur(i))
+        }
+        for (i <- phases.indices) sums(i) += best(i)
+        println(s"\n== $n (min of $reps, ms): " +
+          phases.indices.map(i => f"${phases(i)} ${best(i)}%.1f").mkString(", ") +
+          s"; ${bestJobs.size} jobs ==")
+        bestJobs.foreach { r =>
           println(f"  job ${r.id}%4d  ${r.ms}%8.1f ms  stages=${r.stages}%2d  ${r.desc.take(90)}")
         }
-        println(f"  [jobs sum ${sumJobs / 1000}%.3f s; gaps (plan/driver) ${total - sumJobs / 1000}%.3f s]")
+        val jobsMs = bestJobs.map(_.ms).sum
+        println(f"  [rep ${bestTotal / 1000}%.3f s; jobs sum ${jobsMs / 1000}%.3f s; gaps (plan/driver) ${(bestTotal - jobsMs) / 1000}%.3f s]")
       } catch {
         case t: Throwable => System.err.println(s"[profile] $n: ${t.getMessage}")
       }
     }
+    println("\nTOTAL (ms): " + phases.indices.map(i => f"${phases(i)} ${sums(i)}%.1f").mkString(", "))
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,40 +10,17 @@ object Verify {
     val only: Option[Seq[String]] = args.drop(2).headOption.map(_.split(',').toSeq)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, Some(sfDir)).getOrCreate()
     // Opt-in ANSI dual-run (SPARK_GRAFT_ANSI=true): the engine's integer
     // division / overflow conventions are load-bearing in ~40 queries, and
     // non-ANSI Spark turns a class of defects (overflow wrap, bad casts,
     // div-by-zero) into silent NULLs the oracle may coincidentally match.
     // A periodic ANSI pass catches that class wholesale; the driver never
-    // sets the var, so per-round behavior is unchanged.
-    val ansi = sys.env.getOrElse("SPARK_GRAFT_ANSI", "false").toBoolean
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.ansi.enabled", ansi)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // data-sized reducer counts for corpus-mass aggregates (see Bench):
-      // initial partitions scale with the fixture so AQE can settle big
-      // exchanges near the advisory size without taxing small runs
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        math.min(4096L, math.max(cpus.toLong, {
-          def sz(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
-            else f.length()
-          sz(new java.io.File(sfDir)) / (8L << 20)
-        })).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", "52428800")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // belt-and-braces for bloomPredicate's two ≤384 MB sketch partials
-      // (RelOps.scala) — the default 1g leaves no headroom at the cap
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // 61 plans > default 100
-      .getOrCreate()
+    // sets the var, so per-round behavior is unchanged. Set either way:
+    // Spark 4 defaults to ANSI on, while the oracle run has always been off.
+    spark.conf.set("spark.sql.ansi.enabled",
+      sys.env.getOrElse("SPARK_GRAFT_ANSI", "false").toBoolean)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>

@@ -17,7 +17,7 @@ object Fs {
     * bench/verify drivers construct every query fresh on every pass, so the
     * same immutable table was being re-resolved hundreds of times per run
     * (measured: 40-85 ms of the per-query plan-construction time at sf0.1;
-    * guide §6 file listing / §7.3 driver-side work — PlanTime probe,
+    * guide §6 file listing / §7.3 driver-side work — Profile phase probe,
     * OPTIMIZATION_r13.md). Memoizing the resolution is the catalog-table
     * discipline (Spark's own `filesourcePartitionFileCacheSize` caches
     * listings per session for catalog tables): NO data is cached — every

@@ -651,7 +651,7 @@ object TextStats {
     * builder runs an EAGER driver-side job at DataFrame-construction time —
     * the benchmark-side bitmap collect (bounded by mBits = 8 KB at the
     * default; the fixed-benchmark law bounds the scanned side to ~1000
-    * docs). Callers that only want the plan (plan dumps, PlanTime probes)
+    * docs). Callers that only want the plan (plan dumps, Profile phase timings)
     * pay that job on first construction. The bitmap and its broadcast are
     * MEMOIZED per (documents signature, mBits, kHashes, mod) — the at-rest
     * index discipline ([[graft.ext.Dedup.prefixIndexTable]]): the benchmark

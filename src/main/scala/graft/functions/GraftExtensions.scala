@@ -8,75 +8,48 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * at session build time, so deployments can enable them cluster-wide with
   * `spark.sql.extensions=graft.functions.GraftExtensions` (no code changes in
   * user jobs). Local callers can equivalently use
-  * [[VectorExpressions.register]] on an existing session.
+  * [[VectorExpressions.register]] on an existing session; both paths loop over
+  * the one table [[GraftExtensions.functions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot_long"),
-      new ExpressionInfo(classOf[LongDotProduct].getName, "graft_dot_long"),
-      (exprs: Seq[Expression]) => LongDotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bounded_lev"),
-      new ExpressionInfo(classOf[BoundedLevenshtein].getName, "graft_bounded_lev"),
-      (exprs: Seq[Expression]) => BoundedLevenshtein(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_skeleton"),
-      new ExpressionInfo(classOf[ConfusableSkeleton].getName, "graft_skeleton"),
-      (exprs: Seq[Expression]) => ConfusableSkeleton(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sq8"),
-      new ExpressionInfo(classOf[Sq8Codes].getName, "graft_sq8"),
-      (exprs: Seq[Expression]) => Sq8Codes(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "graft_gram_hashes"),
-      // n must be a foldable int literal — the gram width is a plan-time
-      // constant everywhere (2/3/5), never data
-      (exprs: Seq[Expression]) => GramHashes(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_gram_hashes(words, n): n must be an int literal, got $other")
-      })))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_prefix"),
-      new ExpressionInfo(classOf[Md5Prefix].getName, "graft_md5_prefix"),
-      // n must be a foldable int literal — the hex-prefix width is a
-      // plan-time constant everywhere (4/7/15), never data
-      (exprs: Seq[Expression]) => Md5Prefix(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_md5_prefix(s, n): n must be an int literal, got $other")
-      })))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomMightContainLong].getName, "graft_bloom_contains"),
-      // the handle resolves to a broadcast sketch at analysis time, on the
-      // driver — see BloomRegistry
-      (exprs: Seq[Expression]) => BloomMightContainLong(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_positions"),
-      new ExpressionInfo(classOf[BloomPositions].getName, "graft_bloom_positions"),
-      (exprs: Seq[Expression]) => BloomPositions(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bitmap_contains"),
-      new ExpressionInfo(classOf[BitmapContainsLong].getName, "graft_bitmap_contains"),
-      (exprs: Seq[Expression]) => BitmapContainsLong(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString))))
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     ext.injectOptimizerRule(_ => SpecializeFloatDot)
   }
+}
+
+object GraftExtensions {
+  /** `n` of a width argument that must be a foldable int literal — gram and
+    * hex-prefix widths are plan-time constants everywhere, never data. */
+  private def intLiteral(call: String, e: Expression): Int = e.eval() match {
+    case i: Int => i
+    case other => throw new IllegalArgumentException(
+      s"$call: n must be an int literal, got $other")
+  }
+
+  /** The handle resolves to a broadcast sketch at analysis time, on the
+    * driver — see BloomRegistry. */
+  private def sketch(e: Expression) = BloomRegistry.resolve(e.eval().toString)
+
+  /** Every native function the engine exposes, by SQL name. The single list
+    * behind both [[GraftExtensions]] and [[VectorExpressions.register]]. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", e => DotProduct(e(0), e(1))),
+    ("graft_dot_long", e => LongDotProduct(e(0), e(1))),
+    ("graft_argmax_cell", e => ArgMaxCell(e(0), e(1), e(2))),
+    ("graft_bounded_lev", e => BoundedLevenshtein(e(0), e(1), e(2))),
+    ("graft_nfc", e => NfcNormalize(e(0))),
+    ("graft_skeleton", e => ConfusableSkeleton(e(0))),
+    ("graft_minhash_sig", e => MinHashSignature(e(0))),
+    ("graft_sq8", e => Sq8Codes(e(0))),
+    ("graft_gram_hashes", e =>
+      GramHashes(e(0), intLiteral("graft_gram_hashes(words, n)", e(1)))),
+    ("graft_md5_prefix", e =>
+      Md5Prefix(e(0), intLiteral("graft_md5_prefix(s, n)", e(1)))),
+    ("graft_bloom_contains", e => BloomMightContainLong(e(0), sketch(e(1)))),
+    ("graft_bloom_positions", e => BloomPositions(e(0), sketch(e(1)))),
+    ("graft_bitmap_contains", e => BitmapContainsLong(e(0), sketch(e(1)))))
 }

@@ -1,10 +1,23 @@
 package graft
 
-import graft.functions.{FloatDotProduct, VectorExpressions}
+import graft.functions.{FloatDotProduct, GraftExtensions, VectorExpressions}
 import org.apache.spark.sql.functions._
 
 /** Native expression + optimizer-rule behavior. */
 class VectorSpec extends SparkSuite {
+
+  test("one function table: a GraftExtensions session carries every native name; register adds none") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    assert(spark.conf.get("spark.sql.extensions") == classOf[GraftExtensions].getName)
+    val registry = spark.sessionState.functionRegistry
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.size == 13 && names.distinct == names)
+    val missing = names.filterNot(n => registry.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"injected session lacks $missing")
+    val before = registry.listFunction().toSet
+    VectorExpressions.register(spark)
+    assert(registry.listFunction().toSet == before)
+  }
 
   test("graft_dot equals the HOF formulation bit-for-bit") {
     val s = spark; import s.implicits._
