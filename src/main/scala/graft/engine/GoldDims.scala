@@ -3,7 +3,6 @@ package graft.engine
 import java.sql.Date
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Gold dimensions: the reference's 9-dim star schema
@@ -28,8 +27,9 @@ object GoldDims {
     RelOps.rangedRowNumber(df, name, orderCols)
 
   /** dim_date: range-source spine + 20 calendar attributes
-    * (`reporting.py:55-93`). Seeded from orders min/max purchase time —
-    * the one driver round-trip in the pipeline. */
+    * (`reporting.py:55-93`). Seeded from orders min/max purchase time, a
+    * driver round-trip at construction (as is `RelOps.rangedRowNumber`'s
+    * min/max for each integer-keyed dim). */
   def dimDate(spark: SparkSession, silverOrders: DataFrame): DataFrame = {
     val mm = silverOrders.agg(
       to_date(min(col("Ord_Purchase_Time"))).as("mn"),
@@ -195,15 +195,21 @@ object GoldDims {
             .when(col("Review_Score").isin(4, 5), "Positive")
             .otherwise("Unknown").as("Score_Category")))
 
-  /** All 9 dims, keyed like `reporting.py:237-247`. */
-  def all(spark: SparkSession, silver: Map[String, DataFrame]): Map[String, DataFrame] = Map(
-    "dim_date" -> dimDate(spark, silver("orders")),
-    "dim_time" -> dimTime(spark),
-    "dim_customers" -> dimCustomers(silver("customers")),
-    "dim_products" -> dimProducts(silver("products")),
-    "dim_sellers" -> dimSellers(silver("sellers")),
-    "dim_geography" -> dimGeography(silver("geolocation")),
-    "dim_order_status" -> dimOrderStatus(silver("orders")),
-    "dim_payment_types" -> dimPaymentTypes(silver("order_payments")),
-    "dim_review_scores" -> dimReviewScores(silver("order_reviews")))
+  /** All 9 dims, keyed like `reporting.py:237-247`, each built only when its
+    * function is called: `dim_date`, `dim_geography` and `dim_review_scores`
+    * run a driver min/max job at construction. */
+  def builders(spark: SparkSession, silver: Map[String, DataFrame]): Seq[(String, () => DataFrame)] = Seq(
+    "dim_date" -> (() => dimDate(spark, silver("orders"))),
+    "dim_time" -> (() => dimTime(spark)),
+    "dim_customers" -> (() => dimCustomers(silver("customers"))),
+    "dim_products" -> (() => dimProducts(silver("products"))),
+    "dim_sellers" -> (() => dimSellers(silver("sellers"))),
+    "dim_geography" -> (() => dimGeography(silver("geolocation"))),
+    "dim_order_status" -> (() => dimOrderStatus(silver("orders"))),
+    "dim_payment_types" -> (() => dimPaymentTypes(silver("order_payments"))),
+    "dim_review_scores" -> (() => dimReviewScores(silver("order_reviews"))))
+
+  /** All 9 dims, built now. */
+  def all(spark: SparkSession, silver: Map[String, DataFrame]): Map[String, DataFrame] =
+    builders(spark, silver).map { case (name, build) => name -> build() }.toMap
 }

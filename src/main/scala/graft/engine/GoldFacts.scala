@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Gold facts: the reference's 3 fact tables (`spark_jobs/reporting.py:249-409`)

@@ -1,9 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ExecutionException
+import java.util.concurrent.atomic.AtomicInteger
 
-import graft.engine.{Analytics, Pipeline}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import graft.engine.{Analytics, Bronze, Pipeline}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** End-to-end bronze→silver→gold over tiny Olist-shaped CSVs. */
 class PipelineSpec extends SparkSuite {
@@ -60,6 +66,11 @@ class PipelineSpec extends SparkSuite {
 
     assert(stages.toSeq == Seq("bronze", "silver", "quality_checks", "gold"))
     assert(report.qualityChecks.forall(_.passed))
+    assert(report.silverRows.keySet == Set("customers", "orders", "geolocation", "order_items",
+      "order_payments", "order_reviews", "products", "sellers"))
+    report.silverRows.foreach { case (name, rows) =>
+      assert(rows == spark.read.parquet(s"$outDir/silver/$name").count(), name)
+    }
     assert(report.silverRows("orders") == 2)
     assert(report.goldTables.size == 12) // 9 dims + 3 facts
 
@@ -90,5 +101,128 @@ class PipelineSpec extends SparkSuite {
     val second = spark.read.parquet(s"$outDir/gold/fact_orders")
       .orderBy("Order_SK").collect().map(_.toString).toSeq
     assert(first == second)
+  }
+
+  test("a source with no rows: its silver count is 0 and the run completes") {
+    fixtures()
+    write("olist_sellers_dataset.csv", "seller_id,seller_zip_code_prefix,seller_city,seller_state")
+    val emptyOut = "/tmp/graft_olist_empty"
+    val report = Pipeline.run(spark, csvDir, emptyOut)
+    assert(report.silverRows("sellers") == 0)
+    assert(report.silverRows("orders") == 2)
+    assert(spark.read.parquet(s"$emptyOut/gold/dim_sellers").count() == 0)
+    rmTree(emptyOut)
+  }
+
+  /** Live threads of a stage's write pool. */
+  private def poolThreads(stage: String): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(s"pipeline-$stage-")).toSet
+
+  test("failed stage: the write's own exception reaches the caller after every attempt has drained") {
+    fixtures()
+    val failDir = "/tmp/graft_olist_fail"
+    rmTree(failDir)
+    Files.createDirectories(Paths.get(failDir))
+    Files.writeString(Paths.get(s"$failDir/bronze"), "not a directory")
+    // what one write under a regular file throws when run on its own
+    val direct = intercept[Exception](Bronze.writeParquet(spark.range(1).toDF(), s"$failDir/bronze/x"))
+
+    val retries = ArrayBuffer.empty[(String, Int, Throwable)]
+    val liveAtRetry = ArrayBuffer.empty[Set[Thread]]
+    val stages = ArrayBuffer.empty[String]
+    val e = intercept[Exception] {
+      Pipeline.run(spark, csvDir, failDir, onStageComplete = stages += _,
+        onRetry = (stage, attempt, err) => {
+          liveAtRetry += poolThreads("bronze")
+          retries += ((stage, attempt, err))
+        })
+    }
+    assert(!e.isInstanceOf[ExecutionException])
+    assert(e.getClass == direct.getClass, e.toString)
+    assert(retries.map(r => (r._1, r._2)).toSeq == Seq("bronze" -> 1), "one retry for two attempts")
+    assert(retries.head._3.getClass == direct.getClass)
+    assert(liveAtRetry.toSeq == Seq(Set.empty[Thread]), "no write of attempt 1 runs into attempt 2")
+    assert(poolThreads("bronze").isEmpty)
+    assert(stages.isEmpty)
+    rmTree(failDir)
+  }
+
+  test("stage attempts: siblings of a failed write finish before the retry; no pool thread survives") {
+    val running = new AtomicInteger()
+    val runningAtRetry = ArrayBuffer.empty[Int]
+    var attempt = 0
+    val tasks = (0 until 6).map { i => () =>
+      running.incrementAndGet()
+      try {
+        if (i == 2 && attempt == 1) throw new IllegalStateException("write 2 failed")
+        Thread.sleep(200)
+        i
+      } finally running.decrementAndGet()
+    }
+    val out = Pipeline.withRetry("s", maxRetries = 2,
+      onRetry = (_, _, err) => {
+        assert(err.isInstanceOf[IllegalStateException] && err.getMessage == "write 2 failed")
+        runningAtRetry += running.get()
+      }) {
+      attempt += 1
+      Pipeline.concurrently(spark, "s")(tasks)
+    }
+    assert(out == (0 until 6))
+    assert(attempt == 2)
+    assert(runningAtRetry.toSeq == Seq(0))
+    assert(poolThreads("s").isEmpty)
+
+    // every task runs even after one fails, and the first failure is rethrown as is
+    val finished = new AtomicInteger()
+    val e = intercept[IllegalStateException] {
+      Pipeline.concurrently(spark, "s")((0 until 6).map { i => () =>
+        if (i == 0) throw new IllegalStateException("first")
+        Thread.sleep(100)
+        if (i == 5) throw new IllegalStateException("later")
+        finished.incrementAndGet()
+      })
+    }
+    assert(e.getMessage == "first")
+    assert(finished.get() == 4)
+    assert(poolThreads("s").isEmpty)
+  }
+
+  test("job groups: every job of a stage carries the group set when that stage began; none after gold") {
+    fixtures()
+    val sc = spark.sparkContext
+    val groups = ArrayBuffer.empty[String] // job group of each started job, in delivery order
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit = groups.synchronized {
+        groups += Option(job.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      }
+    }
+    val next = Map("bronze" -> "silver", "silver" -> "quality_checks",
+      "quality_checks" -> "gold", "gold" -> "after_gold")
+    // jobs seen by the listener when each stage completed
+    val boundaries = ArrayBuffer.empty[(String, Int)]
+    def seen(): Int = { TestListenerBus.drain(sc); groups.synchronized(groups.size) }
+    sc.addSparkListener(listener)
+    try {
+      val before = seen()
+      sc.setJobGroup("bronze", "bronze")
+      Pipeline.run(spark, csvDir, outDir, onStageComplete = stage => {
+        boundaries += stage -> seen()
+        sc.setJobGroup(next(stage), next(stage))
+      })
+      val after = seen()
+      val jobs = groups.synchronized(groups.toSeq)
+      var from = before
+      for ((stage, to) <- boundaries) {
+        val stageJobs = jobs.slice(from, to)
+        assert(stageJobs.forall(_ == stage), s"$stage: $stageJobs")
+        from = to
+      }
+      assert(boundaries.map(_._1).toSeq == Seq("bronze", "silver", "quality_checks", "gold"))
+      assert(jobs.slice(before, boundaries.head._2).nonEmpty, "bronze ran jobs")
+      assert(after == boundaries.last._2, s"jobs after gold: ${jobs.drop(boundaries.last._2)}")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
   }
 }
