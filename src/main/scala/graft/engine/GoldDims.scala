@@ -15,21 +15,20 @@ import org.apache.spark.sql.functions._
   * (yyyyMMdd / hour) exactly as the reference computes them.
   *
   * Scale note: every entity dim is a narrow projection (+ optional distinct);
-  * the SK window over an unpartitioned order is fine at dimension cardinality
-  * (thousands..millions) but would be the one thing to re-shard if a dimension
-  * ever approached fact scale.
+  * the SK numbering is a range-partitioned sort plus a distributed sequence
+  * ([[RelOps.rangedRowNumber]]), so it needs no re-shard even if a dimension
+  * approached fact scale.
   */
 object GoldDims {
 
   private def sk(name: String, orderCols: Seq[String]): DataFrame => DataFrame = df =>
-    // distributed chunked rank — identical values (SK keys are unique), no
-    // all-to-one WindowExec even if a dimension approaches fact scale
+    // sorted distributed sequence — the row_number values (SK keys are
+    // unique), no all-to-one WindowExec even if a dimension approaches fact scale
     RelOps.rangedRowNumber(df, name, orderCols)
 
   /** dim_date: range-source spine + 20 calendar attributes
     * (`reporting.py:55-93`). Seeded from orders min/max purchase time, a
-    * driver round-trip at construction (as is `RelOps.rangedRowNumber`'s
-    * min/max for each integer-keyed dim). */
+    * driver round-trip at construction — the only one in the gold build. */
   def dimDate(spark: SparkSession, silverOrders: DataFrame): DataFrame = {
     val mm = silverOrders.agg(
       to_date(min(col("Ord_Purchase_Time"))).as("mn"),
@@ -37,10 +36,13 @@ object GoldDims {
     dimDateFromRange(spark, mm.getDate(0), mm.getDate(1))
   }
 
+  /** One row per day from `start` to `end`: the days of a `range` are
+    * distinct by construction, so no dedup is needed. A few thousand days
+    * at most, so one partition (and one file when written). */
   def dimDateFromRange(spark: SparkSession, start: Date, end: Date): DataFrame = {
     val days = java.time.temporal.ChronoUnit.DAYS.between(
       start.toLocalDate, end.toLocalDate) + 1
-    spark.range(days)
+    spark.range(0, days, 1, 1)
       .select(date_add(lit(start), col("id").cast("int")).as("date"))
       .select(
         date_format(col("date"), "yyyyMMdd").cast("int").as("Date_SK"),
@@ -62,7 +64,6 @@ object GoldDims {
         lit("").as("HolidayName"),
         year(col("date")).as("FiscalYear"),
         quarter(col("date")).as("FiscalQuarter"))
-      .distinct()
   }
 
   /** dim_time: 24-hour spine with period/AM-PM/business-hour when-chains
@@ -196,8 +197,8 @@ object GoldDims {
             .otherwise("Unknown").as("Score_Category")))
 
   /** All 9 dims, keyed like `reporting.py:237-247`, each built only when its
-    * function is called: `dim_date`, `dim_geography` and `dim_review_scores`
-    * run a driver min/max job at construction. */
+    * function is called: `dim_date` runs a driver min/max job at
+    * construction. */
   def builders(spark: SparkSession, silver: Map[String, DataFrame]): Seq[(String, () => DataFrame)] = Seq(
     "dim_date" -> (() => dimDate(spark, silver("orders"))),
     "dim_time" -> (() => dimTime(spark)),

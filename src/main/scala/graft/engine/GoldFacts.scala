@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
 object GoldFacts {
 
   private def withSk(name: String, orderCols: Seq[String], df: DataFrame): DataFrame =
-    // distributed chunked rank — identical values (fact SK keys are unique
-    // natural keys), and the fact build no longer funnels through ONE
+    // sorted distributed sequence — the row_number values (fact SK keys are
+    // unique natural keys), and the fact build never funnels through ONE
     // partition for its surrogate keys at 100 TB
     RelOps.rangedRowNumber(df, name, orderCols)
 

@@ -115,8 +115,10 @@ object Pipeline {
       silver.toSeq.map { case (name, df) => () =>
         val rows = Observation()
         Bronze.writeParquet(df.observe(rows, count(lit(1)).as("rows")), s"$outDir/silver/$name")
-        // re-read so gold plans scan parquet instead of recomputing the lineage
-        (name, spark.read.parquet(s"$outDir/silver/$name"), rows.get("rows").asInstanceOf[Long])
+        // re-read so gold plans scan parquet instead of recomputing the
+        // lineage; the schema is the one just written, so no inference job
+        (name, spark.read.schema(df.schema).parquet(s"$outDir/silver/$name"),
+          rows.get("rows").asInstanceOf[Long])
       }
     }
     val silverStored = silverOut.map { case (n, df, _) => n -> df }.toMap
@@ -127,12 +129,11 @@ object Pipeline {
     val checks = Quality.gate(silverStored)
     onStageComplete("quality_checks")
 
-    // Gold: 9 dims + 3 facts, each built inside its own task so the driver
-    // min/max jobs of dim_date and the integer-keyed dims overlap and retry
-    // with the writes. Facts are year-partitioned (derived from the yyyyMMdd
-    // date SK) so BI date-range queries get partition pruning at the file
-    // listing level — the scale lever the reference's unpartitioned JDBC
-    // tables never had.
+    // Gold: 9 dims + 3 facts, each built inside its own task so dim_date's
+    // driver min/max job overlaps and retries with the writes. Facts are
+    // year-partitioned (derived from the yyyyMMdd date SK) so BI date-range
+    // queries get partition pruning at the file listing level — the scale
+    // lever the reference's unpartitioned JDBC tables never had.
     def fact(name: String, dateSk: String, partCol: String)(build: => DataFrame) =
       name -> (() => Bronze.writeParquet(build.withColumn(partCol, expr(s"$dateSk div 10000")),
         s"$outDir/gold/$name", partitionBy = Seq(partCol)))

@@ -14,11 +14,15 @@ object Quality {
     def passed: Boolean = violations == 0L
   }
 
+  /** Violation count of `cond`: 0, not NULL, over an empty table. */
+  private def violations(cond: Column): Column =
+    coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L))
+
   /** null checks on order_items keys (`E-commerce_dag.py:22-29`). */
   def checkOrderItems(silverItems: DataFrame): Seq[CheckResult] = {
     val row = silverItems.agg(
-      sum(when(col("Ord_ID").isNull, 1).otherwise(0)).cast("long").as("null_ord"),
-      sum(when(col("Prod_ID").isNull, 1).otherwise(0)).cast("long").as("null_prod")).head()
+      violations(col("Ord_ID").isNull).as("null_ord"),
+      violations(col("Prod_ID").isNull).as("null_prod")).head()
     Seq(
       CheckResult("order_items.Ord_ID not null", row.getLong(0)),
       CheckResult("order_items.Prod_ID not null", row.getLong(1)))
@@ -27,8 +31,8 @@ object Quality {
   /** null + 32-char-id checks on order_reviews (`E-commerce_dag.py:30-37`). */
   def checkOrderReviews(silverReviews: DataFrame): Seq[CheckResult] = {
     val row = silverReviews.agg(
-      sum(when(col("Rev_ID").isNull, 1).otherwise(0)).cast("long").as("null_rev"),
-      sum(when(length(col("Rev_ID")) =!= 32, 1).otherwise(0)).cast("long").as("bad_len")).head()
+      violations(col("Rev_ID").isNull).as("null_rev"),
+      violations(length(col("Rev_ID")) =!= 32).as("bad_len")).head()
     Seq(
       CheckResult("order_reviews.Rev_ID not null", row.getLong(0)),
       CheckResult("order_reviews.Rev_ID length = 32", row.getLong(1)))

@@ -177,35 +177,49 @@ object RelOps {
   /** Distributed deterministic ROW_NUMBER over a TOTAL order — the
     * scale-safe replacement for `row_number().over(Window.orderBy(...))`,
     * which moves the whole input to ONE partition (Spark's WindowExec
-    * warning, and a hard wall at fact scale). Chunked parallel-prefix
-    * rank, the same shape [[graft.ext.Dedup.sortedNeighborhoodPairs]]
-    * uses: rank within order-aligned chunks in parallel, then add
-    * per-chunk offsets (one tiny aggregate over the chunk keys, broadcast
-    * back).
+    * warning, and a hard wall at fact scale). One global sort on
+    * `orderCols` (a range-partitioned exchange; NULLs first, as in the
+    * window), then Spark's distributed-sequence operator
+    * (`AttachDistributedSequence`, reached through
+    * [[org.apache.spark.sql.SequenceBridge]]) numbers the sorted rows, plus
+    * one. No step gathers rows into one partition, and no data-derived
+    * chunk key exists, so keys sharing a prefix spread like any others.
+    *
+    * The operator numbers rows inside ONE execution, over ONE child RDD:
+    * when the child has more than one partition it persists that RDD
+    * between its per-partition count job and its output job, and unpersists
+    * it on cleanup (which AQE runs when the operator's stage completes).
+    * Counts and numbers therefore come from the same sorted partitions, so
+    * re-sampled range boundaries or re-coalesced partitions in another
+    * execution cannot shift an offset.
+    *
+    * Output equals `row_number().over(Window.orderBy(orderCols))` whenever
+    * `orderCols` is a total order (unique keys — every SK assignment in
+    * this repo guarantees one); on ties both forms depend on the layout.
+    * The SK column is appended last. */
+  def rangedRowNumber(df: DataFrame, name: String,
+      orderCols: Seq[String]): DataFrame =
+    org.apache.spark.sql.SequenceBridge
+      .withSequenceColumn(df.sort(orderCols.map(col): _*), "__seq")
+      .withColumn(name, col("__seq") + 1L)
+      .drop("__seq")
+
+  /** Distributed INCLUSIVE cumulative sum of `valueCol` over a total
+    * order — chunked parallel-prefix: sum within order-aligned chunks in
+    * parallel, then add per-chunk offsets (one tiny aggregate over the
+    * chunk keys, broadcast back), the shape
+    * [[graft.ext.Dedup.sortedNeighborhoodPairs]] uses. For running-total
+    * operators (token-stream offsets, sequence packing) that would
+    * otherwise need the all-to-one window.
     *
     * The chunk key is a DETERMINISTIC, ORDER-MONOTONE function of the ROW
     * DATA — a string prefix, or integer division against a min/max driver
-    * seed (the A1 pattern) — NEVER `spark_partition_id()` after a range
-    * repartition: physical partition ids are not stable across the two
-    * executions of an unmaterialized lineage (range boundaries are
-    * re-sampled per run and AQE re-coalesces), so a pid-keyed offsets join
-    * silently drops or mis-ranks rows. Monotone data chunks make every
-    * execution agree by construction.
-    *
-    * Output is IDENTICAL to the single-partition form whenever `orderCols`
-    * is a total order (unique keys — every SK assignment in this repo
-    * guarantees one); on ties BOTH forms are layout-dependent. Cost: one
-    * hash exchange on the chunk key + a chunk-count aggregate, instead of
-    * an all-to-one sort. */
-  def rangedRowNumber(df: DataFrame, name: String,
-      orderCols: Seq[String]): DataFrame =
-    chunkedPrefixAgg(df, name, orderCols, lit(1L))
-
-  /** Distributed INCLUSIVE cumulative sum of `valueCol` over a total
-    * order — same chunked parallel-prefix machinery as
-    * [[rangedRowNumber]] (which is this with value 1), for running-total
-    * operators (token-stream offsets, sequence packing) that would
-    * otherwise need the all-to-one window. */
+    * seed — NEVER `spark_partition_id()` after a range repartition:
+    * physical partition ids are not stable across the two executions of
+    * an unmaterialized lineage (range boundaries are re-sampled per run and
+    * AQE re-coalesces), so a pid-keyed offsets join silently drops or
+    * mis-sums rows. Monotone data chunks make every execution agree by
+    * construction. */
   def rangedCumsum(df: DataFrame, name: String, orderCols: Seq[String],
       valueCol: Column): DataFrame =
     chunkedPrefixAgg(df, name, orderCols, valueCol)
@@ -243,7 +257,7 @@ object RelOps {
             lit(-1L))
         }
       // other key types: single chunk — correct, just not parallel (no
-      // current SK call site orders by a non-string non-integral key)
+      // current call site orders by a non-string non-integral key)
       case _ => lit(0L)
     }
     val wIn = Window.partitionBy(col("__chunk")).orderBy(cols: _*)

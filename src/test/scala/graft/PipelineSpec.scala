@@ -114,6 +114,37 @@ class PipelineSpec extends SparkSuite {
     rmTree(emptyOut)
   }
 
+  /** A run whose `file` has a header and no rows passes the quality gate
+    * with 0 violations on every check and writes the year-partitioned
+    * `fact` with no data file. */
+  private def assertEmptyGatedSource(file: String, header: String, silver: String,
+      fact: String): Unit = {
+    fixtures()
+    write(file, header)
+    val emptyOut = "/tmp/graft_olist_empty"
+    val report = Pipeline.run(spark, csvDir, emptyOut)
+    assert(report.silverRows(silver) == 0)
+    assert(report.qualityChecks.size == 4)
+    assert(report.qualityChecks.forall(_.violations == 0L), report.qualityChecks)
+    assert(report.goldTables.size == 12)
+    val files = Files.walk(Paths.get(s"$emptyOut/gold/$fact"))
+    try assert(!files.iterator.asScala.exists(_.toString.endsWith(".parquet")), fact)
+    finally files.close()
+    rmTree(emptyOut)
+  }
+
+  test("an empty order_items: the quality gate reports 0 violations and the run completes") {
+    assertEmptyGatedSource("olist_order_items_dataset.csv",
+      "order_id,order_item_id,product_id,seller_id,shipping_limit_date,price,freight_value",
+      "order_items", "fact_sales")
+  }
+
+  test("an empty order_reviews: the quality gate reports 0 violations and the run completes") {
+    assertEmptyGatedSource("olist_order_reviews_dataset.csv",
+      "review_id,order_id,review_score,review_comment_title,review_comment_message,review_creation_date,review_answer_timestamp",
+      "order_reviews", "fact_reviews")
+  }
+
   /** Live threads of a stage's write pool. */
   private def poolThreads(stage: String): Set[Thread] =
     Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(s"pipeline-$stage-")).toSet

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.python.AttachDistributedSequenceExec
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Physical-plan regression tests: the 100 TB properties that make these
   * queries scale are asserted on the PLAN, not just the output, so a future
@@ -21,13 +24,24 @@ class PlanSpec extends SparkSuite {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
-  test("gold SK rank (rangedRowNumber): runs chunk-partitioned, never an all-to-one window over the data") {
+  test("gold SK rank (rangedRowNumber): a range-sorted distributed sequence, never an all-to-one window") {
     // the gold dim/fact SK assignment path (GoldDims.sk / GoldFacts.withSk)
     val df = spark.range(1000).selectExpr("CAST(id AS STRING) AS k", "id AS v")
-    val p = graft.engine.RelOps.rangedRowNumber(df, "sk", Seq("k"))
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("hashpartitioning(__chunk"),
-      s"SK rank lost its chunk partitioning (all-to-one window is back):\n$p")
+    val ranked = graft.engine.RelOps.rangedRowNumber(df, "sk", Seq("k"))
+    ranked.collect() // drive to completion so the adaptive plan is final
+    val nodes = finalNodes(ranked.queryExecution.executedPlan)
+    val text = ranked.queryExecution.executedPlan.toString
+    val seq = nodes.collect { case a: AttachDistributedSequenceExec => a }
+    assert(seq.size == 1, s"SK rank lost its distributed sequence:\n$text")
+    assert(finalNodes(seq.head.child).exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }, s"the sequence is not fed by a range-partitioned sort:\n$text")
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), s"a window is back in the SK rank:\n$text")
+    assert(!nodes.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+      case _ => false
+    }, s"the SK rank gathers rows into one partition:\n$text")
   }
 
   test("q227 long repeat spans: semi-join candidate shape, no cartesian, no self-join") {
