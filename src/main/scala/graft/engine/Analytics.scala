@@ -19,6 +19,7 @@ object Analytics {
         (col("Order_Date_SK") / 10000).cast("int").as("Year"),
         ((col("Order_Date_SK") % 10000) / 100).cast("int").as("Month"))
       .agg(sum(col("Sales_Amount")).as("Sales"))
+      .coalesce(1) // one row per (year, month): lag window and sort need no exchange
     val w = Window.partitionBy(col("Month")).orderBy(col("Year"))
     monthly
       // same-period-last-year: only compare against Year-1 — if a year is
@@ -56,6 +57,7 @@ object Analytics {
       .agg(
         sum(col("Total_Payment_Value")).as("day_sales"),
         count(lit(1)).as("day_orders"))
+      .coalesce(1) // one row per day: the global average needs no exchange
       .agg(
         avg(col("day_sales")).as("Avg_Daily_Sales"),
         avg(col("day_orders")).as("Avg_Daily_Orders"),
@@ -69,6 +71,7 @@ object Analytics {
     val total = Window.partitionBy()
     joined.groupBy(col(groupCol))
       .agg(sum(col("Sales_Amount")).as("Group_Sales"))
+      .coalesce(1) // one row per group: total window and sort need no exchange
       .withColumn("Pct_Of_Total",
         round(col("Group_Sales") * 100.0 / sum(col("Group_Sales")).over(total), 2))
       .orderBy(col("Group_Sales").desc)

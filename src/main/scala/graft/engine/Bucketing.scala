@@ -105,21 +105,18 @@ object Bucketing {
     math.min(4096L, math.max(32L, ceilDiv)).toInt
   }
 
-  /** Derived-count memo per immutable fixture dir (the COUNT(*) that sizes
-    * the layout should not rerun per invocation — same discipline as the
-    * LSH plane-count memo). */
-  private val bucketsMemo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   /** `numBuckets = 0` (the catalog default) derives the count from the
     * larger (fact) side's COUNT(*) via [[bucketCountFor]] — both tables get
-    * the SAME count, the co-located-join requirement. An explicit count
-    * pins it (tests, and any deployment that froze a layout). */
+    * the SAME count, the co-located-join requirement; the count is a
+    * [[SessionMemo]] entry, so the COUNT(*) does not rerun per invocation.
+    * An explicit count pins it (tests, and any deployment that froze a
+    * layout). */
   def bucketedOrderRevenue(spark: SparkSession, dir: String,
       numBuckets: Int = 0, tablePrefix: String = "graft_bk"): DataFrame = {
     val buckets: Int =
       if (numBuckets > 0) numBuckets
-      else bucketsMemo.computeIfAbsent(dir,
-        d => Int.box(bucketCountFor(Tables.lineitem(spark, d).count())))
+      else SessionMemo(spark, ("buckets", dir), s"$dir/lineitem.parquet")(
+        bucketCountFor(Tables.lineitem(spark, dir).count()))
     val prefix = s"${tablePrefix}_${Fs.dirTag(dir)}_b$buckets"
     Fs.withPrefixLock(prefix) { // serialize the build-or-reuse decision
       if (!spark.catalog.tableExists(s"${prefix}_orders") ||

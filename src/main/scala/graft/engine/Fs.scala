@@ -11,61 +11,6 @@ package graft.engine
   */
 object Fs {
 
-  /** Per-(session, path) memo of a RESOLVED parquet-read DataFrame.
-    * `spark.read.parquet` pays driver-side source resolution on every call —
-    * file listing plus a footer read for schema inference — and the
-    * bench/verify drivers construct every query fresh on every pass, so the
-    * same immutable table was being re-resolved hundreds of times per run
-    * (measured: 40-85 ms of the per-query plan-construction time at sf0.1;
-    * guide §6 file listing / §7.3 driver-side work — Profile phase probe,
-    * OPTIMIZATION_r13.md). Memoizing the resolution is the catalog-table
-    * discipline (Spark's own `filesourcePartitionFileCacheSize` caches
-    * listings per session for catalog tables): NO data is cached — every
-    * execution still scans the parquet bytes — only the logical read plan
-    * (schema + file index) is reused, exactly as if the path had been
-    * registered as an external table once at session start.
-    *
-    * Staleness guard: the memo entry carries a one-level directory
-    * SIGNATURE (root mtime + child names/mtimes) and is re-resolved when it
-    * changes — a caller that overwrites the path (test fixtures regenerated
-    * under one scratch dir; a deployment republishing a snapshot in place)
-    * gets a fresh file index instead of FILE_NOT_EXIST on the old part
-    * files. The signature is a directory-entry scan (microseconds), ~1000×
-    * cheaper than the full resolution it guards; between bench passes over
-    * immutable fixtures it never changes and the memo always hits. Non-local
-    * paths (a URI scheme) skip the memo — java.io.File cannot stat them.
-    * Per-round iteration scratch (`$tmp/labels$i`, [[overwriteVersioned]]
-    * paths) keeps calling `spark.read.parquet` directly anyway: their file
-    * sets change every invocation, so a memo would never hit. Keyed on the
-    * session so a test suite's stopped sessions never leak a stale plan
-    * into a new one. */
-  private val readMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (Long, org.apache.spark.sql.DataFrame)]
-
-  /** Eviction on context end (round-13 ADVICE): without it, entries for
-    * stopped sessions retain the SparkSession and its resolved plans
-    * forever — an unbounded leak in a long-lived process that creates many
-    * sessions (test suites, services). One listener per SparkContext; on
-    * ApplicationEnd every entry whose session rides that context drops. */
-  private val evictHooked = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[org.apache.spark.SparkContext]()
-
-  private[graft] def evictFor(sc: org.apache.spark.SparkContext): Unit = {
-    readMemo.keySet.removeIf(k => k._1.sparkContext eq sc)
-    evictHooked.remove(sc): Unit
-  }
-
-  private def hookEviction(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (evictHooked.add(sc))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evictFor(sc)
-      })
-  }
-
   /** One-level directory signature: root mtime + child names, mtimes AND
     * sizes. Child sizes close the same-second in-place rewrite hole
     * (round-13 ADVICE): File.lastModified is millisecond-granular and some
@@ -88,18 +33,27 @@ object Fs {
     h
   }
 
+  /** A parquet read, RESOLVED once per (session, path) through
+    * [[SessionMemo]]. `spark.read.parquet` pays driver-side source
+    * resolution on every call — file listing plus a footer read for schema
+    * inference — and the bench/verify drivers construct every query fresh on
+    * every pass, so the same table was being re-resolved hundreds of times
+    * per run (measured: 40-85 ms of the per-query plan-construction time at
+    * sf0.1; OPTIMIZATION_r13.md). NO data is cached — every execution still
+    * scans the parquet bytes — only the logical read plan (schema + file
+    * index) is reused, as if the path had been registered as an external
+    * table once at session start. The memo's [[pathSig]] check re-resolves a
+    * path rewritten in place (a fresh file index instead of FILE_NOT_EXIST on
+    * the old part files). Non-local paths (a URI scheme) skip the memo —
+    * java.io.File cannot stat them. Per-round iteration scratch
+    * (`$tmp/labels$i`, [[overwriteVersioned]] paths) keeps calling
+    * `spark.read.parquet` directly: their file sets change every invocation,
+    * so a memo would never hit. The session is part of the key: a resolved
+    * DataFrame belongs to the session that built it. */
   def readParquet(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.DataFrame =
     if (path.contains("://")) spark.read.parquet(path)
-    else {
-      hookEviction(spark)
-      val sig = pathSig(path)
-      readMemo.compute((spark, path), (k, cur) =>
-        if (cur != null && cur._1 == sig) cur
-        else (sig, k._1.read.parquet(k._2)))._2
-    }
-
-  private[graft] def readMemoSize: Int = readMemo.size
+    else SessionMemo(spark, ("read", spark, path), path)(spark.read.parquet(path))
 
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private val stableDirs =

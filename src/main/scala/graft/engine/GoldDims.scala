@@ -209,8 +209,4 @@ object GoldDims {
     "dim_order_status" -> (() => dimOrderStatus(silver("orders"))),
     "dim_payment_types" -> (() => dimPaymentTypes(silver("order_payments"))),
     "dim_review_scores" -> (() => dimReviewScores(silver("order_reviews"))))
-
-  /** All 9 dims, built now. */
-  def all(spark: SparkSession, silver: Map[String, DataFrame]): Map[String, DataFrame] =
-    builders(spark, silver).map { case (name, build) => name -> build() }.toMap
 }

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -86,11 +87,10 @@ object RelOps {
 
   /** Approximate-membership PREDICATE on a long key set: builds a Bloom
     * sketch over `keys` (one DISK_ONLY materialization pays for count +
-    * sketch, the guardedBroadcast discipline), broadcasts it, and returns a
-    * registry HANDLE the caller embeds as
-    * `graft_bloom_contains(<long expr>, '<handle>')` — anywhere an
-    * expression can go, including INSIDE a higher-order-function lambda
-    * over an in-row array.
+    * sketch, the guardedBroadcast discipline), broadcasts it, and returns
+    * the broadcast, which the caller probes with a typed Column
+    * ([[graft.functions.BloomProbes]]) — anywhere an expression can go,
+    * including INSIDE a higher-order-function lambda over an in-row array.
     *
     * That last placement is the point (q227's repeat spans, round 11): the
     * membership test runs per POSITION against the row's own gram-hash
@@ -105,15 +105,10 @@ object RelOps {
     * CAPPED at `maxBytes` — past the cap the fpp degrades gracefully
     * (more verification work, same exactness) instead of the helper
     * failing or falling back to a probe-mass reshuffle. Returns None for
-    * an empty key set (caller should emit a constant-false filter).
-    *
-    * The caller must `BloomRegistry.remove(handle)` once its DataFrame is
-    * built (analysis resolves the handle eagerly; the expression keeps the
-    * broadcast, not the registry entry). */
+    * an empty key set (caller should emit a constant-false filter). */
   def bloomPredicate(keys: DataFrame, keyCol: String, fpp: Double = 0.001,
-      maxBytes: Long = 384L << 20): Option[String] = {
+      maxBytes: Long = 384L << 20): Option[Broadcast[Array[Byte]]] = {
     val spark = keys.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     // NULL keys are dropped here, not trusted away: this is a generic
     // helper, and a null reaching the `getLong(0)` below would surface as
     // an opaque task-level NPE inside treeAggregate (round-11 ADVICE). A
@@ -170,8 +165,7 @@ object RelOps {
       bf.writeTo(bos)
       bos.toByteArray
     }
-    Some(graft.functions.BloomRegistry.put(
-      spark.sparkContext.broadcast(sketchBytes)))
+    Some(spark.sparkContext.broadcast(sketchBytes))
   }
 
   /** Distributed deterministic ROW_NUMBER over a TOTAL order — the
@@ -181,7 +175,7 @@ object RelOps {
     * `orderCols` (a range-partitioned exchange; NULLs first, as in the
     * window), then Spark's distributed-sequence operator
     * (`AttachDistributedSequence`, reached through
-    * [[org.apache.spark.sql.SequenceBridge]]) numbers the sorted rows, plus
+    * [[org.apache.spark.sql.GraftBridge]]) numbers the sorted rows, plus
     * one. No step gathers rows into one partition, and no data-derived
     * chunk key exists, so keys sharing a prefix spread like any others.
     *
@@ -199,7 +193,7 @@ object RelOps {
     * The SK column is appended last. */
   def rangedRowNumber(df: DataFrame, name: String,
       orderCols: Seq[String]): DataFrame =
-    org.apache.spark.sql.SequenceBridge
+    org.apache.spark.sql.GraftBridge
       .withSequenceColumn(df.sort(orderCols.map(col): _*), "__seq")
       .withColumn(name, col("__seq") + 1L)
       .drop("__seq")

@@ -478,13 +478,12 @@ object Dedup {
     * shouldn't — the prefix is computed on exactly the deduped class set.
     * Per-doc rarest-first order via an array sort (38-element in-row
     * sorts), not a row_number window (which range-sorts every exploded
-    * row). */
-  private val prefixTableMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * row). The table name is a [[graft.engine.SessionMemo]] entry, so a
+    * rebuilt session (a new catalog) builds its own. */
   def prefixIndexTable(spark: SparkSession, dir: String,
       thresholdPpm: Long): String =
-    prefixTableMemo.computeIfAbsent(s"$dir#$thresholdPpm", { _ =>
+    graft.engine.SessionMemo(spark, ("ppfx", dir, thresholdPpm),
+      s"$dir/documents.parquet") {
       val docToks = graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
       // layout sizing: ~13 prefix rows per doc at t = 0.8 (plen ≈ 0.2·m + 1,
       // E[m] ≈ 38 on 10-100-token docs) — a heuristic is fine for LAYOUT
@@ -515,7 +514,7 @@ object Dedup {
         }
       }
       table
-    })
+    }
 
   /** The shared EXACT-verification tail of every candidate-then-verify
     * pipeline over the shingle-array index ([[prefixFilterJoin]],
@@ -1689,6 +1688,12 @@ object Dedup {
       .orderBy("source")
   }
 
+  /** Corpus row count, a [[graft.engine.SessionMemo]] entry (a parquet
+    * metadata read) — sizes corpus-proportional exchanges. */
+  private[graft] def docCount(spark: SparkSession, dir: String): Long =
+    graft.engine.SessionMemo(spark, ("docs", dir), s"$dir/documents.parquet")(
+      Tables.documents(spark, dir).count())
+
   /** Cross-language shingle-overlap matrix: for each (lang_a < lang_b) pair,
     * the number of DISTINCT 3-word shingles both language slices contain —
     * the cross-lingual contamination / code-switching diagnostic a corpus
@@ -1703,31 +1708,7 @@ object Dedup {
     * shingle) table twice more through a sort-merge SELF-join on the shingle
     * string; under a Heaps-growing vocabulary the distinct-shingle table
     * grows faster than the corpus, so those extra shingle-mass shuffles are
-    * exactly the wrong place to spend them.
-    *
-    * IMMUTABLE-SNAPSHOT CONTRACT (round-11 ADVICE; also [[docsCountMemo]]
-    * below): the memo is keyed by `dir` and never invalidated — the
-    * engine-wide assumption
-    * (Fs.buildOnce at-rest indexes, benchModFor, planesMemo) is that a
-    * corpus directory is an immutable snapshot for the life of the JVM; a
-    * new corpus version lands at a NEW path (the lakehouse snapshot-id
-    * convention). Regenerating data in place under a memoized dir would
-    * leave a language added later mapped to bitmask 0 (its pairs silently
-    * vanish) — same failure class as reading any at-rest index after
-    * in-place mutation. */
-  private val langsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  /** Corpus row count memoized per dir (parquet metadata read, the
-    * benchModFor discipline; immutable-snapshot contract above) — sizes
-    * corpus-proportional exchanges. */
-  private val docsCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def docCount(spark: SparkSession, dir: String): Long =
-    docsCountMemo.computeIfAbsent(dir, _ =>
-      Tables.documents(spark, dir).count())
-
+    * exactly the wrong place to spend them. */
   def langOverlapMatrix(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // Round 10 (the sf1000 probe ENOSPC'd in the shingle aggregate): the
@@ -1743,10 +1724,11 @@ object Dedup {
     // Pairs expand in-row from the mask bits against the sorted inventory,
     // so output order matches the collect_set form exactly. EXACT semantics,
     // same oracle; >62 languages falls back to the wide form. The inventory
-    // is memoized per dir (the benchModFor / planesMemo discipline —
-    // round-10 ADVICE low): it is a corpus constant, and re-collecting it
-    // per invocation added a full lang-column scan to every call.
-    val langs: Seq[String] = langsMemo.computeIfAbsent(dir, _ =>
+    // is a [[graft.engine.SessionMemo]] entry (round-10 ADVICE low): it is a
+    // corpus constant, and re-collecting it per invocation added a full
+    // lang-column scan to every call.
+    val langs: Seq[String] = graft.engine.SessionMemo(spark, ("langs", dir),
+      s"$dir/documents.parquet")(
       Tables.documents(spark, dir)
         .filter(col("lang").isNotNull)
         .select(col("lang")).distinct().orderBy("lang").as[String].collect().toSeq)
@@ -2194,17 +2176,16 @@ object Dedup {
       case None => // no repeated class anywhere -> no candidates
         docGrams.select(col("doc_id"), lit(1).as("p"), lit("").as("gram"))
           .filter(lit(false))
-      case Some(handle) =>
+      case Some(bc) =>
         // survivors come from ONE codegen loop over the hash array
         // (graft_bloom_positions); only they get a gram string built
-        val c = docGrams
+        docGrams
           .withColumn("ghs", expr(s"graft_gram_hashes(w, $k)"))
-          .select(col("doc_id"), explode(expr(
-            s"""transform(graft_bloom_positions(ghs, '$handle'),
-               |  i -> named_struct('p', i, 'gram', concat_ws(' ', slice(w, i, $k))))""".stripMargin)).as("pg"))
+          .select(col("doc_id"), explode(transform(
+            graft.functions.BloomProbes.positions(col("ghs"), bc),
+            i => struct(i.as("p"),
+              concat_ws(" ", slice(col("w"), i, lit(k))).as("gram")))).as("pg"))
           .select(col("doc_id"), col("pg.p").as("p"), col("pg.gram").as("gram"))
-        graft.functions.BloomRegistry.remove(handle)
-        c
     }
     // exact verification: within the candidate stream, a gram's count equals
     // its GLOBAL count whenever that is ≥ 2 (all occurrences of a repeated

@@ -160,23 +160,22 @@ object Similarity {
     * at-rest structure in this engine uses, and exactly how a production
     * vector store lays out its index (clustered by posting/cell key).
     * Results unchanged: layout is not semantics, the oracle agrees row for
-    * row. Built once per (dir, layout) per session; the memo only skips the
-    * tableExists probe. */
-  private val lshTableMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * row. Built once per (dir, layout) per session; the table name is a
+    * [[graft.engine.SessionMemo]] entry, so a rebuilt session (a new
+    * catalog) builds its own. */
   def lshBucketedTable(spark: SparkSession, dir: String): String =
-    lshTableMemo.computeIfAbsent(dir, { d =>
-      val idx = spark.read.parquet(lshProjectionsPath(spark, d))
+    graft.engine.SessionMemo(spark, ("lshbk", dir), s"$dir/embeddings.parquet") {
+      val idx = spark.read.parquet(lshProjectionsPath(spark, dir))
         .select(col("vec_id"), col("v"), col("nrm"), col("bucket"))
       // parquet metadata count — no full scan; sizes the file-bucket layout
       val buckets = graft.engine.Bucketing.bucketCountFor(idx.count())
-      val table = s"graft_lshbk_${graft.engine.Fs.dirTag(d)}_b$buckets"
+      val table = s"graft_lshbk_${graft.engine.Fs.dirTag(dir)}_b$buckets"
       graft.engine.Fs.withPrefixLock(table) {
         if (!spark.catalog.tableExists(table))
           graft.engine.Bucketing.writeBucketed(idx, table, "bucket", buckets)
       }
       table
-    })
+    }
 
   /** [[embeddingNearDupPairs]]'s pair machinery over any pre-bucketed frame
     * with (vec_id, v, nrm, bucket) — also the planted-degenerate-bucket test
@@ -269,21 +268,17 @@ object Similarity {
     * default) derives the count from COUNT(*) via [[lshPlanesFor]]; an
     * explicit count pins it (tests, and any deployment that froze the
     * index geometry — a STREAM appending to an existing index must pin the
-    * count the index was built with). */
-  /** Per-dir memo of the derived plane count: deriving it runs a COUNT(*)
-    * job, and every consumer of the at-rest index (q33/q34/q53/q90/q144/q177,
-    * each invocation) would otherwise pay that count just to NAME an index
-    * already on disk. Same JVM-level, immutable-fixture-dir keying discipline
-    * as [[graft.engine.Fs.buildOnce]]; a mutable-source deployment keys on a
-    * snapshot/commit id instead. */
-  private val planesMemo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
+    * count the index was built with). The derived count is a
+    * [[graft.engine.SessionMemo]] entry: deriving it runs a COUNT(*) job,
+    * and every consumer of the at-rest index (each invocation) would
+    * otherwise pay that count just to NAME an index already on disk. */
   def lshProjectionsPath(spark: SparkSession, dir: String, nPlanes: Int = 0,
       dim: Int = DefaultDim): String = {
     val planes: Int =
       if (nPlanes > 0) nPlanes
-      else planesMemo.computeIfAbsent(dir,
-        d => Int.box(lshPlanesFor(Tables.embeddings(spark, d).count())))
+      else graft.engine.SessionMemo(spark, ("lshPlanes", dir),
+        s"$dir/embeddings.parquet")(
+        lshPlanesFor(Tables.embeddings(spark, dir).count()))
     graft.engine.Fs.buildOnce(
       s"graft_lshprj_${graft.engine.Fs.dirTag(dir)}_p${planes}_d$dim",
       spark.sessionState.newHadoopConf()) { p =>

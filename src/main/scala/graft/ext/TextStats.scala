@@ -167,15 +167,12 @@ object TextStats {
   }
 
   /** Benchmark membership mod for [[decontaminate]] — max(50, nDocs/1000),
-    * memoized per immutable fixture dir (the [[graft.ext.Similarity]]
-    * planesMemo discipline; a mutable-source deployment keys on a snapshot
-    * id). At the shipped SFs (≤ 50 k docs) this is exactly the historical
-    * mod 50, so small-SF oracles are numerically unchanged. */
-  private val benchModMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * a [[graft.engine.SessionMemo]] entry. At the shipped SFs (≤ 50 k docs)
+    * this is exactly the historical mod 50, so small-SF oracles are
+    * numerically unchanged. */
   private[graft] def benchModFor(spark: SparkSession, dir: String): Long =
-    benchModMemo.computeIfAbsent(dir,
-      d => Long.box(math.max(50L, Tables.documents(spark, d).count() / 1000L)))
+    graft.engine.SessionMemo(spark, ("benchMod", dir), s"$dir/documents.parquet")(
+      math.max(50L, Tables.documents(spark, dir).count() / 1000L))
 
   /** Token co-occurrence matrix (q119): document-frequency counts for pairs
     * of top-vocabulary tokens appearing in the same document — the input
@@ -649,75 +646,65 @@ object TextStats {
     *
     * CONTRACT (round-13 ADVICE): unlike the lazy builders elsewhere, this
     * builder runs an EAGER driver-side job at DataFrame-construction time —
-    * the benchmark-side bitmap collect (bounded by mBits = 8 KB at the
-    * default; the fixed-benchmark law bounds the scanned side to ~1000
-    * docs). Callers that only want the plan (plan dumps, Profile phase timings)
-    * pay that job on first construction. The bitmap and its broadcast are
-    * MEMOIZED per (documents signature, mBits, kHashes, mod) — the at-rest
-    * index discipline ([[graft.ext.Dedup.prefixIndexTable]]): the benchmark
-    * set is immutable within a run, so later constructions reuse the
-    * broadcast instead of re-collecting and leaking one broadcast per
-    * construction. The signature key re-builds on fixture change. */
-  private val bloomBitmapMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, Long, String, Int, Int, Long),
-    org.apache.spark.broadcast.Broadcast[Array[Byte]]]()
-
-  private[graft] def bloomBitmapMemoSize: Int = bloomBitmapMemo.size
-
+    * the benchmark-side bitmap collect ([[bloomBitmap]]). Callers that only
+    * want the plan (plan dumps, Profile phase timings) pay that job on first
+    * construction; later constructions reuse the memoized broadcast. */
   def bloomDecontaminate(spark: SparkSession, dir: String, mBits: Int = 65536,
       kHashes: Int = 3): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
-    val sh = Tables.documents(spark, dir)
+    val mod = benchModFor(spark, dir)
+    val bc = bloomBitmap(spark, dir, mBits, kHashes)
+    val allSet = shinglePositions(kHashes, mBits)
+      .map(graft.functions.BloomProbes.bitmapContains(_, bc)).reduce(_ && _)
+    bloomShingles(spark, dir).filter(col("doc_id") % mod =!= 0)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_shingles"),
+        sum(when(allSet, 1L).otherwise(0L)).as("n_bloom_positive"))
+      .orderBy("doc_id")
+  }
+
+  // (doc_id, sh): each doc's distinct 3-word shingles
+  private def bloomShingles(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 3)
       .select(col("doc_id"), explode(expr(
         """array_distinct(transform(sequence(1, size(words)-2),
           |  i -> concat_ws(' ', element_at(words, i), element_at(words, i+1), element_at(words, i+2))))""".stripMargin)).as("sh"))
-    def posCols: Seq[Column] = (0 until kHashes).map(j =>
+
+  // the kHashes md5-derived bit positions of shingle `sh`
+  private def shinglePositions(kHashes: Int, mBits: Int): Seq[Column] =
+    (0 until kHashes).map(j =>
       call_function("graft_md5_prefix",
         concat(lit(s"$j:"), col("sh")), lit(7)) % mBits)
-    // benchmark membership follows the fixed-benchmark law ([[benchModFor]],
-    // round 10): a corpus-proportional bench (the old fixed % 50) would both
-    // saturate the fixed mBits filter and outgrow the bits broadcast; a
-    // ~1000-doc bench keeps the bit table bounded at every corpus scale.
+
+  /** The benchmark side of [[bloomDecontaminate]], a [[graft.engine.SessionMemo]]
+    * entry: an EXACT `mBits`-bit bitmap (8 KB at the default, whatever the
+    * corpus size) of the positions of every shingle in the
+    * `doc_id % benchModFor == 0` slice, broadcast. Only that slice is read,
+    * so a corpus-side document never changes its bytes. */
+  private[graft] def bloomBitmap(spark: SparkSession, dir: String, mBits: Int,
+      kHashes: Int): org.apache.spark.broadcast.Broadcast[Array[Byte]] = {
+    graft.functions.VectorExpressions.register(spark)
+    // the fixed-benchmark law ([[benchModFor]], round 10) keeps the bench
+    // ~1000 docs, so it neither saturates the filter nor outgrows the
+    // broadcast. The bitmap is collected on the driver (bounded by mBits)
+    // and probed per row: the r13 replacement of an explode + broadcast
+    // join + string-keyed re-aggregation of the corpus shingle stream, with
+    // identical bits (same md5 positions; the oracle is unchanged).
     val mod = benchModFor(spark, dir)
-    // The filter itself is mBits BITS by construction (8 KB at the default
-    // 65536) no matter how large corpus or benchmark grow — so it is
-    // collected into an EXACT driver-side bitmap and tested per row via the
-    // broadcast `graft_bitmap_contains` probe (r13 optimization pass). The
-    // previous shape exploded every corpus shingle into kHashes position
-    // rows, broadcast-JOINED them against the set-position table, and
-    // re-aggregated on the (doc_id, 25-char shingle) string key to count
-    // survivors — 3× the corpus stream plus a string-keyed exchange, all to
-    // recover per-row information a bit probe answers in place (guide §2.3
-    // / §2.4). Bit semantics are IDENTICAL (same md5 positions, exact
-    // bitmap, no approximation): the collect is the A1 driver-seed pattern,
-    // bounded by mBits, and the oracle is unchanged.
-    val bc = bloomBitmapMemo.computeIfAbsent(
-      (spark.sparkContext,
-        graft.engine.Fs.pathSig(s"$dir/documents.parquet"), dir, mBits, kHashes,
-        mod), { _ =>
-        val bytes = new Array[Byte]((mBits + 7) / 8)
-        sh.filter(col("doc_id") % mod === 0).select(col("sh")).distinct()
-          .select(explode(array(posCols: _*)).as("pos")).distinct()
-          .collect().foreach { r =>
-            val p = r.getLong(0).toInt
-            bytes(p >> 3) = (bytes(p >> 3) | (1 << (p & 7))).toByte
-          }
-        spark.sparkContext.broadcast(bytes)
-      })
-    val handle = graft.functions.BloomRegistry.put(bc)
-    val allSet = posCols.map(p =>
-      call_function("graft_bitmap_contains", p, lit(handle))).reduce(_ && _)
-    val out = sh.filter(col("doc_id") % mod =!= 0)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(when(allSet, 1L).otherwise(0L)).as("n_bloom_positive"))
-      .orderBy("doc_id")
-    // analysis resolved the handle eagerly; the expression keeps the
-    // broadcast, not the registry entry (the bloomPredicate contract)
-    graft.functions.BloomRegistry.remove(handle)
-    out
+    graft.engine.SessionMemo(spark, ("bloomBitmap", dir, mBits, kHashes, mod),
+      s"$dir/documents.parquet") {
+      val bytes = new Array[Byte]((mBits + 7) / 8)
+      bloomShingles(spark, dir).filter(col("doc_id") % mod === 0)
+        .select(col("sh")).distinct()
+        .select(explode(array(shinglePositions(kHashes, mBits): _*)).as("pos"))
+        .distinct()
+        .collect().foreach { r =>
+          val p = r.getLong(0).toInt
+          bytes(p >> 3) = (bytes(p >> 3) | (1 << (p & 7))).toByte
+        }
+      spark.sparkContext.broadcast(bytes)
+    }
   }
 
   /** Per-language length-decile band filter — quantile-based corpus filtering

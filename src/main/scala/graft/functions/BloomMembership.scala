@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 /** Bloom-filter membership test over a broadcast sketch
-  * (`graft_bloom_contains(key, 'handle')`): true iff the long key MIGHT be in
+  * ([[BloomProbes.mightContain]]): true iff the long key MIGHT be in
   * the key set the sketch was built from — no false negatives, tunable false
   * positives.
   *
@@ -27,11 +27,9 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * False negatives cannot occur, so no true member is ever lost — the
   * soundness half that matters.
   *
-  * The driver-side handoff ([[BloomRegistry]]) exists only because a SQL
-  * function signature cannot carry a byte payload: the registered builder
-  * resolves the handle to the broadcast AT ANALYSIS TIME on the driver, and
-  * the resulting expression instance is self-contained thereafter (cluster-
-  * safe; executors never touch the registry). */
+  * The expression is built as a typed Column ([[BloomProbes]]), not a SQL
+  * function: a SQL call cannot carry the broadcast, and the expression
+  * instance holding it is self-contained (cluster-safe). */
 case class BloomMightContainLong(child: Expression,
     bc: Broadcast[Array[Byte]]) extends UnaryExpression {
 
@@ -62,7 +60,7 @@ case class BloomMightContainLong(child: Expression,
 }
 
 /** Surviving 1-based POSITIONS of a long array under a Bloom membership
-  * test (`graft_bloom_positions(hashes, 'handle')`): one tight codegen loop
+  * test ([[BloomProbes.positions]]): one tight codegen loop
   * per row, returning the indices whose element MIGHT be in the sketch's
   * key set.
   *
@@ -120,7 +118,7 @@ case class BloomPositions(child: Expression,
 }
 
 /** EXACT bitmap membership test over a broadcast bit array
-  * (`graft_bitmap_contains(pos, 'handle')`): true iff bit `pos` is set.
+  * ([[BloomProbes.bitmapContains]]): true iff bit `pos` is set.
   *
   * The exact-filter sibling of [[BloomMightContainLong]] for the case where
   * the filter's bit space is FIXED and small by construction — q74's
@@ -133,10 +131,7 @@ case class BloomPositions(child: Expression,
   * tripled the corpus shingle stream and the re-aggregation exchanged it on
   * a 25-char string key, all to recover per-row information a bit test
   * yields in place). Unlike the Bloom sketch this is EXACT — the bitmap IS
-  * the filter the oracle recomputes, bit for bit.
-  *
-  * Same [[BloomRegistry]] handoff and analysis-time resolution as the
-  * sketch expressions. */
+  * the filter the oracle recomputes, bit for bit. */
 case class BitmapContainsLong(child: Expression,
     bc: Broadcast[Array[Byte]]) extends UnaryExpression {
 
@@ -150,10 +145,10 @@ case class BitmapContainsLong(child: Expression,
 
   def test(v: Long): Boolean = {
     val bytes = bc.value
-    // range-check on the LONG before truncating: the function is
-    // session-registered (callable with any bigint), and `v.toInt` first
-    // would alias positions >= 2^32 into the valid range — a false
-    // positive for out-of-range input (round-13 ADVICE)
+    // range-check on the LONG before truncating: the probe takes any
+    // bigint column, and `v.toInt` first would alias positions >= 2^32 into
+    // the valid range — a false positive for out-of-range input (round-13
+    // ADVICE)
     v >= 0L && v < bytes.length.toLong * 8L && {
       val p = v.toInt
       ((bytes(p >> 3) >> (p & 7)) & 1) == 1
@@ -172,25 +167,22 @@ case class BitmapContainsLong(child: Expression,
     copy(child = newChild)
 }
 
-/** Driver-side handoff from [[graft.engine.RelOps.bloomPredicate]] to the
-  * `graft_bloom_contains` / `graft_bloom_positions` function builders (a
-  * SQL call cannot carry bytes). Entries are removed as soon as the
-  * consuming DataFrame is analyzed — the expression keeps the broadcast
-  * handle, not the registry key. */
-object BloomRegistry {
-  private val m =
-    new java.util.concurrent.ConcurrentHashMap[String, Broadcast[Array[Byte]]]()
-  private val ids = new java.util.concurrent.atomic.AtomicLong()
+/** The broadcast probes as typed Columns, built straight from their
+  * expressions (through [[org.apache.spark.sql.GraftBridge]]). Each Column
+  * holds its broadcast; nothing is registered on the driver. */
+object BloomProbes {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.GraftBridge.{column, expression}
 
-  def put(bc: Broadcast[Array[Byte]]): String = {
-    val key = "bloom_" + ids.incrementAndGet()
-    m.put(key, bc)
-    key
-  }
-  def resolve(key: String): Broadcast[Array[Byte]] = {
-    val bc = m.get(key)
-    require(bc != null, s"no bloom filter registered under '$key'")
-    bc
-  }
-  def remove(key: String): Unit = m.remove(key)
+  /** `key` (bigint) MIGHT be in the sketch's key set. */
+  def mightContain(key: Column, bc: Broadcast[Array[Byte]]): Column =
+    column(BloomMightContainLong(expression(key), bc))
+
+  /** 1-based positions of `hashes` (array<bigint>) that MIGHT be members. */
+  def positions(hashes: Column, bc: Broadcast[Array[Byte]]): Column =
+    column(BloomPositions(expression(hashes), bc))
+
+  /** Bit `pos` (bigint) of the broadcast bitmap is set. */
+  def bitmapContains(pos: Column, bc: Broadcast[Array[Byte]]): Column =
+    column(BitmapContainsLong(expression(pos), bc))
 }

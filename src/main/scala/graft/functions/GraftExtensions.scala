@@ -30,12 +30,10 @@ object GraftExtensions {
       s"$call: n must be an int literal, got $other")
   }
 
-  /** The handle resolves to a broadcast sketch at analysis time, on the
-    * driver — see BloomRegistry. */
-  private def sketch(e: Expression) = BloomRegistry.resolve(e.eval().toString)
-
   /** Every native function the engine exposes, by SQL name. The single list
-    * behind both [[GraftExtensions]] and [[VectorExpressions.register]]. */
+    * behind both [[GraftExtensions]] and [[VectorExpressions.register]].
+    * The broadcast probes are not here: they carry a `Broadcast`, so they
+    * are typed Columns ([[BloomProbes]]), not SQL functions. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("graft_dot", e => DotProduct(e(0), e(1))),
     ("graft_dot_long", e => LongDotProduct(e(0), e(1))),
@@ -48,8 +46,5 @@ object GraftExtensions {
     ("graft_gram_hashes", e =>
       GramHashes(e(0), intLiteral("graft_gram_hashes(words, n)", e(1)))),
     ("graft_md5_prefix", e =>
-      Md5Prefix(e(0), intLiteral("graft_md5_prefix(s, n)", e(1)))),
-    ("graft_bloom_contains", e => BloomMightContainLong(e(0), sketch(e(1)))),
-    ("graft_bloom_positions", e => BloomPositions(e(0), sketch(e(1)))),
-    ("graft_bitmap_contains", e => BitmapContainsLong(e(0), sketch(e(1)))))
+      Md5Prefix(e(0), intLiteral("graft_md5_prefix(s, n)", e(1)))))
 }

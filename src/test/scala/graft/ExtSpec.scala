@@ -744,18 +744,48 @@ class ExtSpec extends SparkSuite {
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r1 = TextStats.bloomDecontaminate(spark, dir).collect()
-    val n1 = TextStats.bloomBitmapMemoSize
+    val n1 = graft.engine.SessionMemo.size
+    val bc1 = TextStats.bloomBitmap(spark, dir, 65536, 3)
     val r2 = TextStats.bloomDecontaminate(spark, dir).collect()
-    assert(TextStats.bloomBitmapMemoSize == n1,
+    assert(graft.engine.SessionMemo.size == n1 &&
+      (TextStats.bloomBitmap(spark, dir, 65536, 3) eq bc1),
       "second construction over the unchanged fixture reuses the memoized broadcast")
     assert(r1.map(_.toString).toSeq == r2.map(_.toString).toSeq)
-    // fixture rewrite → new signature → a fresh bitmap entry
+    // fixture rewrite → new signature → the bitmap entry is rebuilt in place
     Seq((0L, "p q r s t"), (1L, "p q r x y"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     TextStats.bloomDecontaminate(spark, dir).collect(): Unit
-    assert(TextStats.bloomBitmapMemoSize == n1 + 1,
-      "a changed fixture re-collects under a new signature key")
+    assert(!(TextStats.bloomBitmap(spark, dir, 65536, 3) eq bc1),
+      "a changed fixture re-collects the bitmap")
+    assert(graft.engine.SessionMemo.size == n1,
+      "one key holds one entry: the rebuilt bitmap replaces the stale one")
+  }
+
+  test("bloom decontamination: the memoized bitmap is mBits/8 bytes, built from the benchmark slice only") {
+    val s = spark; import s.implicits._
+    val dir = "/tmp/graft_test_docs14c"
+    val mBits = 4096
+    // doc_ids 0 and 50 are the benchmark slice (doc_id % 50 == 0)
+    def write(docs: Seq[(Long, String)]): Unit =
+      docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def bitmap(): (Long, Array[Byte]) = {
+      val bc = TextStats.bloomBitmap(spark, dir, mBits, 3)
+      assert(bc.value.length <= mBits / 8, s"bitmap holds ${bc.value.length} bytes")
+      (bc.id, bc.value.clone()) // a replaced broadcast is destroyed
+    }
+    val docs = (0L to 60L).map(i => i -> s"w$i x$i y$i z$i")
+    write(docs)
+    val (id0, b0) = bitmap()
+    assert(b0.exists(_ != 0), "the benchmark slice sets bits")
+    // a corpus-side rewrite: new signature, rebuilt bitmap, same bytes
+    write(docs.updated(7, 7L -> "p q r s t u"))
+    val (id1, b1) = bitmap()
+    assert(id1 != id0, "a fixture rewrite rebuilds the bitmap")
+    assert(b1.sameElements(b0), "corpus-side documents never reach the bitmap")
+    // a benchmark-side rewrite changes the bytes
+    write(docs.updated(50, 50L -> "p q r s t u"))
+    assert(!bitmap()._2.sameElements(b0), "a benchmark-side document is in the bitmap")
   }
 
   test("length deciles: tails dropped per language, interior bands kept") {

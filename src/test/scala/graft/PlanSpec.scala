@@ -44,6 +44,33 @@ class PlanSpec extends SparkSuite {
     }, s"the SK rank gathers rows into one partition:\n$text")
   }
 
+  test("BI report tails run on one partition: no exchange after the aggregate") {
+    import graft.engine.Analytics
+    import org.apache.spark.sql.functions.{col, lit}
+    // four input partitions, so every exchange the plan keeps is a real one
+    val fact = spark.range(0, 2000, 1, 4).select(
+      (lit(20160000L) + (col("id") % 3) * 10000 + (col("id") % 12 + 1) * 100 +
+        (col("id") % 28 + 1)).as("Order_Date_SK"),
+      (col("id") % 50).as("Product_ID"),
+      (col("id") * 1.5).as("Sales_Amount"),
+      (col("id") * 2.5).as("Total_Payment_Value"))
+    val dim = spark.range(0, 50, 1, 2).select(col("id").as("Prod_ID"),
+      (col("id") % 5).cast("string").as("Category"))
+    def exchanges(df: org.apache.spark.sql.DataFrame): Seq[ShuffleExchangeExec] = {
+      df.collect() // drive to completion so the adaptive plan is final
+      finalNodes(df.queryExecution.executedPlan).collect { case e: ShuffleExchangeExec => e }
+    }
+    for ((name, df) <- Seq("monthlySalesYoY" -> Analytics.monthlySalesYoY(fact),
+        "avgDaily" -> Analytics.avgDaily(fact))) {
+      val ex = exchanges(df)
+      assert(ex.size == 1,
+        s"$name should shuffle once, for its aggregate:\n${df.queryExecution.executedPlan}")
+    }
+    val share = Analytics.shareOfSales(fact, dim, "Prod_ID", "Product_ID", "Category")
+    assert(!exchanges(share).exists(_.outputPartitioning == SinglePartition),
+      s"shareOfSales gathers its total through an exchange:\n${share.queryExecution.executedPlan}")
+  }
+
   test("q227 long repeat spans: semi-join candidate shape, no cartesian, no self-join") {
     val p = plan("q227_long_repeat_spans")
     assert(!p.contains("CartesianProduct"), s"cartesian in the repeat-span plan:\n$p")

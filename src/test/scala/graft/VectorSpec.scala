@@ -11,7 +11,7 @@ class VectorSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.extensions") == classOf[GraftExtensions].getName)
     val registry = spark.sessionState.functionRegistry
     val names = GraftExtensions.functions.map(_._1)
-    assert(names.size == 13 && names.distinct == names)
+    assert(names.size == 10 && names.distinct == names)
     val missing = names.filterNot(n => registry.functionExists(FunctionIdentifier(n)))
     assert(missing.isEmpty, s"injected session lacks $missing")
     val before = registry.listFunction().toSet
@@ -300,24 +300,23 @@ class VectorSpec extends SparkSuite {
 
   test("bloom predicate: no false negatives, empty keys -> None, positions match scalar") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
+    import graft.functions.BloomProbes
     val keys = Seq(11L, 22L, 33L).toDF("gh")
-    val handle = graft.engine.RelOps.bloomPredicate(keys, "gh").get
+    val bc = graft.engine.RelOps.bloomPredicate(keys, "gh").get
     val probe = Seq(
       (1L, Seq(11L, 5L, 22L)), // positions 1 and 3 are members
       (2L, Seq(7L, 8L)), // no members (modulo fpp, ~0 at this size)
       (3L, Seq(33L))).toDF("id", "hs")
-    val pos = probe.selectExpr("id", s"graft_bloom_positions(hs, '$handle') AS p")
+    val pos = probe.select(col("id"), BloomProbes.positions(col("hs"), bc).as("p"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     // every true member MUST survive (no false negatives)
     assert(pos(1L).contains(1) && pos(1L).contains(3))
     assert(pos(3L) == Seq(1))
     // the scalar form agrees with the array form position-by-position
-    val scal = probe.selectExpr("id",
-      s"filter(sequence(1, size(hs)), i -> graft_bloom_contains(element_at(hs, i), '$handle')) AS p")
+    val scal = probe.select(col("id"), filter(sequence(lit(1), size(col("hs"))),
+        i => BloomProbes.mightContain(element_at(col("hs"), i), bc)).as("p"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(pos == scal, "array and scalar bloom forms disagree")
-    graft.functions.BloomRegistry.remove(handle)
     // empty key set -> None (caller emits a constant-false filter)
     assert(graft.engine.RelOps.bloomPredicate(
       keys.filter("gh < 0"), "gh").isEmpty)

@@ -79,49 +79,24 @@ class WindowGuardSpec extends AnyFunSuite {
     ("streaming/Events.scala", "latenessPercentiles") ->
       "lateness-seconds histogram, value-domain-bounded")
 
-  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
-    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-
-  /** Strip block and line comments so doc-text mentions of Window.orderBy
-    * (there are several) don't count as sites. String LITERALS are masked
-    * FIRST (triple-quoted, then single-line with escape handling): a `//`
-    * inside a string (a URL, a path pattern) must not truncate the rest of
-    * the source line, or a real `Window.orderBy` appearing after it on the
-    * same line would be silently invisible to the guard (round-12 ADVICE).
-    *
-    * Known heuristic limits (accepted, with bounded damage): an UNBALANCED
-    * double quote inside a comment can mask code up to the next quote on
-    * the SAME line only (the single-line literal pattern excludes
-    * newlines, so it cannot swallow multi-line code); and the
-    * enclosing-def attribution below keys on indent ≤ 4, so a deeply
-    * nested local def is attributed to its enclosing top-level def — the
-    * allowlist is keyed accordingly. Both directions of the guard (extra +
-    * stale) keep the source itself as the truth. */
-  private def stripComments(src: String): String = {
-    val noStrings = src
-      .replaceAll("(?s)\"\"\".*?\"\"\"", "\"S\"")
-      .replaceAll("\"(?:\\\\.|[^\"\\\\\\n])*\"", "\"S\"")
-    noStrings.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
-  }
-
+  // The enclosing-def attribution below keys on indent ≤ 4, so a deeply
+  // nested local def is attributed to its enclosing top-level def — the
+  // allowlist is keyed accordingly. Both directions of the guard (extra +
+  // stale) keep the source itself as the truth; comment stripping and its
+  // limits are SourceScan.stripComments's.
   test("every unpartitioned Window.orderBy site is on the bounded-frame allowlist") {
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"guard must run from the repo root: $root missing")
     // an orderBy with no partitionBy, or a partitionBy with no keys
     val winPat = "Window\\s*\\.\\s*(?:orderBy|partitionBy\\s*\\(\\s*\\))".r
     // enclosing top-level def: last `def name` at object-member indent
     val defPat = "(?m)^\\s{0,4}(?:private(?:\\[[a-z]+\\])?\\s+)?def\\s+([A-Za-z0-9_]+)".r
-    val found: Set[(String, String)] = scalaFiles(root).flatMap { f =>
-      val rel = root.toPath.relativize(f.toPath).toString
-      val src = stripComments(
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      winPat.findAllMatchIn(src).map { m =>
-        val d = defPat.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
-          .map(_.group(1)).getOrElse("<top>")
-        (rel, d)
-      }
-    }.toSet
+    val found: Set[(String, String)] =
+      SourceScan.sources("src/main/scala/graft").flatMap { case (rel, src) =>
+        winPat.findAllMatchIn(src).map { m =>
+          val d = defPat.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+            .map(_.group(1)).getOrElse("<top>")
+          (rel, d)
+        }
+      }.toSet
     val extra = found -- allowlist.keySet
     val stale = allowlist.keySet -- found
     assert(extra.isEmpty,
