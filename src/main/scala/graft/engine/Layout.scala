@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Native
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering keys.
   *
@@ -254,15 +255,13 @@ object Layout {
     * map-side-combinable pass; the rollup frame is file-count-sized. All
     * arithmetic is integer days/ppm — engine-exact. */
   def zoneMapAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val o = Tables.orders(spark, dir).select(col("o_orderkey"),
       expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') AS BIGINT)")
         .as("day"))
     val files = o
       .select(col("day"),
         expr("day div 30").as("clustered"),
-        expr("graft_md5_prefix(CAST(o_orderkey AS STRING), 7) % 64")
-          .as("hashed"))
+        (Native.md5Prefix(col("o_orderkey").cast("string"), 7) % 64).as("hashed"))
       .select(col("day"), explode(map(
         lit("clustered"), col("clustered"),
         lit("hashed"), col("hashed"))))
@@ -346,12 +345,11 @@ object Layout {
     * shard under N+1); the LayoutSpec surface for the steal-only invariant
     * (shard_before ≠ shard_after ⟹ shard_after = N). */
   def rendezvousAssignments(spark: SparkSession, dir: String, n: Int = 8): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir).select(col("doc_id"))
       // s as BIGINT end-to-end so the output shard ids match the oracle dtype
       .select(col("doc_id"), explode(expr(s"sequence(0, ${n}L)")).as("s"))
-      .withColumn("h", expr(
-        "graft_md5_prefix(concat(CAST(doc_id AS STRING), ':', CAST(s AS STRING)), 7)"))
+      .withColumn("h", Native.md5Prefix(
+        concat(col("doc_id").cast("string"), lit(":"), col("s").cast("string")), 7))
       .groupBy(col("doc_id"))
       .agg(
         max(when(col("s") < n, struct(col("h"), col("s")))).as("before"),

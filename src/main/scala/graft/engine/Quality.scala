@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Native
 
 /** Data-quality gates: the reference runs these as SQL in Postgres from Airflow
   * (`Dag/E-commerce_dag.py:11-47`) and raises to halt the DAG (`:49-77`); here
@@ -36,13 +37,6 @@ object Quality {
     Seq(
       CheckResult("order_reviews.Rev_ID not null", row.getLong(0)),
       CheckResult("order_reviews.Rev_ID length = 32", row.getLong(1)))
-  }
-
-  /** Generic gate: uniqueness of a key column (engine extension — the check the
-    * reference's dedup makes trivially true). */
-  def checkUniqueKey(df: DataFrame, key: String): CheckResult = {
-    val row = df.agg((count(lit(1)) - countDistinct(col(key))).as("dups")).head()
-    CheckResult(s"$key unique", row.getLong(0))
   }
 
   /** Declarative expectation suite (q128): each check is an AGGREGATE
@@ -86,16 +80,15 @@ object Quality {
     * two canonical forms both engines print identically; NULLs via a sentinel
     * (concat_ws would silently drop them, aliasing (NULL,'x') with ('x',NULL)). */
   def tableFingerprint(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.orders(spark, dir)
       .select(col("o_orderpriority"),
-        call_function("graft_md5_prefix", concat_ws("|",
+        Native.md5Prefix(concat_ws("|",
           coalesce(col("o_orderkey").cast("string"), lit("\\N")),
           coalesce(col("o_custkey").cast("string"), lit("\\N")),
           coalesce(col("o_orderstatus"), lit("\\N")),
           coalesce(col("o_totalprice").cast(Dec.D18_2).cast("string"), lit("\\N")),
           coalesce(col("o_orderdate").cast("date").cast("string"), lit("\\N"))),
-          lit(15)).as("fp"))
+          15).as("fp"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_rows"), expr("bit_xor(fp)").as("fingerprint"))
       .orderBy("o_orderpriority")
@@ -120,10 +113,8 @@ object Quality {
     * fixture corpus is verified non-degenerate by the oracle, which computes
     * the leaf diff DIRECTLY with no hierarchy). */
   def merkleRangeDiff(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     def rowHash(text: Column): Column =
-      call_function("graft_md5_prefix",
-        concat(col("doc_id").cast("string"), lit("|"), text), lit(15))
+      Native.md5Prefix(concat(col("doc_id").cast("string"), lit("|"), text), 15)
     val mutated = when(col("doc_id") % 97 === 13,
       concat(col("text"), lit(" replica-corruption"))).otherwise(col("text"))
     // the leaf table feeds THREE consumers (top summary, mid summary, final

@@ -89,7 +89,7 @@ object RelOps {
     * sketch over `keys` (one DISK_ONLY materialization pays for count +
     * sketch, the guardedBroadcast discipline), broadcasts it, and returns
     * the broadcast, which the caller probes with a typed Column
-    * ([[graft.functions.BloomProbes]]) — anywhere an expression can go,
+    * ([[graft.functions.Native]]) — anywhere an expression can go,
     * including INSIDE a higher-order-function lambda over an in-row array.
     *
     * That last placement is the point (q227's repeat spans, round 11): the

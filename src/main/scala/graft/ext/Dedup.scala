@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import graft.functions.Native
 
 /** Near-duplicate detection operators (MinHash+LSH, SimHash, n-gram Jaccard)
   * over the `documents` table.
@@ -83,13 +84,12 @@ object Dedup {
     * minima folded in a single aggregate. Shared by the band construction
     * and the sketch-quality monitor (q120). */
   private def minhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val sigCols = seedsAB.zipWithIndex.map { case ((a, b), i) =>
       min((col("h") * a + b) % P).as(s"s$i")
     }
     docShingles(spark, dir)
       .select(col("doc_id"),
-        call_function("graft_md5_prefix", col("sh"), lit(7)).as("h"))
+        Native.md5Prefix(col("sh"), 7).as("h"))
       .groupBy(col("doc_id"))
       .agg(sigCols.head, sigCols.tail: _*)
   }
@@ -126,7 +126,6 @@ object Dedup {
     * oracle recomputes q28's exhaustive form) and keeps the whole signature
     * inside WholeStageCodegen. */
   def bandsProjection(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     val bandCols = (0 until 6).map { j =>
       (element_at(col("sig"), 2 * j + 1) * P + element_at(col("sig"), 2 * j + 2)).as(s"band$j")
     }
@@ -134,7 +133,7 @@ object Dedup {
     docs
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 3)
-      .withColumn("sig", expr("graft_minhash_sig(words)"))
+      .withColumn("sig", Native.minhashSig(col("words")))
       .select(col("doc_id") +: bandCols: _*)
       .select(col("doc_id"), expr(stackExpr))
   }
@@ -211,11 +210,10 @@ object Dedup {
   /** 16-bit SimHash per document from the first 4 md5 hex digits of each token
     * (with multiplicity — standard frequency-weighted SimHash). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .withColumn("h16",
-        call_function("graft_md5_prefix", col("tok"), lit(4)).cast("int"))
+        Native.md5Prefix(col("tok"), 4).cast("int"))
     val bitSums = (0 until 16).map { b =>
       sum(when(shiftright(col("h16"), b).bitwiseAND(lit(1)) === 1, 1).otherwise(-1)).as(s"bit$b")
     }
@@ -235,10 +233,9 @@ object Dedup {
     * the 16-bit [[simhash]] stays as the cheap bucket-label/audit form
     * (q30/q167/q168), where its tiny space is the point, not a defect. */
   def simhash60(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .withColumn("h", call_function("graft_md5_prefix", col("tok"), lit(15)))
+      .withColumn("h", Native.md5Prefix(col("tok"), 15))
     val bitSums = (0 until 60).map { b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
         .as(s"bit$b")
@@ -795,7 +792,6 @@ object Dedup {
     * and exactly what the oracle's `least(levenshtein, k+1)` checks. */
   def editDistanceGate(spark: SparkSession, dir: String,
       prefixLen: Int = 160, k: Int = 8): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val heads = Tables.documents(spark, dir)
       .select(col("doc_id"),
         substring(regexp_replace(col("text"), "[ \\t\\n\\f\\r\\x0B]+", " "),
@@ -805,7 +801,7 @@ object Dedup {
       .join(heads.select(col("doc_id").as("doc_a"), col("head").as("head_a")), Seq("doc_a"))
       .join(heads.select(col("doc_id").as("doc_b"), col("head").as("head_b")), Seq("doc_b"))
       .withColumn("lev_k",
-        expr(s"graft_bounded_lev(head_a, head_b, $k)").cast("long"))
+        Native.boundedLev(col("head_a"), col("head_b"), k).cast("long"))
       .withColumn("within_budget", col("lev_k") <= k)
       .select(col("doc_a"), col("doc_b"), col("lev_k"), col("within_budget"))
       .orderBy("doc_a", "doc_b")
@@ -878,7 +874,6 @@ object Dedup {
     * synthetic records (the fixture's 18-char names never exercise it). */
   def recordLinkageOn(recs: DataFrame, k: Int = 2, q: Int = 3): DataFrame = {
     val spark = recs.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     val pfx = k * q + 1
     val c = recs
       .withColumn("grams", expr(
@@ -970,7 +965,7 @@ object Dedup {
       // first() aggregates) hash-aggregated the full candidate volume and
       // ran 4× SLOWER (1272 s vs 318 s) — shuffling a wide row costs more
       // than verifying it
-      .withColumn("lev", expr(s"graft_bounded_lev(name_a, name_b, $k)").cast("long"))
+      .withColumn("lev", Native.boundedLev(col("name_a"), col("name_b"), k).cast("long"))
       .filter(col("lev") <= k)
       .select(col("nk").as("nationkey"), col("seg").as("mktsegment"),
         col("custkey_a"), col("custkey_b"), col("lev"))
@@ -1405,7 +1400,6 @@ object Dedup {
   }
 
   def segmentDedup(spark: SparkSession, dir: String, segTokens: Int = 10): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val segs = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= segTokens)
@@ -1413,7 +1407,7 @@ object Dedup {
         s"""transform(sequence(0, size(words) div $segTokens - 1),
            |  i -> concat_ws(' ', slice(words, i * $segTokens + 1, $segTokens)))""".stripMargin)).as("seg"))
       .select(col("doc_id"),
-        call_function("graft_md5_prefix", col("seg"), lit(7)).as("h"),
+        Native.md5Prefix(col("seg"), 7).as("h"),
         col("seg"))
     val freq = segs.groupBy(col("seg"))
       .agg(countDistinct(col("doc_id")).as("n_docs_with_seg"))
@@ -1745,7 +1739,6 @@ object Dedup {
     // lang-pair counts leave), collision note as in ngramNovelty: a merge
     // ORs two shingles' masks — expected colliding pairs ≈ 0.03 at 10⁹
     // distinct shingles; the string-keyed oracle re-verifies per run.
-    graft.functions.VectorExpressions.register(spark)
     // the mask aggregate's reduce side holds one (hash, mask) entry per
     // distinct shingle IN ITS PARTITION: at the session default of
     // #cores partitions the per-task hash map crosses its memory cliff
@@ -1783,7 +1776,7 @@ object Dedup {
       .select(col("lang"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 3)
       .select(bitOf.as("lb"),
-        explode(expr("array_distinct(graft_gram_hashes(words, 3))")).as("sh"))
+        explode(array_distinct(Native.gramHashes(col("words"), 3))).as("sh"))
       .repartition(parts, col("sh"))
       .groupBy(col("sh"))
       .agg(bit_or(col("lb")).as("mask"))
@@ -1965,7 +1958,6 @@ object Dedup {
     * second join against a split lookup, no shuffle beyond the cluster join
     * (broadcast at dim scale, shuffled-hash at corpus scale). */
   def clusterSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     def splitOf(idCol: Column): Column =
       TextStats.splitBand(TextStats.splitBucket(idCol))
     val clusters = graft.engine.Fs.readParquet(spark, clustersPath(spark, dir))
@@ -2141,9 +2133,8 @@ object Dedup {
     // gram string is ever materialized on this path, even transiently) —
     // no string ever rides this stream, so even a guard FALLBACK below
     // reshuffles 20-byte rows, never gram strings
-    graft.functions.VectorExpressions.register(spark)
     val hashes = docGrams
-      .select(col("doc_id"), posexplode(expr(s"graft_gram_hashes(w, $k)")))
+      .select(col("doc_id"), posexplode(Native.gramHashes(col("w"), k)))
       .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("gh"))
     // repeated hash CLASSES — every truly repeated gram lands here; hash
     // collisions can only ADD classes, never hide one. Membership is a
@@ -2180,9 +2171,9 @@ object Dedup {
         // survivors come from ONE codegen loop over the hash array
         // (graft_bloom_positions); only they get a gram string built
         docGrams
-          .withColumn("ghs", expr(s"graft_gram_hashes(w, $k)"))
+          .withColumn("ghs", Native.gramHashes(col("w"), k))
           .select(col("doc_id"), explode(transform(
-            graft.functions.BloomProbes.positions(col("ghs"), bc),
+            Native.positions(col("ghs"), bc),
             i => struct(i.as("p"),
               concat_ws(" ", slice(col("w"), i, lit(k))).as("gram")))).as("pg"))
           .select(col("doc_id"), col("pg.p").as("p"), col("pg.gram").as("gram"))

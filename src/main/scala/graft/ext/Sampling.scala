@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import graft.functions.Native
 
 /** Deterministic sampling operators for training-data curation.
   *
@@ -21,7 +22,7 @@ object Sampling {
     * content-addressed randomness primitive every sampler here derives from;
     * md5-based so any engine can recompute membership. */
   private def u28(keyCol: String) =
-    call_function("graft_md5_prefix", col(keyCol).cast("string"), lit(7))
+    Native.md5Prefix(col(keyCol).cast("string"), 7)
 
   /** [[u28]]'s range: 2²⁸. */
   private val U28Range = 268435456L
@@ -31,7 +32,6 @@ object Sampling {
 
   /** ~pct% deterministic sample of documents by doc_id hash. */
   def hashSample(spark: SparkSession, dir: String, pct: Int = 10): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir)
       .withColumn("hash_bucket", pctBucket("doc_id"))
       .filter(col("hash_bucket") < pct)
@@ -58,9 +58,7 @@ object Sampling {
     * TakeOrderedAndProject (PlanSpec asserts): each partition forwards at
     * most k rows, so no global sort materializes — the scale-safe fixed-size
     * draw. Full tie-break via doc_id for the (never observed) equal-key case. */
-  // (u28 consumers below register graft_md5_prefix via their spark handle)
   def fixedSizeSample(spark: SparkSession, dir: String, k: Int = 200): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"), u28("doc_id").as("sample_key"))
       .orderBy(col("sample_key"), col("doc_id"))
@@ -80,7 +78,6 @@ object Sampling {
     * tie-break; plans as TakeOrderedAndProject — each partition forwards at
     * most k rows, never a global sort (the q122 scale shape, weighted). */
   def weightedPrioritySample(spark: SparkSession, dir: String, k: Int = 100): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir)
       // coalesce BEFORE split: on NULL text Spark's size(split(NULL)) is -1
       // (clamped to 1) while DuckDB's len(string_split(NULL)) is NULL — the
@@ -143,7 +140,6 @@ object Sampling {
     * branch reads a NARROW column, so a corpus-sized cache would cost more
     * than it saves (BENCH.md, scalar-lineage exemption). */
   def lengthBiasedSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))

@@ -1,10 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import graft.functions.VectorExpressions
+import graft.functions.Native
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
@@ -30,7 +30,7 @@ import graft.functions.VectorExpressions
 /** One k-means centroid for [[Similarity.kmeansStatePath]]'s per-round
   * assignment literal: quantized integer components `cq`. Field order is the
   * `graft_argmin_cell` struct contract: (cid, cq). Top-level so
-  * `Literal.create` gets a stable TypeTag. */
+  * `typedlit` gets a stable TypeTag. */
 case class CentroidLit(cid: Long, cq: Seq[Long])
 
 /** One IVF coarse centroid for [[Similarity.assignCells]]'s typed-literal
@@ -45,13 +45,12 @@ object Similarity {
     * lambda) keeps the projection in codegen; norms and dots use the native
     * [[graft.functions.DotProduct]] expression. */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(Native.dot(col("v"), col("v"))))
   }
 
-  private val dotExpr = "graft_dot(qv, nv)"
+  private def cosQN: Column = Native.dot(col("qv"), col("nv")) / (col("qn") * col("nn"))
 
   /** Exact brute-force cosine top-k for query vectors vec_id < nQueries. */
   def cosineTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 20): DataFrame = {
@@ -62,7 +61,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     broadcast(q).crossJoin(corpus)
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", expr(dotExpr) / (col("qn") * col("nn")))
+      .withColumn("cos", cosQN)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos_sim"))
@@ -115,7 +114,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     broadcast(q).join(corpus, Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", expr(dotExpr) / (col("qn") * col("nn")))
+      .withColumn("cos", cosQN)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("bucket"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos_sim"))
@@ -197,7 +196,7 @@ object Similarity {
     val b = kept.select(col("vec_id").as("vec_b"), col("v").as("nv"), col("nrm").as("nn"), col("bucket"))
     a.join(b, Seq("bucket"))
       .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos", expr(dotExpr) / (col("qn") * col("nn")))
+      .withColumn("cos", cosQN)
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos_sim"))
       .orderBy("vec_a", "vec_b")
@@ -312,10 +311,9 @@ object Similarity {
     * Output: vec_id, v (double), nrm, prj, bucket. */
   def bucketizeVectors(df: DataFrame, nPlanes: Int = 8,
       dim: Int = DefaultDim): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
     val base = df
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(Native.dot(col("v"), col("v"))))
     val prjArr = (0 until nPlanes).map { p =>
       s"aggregate(zip_with(v, ${planeLiteral(p, dim)}, (x, s) -> x * s), " +
         "CAST(0 AS DOUBLE), (a, x) -> a + x)"
@@ -366,7 +364,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     broadcast(q).join(corpus, Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", expr(dotExpr) / (col("qn") * col("nn")))
+      .withColumn("cos", cosQN)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -382,7 +380,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_vectors"))
       .orderBy("bucket")
 
-  /** Per-vector SQ8 codes expression (shared by [[sq8Quantize]] and
+  /** Per-vector SQ8 codes (shared by [[sq8Quantize]] and
     * [[ivfCellCentroids]]): scalar quantization of each component into 0..255
     * against the vector's own [mn, mx] range. `floor` + `least` clamp instead
     * of `round`: floor on identical IEEE doubles is bit-deterministic across
@@ -398,7 +396,7 @@ object Similarity {
     * probe surfaced as 20-minute q86 tasks parked in ArrayMin.nullSafeEval.
     * Identical double arithmetic order inside the expression → codes are
     * bit-for-bit the old values; every oracle unchanged. */
-  private val sq8CodesExpr = "graft_sq8(v)"
+  private def sq8Codes: Column = Native.sq8(col("v"))
 
   /** SQ8 scalar quantization of the embedding column — the compression step a
     * 100 TB vector store applies before indexing (4x smaller than float32,
@@ -410,7 +408,7 @@ object Similarity {
     vecs(spark, dir)
       .select(col("vec_id"), col("v"),
         array_min(col("v")).as("mn"), array_max(col("v")).as("mx"))
-      .withColumn("codes", expr(sq8CodesExpr))
+      .withColumn("codes", sq8Codes)
       .select(
         col("vec_id"), col("mn"), col("mx"),
         size(col("codes")).as("n_dims"),
@@ -430,7 +428,7 @@ object Similarity {
     vecs(spark, dir)
       .select(col("vec_id"), col("v"),
         array_min(col("v")).as("mn"), array_max(col("v")).as("mx"))
-      .withColumn("codes", expr(sq8CodesExpr))
+      .withColumn("codes", sq8Codes)
       .select(
         col("vec_id"),
         expr("aggregate(codes, 0L, (a, x) -> a + x)").as("l1_code"),
@@ -488,22 +486,10 @@ object Similarity {
     * (array-typed buffers fall off HashAggregate); measured 9.0 s → 2.1 s
     * for the sf10 assignment. Same winner bit-for-bit: total double order,
     * ties to the lower cid (the oracle's ORDER BY ccos DESC, centroid_id). */
-  private def assignCells(all: DataFrame, cents: Seq[IvfCentroidLit],
-      spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    // the centroid table must sit INSIDE the expression node as a literal (a
-    // column reference is not foldable at analysis time), so the sample is
-    // bound via the function registry — the same mechanism every graft
-    // expression uses — under a per-dataset name (the growth gate runs two SF
-    // dirs in one session; the binding is deterministic per dir, so
-    // re-registration is idempotent)
-    val centsLit = Literal.create(cents)
-    val fname = s"graft_ivf_assign_${graft.engine.Fs.dirTag(dir)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => graft.functions.ArgMaxCell(exprs(0), exprs(1), centsLit),
-      "scala_udf")
-    all.withColumn("cell", expr(s"$fname(v, nrm)"))
-  }
+  private def assignCells(all: DataFrame, cents: Seq[IvfCentroidLit]): DataFrame =
+    // the centroid table rides INSIDE the expression node as a literal: a
+    // column reference is not foldable at analysis time
+    all.withColumn("cell", Native.argmaxCell(col("v"), col("nrm"), typedlit(cents)))
 
   /** IVF cell centroids in SQ8 code space — the index-maintenance counterpart
     * of [[ivfTopK]]: per (Voronoi cell, dimension), the count and exact integer
@@ -518,12 +504,12 @@ object Similarity {
     * output). No self-join anywhere. */
   def ivfCellCentroids(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val assigned = assignCells(all, centroidLits(all, spark), spark, dir)
+    val assigned = assignCells(all, centroidLits(all, spark))
       .select(col("vec_id"), col("v"), col("cell"))
     assigned
       .withColumn("mn", array_min(col("v")))
       .withColumn("mx", array_max(col("v")))
-      .withColumn("codes", expr(sq8CodesExpr))
+      .withColumn("codes", sq8Codes)
       .select(col("cell"), posexplode(col("codes")).as(Seq("pos", "code")))
       .select(col("cell"), (col("pos") + 1).cast("int").as("dim"), col("code"))
       .groupBy(col("cell"), col("dim"))
@@ -561,14 +547,14 @@ object Similarity {
     val all = vecs(spark, dir)
     val lits = centroidLits(all, spark)
     val cents = centroidFrame(spark, lits)
-    val assigned = assignCells(all, lits, spark, dir)
+    val assigned = assignCells(all, lits)
       .select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
         col("nrm").as("nn"), col("cell"))
     val byCos = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("centroid_id").asc)
     val probes = all.filter(col("vec_id") < nQueries)
       .crossJoin(broadcast(cents))
-      .withColumn("ccos", expr("graft_dot(v, cv)") / (col("nrm") * col("cn")))
+      .withColumn("ccos", Native.dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
       .withColumn("crank", row_number().over(byCos))
       .filter(col("crank") <= nProbe)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -576,7 +562,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     broadcast(probes).join(assigned, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", expr(dotExpr) / (col("qn") * col("nn")))
+      .withColumn("cos", cosQN)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cell"),
@@ -607,7 +593,7 @@ object Similarity {
     * shard-size bound is needed for exactness. */
   def ivfCellBalance(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val assigned = assignCells(all, centroidLits(all, spark), spark, dir)
+    val assigned = assignCells(all, centroidLits(all, spark))
     assigned.groupBy(col("cell")).agg(count(lit(1)).as("s"))
       .agg(
         count(lit(1)).as("n_cells"),
@@ -645,7 +631,7 @@ object Similarity {
     val coded = lshBuckets(spark, dir)
       .withColumn("mn", array_min(col("v")))
       .withColumn("mx", array_max(col("v")))
-      .withColumn("codes", expr(sq8CodesExpr))
+      .withColumn("codes", sq8Codes)
       .select(col("vec_id"), col("bucket"), col("codes"),
         expr("aggregate(codes, 0L, (a, x) -> a + CAST(x AS BIGINT) * x)").as("self_dot"))
     val perBucket = coded.groupBy(col("bucket"))
@@ -692,7 +678,7 @@ object Similarity {
         col("embedding").cast("array<double>").as("v"))
       .withColumn("mn", array_min(col("v")))
       .withColumn("mx", array_max(col("v")))
-      .withColumn("codes", expr(sq8CodesExpr))
+      .withColumn("codes", sq8Codes)
       .select(col("vec_id"), col("label"), (col("vec_id") % 2 === 0).as("is_a"),
         col("codes"))
     val perDim = coded
@@ -748,7 +734,7 @@ object Similarity {
     val indexed = corpus
       .select(col("bucket"), col("vec_id").as("c_id"), col("v").as("nv"), col("nrm").as("nn"))
     val hits = broadcast(batch).join(indexed, Seq("bucket"))
-      .withColumn("cos", expr(dotExpr) / (col("qn") * col("nn")))
+      .withColumn("cos", cosQN)
       .filter(col("cos") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_dup_candidates"), min(col("c_id")).as("dup_of"))
@@ -792,7 +778,6 @@ object Similarity {
 
   def jlProjection(spark: SparkSession, dir: String,
       nPlanes: Int = 16, dim: Int = 64): DataFrame = {
-    VectorExpressions.register(spark)
     def sign(k: Int, d: Int): Long = jlSign(k, d)
     val q = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(
@@ -803,13 +788,13 @@ object Similarity {
       .withColumn("q", expr(
         s"CASE WHEN size(q) = $dim THEN q ELSE raise_error('jlProjection: expected dim $dim, got ' || size(q)) END"))
     val projected = (0 until nPlanes).foldLeft(q) { (df, k) =>
-      val arr = (0 until dim).map(d => s"${sign(k, d)}L").mkString(",")
-      df.withColumn(s"p$k", expr(s"graft_dot_long(q, array($arr))"))
+      df.withColumn(s"p$k",
+        Native.dotLong(col("q"), array((0 until dim).map(d => lit(sign(k, d))): _*)))
     }
     val norm2p = (0 until nPlanes).map(k => col(s"p$k") * col(s"p$k"))
       .reduce(_ + _)
     projected
-      .withColumn("norm2_q", expr("graft_dot_long(q, q)"))
+      .withColumn("norm2_q", Native.dotLong(col("q"), col("q")))
       .withColumn("norm2_p", norm2p)
       .select(col("vec_id"),
         col("p0").as("proj0"), col("p1").as("proj1"),
@@ -846,7 +831,6 @@ object Similarity {
     * inform (clustered real-model embeddings score far higher). */
   def jlRecall(spark: SparkSession, dir: String, topK: Int = 10,
       nPlanes: Int = 16, dim: Int = 64): DataFrame = {
-    VectorExpressions.register(spark)
     val qv = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(
         s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * ${KmScale}D) AS BIGINT))")
@@ -854,8 +838,8 @@ object Similarity {
       .withColumn("q", expr(
         s"CASE WHEN size(q) = $dim THEN q ELSE raise_error('jlRecall: expected dim $dim, got ' || size(q)) END"))
     val projected = (0 until nPlanes).foldLeft(qv) { (df, k) =>
-      val arr = (0 until dim).map(d => s"${jlSign(k, d)}L").mkString(",")
-      df.withColumn(s"p$k", expr(s"graft_dot_long(q, array($arr))"))
+      df.withColumn(s"p$k",
+        Native.dotLong(col("q"), array((0 until dim).map(d => lit(jlSign(k, d))): _*)))
     }.withColumn("p", array((0 until nPlanes).map(k => col(s"p$k")): _*))
       .select(col("vec_id"), col("q"), col("p"))
     def topkIn(space: String): DataFrame = {
@@ -864,7 +848,7 @@ object Similarity {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id")).orderBy(col("dot").desc, col("vec_id"))
       broadcast(queries).crossJoin(projected.select(col("vec_id"), col(space).as("cvec")))
-        .withColumn("dot", expr("graft_dot_long(qvec, cvec)"))
+        .withColumn("dot", Native.dotLong(col("qvec"), col("cvec")))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= topK)
         .select(col("query_id"), col("vec_id"))
@@ -950,7 +934,6 @@ object Similarity {
         .select(col("vec_id").as("cid"), col("q").as("cq"))
       (if (k > 0) eligible.orderBy("cid").limit(k) else eligible)
         .write.mode("overwrite").parquet(s"$p/c0")
-      VectorExpressions.register(spark)
       for (it <- 1 to iters) {
         // k centroid rows to the driver (bounded by k·dim, never corpus-sized)
         val cents = spark.read.parquet(s"$p/c${it - 1}")
@@ -962,22 +945,15 @@ object Similarity {
           s"kmeans: no seed vectors (vec_id % $seedModEff == 0) in $dir")
         // ONE codegen expression per round ([[graft.functions.ArgMinCellL2]]):
         // the driver-collected centroids ride INSIDE the expression node as a
-        // foldable literal (bound via the function registry under a
-        // per-(dir, spec, round) name — the IVF assignment's mechanism), and
-        // the exact-integer argmin with the (dist, cid) tie-break runs as one
+        // foldable literal (the IVF assignment's mechanism), and the
+        // exact-integer argmin with the (dist, cid) tie-break runs as one
         // primitive loop in WholeStageCodegen. This replaced the round-7 dual
         // path (unrolled literal small-k / typed-array HOF large-k): the HOF
         // form paid an interpreted lambda per (row, centroid) — the sf100
         // gate measured the 2 M × 32.8 k assignment at ~an hour per round —
         // and the unrolled form's plan size grew with k.
         val lits = cents.toSeq.map(r => CentroidLit(r.getLong(0), r.getSeq[Long](1)))
-        val centsLit = org.apache.spark.sql.catalyst.expressions.Literal.create(lits)
-        val fname = s"graft_km_assign_${graft.engine.Fs.dirTag(dir)}" +
-          s"_i${iters}_s${seedMod}_k${k}_r$it"
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          fname, exprs => graft.functions.ArgMinCellL2(exprs(0), centsLit),
-          "scala_udf")
-        val assigned = qv.withColumn("cell", expr(s"$fname(q)"))
+        val assigned = qv.withColumn("cell", Native.argminCell(col("q"), typedlit(lits)))
         def updFrom(a: DataFrame): DataFrame = a
           .select(col("cell"), posexplode(col("q")).as(Seq("pos", "comp")))
           .groupBy(col("cell"), col("pos"))
@@ -1054,16 +1030,15 @@ object Similarity {
           .filter(col("cell_n") <= maxCellSize)
           .select(col("cell"))),
         Seq("cell"), "left_semi")
-    VectorExpressions.register(members.sparkSession)
     // self-norms once per VECTOR (n·dim work), not once per pair (n²·dim)
-    val normed = kept.withColumn("dqq", expr("graft_dot_long(q, q)"))
+    val normed = kept.withColumn("dqq", Native.dotLong(col("q"), col("q")))
     val a = normed.select(col("cell"), col("vec_id").as("vec_a"),
       col("q").as("qa"), col("dqq").as("daa"))
     val b = normed.select(col("cell"), col("vec_id").as("vec_b"),
       col("q").as("qb"), col("dqq").as("dbb"))
     a.join(b, Seq("cell"))
       .filter(col("vec_a") < col("vec_b"))
-      .withColumn("dab", expr("graft_dot_long(qa, qb)"))
+      .withColumn("dab", Native.dotLong(col("qa"), col("qb")))
       .filter(col("dab") > 0 &&
         expr(s"CAST(dab AS DECIMAL(38,0)) * dab * ${tauDen * tauDen}") >
         expr(s"CAST(daa AS DECIMAL(38,0)) * dbb * ${tauNum * tauNum}"))
@@ -1080,11 +1055,10 @@ object Similarity {
     * at-rest LSH index ([[lshProjectionsPath]]) exactly as q34 does. */
   def hardNegatives(spark: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 20): DataFrame = {
-    VectorExpressions.register(spark)
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(Native.dot(col("v"), col("v"))))
     val q = all.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("label").as("query_label"),
         col("v").as("qv"), col("nrm").as("qn"))
@@ -1095,7 +1069,7 @@ object Similarity {
     broadcast(q).crossJoin(corpus)
       .filter(col("neighbor_id") =!= col("query_id") &&
         col("neighbor_label") =!= col("query_label"))
-      .withColumn("cos", expr(dotExpr) / (col("qn") * col("nn")))
+      .withColumn("cos", cosQN)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("query_label"), col("rank"),
@@ -1117,12 +1091,12 @@ object Similarity {
     *
     * Scale shape — the bounded-seed pattern (same sanctioned driver-collect
     * as the IVF/k-means seeds): a benchmark is thousands of items while the
-    * corpus is billions, so the eval set is COLLECTED and bound as a typed
-    * literal inside [[graft.functions.ArgMaxCell]] under a per-dir registered
-    * function — nearest-eval assignment is then a pure whole-stage-codegen
-    * projection over one corpus scan: no n × m candidate materialization, no
-    * shuffle of the corpus at all (the relational window/max_by forms of this
-    * argmax are the measured sf10 losers documented on the expression). The
+    * corpus is billions, so the eval set is COLLECTED and carried as a typed
+    * literal inside [[graft.functions.ArgMaxCell]] — nearest-eval assignment
+    * is then a pure whole-stage-codegen projection over one corpus scan: no
+    * n × m candidate materialization, no shuffle of the corpus at all (the
+    * relational window/max_by forms of this argmax are the measured sf10
+    * losers documented on the expression). The
     * only join is the broadcast fetch of the winning eval vector (eval-sized
     * build side) to expose the cosine itself. At 100 TB: benchmark in RAM on
     * every executor, corpus streams through once.
@@ -1144,7 +1118,7 @@ object Similarity {
     // the eval members themselves are excluded HERE, not inside the screen:
     // this batch form screens the same corpus the benchmark was sampled
     // from (eval rows would trivially self-match at cos 1.0), but a
-    // streaming ingest screens a DIFFERENT corpus against a registered
+    // streaming ingest screens a DIFFERENT corpus against a collected
     // benchmark — an arriving vector whose id merely aliases the
     // benchmark's membership mod must still be screened
     // ([[graft.streaming.Streams.deconStream]] screens every wave row).
@@ -1152,18 +1126,18 @@ object Similarity {
       bench, tau).orderBy("vec_id")
   }
 
-  /** The driver-collected eval benchmark ready for screening: the registered
-    * argmax function name, the eval dimension frame for the cosine fetch, and
-    * the derived membership mod. One value object so the batch screen (q234)
-    * and the streaming ingest screen ([[graft.streaming.Streams.deconStream]])
-    * share one benchmark artifact — in deployment the benchmark is REGISTERED
-    * ONCE (a fixed artifact) and corpora/waves are screened against it. */
-  case class EvalBenchmark(fname: String, evalDim: DataFrame, evalMod: Long)
+  /** The driver-collected eval benchmark ready for screening: the eval
+    * vectors as one literal Column (the [[graft.functions.ArgMaxCell]]
+    * table), the eval dimension frame for the cosine fetch, and the derived
+    * membership mod. One value object so the batch screen (q234) and the
+    * streaming ingest screen ([[graft.streaming.Streams.deconStream]]) share
+    * one benchmark artifact — in deployment the benchmark is COLLECTED ONCE
+    * (a fixed artifact) and corpora/waves are screened against it. */
+  case class EvalBenchmark(evals: Column, evalDim: DataFrame, evalMod: Long)
 
-  /** Collect the benchmark from `dir` and bind it (see
-    * [[semanticDecontaminate]] for the sizing law and scale argument). */
+  /** Collect the benchmark from `dir` (see [[semanticDecontaminate]] for the
+    * sizing law and scale argument). */
   def evalBenchmark(spark: SparkSession, dir: String): EvalBenchmark = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val all = vecs(spark, dir)
     val evalMod = math.max(50L, all.count() / 1000L)
     val evalRows = all.filter(col("vec_id") % evalMod === 0)
@@ -1172,13 +1146,8 @@ object Similarity {
       s"decontaminate: no eval sample (vec_id % $evalMod == 0) in the corpus")
     val evalLits = evalRows.toSeq.map(r =>
       IvfCentroidLit(r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-    val evalLit = Literal.create(evalLits)
-    val fname = s"graft_decon_assign_${graft.engine.Fs.dirTag(dir)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => graft.functions.ArgMaxCell(exprs(0), exprs(1), evalLit),
-      "scala_udf")
     import spark.implicits._
-    EvalBenchmark(fname, evalLits.toDF("eval_id", "ev", "en"), evalMod)
+    EvalBenchmark(typedlit(evalLits), evalLits.toDF("eval_id", "ev", "en"), evalMod)
   }
 
   /** The screen itself over any (vec_id, v, nrm) frame — batch or streaming
@@ -1192,9 +1161,9 @@ object Similarity {
   def deconScreen(vframe: DataFrame, bench: EvalBenchmark,
       tau: Double = 0.4): DataFrame =
     vframe
-      .withColumn("nearest_eval_id", expr(s"${bench.fname}(v, nrm)"))
+      .withColumn("nearest_eval_id", Native.argmaxCell(col("v"), col("nrm"), bench.evals))
       .join(broadcast(bench.evalDim), col("nearest_eval_id") === col("eval_id"))
-      .withColumn("cos", expr("graft_dot(v, ev)") / (col("nrm") * col("en")))
+      .withColumn("cos", Native.dot(col("v"), col("ev")) / (col("nrm") * col("en")))
       .select(col("vec_id"), col("nearest_eval_id"),
         round(col("cos"), 4).as("cos_sim"),
         (col("cos") >= tau).as("contaminated"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Dec, Tables}
+import graft.functions.Native
 
 /** Text-analysis operators for a large-scale training-data pipeline, over the
   * `documents` table (doc_id, text, lang, source, n_chars).
@@ -292,11 +293,10 @@ object TextStats {
     // hash array comes from the codegen [[graft.functions.GramHashes]]
     // primitive — the interpreted transform/concat_ws form was the dominant
     // per-row cost once the exchange was keyed on longs.
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 3)
-      .withColumn("shs", expr("array_distinct(graft_gram_hashes(words, 3))"))
+      .withColumn("shs", array_distinct(Native.gramHashes(col("words"), 3)))
     val perDoc = docs.select(col("doc_id"), size(col("shs")).cast("long").as("n_shingles"))
     val novel = docs.select(col("doc_id"), explode(col("shs")).as("sh"))
       .groupBy(col("sh")).agg(min(col("doc_id")).as("doc_id"))
@@ -329,12 +329,11 @@ object TextStats {
     // shingles' df counts; the string-exact oracle re-verifies
     // collision-freedom on every checked run. Hashing via the codegen
     // [[graft.functions.GramHashes]] primitive.
-    graft.functions.VectorExpressions.register(spark)
     val sh = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 3)
       .select(col("doc_id"),
-        explode(expr("array_distinct(graft_gram_hashes(words, 3))")).as("sh"))
+        explode(array_distinct(Native.gramHashes(col("words"), 3))).as("sh"))
     val nDocs = Tables.documents(spark, dir).agg(count(lit(1)).as("n_total"))
     val boiler = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
@@ -363,7 +362,6 @@ object TextStats {
     * sketch summary per doc (distinct-minima count + checksum), integers only
     * so the oracle hash-matches. */
   def winnowingFingerprint(spark: SparkSession, dir: String, w: Int = 4): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // IN-ROW sliding minima (r14 optimization pass — the q63/q150 round-10
     // discipline applied here): a doc's window minima depend only on the
     // doc's OWN shingle-hash array, so the previous posexplode + doc-keyed
@@ -378,9 +376,9 @@ object TextStats {
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 3 + (w - 1))
-      .select(col("doc_id"), expr(
-        """transform(sequence(1, size(words)-2),
-          |  i -> graft_md5_prefix(concat_ws(' ', element_at(words, i), element_at(words, i+1), element_at(words, i+2)), 7))""".stripMargin)
+      .select(col("doc_id"), transform(sequence(lit(1), size(col("words")) - 2), i =>
+        Native.md5Prefix(concat_ws(" ", element_at(col("words"), i),
+          element_at(col("words"), i + 1), element_at(col("words"), i + 2)), 7))
         .as("hs"))
       .select(col("doc_id"), expr(
         s"array_distinct(transform(sequence(1, size(hs) - $w + 1), i -> array_min(slice(hs, i, $w))))")
@@ -478,24 +476,23 @@ object TextStats {
     * the string-exact oracle re-verifies on every checked run. Hash arrays
     * come from the codegen [[graft.functions.GramHashes]] primitive. */
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 3)
-      .withColumn("bst", expr(
-        """element_at(transform(array(array_sort(graft_gram_hashes(words, 2))), bs ->
-          |  element_at(transform(array(filter(sequence(1, size(bs)),
-          |      i -> i = 1 OR element_at(bs, i) != element_at(bs, i - 1))), starts ->
-          |    named_struct(
-          |      'nb', CAST(size(bs) AS BIGINT),
-          |      'nd', CAST(size(starts) AS BIGINT),
-          |      'mx', CAST(array_max(transform(starts,
-          |        (s, j) -> coalesce(try_element_at(starts, j + 2), size(bs) + 1) - s)) AS BIGINT))), 1)), 1)""".stripMargin))
-      .withColumn("shst", expr(
-        """element_at(transform(array(graft_gram_hashes(words, 3)), shs ->
-          |  named_struct(
-          |    'ns', CAST(size(shs) AS BIGINT),
-          |    'nds', CAST(size(array_distinct(shs)) AS BIGINT))), 1)""".stripMargin))
+      .withColumn("bst", element_at(transform(
+        array(array_sort(Native.gramHashes(col("words"), 2))), bs =>
+          element_at(transform(array(filter(sequence(lit(1), size(bs)),
+              i => i === 1 || element_at(bs, i) =!= element_at(bs, i - 1))), starts =>
+            struct(
+              size(bs).cast("long").as("nb"),
+              size(starts).cast("long").as("nd"),
+              array_max(transform(starts, (s, j) =>
+                coalesce(try_element_at(starts, j + 2), size(bs) + 1) - s)).cast("long").as("mx"))), 1)), 1))
+      .withColumn("shst", element_at(transform(
+        array(Native.gramHashes(col("words"), 3)), shs =>
+          struct(
+            size(shs).cast("long").as("ns"),
+            size(array_distinct(shs)).cast("long").as("nds"))), 1))
       .select(
         col("doc_id"), size(col("words")).cast("long").as("n_tokens"),
         col("bst.nb").as("n_bigrams"), col("bst.nd").as("n_distinct_bigrams"),
@@ -572,7 +569,7 @@ object TextStats {
     * [[graft.ext.Dedup.clusterSafeSplit]]) and the Catalog's `splitCaseSql`
     * oracle fragment must agree with this definition. */
   def splitBucket(idCol: Column): Column =
-    call_function("graft_md5_prefix", idCol.cast("string"), lit(7)) % 100
+    Native.md5Prefix(idCol.cast("string"), 7) % 100
 
   /** Split band over a [[splitBucket]] value: train < TrainUpper ≤ val <
     * ValUpper ≤ test. */
@@ -588,7 +585,6 @@ object TextStats {
     * random() split lacks. Same md5-bucket primitive as
     * [[graft.ext.Sampling.hashSample]]. */
   def splitAssign(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), splitBucket(col("doc_id")).as("bucket"))
       .select(col("doc_id"), col("source"), col("bucket"),
@@ -605,7 +601,6 @@ object TextStats {
     * partitioned by (split, source); everything upstream is a linear scan. */
   def corpusExport(spark: SparkSession, dir: String,
       budgetTokens: Int = 2048): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val gated = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"),
@@ -654,7 +649,7 @@ object TextStats {
     val mod = benchModFor(spark, dir)
     val bc = bloomBitmap(spark, dir, mBits, kHashes)
     val allSet = shinglePositions(kHashes, mBits)
-      .map(graft.functions.BloomProbes.bitmapContains(_, bc)).reduce(_ && _)
+      .map(Native.bitmapContains(_, bc)).reduce(_ && _)
     bloomShingles(spark, dir).filter(col("doc_id") % mod =!= 0)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
@@ -674,8 +669,7 @@ object TextStats {
   // the kHashes md5-derived bit positions of shingle `sh`
   private def shinglePositions(kHashes: Int, mBits: Int): Seq[Column] =
     (0 until kHashes).map(j =>
-      call_function("graft_md5_prefix",
-        concat(lit(s"$j:"), col("sh")), lit(7)) % mBits)
+      Native.md5Prefix(concat(lit(s"$j:"), col("sh")), 7) % mBits)
 
   /** The benchmark side of [[bloomDecontaminate]], a [[graft.engine.SessionMemo]]
     * entry: an EXACT `mBits`-bit bitmap (8 KB at the default, whatever the
@@ -684,7 +678,6 @@ object TextStats {
     * so a corpus-side document never changes its bytes. */
   private[graft] def bloomBitmap(spark: SparkSession, dir: String, mBits: Int,
       kHashes: Int): org.apache.spark.broadcast.Broadcast[Array[Byte]] = {
-    graft.functions.VectorExpressions.register(spark)
     // the fixed-benchmark law ([[benchModFor]], round 10) keeps the bench
     // ~1000 docs, so it neither saturates the filter nor outgrows the
     // broadcast. The bitmap is collected on the driver (bounded by mBits)
@@ -1189,15 +1182,13 @@ object TextStats {
     * arithmetic: the "estimate" is deterministic because the hash family is
     * (md5 of row:term), not a seeded RNG. */
   def countMinSketch(spark: SparkSession, dir: String, topN: Int = 20): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val rows = 4
     val width = 512
     val counts = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("exact_count"))
     def bucket(r: Int): Column =
-      (call_function("graft_md5_prefix",
-        concat(lit(s"$r:"), col("term")), lit(7)) % width).as(s"b$r")
+      (Native.md5Prefix(concat(lit(s"$r:"), col("term")), 7) % width).as(s"b$r")
     val withBuckets = counts.select(
       col("term") +: col("exact_count") +: (0 until rows).map(bucket): _*)
     // (term, row, bucket, count) — the sketch update stream, one row per hash
@@ -1638,13 +1629,12 @@ object TextStats {
     * expression stays inside whole-stage codegen with an isNormalized
     * fast path for the dominant already-canonical case. */
   def unicodeAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         when(col("doc_id") % 3 === 0, concat(col("text"), lit(" cafe\u0301")))
           .when(col("doc_id") % 3 === 1, concat(col("text"), lit(" caf\u00e9")))
           .otherwise(col("text")).as("raw"))
-      .withColumn("nfc", expr("graft_nfc(raw)"))
+      .withColumn("nfc", Native.nfc(col("raw")))
       .select(col("doc_id"),
         (col("raw") =!= col("nfc")).as("changed"),
         length(col("raw")).cast("long").as("len_raw"),
@@ -1670,7 +1660,6 @@ object TextStats {
     * the expression stays inside whole-stage codegen with a clean-ASCII
     * fast path. */
   def homoglyphSkeleton(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.documents(spark, dir)
       .withColumn("variant",
         when(col("doc_id") % 7 === 3, lit("cyrillic"))
@@ -1684,7 +1673,7 @@ object TextStats {
           .otherwise(col("text")))
       .select(col("doc_id"), col("variant"),
         (col("dirty") =!= col("text")).as("changed"),
-        (expr("graft_skeleton(dirty)") === col("text")).as("restored"))
+        (Native.skeleton(col("dirty")) === col("text")).as("restored"))
       .orderBy("doc_id")
   }
 

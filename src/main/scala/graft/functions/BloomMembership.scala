@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 /** Bloom-filter membership test over a broadcast sketch
-  * ([[BloomProbes.mightContain]]): true iff the long key MIGHT be in
+  * ([[Native.mightContain]]): true iff the long key MIGHT be in
   * the key set the sketch was built from — no false negatives, tunable false
   * positives.
   *
@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * False negatives cannot occur, so no true member is ever lost — the
   * soundness half that matters.
   *
-  * The expression is built as a typed Column ([[BloomProbes]]), not a SQL
+  * The expression is built as a typed Column ([[Native]]), not a SQL
   * function: a SQL call cannot carry the broadcast, and the expression
   * instance holding it is self-contained (cluster-safe). */
 case class BloomMightContainLong(child: Expression,
@@ -60,7 +60,7 @@ case class BloomMightContainLong(child: Expression,
 }
 
 /** Surviving 1-based POSITIONS of a long array under a Bloom membership
-  * test ([[BloomProbes.positions]]): one tight codegen loop
+  * test ([[Native.positions]]): one tight codegen loop
   * per row, returning the indices whose element MIGHT be in the sketch's
   * key set.
   *
@@ -118,7 +118,7 @@ case class BloomPositions(child: Expression,
 }
 
 /** EXACT bitmap membership test over a broadcast bit array
-  * ([[BloomProbes.bitmapContains]]): true iff bit `pos` is set.
+  * ([[Native.bitmapContains]]): true iff bit `pos` is set.
   *
   * The exact-filter sibling of [[BloomMightContainLong]] for the case where
   * the filter's bit space is FIXED and small by construction — q74's
@@ -165,24 +165,4 @@ case class BitmapContainsLong(child: Expression,
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** The broadcast probes as typed Columns, built straight from their
-  * expressions (through [[org.apache.spark.sql.GraftBridge]]). Each Column
-  * holds its broadcast; nothing is registered on the driver. */
-object BloomProbes {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.GraftBridge.{column, expression}
-
-  /** `key` (bigint) MIGHT be in the sketch's key set. */
-  def mightContain(key: Column, bc: Broadcast[Array[Byte]]): Column =
-    column(BloomMightContainLong(expression(key), bc))
-
-  /** 1-based positions of `hashes` (array<bigint>) that MIGHT be members. */
-  def positions(hashes: Column, bc: Broadcast[Array[Byte]]): Column =
-    column(BloomPositions(expression(hashes), bc))
-
-  /** Bit `pos` (bigint) of the broadcast bitmap is set. */
-  def bitmapContains(pos: Column, bc: Broadcast[Array[Byte]]): Column =
-    column(BitmapContainsLong(expression(pos), bc))
 }

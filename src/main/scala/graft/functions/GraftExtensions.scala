@@ -4,12 +4,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: registers the engine's native functions
-  * at session build time, so deployments can enable them cluster-wide with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (no code changes in
-  * user jobs). Local callers can equivalently use
-  * [[VectorExpressions.register]] on an existing session; both paths loop over
-  * the one table [[GraftExtensions.functions]].
+/** SparkSessionExtensions entry point: gives SQL users the engine's native
+  * functions by name ([[GraftExtensions.functions]]) and injects the
+  * [[SpecializeFloatDot]] rewrite, enabled with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Every session the
+  * repo builds carries it. The engine itself needs no name: it builds its
+  * native expressions as typed Columns ([[Native]]), so its queries also run
+  * in a session without the extension (the float-dot rewrite is then off,
+  * and the cast form it replaces gives the same bits).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,10 +32,10 @@ object GraftExtensions {
       s"$call: n must be an int literal, got $other")
   }
 
-  /** Every native function the engine exposes, by SQL name. The single list
-    * behind both [[GraftExtensions]] and [[VectorExpressions.register]].
-    * The broadcast probes are not here: they carry a `Broadcast`, so they
-    * are typed Columns ([[BloomProbes]]), not SQL functions. */
+  /** Every native function the engine exposes, by SQL name: the one SQL-name
+    * table. [[Native]] has a typed builder for each. The broadcast probes and
+    * the k-means argmin are not here: they carry a `Broadcast` or a
+    * driver-collected literal, so they are typed Columns only. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("graft_dot", e => DotProduct(e(0), e(1))),
     ("graft_dot_long", e => LongDotProduct(e(0), e(1))),

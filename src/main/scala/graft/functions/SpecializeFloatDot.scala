@@ -14,9 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * by the DuckDB oracle on q32-q34 (which computes via the cast form) and by
   * `VectorSpec`.
   *
-  * Injected via [[GraftExtensions]] (`injectOptimizerRule`); this is the
-  * engine's one custom Rule — everything else in the parity surface optimizes
-  * fine with stock Catalyst (SURVEY §4).
+  * Injected via [[GraftExtensions]] (`injectOptimizerRule`), so it runs in
+  * every session the repo builds, on typed-Column and SQL dots alike; a
+  * session without the extension keeps the cast form, which gives the same
+  * bits. This is the engine's one custom Rule — everything else in the
+  * parity surface optimizes fine with stock Catalyst (SURVEY §4).
   */
 object SpecializeFloatDot extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -432,27 +431,6 @@ case class ArgMinCellL2(first: Expression, second: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(first = newLeft, second = newRight)
-}
-
-object VectorExpressions {
-  /** Register the engine's native functions ([[GraftExtensions.functions]])
-    * in the session's function registry so plans (and SQL) can call them,
-    * plus the float-specialization optimizer rule; all idempotent. (Cluster
-    * deployments get the same via [[GraftExtensions]].) */
-  def register(spark: SparkSession): Unit = {
-    // once per session: sessions built with GraftExtensions (or an earlier
-    // register call) already carry the functions, and re-registering floods
-    // every log with SimpleFunctionRegistry replace warnings
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"))) return
-    GraftExtensions.functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
-    }
-    if (!spark.experimental.extraOptimizations.contains(SpecializeFloatDot))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SpecializeFloatDot
-  }
 }
 
 /** Specialization of [[DotProduct]] for raw float arrays: reads elements with

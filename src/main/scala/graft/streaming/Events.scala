@@ -458,10 +458,9 @@ object Events {
     * micro-batches); the batch form passes Long.MinValue (nothing before). */
   def arrivalLateness(events: DataFrame,
       carryInUs: Long = Long.MinValue): DataFrame = {
-    graft.functions.VectorExpressions.register(events.sparkSession)
     val chunked = events
-      .withColumn("arrival_us", expr(
-        "us + (graft_md5_prefix(CAST(event_id AS STRING), 7) % 7200) * 1000000"))
+      .withColumn("arrival_us", col("us") +
+        (graft.functions.Native.md5Prefix(col("event_id").cast("string"), 7) % 7200) * 1000000)
       .withColumn("chunk", expr("arrival_us div 60000000"))
     val wIn = Window.partitionBy(col("chunk"))
       .orderBy(col("arrival_us"), col("event_id"))

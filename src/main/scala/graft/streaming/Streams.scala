@@ -308,9 +308,9 @@ object Streams {
 
   /** Decontamination-on-arrival — the streaming twin of q234 and the shape
     * production screens actually deploy as: the eval benchmark is a FIXED
-    * artifact registered once at stream start
-    * ([[graft.ext.Similarity.evalBenchmark]] — driver-collected, bound as the
-    * codegen argmax literal), and every arriving embedding wave is screened
+    * artifact collected once at stream start
+    * ([[graft.ext.Similarity.evalBenchmark]] — driver-collected, carried as
+    * the codegen argmax literal), and every arriving embedding wave is screened
     * against it as a pure stateless projection plus a stream-static broadcast
     * fetch of the winning eval vector. No state store, no watermark: the
     * screen rides the file sink's checkpointed offsets + _spark_metadata for
@@ -322,7 +322,7 @@ object Streams {
     val bench = graft.ext.Similarity.evalBenchmark(spark, benchmarkDir)
     val waves = spark.readStream.schema(vectorSchema).parquet(srcDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(graft.functions.Native.dot(col("v"), col("v"))))
     graft.ext.Similarity.deconScreen(waves, bench, tau)
   }
 

@@ -57,7 +57,6 @@ class ExtSpec extends SparkSuite {
 
   test("embedding-LSH degenerate-bucket cap: hot bucket dropped, small-bucket pair kept") {
     val s = spark; import s.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // 30 identical vectors planted in one degenerate bucket (the skew shape
     // every near-dup corpus has) + one genuine near-dup pair in a small bucket
     val hot = (10L to 39L).map(i => (i, Array(1.0, 0.0, 0.0), 1.0, 0))

@@ -1,27 +1,56 @@
 package graft
 
-import graft.functions.{FloatDotProduct, GraftExtensions, VectorExpressions}
+import graft.functions.{FloatDotProduct, GraftExtensions, Native}
 import org.apache.spark.sql.functions._
 
 /** Native expression + optimizer-rule behavior. */
 class VectorSpec extends SparkSuite {
 
-  test("one function table: a GraftExtensions session carries every native name; register adds none") {
+  test("one function table: each SQL name matches its typed Native builder") {
+    import org.apache.spark.sql.Column
     import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark; import s.implicits._
     assert(spark.conf.get("spark.sql.extensions") == classOf[GraftExtensions].getName)
     val registry = spark.sessionState.functionRegistry
     val names = GraftExtensions.functions.map(_._1)
     assert(names.size == 10 && names.distinct == names)
     val missing = names.filterNot(n => registry.functionExists(FunctionIdentifier(n)))
     assert(missing.isEmpty, s"injected session lacks $missing")
-    val before = registry.listFunction().toSet
-    VectorExpressions.register(spark)
-    assert(registry.listFunction().toSet == before)
+    val cents = "array(named_struct('cid', 4L, 'cv', array(1D, 0D, 0D), 'cn', 1D), " +
+      "named_struct('cid', 2L, 'cv', array(0D, 1D, 0D), 'cn', 1D))"
+    val df = Seq(
+      (Seq(1.0, 2.0, 3.0), Seq(-0.5, 0.25, 2.0), Seq(1024L, -7L, 3L), Seq(2L, 5L, -9L),
+        "kitten", "sitting", "cafe\u0301 оffer", "the quick brown fox jumps"),
+      (Seq(0.1, -0.2, 0.3), Seq(0.3, 0.2, 0.1), Seq(0L, 0L, 1L), Seq(7L, 8L, 9L),
+        "", "abc", "ｏﬀｅｒ caf\u00e9", "a b"),
+      (null, null, null, null, null, null, null, null))
+      .toDF("a", "b", "la", "lb", "s1", "s2", "u", "t")
+      .withColumn("nrm", sqrt(Native.dot(col("a"), col("a"))))
+      .withColumn("w", split(col("t"), " "))
+    val parity: Seq[(String, String, Column)] = Seq(
+      ("graft_dot", "graft_dot(a, b)", Native.dot(col("a"), col("b"))),
+      ("graft_dot_long", "graft_dot_long(la, lb)", Native.dotLong(col("la"), col("lb"))),
+      ("graft_argmax_cell", s"graft_argmax_cell(a, nrm, $cents)",
+        Native.argmaxCell(col("a"), col("nrm"), expr(cents))),
+      ("graft_bounded_lev", "graft_bounded_lev(s1, s2, 2)",
+        Native.boundedLev(col("s1"), col("s2"), 2)),
+      ("graft_nfc", "graft_nfc(u)", Native.nfc(col("u"))),
+      ("graft_skeleton", "graft_skeleton(u)", Native.skeleton(col("u"))),
+      ("graft_minhash_sig", "graft_minhash_sig(w)", Native.minhashSig(col("w"))),
+      ("graft_sq8", "graft_sq8(b)", Native.sq8(col("b"))),
+      ("graft_gram_hashes", "graft_gram_hashes(w, 2)", Native.gramHashes(col("w"), 2)),
+      ("graft_md5_prefix", "graft_md5_prefix(t, 7)", Native.md5Prefix(col("t"), 7)))
+    assert(parity.map(_._1) == names, "one parity case per SQL name, in table order")
+    parity.foreach { case (name, sql, typed) =>
+      val viaSql = df.select(expr(sql)).collect().toSeq
+      val viaTyped = df.select(typed).collect().toSeq
+      assert(viaSql == viaTyped, s"$name: SQL and typed builder disagree")
+      assert(viaSql.exists(!_.isNullAt(0)), s"$name: no non-null row to compare")
+    }
   }
 
   test("graft_dot equals the HOF formulation bit-for-bit") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (Array(0.1f, -0.2f, 0.3f), Array(-0.4f, 0.5f, 0.25f)))
@@ -37,7 +66,6 @@ class VectorSpec extends SparkSuite {
 
   test("graft_dot_long equals the HOF formulation; null array yields null") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     val df = Seq(
       (Array(1024L, -512L, 768L), Array(256L, 512L, -64L)),
       (Array(0L, 0L, 0L), Array(7L, 8L, 9L)))
@@ -52,7 +80,6 @@ class VectorSpec extends SparkSuite {
   }
 
   test("graft_bounded_lev: SQL-callable; equals least(levenshtein, k+1) on real text") {
-    VectorExpressions.register(spark)
     val heads = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
       .limit(25).selectExpr("substring(text, 1, 80) AS h")
     val pairs = heads.crossJoin(heads.withColumnRenamed("h", "h2"))
@@ -69,7 +96,6 @@ class VectorSpec extends SparkSuite {
 
   test("graft_nfc: composes decomposed sequences, identity on canonical text, null-safe") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     val decomposed = "cafe\u0301"   // e + combining acute
     val precomposed = "caf\u00e9"   // U+00E9
     val stacked = "e\u0327\u0301" // e + combining cedilla + combining acute
@@ -90,7 +116,6 @@ class VectorSpec extends SparkSuite {
 
   test("graft_skeleton: Cyrillic/Latin homoglyph dups collapse to one key; NFKC folds fullwidth and ligatures") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     val latin = "the secret cheap meds offer"
     // every a/e/o/p/c swapped for its Cyrillic homoglyph — byte-distinct,
     // visually identical; raw exact dedup and shingle dedup both miss it
@@ -119,7 +144,6 @@ class VectorSpec extends SparkSuite {
   }
 
   test("SpecializeFloatDot rewrites cast form to FloatDotProduct with identical results") {
-    VectorExpressions.register(spark)
     // parquet source (array<float>), so constant folding can't pre-evaluate
     val df = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"),
@@ -137,7 +161,6 @@ class VectorSpec extends SparkSuite {
 
   test("graft_dot null semantics: null array yields null") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     val df = Seq((Some(Array(1.0, 2.0)), None: Option[Array[Double]]))
       .toDF("a", "b")
       .select(expr("graft_dot(a, b)").as("d"))
@@ -153,8 +176,6 @@ class VectorSpec extends SparkSuite {
   }
 
   test("graft_argmax_cell equals the relational max_by argmax; ties break to the lower cid") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    VectorExpressions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val all = graft.engine.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -164,11 +185,7 @@ class VectorSpec extends SparkSuite {
       .select(col("vec_id"), col("v"), col("nrm")).orderBy("vec_id").collect()
     val cents = centRows.toSeq.map(r =>
       graft.ext.IvfCentroidLit(r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_cell_test",
-      exprs => graft.functions.ArgMaxCell(exprs(0), exprs(1), Literal.create(cents)),
-      "scala_udf")
-    val viaExpr = all.withColumn("cell", expr("argmax_cell_test(v, nrm)"))
+    val viaExpr = all.withColumn("cell", Native.argmaxCell(col("v"), col("nrm"), typedlit(cents)))
       .select("vec_id", "cell")
     val centsDf = spark.createDataFrame(spark.sparkContext.parallelize(centRows.toSeq),
       centRows.head.schema)
@@ -186,14 +203,10 @@ class VectorSpec extends SparkSuite {
     val twin = Seq(
       graft.ext.IvfCentroidLit(9L, Seq(1.0, 0.0), 1.0),
       graft.ext.IvfCentroidLit(4L, Seq(1.0, 0.0), 1.0))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_cell_twin",
-      exprs => graft.functions.ArgMaxCell(exprs(0), exprs(1), Literal.create(twin)),
-      "scala_udf")
     val s2 = spark; import s2.implicits._
     val picked = Seq((Seq(0.5, 0.5), math.sqrt(0.5)))
       .toDF("v", "nrm")
-      .select(expr("argmax_cell_twin(v, nrm)").as("cell"))
+      .select(Native.argmaxCell(col("v"), col("nrm"), typedlit(twin)).as("cell"))
       .head().getLong(0)
     assert(picked == 4L, s"tie must break to the lower cid, got $picked")
   }
@@ -201,7 +214,6 @@ class VectorSpec extends SparkSuite {
   test("graft_argmin_cell equals the relational argmin; all-way ties break to the lowest cid; empty table -1") {
     val s = spark; import s.implicits._
     import graft.ext.CentroidLit
-    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.expressions.Window
     // deliberately NOT cid-sorted: the tie-break must come from the compare,
     // not the input order
@@ -209,17 +221,13 @@ class VectorSpec extends SparkSuite {
       CentroidLit(3L, Seq(0L, 0L)),
       CentroidLit(1L, Seq(10L, 0L)),
       CentroidLit(7L, Seq(0L, 10L)))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "test_km_argmin",
-      exprs => graft.functions.ArgMinCellL2(exprs(0), Literal.create(cents)),
-      "scala_udf")
     val qs = Seq(
       (0L, Seq(1L, 0L)),   // nearest (0,0) -> cid 3
       (1L, Seq(9L, 1L)),   // nearest (10,0) -> cid 1
       (2L, Seq(5L, 5L)),   // d = 50 to ALL three -> lowest cid 1
       (3L, Seq(0L, 11L)))  // nearest (0,10) -> cid 7
       .toDF("id", "q")
-    val fast = qs.selectExpr("id", "test_km_argmin(q) AS cell").collect()
+    val fast = qs.select(col("id"), Native.argminCell(col("q"), typedlit(cents))).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val slow = qs.crossJoin(cents.toDF("cid", "cq"))
       .withColumn("d", expr(
@@ -230,19 +238,13 @@ class VectorSpec extends SparkSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == slow, "codegen argmin must equal the relational (dist, cid) argmin")
     assert(fast(2L) == 1L, "the all-way tie must resolve to the lowest cid")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "test_km_argmin_empty",
-      exprs => graft.functions.ArgMinCellL2(
-        exprs(0), Literal.create(Seq.empty[CentroidLit])),
-      "scala_udf")
-    val sentinel = qs.selectExpr("test_km_argmin_empty(q) AS cell")
+    val sentinel = qs.select(Native.argminCell(col("q"), typedlit(Seq.empty[CentroidLit])))
       .collect().map(_.getLong(0)).toSet
     assert(sentinel == Set(-1L), "empty centroid table must yield the -1 sentinel")
   }
 
   test("graft_minhash_sig equals the interpreted HOF fold; under 3 words yields null") {
     val s = spark; import s.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val docs = Seq(
       "the quick brown fox jumps over the lazy dog",
       "a b c",                       // exactly one shingle
@@ -273,7 +275,6 @@ class VectorSpec extends SparkSuite {
 
   test("graft_gram_hashes: window equality, boundary safety, short docs empty") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     // identical 3-word windows hash identically; all others differ
     val h = Seq("a b c d a b c").toDF("text")
       .selectExpr("graft_gram_hashes(split(text, ' '), 3) AS h")
@@ -300,21 +301,20 @@ class VectorSpec extends SparkSuite {
 
   test("bloom predicate: no false negatives, empty keys -> None, positions match scalar") {
     val s = spark; import s.implicits._
-    import graft.functions.BloomProbes
     val keys = Seq(11L, 22L, 33L).toDF("gh")
     val bc = graft.engine.RelOps.bloomPredicate(keys, "gh").get
     val probe = Seq(
       (1L, Seq(11L, 5L, 22L)), // positions 1 and 3 are members
       (2L, Seq(7L, 8L)), // no members (modulo fpp, ~0 at this size)
       (3L, Seq(33L))).toDF("id", "hs")
-    val pos = probe.select(col("id"), BloomProbes.positions(col("hs"), bc).as("p"))
+    val pos = probe.select(col("id"), Native.positions(col("hs"), bc).as("p"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     // every true member MUST survive (no false negatives)
     assert(pos(1L).contains(1) && pos(1L).contains(3))
     assert(pos(3L) == Seq(1))
     // the scalar form agrees with the array form position-by-position
     val scal = probe.select(col("id"), filter(sequence(lit(1), size(col("hs"))),
-        i => BloomProbes.mightContain(element_at(col("hs"), i), bc)).as("p"))
+        i => Native.mightContain(element_at(col("hs"), i), bc)).as("p"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(pos == scal, "array and scalar bloom forms disagree")
     // empty key set -> None (caller emits a constant-false filter)
@@ -324,7 +324,6 @@ class VectorSpec extends SparkSuite {
 
   test("graft_sq8 equals the transform/CASE HOF quantizer bit-for-bit") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     // flat vector (mx = mn -> all zero), negatives, a boundary value at mx,
     // a single-element vector, an empty vector, and irregular doubles whose
     // (x-mn)*255/(mx-mn) lands near the 255 clamp
@@ -352,7 +351,6 @@ class VectorSpec extends SparkSuite {
   }
   test("graft_md5_prefix equals conv(substring(md5, 1, n), 16, 10) bit-for-bit") {
     val s = spark; import s.implicits._
-    VectorExpressions.register(spark)
     val rows = Seq("", "a", "hello world", "Customer#000000001",
       "élève café", "日本語 テスト",
       "j:three word shingle", "0:x", "a b c d e f g")
