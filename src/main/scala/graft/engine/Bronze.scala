@@ -11,13 +11,9 @@ import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
   */
 object Bronze {
 
-  /** CSV → DataFrame with pinned schema (S1; inference available as opt-in). */
-  def readCsv(spark: SparkSession, path: String, table: String,
-      inferSchema: Boolean = false): DataFrame = {
-    val r = spark.read.option("header", "true")
-    (if (inferSchema) r.option("inferSchema", "true")
-     else r.schema(Schemas.olist(table))).csv(path)
-  }
+  /** CSV → DataFrame with pinned schema (S1). */
+  def readCsv(spark: SparkSession, path: String, table: String): DataFrame =
+    spark.read.option("header", "true").schema(Schemas.olist(table)).csv(path)
 
   /** All 9 Olist sources from a directory of `olist_<t>_dataset.csv` files,
     * keyed like `ingestion.py:27-37`. */

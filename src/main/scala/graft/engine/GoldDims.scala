@@ -21,11 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object GoldDims {
 
-  private def sk(name: String, orderCols: Seq[String]): DataFrame => DataFrame = df =>
-    // sorted distributed sequence — the row_number values (SK keys are
-    // unique), no all-to-one WindowExec even if a dimension approaches fact scale
-    RelOps.rangedRowNumber(df, name, orderCols)
-
   /** dim_date: range-source spine + 20 calendar attributes
     * (`reporting.py:55-93`). Seeded from orders min/max purchase time, a
     * driver round-trip at construction — the only one in the gold build. */
@@ -103,18 +98,19 @@ object GoldDims {
 
   /** `reporting.py:126-139`. */
   def dimCustomers(silverCustomers: DataFrame): DataFrame =
-    sk("Customer_SK", Seq("Customer_ID"))(
+    RelOps.rangedRowNumber(
       silverCustomers.select(
         col("Cus_ID").as("Customer_ID"),
         col("Cus_Unique_ID").as("Customer_Unique_ID"),
         col("Cus_Zip_Code_Prefix").as("Customer_Zip_Code"),
         col("Cus_City").as("Customer_City"),
         col("customer_state").as("Customer_State"),
-        zipRegion("Cus_Zip_Code_Prefix").as("Customer_Region")))
+        zipRegion("Cus_Zip_Code_Prefix").as("Customer_Region")),
+      "Customer_SK", Seq("Customer_ID"))
 
   /** `reporting.py:142-157`: weight bands + H×W×L volume. */
   def dimProducts(silverProducts: DataFrame): DataFrame =
-    sk("Product_SK", Seq("Product_ID"))(
+    RelOps.rangedRowNumber(
       silverProducts.select(
         col("Prod_ID").as("Product_ID"),
         col("Prod_Category_Name").as("Product_Category"),
@@ -127,21 +123,23 @@ object GoldDims {
           .when(col("Prod_Weight_G") >= 2000, "Heavy")
           .otherwise("Unknown").as("Product_Weight_Category"),
         (col("Prod_Height_CM") * col("Prod_Width_CM") * col("Prod_Length_CM"))
-          .as("Product_Volume_CM3")))
+          .as("Product_Volume_CM3")),
+      "Product_SK", Seq("Product_ID"))
 
   /** `reporting.py:160-172`. */
   def dimSellers(silverSellers: DataFrame): DataFrame =
-    sk("Seller_SK", Seq("Seller_ID"))(
+    RelOps.rangedRowNumber(
       silverSellers.select(
         col("Sell_ID").as("Seller_ID"),
         col("Sell_Zip_Code_Prefix").as("Seller_Zip_Code"),
         col("Sell_City").as("Seller_City"),
         col("Sell_State").as("Seller_State"),
-        zipRegion("Sell_Zip_Code_Prefix").as("Seller_Region")))
+        zipRegion("Sell_Zip_Code_Prefix").as("Seller_Region")),
+      "Seller_SK", Seq("Seller_ID"))
 
   /** `reporting.py:175-189`: UF state → macro-region isin chain + zip dedup. */
   def dimGeography(silverGeo: DataFrame): DataFrame =
-    sk("Geography_SK", Seq("Zip_Code"))(
+    RelOps.rangedRowNumber(
       silverGeo.select(
         col("Geo_Zip_Code_Prefix").as("Zip_Code"),
         col("Geo_City").as("City"),
@@ -154,34 +152,37 @@ object GoldDims {
           .when(col("Geo_State").isin("GO", "DF", "MT", "MS"), "Center-West")
           .when(col("Geo_State").isin("AM", "RR", "AP", "PA", "TO", "RO", "AC"), "North")
           .otherwise("Unknown").as("Region"))
-        .dropDuplicates("Zip_Code"))
+        .dropDuplicates("Zip_Code"),
+      "Geography_SK", Seq("Zip_Code"))
 
   /** `reporting.py:192-202`. (The reference classifies lowercase statuses but
     * silver initcap'd them — its Status_Category is always "Other"; preserved.) */
   def dimOrderStatus(silverOrders: DataFrame): DataFrame =
-    sk("Order_Status_SK", Seq("Order_Status"))(
+    RelOps.rangedRowNumber(
       silverOrders.select(col("Ord_Status").as("Order_Status")).distinct()
         .select(
           col("Order_Status"),
           when(col("Order_Status").isin("delivered"), "Completed")
             .when(col("Order_Status").isin("shipped", "processing"), "In Progress")
             .when(col("Order_Status").isin("canceled", "unavailable"), "Failed")
-            .otherwise("Other").as("Status_Category")))
+            .otherwise("Other").as("Status_Category")),
+      "Order_Status_SK", Seq("Order_Status"))
 
   /** `reporting.py:205-215`. */
   def dimPaymentTypes(silverPayments: DataFrame): DataFrame =
-    sk("Payment_Type_SK", Seq("Payment_Type"))(
+    RelOps.rangedRowNumber(
       silverPayments.select(col("Payment_Type")).distinct()
         .select(
           col("Payment_Type"),
           when(col("Payment_Type").isin("credit_card", "debit_card"), "Card")
             .when(col("Payment_Type").isin("boleto"), "Bank Transfer")
             .when(col("Payment_Type").isin("voucher"), "Voucher")
-            .otherwise("Other").as("Payment_Category")))
+            .otherwise("Other").as("Payment_Category")),
+      "Payment_Type_SK", Seq("Payment_Type"))
 
   /** `reporting.py:218-235`. */
   def dimReviewScores(silverReviews: DataFrame): DataFrame =
-    sk("Review_Score_SK", Seq("Review_Score"))(
+    RelOps.rangedRowNumber(
       silverReviews.select(col("Rev_Score").cast("int").as("Review_Score")).distinct()
         .select(
           col("Review_Score"),
@@ -194,7 +195,8 @@ object GoldDims {
           when(col("Review_Score").isin(1, 2), "Negative")
             .when(col("Review_Score") === 3, "Neutral")
             .when(col("Review_Score").isin(4, 5), "Positive")
-            .otherwise("Unknown").as("Score_Category")))
+            .otherwise("Unknown").as("Score_Category")),
+      "Review_Score_SK", Seq("Review_Score"))
 
   /** All 9 dims, keyed like `reporting.py:237-247`, each built only when its
     * function is called: `dim_date` runs a driver min/max job at

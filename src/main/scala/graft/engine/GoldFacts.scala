@@ -6,13 +6,16 @@ import org.apache.spark.sql.functions._
 /** Gold facts: the reference's 3 fact tables (`spark_jobs/reporting.py:249-409`)
   * as pure functions over silver DataFrames.
   *
-  * Determinism deviations (SURVEY §7.4), both opt-outable via `deterministic`:
+  * Determinism deviations (SURVEY §7.4):
   *  - `first(Payment_Type)` (`reporting.py:263,313`) → `min(...)` (at reference
   *    runtime silver already deduped payments to one row per order, so
   *    first == min == the only value; on un-deduped data min is the stable choice);
-  *  - `monotonically_increasing_id()` SK → `row_number()` over the natural key.
-  *  - `current_timestamp()` Load_Timestamp is emitted only when
-  *    `withLoadTimestamp = true` (it is nondeterministic by nature).
+  *  - `monotonically_increasing_id()` SK → the row number over the natural
+  *    key, as a range-sorted distributed sequence ([[RelOps.rangedRowNumber]];
+  *    fact SK keys are unique natural keys), so the fact build never funnels
+  *    through one partition for its surrogate keys at 100 TB;
+  *  - the reference's `current_timestamp()` Load_Timestamp is not emitted (it
+  *    is nondeterministic by nature).
   *
   * Scale: payments/items aggregate map-side before one shuffle on Ord_ID; the
   * fact joins then reuse that same key, so at 100 TB the whole build is two
@@ -21,27 +24,17 @@ import org.apache.spark.sql.functions._
   */
 object GoldFacts {
 
-  private def withSk(name: String, orderCols: Seq[String], df: DataFrame): DataFrame =
-    // sorted distributed sequence — the row_number values (fact SK keys are
-    // unique natural keys), and the fact build never funnels through ONE
-    // partition for its surrogate keys at 100 TB
-    RelOps.rangedRowNumber(df, name, orderCols)
-
   /** Payments rolled up per order — `reporting.py:260-263`. */
-  def paymentsAggSales(silverPayments: DataFrame, deterministic: Boolean = true): DataFrame = {
-    val primary =
-      if (deterministic) min(col("Payment_Type")) else first(col("Payment_Type"))
+  def paymentsAggSales(silverPayments: DataFrame): DataFrame =
     silverPayments.groupBy(col("Ord_ID")).agg(
       sum(col("Payment_Value")).as("Order_Payment_Value"),
-      primary.as("Primary_Payment_Type"))
-  }
+      min(col("Payment_Type")).as("Primary_Payment_Type"))
 
   /** Fact_Sales, grain: order item (`reporting.py:249-297`). */
-  def factSales(silver: Map[String, DataFrame], deterministic: Boolean = true,
-      withLoadTimestamp: Boolean = false): DataFrame = {
+  def factSales(silver: Map[String, DataFrame]): DataFrame = {
     val base = silver("order_items").alias("oi")
       .join(silver("orders").alias("o"), "Ord_ID")
-      .join(paymentsAggSales(silver("order_payments"), deterministic).alias("p"), "Ord_ID")
+      .join(paymentsAggSales(silver("order_payments")).alias("p"), "Ord_ID")
       .select(
         col("Ord_ID").as("Order_ID"),
         col("oi.Ord_Item_ID").as("Order_Item_ID"),
@@ -57,22 +50,16 @@ object GoldFacts {
         lit(1).as("Quantity"),
         col("p.Order_Payment_Value").as("Order_Payment_Value"),
         col("o.Ord_Purchase_Time").as("Order_Timestamp"))
-    val withTs =
-      if (withLoadTimestamp) base.withColumn("Load_Timestamp", current_timestamp())
-      else base
-    withSk("Sales_SK", Seq("Order_ID", "Order_Item_ID"), withTs)
+    RelOps.rangedRowNumber(base, "Sales_SK", Seq("Order_ID", "Order_Item_ID"))
   }
 
   /** Fact_Orders, grain: order (`reporting.py:299-363`). */
-  def factOrders(silver: Map[String, DataFrame], deterministic: Boolean = true,
-      withLoadTimestamp: Boolean = false): DataFrame = {
-    val primary =
-      if (deterministic) min(col("Payment_Type")) else first(col("Payment_Type"))
+  def factOrders(silver: Map[String, DataFrame]): DataFrame = {
     val paymentsAgg = silver("order_payments").groupBy(col("Ord_ID")).agg(
       sum(col("Payment_Value")).as("Total_Payment_Value"),
       sum(col("Payment_Installments")).as("Total_Installments"),
       count(col("Payment_Type")).as("Payment_Methods_Count"),
-      primary.as("Primary_Payment_Type"))
+      min(col("Payment_Type")).as("Primary_Payment_Type"))
     val itemsAgg = silver("order_items").groupBy(col("Ord_ID")).agg(
       count(col("Ord_Item_ID")).as("Items_Count"),
       sum(col("Price")).as("Items_Total_Value"),
@@ -100,15 +87,11 @@ object GoldFacts {
         col("o.Ord_Estimated_Delivery_Date").as("Estimated_Delivery_Date"),
         datediff(col("o.Ord_Approved_At"), col("o.Ord_Purchase_Time")).as("Approval_Days"),
         datediff(col("o.Ord_Delivered_Customer_Date"), col("o.Ord_Purchase_Time")).as("Total_Delivery_Days"))
-    val withTs =
-      if (withLoadTimestamp) base.withColumn("Load_Timestamp", current_timestamp())
-      else base
-    withSk("Order_SK", Seq("Order_ID"), withTs)
+    RelOps.rangedRowNumber(base, "Order_SK", Seq("Order_ID"))
   }
 
   /** Fact_Reviews, grain: review (`reporting.py:365-409`). */
-  def factReviews(silver: Map[String, DataFrame],
-      withLoadTimestamp: Boolean = false): DataFrame = {
+  def factReviews(silver: Map[String, DataFrame]): DataFrame = {
     val base = silver("order_reviews").alias("r")
       .join(silver("orders").alias("o"), "Ord_ID")
       .select(
@@ -128,9 +111,6 @@ object GoldFacts {
         col("r.Rev_Creation_Date").as("Review_Creation_Date"),
         col("r.Rev_Answer_Timestamp").as("Review_Answer_Date"),
         datediff(col("r.Rev_Answer_Timestamp"), col("r.Rev_Creation_Date")).as("Response_Days"))
-    val withTs =
-      if (withLoadTimestamp) base.withColumn("Load_Timestamp", current_timestamp())
-      else base
-    withSk("Review_SK", Seq("Review_ID", "Order_ID"), withTs)
+    RelOps.rangedRowNumber(base, "Review_SK", Seq("Review_ID", "Order_ID"))
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions.{count, expr, lit}
   * stage sequencing with concurrent table writes inside each stage, quality
   * gate between silver and gold, Parquet sinks in a medallion directory
   * layout (`out/{bronze,silver,gold}/`), idempotent by overwrite like the
-  * reference's 30-minute re-runs.
+  * reference's 30-minute re-runs. The gate's violation counts ride on the
+  * silver writes' Observations ([[Quality.rules]]), so it reads no data.
   *
   * Side-effect hooks replace the DAG's email notification tasks (O4).
   */
@@ -80,6 +81,9 @@ object Pipeline {
 
   /** Run the full pipeline from an Olist CSV directory. Within each stage the
     * table writes are independent and run concurrently ([[concurrently]]).
+    * The quality gate runs no job: it reads [[Quality.rules]]' violation
+    * counts from the silver writes' Observations, and a failed check throws
+    * before any gold write.
     * @param onStageComplete notification hook (stage name) — O4 analog.
     * @param stageRetries    total attempts per stage (O3; reference: 2)
     * @param retryDelayMs    delay between attempts (reference: 30 min; 0 here
@@ -87,7 +91,6 @@ object Pipeline {
     * @param onRetry         hook fired when a stage attempt fails and will be
     *                        retried */
   def run(spark: SparkSession, csvDir: String, outDir: String,
-      writeBronze: Boolean = true,
       onStageComplete: String => Unit = _ => (),
       stageRetries: Int = 2,
       retryDelayMs: Long = 0L,
@@ -103,30 +106,31 @@ object Pipeline {
     // Bronze: one session, explicit schemas (vs ingestion.py's session-per-table)
     val bronze = Bronze.readAll(spark, csvDir)
     staged("bronze") {
-      if (!writeBronze) Nil
-      else bronze.toSeq.map { case (name, df) =>
+      bronze.toSeq.map { case (name, df) =>
         () => Bronze.writeParquet(df, s"$outDir/bronze/$name") }
     }
 
     // Silver: 8 cleaned tables, written once each; each write counts its own
-    // rows through an Observation, created per attempt as it is single-use
+    // rows and its quality rules' violations through an Observation, created
+    // per attempt as it is single-use
     val silver = Silver.transformAll(bronze)
     val silverOut = staged("silver") {
       silver.toSeq.map { case (name, df) => () =>
-        val rows = Observation()
-        Bronze.writeParquet(df.observe(rows, count(lit(1)).as("rows")), s"$outDir/silver/$name")
+        val metrics = Observation()
+        Bronze.writeParquet(df.observe(metrics, count(lit(1)).as("rows"), Quality.columns(name): _*),
+          s"$outDir/silver/$name")
         // re-read so gold plans scan parquet instead of recomputing the
         // lineage; the schema is the one just written, so no inference job
-        (name, spark.read.schema(df.schema).parquet(s"$outDir/silver/$name"),
-          rows.get("rows").asInstanceOf[Long])
+        (name, spark.read.schema(df.schema).parquet(s"$outDir/silver/$name"), metrics.get)
       }
     }
     val silverStored = silverOut.map { case (n, df, _) => n -> df }.toMap
+    val observed = silverOut.map { case (n, _, m) => n -> m }.toMap
 
     // Quality gate between silver and gold — halts on violation (O2).
     // Deliberately NOT retried: a data-quality violation is deterministic —
     // re-running it would just re-fail after the delay.
-    val checks = Quality.gate(silverStored)
+    val checks = Quality.enforce(Quality.rules.keys.toSeq.flatMap(t => Quality.results(t, observed(t))))
     onStageComplete("quality_checks")
 
     // Gold: 9 dims + 3 facts, each built inside its own task so dim_date's
@@ -145,7 +149,7 @@ object Pipeline {
       fact("fact_reviews", "Review_Date_SK", "Review_Year")(GoldFacts.factReviews(silverStored)))
     staged("gold")(gold.map(_._2))
 
-    RunReport(silverOut.map { case (n, _, rows) => n -> rows }.toMap, checks,
+    RunReport(observed.map { case (n, m) => n -> m("rows").asInstanceOf[Long] }, checks,
       gold.map(_._1).sorted)
   }
 }

@@ -1,13 +1,18 @@
 package graft.engine
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Native
 
 /** Data-quality gates: the reference runs these as SQL in Postgres from Airflow
   * (`Dag/E-commerce_dag.py:11-47`) and raises to halt the DAG (`:49-77`); here
-  * they are Spark aggregates over the silver DataFrames, halting via exception —
-  * no external store, no process boundary (SURVEY §2.11 O2, §2.5 A5).
+  * they are one table of Spark aggregates ([[rules]]), halting via exception —
+  * no external store, no process boundary (SURVEY §2.11 O2, §2.5 A5). The
+  * batch pipeline reads them off its silver writes' Observations, the stream
+  * evaluates them on each cleaned batch before the append, and [[gate]]
+  * evaluates them over any silver DataFrames.
   */
 object Quality {
 
@@ -19,24 +24,44 @@ object Quality {
   private def violations(cond: Column): Column =
     coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L))
 
-  /** null checks on order_items keys (`E-commerce_dag.py:22-29`). */
-  def checkOrderItems(silverItems: DataFrame): Seq[CheckResult] = {
-    val row = silverItems.agg(
-      violations(col("Ord_ID").isNull).as("null_ord"),
-      violations(col("Prod_ID").isNull).as("null_prod")).head()
-    Seq(
-      CheckResult("order_items.Ord_ID not null", row.getLong(0)),
-      CheckResult("order_items.Prod_ID not null", row.getLong(1)))
+  /** The reference's gate (`E-commerce_dag.py:22-37`), declared once: per
+    * silver table, each check's name and its violation count as an aggregate
+    * Column. Declaration order is the order of every gate's results. */
+  val rules: ListMap[String, Seq[(String, Column)]] = ListMap(
+    "order_items" -> Seq(
+      "order_items.Ord_ID not null" -> violations(col("Ord_ID").isNull),
+      "order_items.Prod_ID not null" -> violations(col("Prod_ID").isNull)),
+    "order_reviews" -> Seq(
+      "order_reviews.Rev_ID not null" -> violations(col("Rev_ID").isNull),
+      "order_reviews.Rev_ID length = 32" -> violations(length(col("Rev_ID")) =!= 32)))
+
+  /** `table`'s rules as aggregates aliased by check name: an `agg` or an
+    * `Observation` over them yields the metrics [[results]] reads. */
+  def columns(table: String): Seq[Column] =
+    rules.getOrElse(table, Nil).map { case (name, c) => c.as(name) }
+
+  /** `table`'s check results from a metrics row of its [[columns]]. */
+  def results(table: String, metrics: Map[String, Any]): Seq[CheckResult] =
+    rules.getOrElse(table, Nil).map { case (name, _) =>
+      CheckResult(name, metrics(name).asInstanceOf[Long])
+    }
+
+  /** `table`'s check results in one aggregate pass over `df`; no job for a
+    * table without rules. */
+  def evaluate(table: String, df: DataFrame): Seq[CheckResult] = columns(table) match {
+    case Seq() => Nil
+    case cols =>
+      val row = df.agg(cols.head, cols.tail: _*).head()
+      results(table, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
   }
 
-  /** null + 32-char-id checks on order_reviews (`E-commerce_dag.py:30-37`). */
-  def checkOrderReviews(silverReviews: DataFrame): Seq[CheckResult] = {
-    val row = silverReviews.agg(
-      violations(col("Rev_ID").isNull).as("null_rev"),
-      violations(length(col("Rev_ID")) =!= 32).as("bad_len")).head()
-    Seq(
-      CheckResult("order_reviews.Rev_ID not null", row.getLong(0)),
-      CheckResult("order_reviews.Rev_ID length = 32", row.getLong(1)))
+  /** Halts like the DAG's ValueError (`E-commerce_dag.py:69-77`) when any
+    * check failed; returns `results` otherwise. */
+  def enforce(results: Seq[CheckResult]): Seq[CheckResult] = {
+    val failed = results.filterNot(_.passed)
+    require(failed.isEmpty,
+      s"quality gate failed: ${failed.map(r => s"${r.name} (${r.violations} violations)").mkString("; ")}")
+    results
   }
 
   /** Declarative expectation suite (q128): each check is an AGGREGATE
@@ -292,14 +317,8 @@ object Quality {
       .orderBy("digit")
   }
 
-  /** Run all reference gates; throws like the DAG's ValueError on failure
-    * (`E-commerce_dag.py:69-77`). */
-  def gate(silver: Map[String, DataFrame]): Seq[CheckResult] = {
-    val results = checkOrderItems(silver("order_items")) ++
-      checkOrderReviews(silver("order_reviews"))
-    val failed = results.filterNot(_.passed)
-    require(failed.isEmpty,
-      s"quality gate failed: ${failed.map(r => s"${r.name} (${r.violations} violations)").mkString("; ")}")
-    results
-  }
+  /** Every rule over its table in `silver`, one aggregate pass each; a
+    * missing table throws. */
+  def gate(silver: Map[String, DataFrame]): Seq[CheckResult] =
+    enforce(rules.keys.toSeq.flatMap(t => evaluate(t, silver(t))))
 }

@@ -11,10 +11,9 @@ import org.apache.spark.sql.functions._
   * Reference-faithful semantics preserved exactly (they are load-bearing for
   * row counts, SURVEY §7.4):
   *  - negated rlike filters DROP rows with NULL comment/title (NULL predicate);
-  *  - `dropDuplicates(["Ord_ID"])` keeps an arbitrary survivor — our default is
-  *    the deterministic first row under a total order (same multiset of keys,
-  *    stable across runs); pass `deterministic = false` for the raw reference
-  *    behavior;
+  *  - `dropDuplicates(["Ord_ID"])` keeps an arbitrary survivor — here it is
+  *    the first row under a total order (same multiset of keys, stable across
+  *    runs);
   *  - order_items dedup by Ord_ID destroys the order-item grain (reference bug,
   *    `transformation.py:70` vs `reporting.py:250`); `cleanOrderItems` keeps it
   *    by default for parity, `dedupItems = false` preserves the true grain.
@@ -22,16 +21,13 @@ import org.apache.spark.sql.functions._
 object Silver {
 
   /** Deterministic keyed dedup: first row ordered by `tieBreak`. */
-  private def dedupBy(df: DataFrame, key: String, tieBreak: Seq[String],
-      deterministic: Boolean): DataFrame =
-    if (!deterministic) df.dropDuplicates(key)
-    else {
-      val w = Window.partitionBy(col(key))
-        .orderBy(tieBreak.map(col): _*)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__rn")
-    }
+  private def dedupBy(df: DataFrame, key: String, tieBreak: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(col(key))
+      .orderBy(tieBreak.map(col): _*)
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
+  }
 
   /** `transformation.py:28-34`. */
   def cleanCustomers(df: DataFrame): DataFrame =
@@ -65,8 +61,7 @@ object Silver {
 
   /** `transformation.py:62-70`. `dedupItems = false` keeps the order-item grain
     * (the corrected behavior; default mirrors the reference). */
-  def cleanOrderItems(df: DataFrame, dedupItems: Boolean = true,
-      deterministic: Boolean = true): DataFrame = {
+  def cleanOrderItems(df: DataFrame, dedupItems: Boolean = true): DataFrame = {
     val projected = df.select(
       col("order_id").as("Ord_ID"),
       col("order_item_id").as("Ord_Item_ID"),
@@ -75,12 +70,12 @@ object Silver {
       col("shipping_limit_date").as("Shipping_Limit_Date"),
       col("price").as("Price"),
       col("freight_value").as("Freight_Value"))
-    if (dedupItems) dedupBy(projected, "Ord_ID", Seq("Ord_Item_ID", "Prod_ID"), deterministic)
+    if (dedupItems) dedupBy(projected, "Ord_ID", Seq("Ord_Item_ID", "Prod_ID"))
     else projected
   }
 
   /** `transformation.py:74-81`: dedup by order + drop 'not_defined'. */
-  def cleanOrderPayments(df: DataFrame, deterministic: Boolean = true): DataFrame =
+  def cleanOrderPayments(df: DataFrame): DataFrame =
     dedupBy(
       df.select(
         col("order_id").as("Ord_ID"),
@@ -88,12 +83,12 @@ object Silver {
         col("payment_type").as("Payment_Type"),
         col("payment_installments").as("Payment_Installments"),
         col("payment_value").as("Payment_Value")),
-      "Ord_ID", Seq("Payment_Sequential", "Payment_Type"), deterministic)
+      "Ord_ID", Seq("Payment_Sequential", "Payment_Type"))
       .filter(col("Payment_Type") =!= "not_defined")
 
   /** `transformation.py:85-98`: dedup + the 5 constructive quality filters.
     * NULL comment/title rows are dropped by the negated rlike — by design. */
-  def cleanOrderReviews(df: DataFrame, deterministic: Boolean = true): DataFrame =
+  def cleanOrderReviews(df: DataFrame): DataFrame =
     dedupBy(
       df.select(
         col("review_id").as("Rev_ID"),
@@ -103,7 +98,7 @@ object Silver {
         col("review_comment_message").as("Rev_Comment_Message"),
         col("review_creation_date").as("Rev_Creation_Date"),
         col("review_answer_timestamp").as("Rev_Answer_Timestamp")),
-      "Ord_ID", Seq("Rev_ID"), deterministic)
+      "Ord_ID", Seq("Rev_ID"))
       .filter(length(col("Rev_ID")) === 32)
       .filter(col("Rev_Score").between(1, 5))
       .filter(!col("Rev_Comment_Message").rlike("[^a-zA-Z0-9\\s.,!?]"))
@@ -129,16 +124,21 @@ object Silver {
       initcap(col("seller_city")).as("Sell_City"),
       col("seller_state").as("Sell_State"))
 
+  /** The cleaner of each of the 8 silver tables, keyed by its bronze source
+    * (translation table dropped at silver per the reference); the batch
+    * pipeline and the stream both clean through it. */
+  val cleaners: Map[String, DataFrame => DataFrame] = Map(
+    "customers" -> cleanCustomers,
+    "orders" -> cleanOrders,
+    "geolocation" -> cleanGeolocation,
+    "order_items" -> (df => cleanOrderItems(df)),
+    "order_payments" -> cleanOrderPayments,
+    "order_reviews" -> cleanOrderReviews,
+    "products" -> cleanProducts,
+    "sellers" -> cleanSellers)
+
   /** All 8 silver tables from their bronze inputs — the shape of
-    * `transform(spark)` (`transformation.py:122-131`; translation table dropped
-    * at silver per the reference). */
-  def transformAll(bronze: Map[String, DataFrame]): Map[String, DataFrame] = Map(
-    "customers" -> cleanCustomers(bronze("customers")),
-    "orders" -> cleanOrders(bronze("orders")),
-    "geolocation" -> cleanGeolocation(bronze("geolocation")),
-    "order_items" -> cleanOrderItems(bronze("order_items")),
-    "order_payments" -> cleanOrderPayments(bronze("order_payments")),
-    "order_reviews" -> cleanOrderReviews(bronze("order_reviews")),
-    "products" -> cleanProducts(bronze("products")),
-    "sellers" -> cleanSellers(bronze("sellers")))
+    * `transform(spark)` (`transformation.py:122-131`). */
+  def transformAll(bronze: Map[String, DataFrame]): Map[String, DataFrame] =
+    cleaners.map { case (table, clean) => table -> clean(bronze(table)) }
 }

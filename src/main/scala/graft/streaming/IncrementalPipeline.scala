@@ -17,40 +17,16 @@ import graft.engine.{Quality, Schemas, Silver}
   */
 object IncrementalPipeline {
 
-  /** Silver cleaner per table — the same functions the batch pipeline uses
-    * ([[Silver.transformAll]]), applied per micro-batch. */
-  val cleaners: Map[String, DataFrame => DataFrame] = Map(
-    "customers" -> Silver.cleanCustomers,
-    "orders" -> Silver.cleanOrders,
-    "geolocation" -> Silver.cleanGeolocation,
-    "order_items" -> (df => Silver.cleanOrderItems(df)),
-    "order_payments" -> (df => Silver.cleanOrderPayments(df)),
-    "order_reviews" -> (df => Silver.cleanOrderReviews(df)),
-    "products" -> Silver.cleanProducts,
-    "sellers" -> Silver.cleanSellers)
-
-  /** Per-table quality gate on the CLEANED micro-batch — the O2 gate moved
-    * into the stream: a violating batch throws, which fails the query before
-    * the batch commits, halting ingestion exactly like the DAG's ValueError
-    * halts the 30-minute run. */
-  def gateBatch(table: String, cleaned: DataFrame): Unit = {
-    val results = table match {
-      case "order_items" => Quality.checkOrderItems(cleaned)
-      case "order_reviews" => Quality.checkOrderReviews(cleaned)
-      case _ => Nil
-    }
-    val failed = results.filterNot(_.passed)
-    require(failed.isEmpty,
-      s"quality gate failed for $table: ${failed.map(r => s"${r.name} (${r.violations})").mkString("; ")}")
-  }
-
   /** Incrementally ingest + clean any of the 8 silver tables from `csvDir`
     * into `outDir/silver/<table>` parquet; returns after the backlog drains.
     *
     * Cleaning runs inside `foreachBatch` (the keyed-dedup cleaners use
-    * row_number windows, which streaming plans don't allow pre-sink), so the
-    * gate sees the cleaned batch before any write: a violation fails the
-    * stream with nothing committed for that batch. Keyed dedup is therefore
+    * row_number windows, which streaming plans don't allow pre-sink) with
+    * [[Silver.cleaners]], the batch pipeline's cleaners. The table's
+    * [[Quality.rules]] then run on the cleaned batch before any write — the
+    * O2 gate moved into the stream: a violation fails the stream with
+    * nothing committed for that batch, halting ingestion exactly like the
+    * DAG's ValueError halts the 30-minute run. Keyed dedup is therefore
     * per-micro-batch — cross-batch duplicates are handled downstream (gold
     * rebuilds or [[graft.engine.Scd2]]), same grain the reference's per-run
     * dropDuplicates has per 30-minute cycle.
@@ -63,8 +39,8 @@ object IncrementalPipeline {
     * [[runOrdersAvailableNow]] path keeps the exactly-once file-sink form for
     * tables that need no gate or dedup. */
   def runTableAvailableNow(spark: SparkSession, table: String, csvDir: String,
-      outDir: String, gate: Boolean = true): Unit = {
-    val clean = cleaners(table)
+      outDir: String): Unit = {
+    val clean = Silver.cleaners(table)
     val bronze = spark.readStream
       .option("header", "true")
       .schema(Schemas.olist(table))
@@ -75,7 +51,7 @@ object IncrementalPipeline {
         // re-run the clean lineage (incl. the dedup window shuffle)
         val cleaned = clean(batch).persist()
         try {
-          if (gate) gateBatch(table, cleaned)
+          Quality.enforce(Quality.evaluate(table, cleaned))
           cleaned.write.mode("append").parquet(s"$outDir/silver/$table")
         } finally cleaned.unpersist()
       }

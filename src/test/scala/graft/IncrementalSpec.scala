@@ -119,7 +119,7 @@ class IncrementalSpec extends SparkSuite {
     IncrementalPipeline.runTableAvailableNow(spark, "order_items", src, out)
     assert(spark.read.parquet(s"$out/silver/order_items").count() == 1)
 
-    // empty product_id parses as NULL → checkOrderItems violation → stream fails
+    // empty product_id parses as NULL → "order_items.Prod_ID not null" violation → stream fails
     Files.writeString(Paths.get(s"$src/bad.csv"),
       (header +: Seq("o9,1,,s1,2017-03-08 00:00:00,5.0,1.0")).mkString("\n"))
     val e = intercept[Exception] {

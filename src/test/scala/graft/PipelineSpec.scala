@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import graft.engine.{Analytics, Bronze, Pipeline}
+import graft.engine.{Analytics, Bronze, Pipeline, Quality, Silver}
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -145,6 +145,37 @@ class PipelineSpec extends SparkSuite {
       "order_reviews", "fact_reviews")
   }
 
+  test("a planted null product_id halts the run before gold, with the scan gate's message") {
+    fixtures()
+    write("olist_order_items_dataset.csv",
+      s"""order_id,order_item_id,product_id,seller_id,shipping_limit_date,price,freight_value
+         |o1,1,p1,s1,2017-03-05 00:00:00,50.0,5.0
+         |o2,1,,s1,2017-04-06 00:00:00,20.0,2.0""".stripMargin)
+    val badOut = "/tmp/graft_olist_violation"
+    rmTree(badOut)
+    val stages = ArrayBuffer.empty[String]
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, csvDir, badOut, onStageComplete = stages += _)
+    }
+    assert(e.getMessage.contains("order_items.Prod_ID not null (1 violations)"), e.getMessage)
+    assert(stages.toSeq == Seq("bronze", "silver"))
+    assert(!Files.exists(Paths.get(s"$badOut/gold")))
+    // the silver the run wrote fails a gate that scans it with the same message
+    val silver = Silver.cleaners.keys.map(t => t -> spark.read.parquet(s"$badOut/silver/$t")).toMap
+    assert(intercept[IllegalArgumentException](Quality.gate(silver)).getMessage == e.getMessage)
+    rmTree(badOut)
+  }
+
+  test("observed quality checks: the four reference checks, equal to Quality.gate over the silver parquet") {
+    fixtures()
+    val report = Pipeline.run(spark, csvDir, outDir)
+    assert(report.qualityChecks.map(_.name) == Seq("order_items.Ord_ID not null",
+      "order_items.Prod_ID not null", "order_reviews.Rev_ID not null",
+      "order_reviews.Rev_ID length = 32"))
+    val silver = report.silverRows.keys.map(t => t -> spark.read.parquet(s"$outDir/silver/$t")).toMap
+    assert(report.qualityChecks == Quality.gate(silver))
+  }
+
   /** Live threads of a stage's write pool. */
   private def poolThreads(stage: String): Set[Thread] =
     Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(s"pipeline-$stage-")).toSet
@@ -218,7 +249,11 @@ class PipelineSpec extends SparkSuite {
     assert(poolThreads("s").isEmpty)
   }
 
-  test("job groups: every job of a stage carries the group set when that stage began; none after gold") {
+  /** Runs the pipeline on the fixtures with each stage's jobs under a job
+    * group named after it. Returns the job group of every job started during
+    * the run, in delivery order, and how many of them had started when each
+    * stage completed. */
+  private def runRecordingJobs(): (Seq[String], Seq[(String, Int)]) = {
     fixtures()
     val sc = spark.sparkContext
     val groups = ArrayBuffer.empty[String] // job group of each started job, in delivery order
@@ -237,23 +272,35 @@ class PipelineSpec extends SparkSuite {
       val before = seen()
       sc.setJobGroup("bronze", "bronze")
       Pipeline.run(spark, csvDir, outDir, onStageComplete = stage => {
-        boundaries += stage -> seen()
+        boundaries += stage -> (seen() - before)
         sc.setJobGroup(next(stage), next(stage))
       })
       val after = seen()
-      val jobs = groups.synchronized(groups.toSeq)
-      var from = before
-      for ((stage, to) <- boundaries) {
-        val stageJobs = jobs.slice(from, to)
-        assert(stageJobs.forall(_ == stage), s"$stage: $stageJobs")
-        from = to
-      }
-      assert(boundaries.map(_._1).toSeq == Seq("bronze", "silver", "quality_checks", "gold"))
-      assert(jobs.slice(before, boundaries.head._2).nonEmpty, "bronze ran jobs")
-      assert(after == boundaries.last._2, s"jobs after gold: ${jobs.drop(boundaries.last._2)}")
+      (groups.synchronized(groups.slice(before, after).toSeq), boundaries.toSeq)
     } finally {
       sc.removeSparkListener(listener)
       sc.clearJobGroup()
     }
+  }
+
+  test("job groups: every job of a stage carries the group set when that stage began; none after gold") {
+    val (jobs, boundaries) = runRecordingJobs()
+    var from = 0
+    for ((stage, to) <- boundaries) {
+      val stageJobs = jobs.slice(from, to)
+      assert(stageJobs.forall(_ == stage), s"$stage: $stageJobs")
+      from = to
+    }
+    assert(boundaries.map(_._1) == Seq("bronze", "silver", "quality_checks", "gold"))
+    assert(jobs.slice(0, boundaries.head._2).nonEmpty, "bronze ran jobs")
+    assert(jobs.size == boundaries.last._2, s"jobs after gold: ${jobs.drop(boundaries.last._2)}")
+  }
+
+  test("the quality gate runs no job: none starts between the silver and quality_checks callbacks") {
+    val (jobs, boundaries) = runRecordingJobs()
+    val at = boundaries.toMap
+    assert(at("silver") > at("bronze"), "silver ran jobs")
+    assert(at("quality_checks") == at("silver"),
+      s"gate jobs: ${jobs.slice(at("silver"), at("quality_checks"))}")
   }
 }

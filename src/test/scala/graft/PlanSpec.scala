@@ -25,7 +25,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("gold SK rank (rangedRowNumber): a range-sorted distributed sequence, never an all-to-one window") {
-    // the gold dim/fact SK assignment path (GoldDims.sk / GoldFacts.withSk)
+    // the SK assignment path of every gold dim and fact
     val df = spark.range(1000).selectExpr("CAST(id AS STRING) AS k", "id AS v")
     val ranked = graft.engine.RelOps.rangedRowNumber(df, "sk", Seq("k"))
     ranked.collect() // drive to completion so the adaptive plan is final
