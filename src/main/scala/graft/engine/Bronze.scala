@@ -29,10 +29,8 @@ object Bronze {
     * `ingestion.py:15-22` — at 100 TB a batchsize-1000 JDBC sink is the
     * pipeline's scale ceiling; columnar parquet with optional partitioning is
     * not). */
-  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
+  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit =
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(path)
 
   /** q199: SCHEMA-EVOLUTION roundtrip — the daily 100 TB reality that a
     * table's writers gain columns over time. Two generations of the

@@ -2,11 +2,12 @@ package graft.engine
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Gold dimensions: the reference's 9-dim star schema
-  * (`spark_jobs/reporting.py:43-247`) as pure functions.
+  * (`spark_jobs/reporting.py:43-247`) as pure functions; building one runs
+  * no job (`dim_date`'s range is observed on the silver orders write).
   *
   * Deviation from the reference, by design (SURVEY §7.4): surrogate keys come
   * from `row_number()` over the natural-key order instead of
@@ -21,24 +22,27 @@ import org.apache.spark.sql.functions._
   */
 object GoldDims {
 
-  /** dim_date: range-source spine + 20 calendar attributes
-    * (`reporting.py:55-93`). Seeded from orders min/max purchase time, a
-    * driver round-trip at construction — the only one in the gold build. */
-  def dimDate(spark: SparkSession, silverOrders: DataFrame): DataFrame = {
-    val mm = silverOrders.agg(
-      to_date(min(col("Ord_Purchase_Time"))).as("mn"),
-      to_date(max(col("Ord_Purchase_Time"))).as("mx")).head()
-    dimDateFromRange(spark, mm.getDate(0), mm.getDate(1))
-  }
+  /** dim_date's range, the first and last purchase day, as aggregates for an
+    * `Observation` over silver orders; [[dateRange]] reads them back (both
+    * NULL when orders is empty). */
+  val dateRangeColumns: Seq[Column] = Seq(
+    to_date(min(col("Ord_Purchase_Time"))).as("first_purchase_day"),
+    to_date(max(col("Ord_Purchase_Time"))).as("last_purchase_day"))
 
-  /** One row per day from `start` to `end`: the days of a `range` are
-    * distinct by construction, so no dedup is needed. A few thousand days
-    * at most, so one partition (and one file when written). */
+  def dateRange(metrics: Map[String, Any]): (Date, Date) =
+    (metrics("first_purchase_day").asInstanceOf[Date], metrics("last_purchase_day").asInstanceOf[Date])
+
+  /** dim_date: range-source spine + 20 calendar attributes
+    * (`reporting.py:55-93`), one row per day from `start` to `end`, none
+    * when either is NULL (no orders; a stand-in start keeps the schema). The
+    * days of a `range` are distinct by construction, so no dedup is needed.
+    * A few thousand days at most, so one partition (and one file). */
   def dimDateFromRange(spark: SparkSession, start: Date, end: Date): DataFrame = {
-    val days = java.time.temporal.ChronoUnit.DAYS.between(
-      start.toLocalDate, end.toLocalDate) + 1
+    val (from, days) =
+      if (start == null || end == null) (Date.valueOf("1970-01-01"), 0L)
+      else (start, java.time.temporal.ChronoUnit.DAYS.between(start.toLocalDate, end.toLocalDate) + 1)
     spark.range(0, days, 1, 1)
-      .select(date_add(lit(start), col("id").cast("int")).as("date"))
+      .select(date_add(lit(from), col("id").cast("int")).as("date"))
       .select(
         date_format(col("date"), "yyyyMMdd").cast("int").as("Date_SK"),
         col("date").cast("date").as("Date"),
@@ -89,7 +93,7 @@ object GoldDims {
   /** Zip-prefix → region band when-chain shared by customer/seller dims
     * (`reporting.py:134-138,183-187` — yes, the reference maps 40000-69999 back
     * to "Southeast"; preserved as-is). */
-  private def zipRegion(zip: String): org.apache.spark.sql.Column =
+  private def zipRegion(zip: String): Column =
     when(col(zip).between(1000, 19999), "Southeast")
       .when(col(zip).between(20000, 39999), "Northeast")
       .when(col(zip).between(40000, 69999), "Southeast")
@@ -137,22 +141,23 @@ object GoldDims {
         zipRegion("Sell_Zip_Code_Prefix").as("Seller_Region")),
       "Seller_SK", Seq("Seller_ID"))
 
-  /** `reporting.py:175-189`: UF state → macro-region isin chain + zip dedup. */
+  /** `reporting.py:175-189`: UF state → macro-region isin chain + zip dedup.
+    * Deviation, by design: the reference's `dropDuplicates` keeps an
+    * input-order-dependent row per zip; here the least (City, State,
+    * Latitude, Longitude) one. */
   def dimGeography(silverGeo: DataFrame): DataFrame =
     RelOps.rangedRowNumber(
-      silverGeo.select(
-        col("Geo_Zip_Code_Prefix").as("Zip_Code"),
-        col("Geo_City").as("City"),
-        col("Geo_State").as("State"),
-        col("Geo_Lat").as("Latitude"),
-        col("Geo_Lng").as("Longitude"),
-        when(col("Geo_State").isin("SP", "RJ", "MG", "ES"), "Southeast")
-          .when(col("Geo_State").isin("BA", "SE", "PE", "AL", "PB", "RN", "CE", "PI", "MA"), "Northeast")
-          .when(col("Geo_State").isin("PR", "SC", "RS"), "South")
-          .when(col("Geo_State").isin("GO", "DF", "MT", "MS"), "Center-West")
-          .when(col("Geo_State").isin("AM", "RR", "AP", "PA", "TO", "RO", "AC"), "North")
-          .otherwise("Unknown").as("Region"))
-        .dropDuplicates("Zip_Code"),
+      silverGeo.groupBy(col("Geo_Zip_Code_Prefix").as("Zip_Code"))
+        .agg(min(struct(col("Geo_City").as("City"), col("Geo_State").as("State"),
+          col("Geo_Lat").as("Latitude"), col("Geo_Lng").as("Longitude"))).as("g"))
+        .select(col("Zip_Code"), col("g.*"))
+        .withColumn("Region",
+          when(col("State").isin("SP", "RJ", "MG", "ES"), "Southeast")
+            .when(col("State").isin("BA", "SE", "PE", "AL", "PB", "RN", "CE", "PI", "MA"), "Northeast")
+            .when(col("State").isin("PR", "SC", "RS"), "South")
+            .when(col("State").isin("GO", "DF", "MT", "MS"), "Center-West")
+            .when(col("State").isin("AM", "RR", "AP", "PA", "TO", "RO", "AC"), "North")
+            .otherwise("Unknown")),
       "Geography_SK", Seq("Zip_Code"))
 
   /** `reporting.py:192-202`. (The reference classifies lowercase statuses but
@@ -198,11 +203,11 @@ object GoldDims {
             .otherwise("Unknown").as("Score_Category")),
       "Review_Score_SK", Seq("Review_Score"))
 
-  /** All 9 dims, keyed like `reporting.py:237-247`, each built only when its
-    * function is called: `dim_date` runs a driver min/max job at
-    * construction. */
-  def builders(spark: SparkSession, silver: Map[String, DataFrame]): Seq[(String, () => DataFrame)] = Seq(
-    "dim_date" -> (() => dimDate(spark, silver("orders"))),
+  /** All 9 dims, keyed like `reporting.py:237-247`, over `silver` and the
+    * observed [[dateRange]], each built (no job) when its function is called. */
+  def builders(spark: SparkSession, silver: Map[String, DataFrame],
+      dateRange: (Date, Date)): Seq[(String, () => DataFrame)] = Seq(
+    "dim_date" -> (() => dimDateFromRange(spark, dateRange._1, dateRange._2)),
     "dim_time" -> (() => dimTime(spark)),
     "dim_customers" -> (() => dimCustomers(silver("customers"))),
     "dim_products" -> (() => dimProducts(silver("products"))),

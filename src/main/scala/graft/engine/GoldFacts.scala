@@ -24,17 +24,33 @@ import org.apache.spark.sql.functions._
   */
 object GoldFacts {
 
-  /** Payments rolled up per order — `reporting.py:260-263`. */
-  def paymentsAggSales(silverPayments: DataFrame): DataFrame =
+  /** Each fact's last column, the year of its yyyyMMdd date SK, partitions its
+    * write: BI date-range queries prune at the file listing, a scale lever
+    * the reference's unpartitioned JDBC tables never had. */
+  val partitionColumns: Map[String, String] =
+    Map("fact_sales" -> "Order_Year", "fact_orders" -> "Order_Year", "fact_reviews" -> "Review_Year")
+
+  /** The 3 facts over `silver`, each built (no job) when its function is called. */
+  def builders(silver: Map[String, DataFrame]): Seq[(String, () => DataFrame)] = Seq(
+    "fact_sales" -> (() => factSales(silver)), "fact_orders" -> (() => factOrders(silver)),
+    "fact_reviews" -> (() => factReviews(silver)))
+
+  private def withYear(df: DataFrame, dateSk: String, yearCol: String): DataFrame =
+    df.withColumn(yearCol, (col(dateSk) / 10000).cast("int"))
+
+  /** Payments rolled up per order (`reporting.py:260-263`): fact_sales and fact_orders join it. */
+  private def paymentsPerOrder(silverPayments: DataFrame): DataFrame =
     silverPayments.groupBy(col("Ord_ID")).agg(
-      sum(col("Payment_Value")).as("Order_Payment_Value"),
+      sum(col("Payment_Value")).as("Total_Payment_Value"),
+      sum(col("Payment_Installments")).as("Total_Installments"),
+      count(col("Payment_Type")).as("Payment_Methods_Count"),
       min(col("Payment_Type")).as("Primary_Payment_Type"))
 
   /** Fact_Sales, grain: order item (`reporting.py:249-297`). */
   def factSales(silver: Map[String, DataFrame]): DataFrame = {
     val base = silver("order_items").alias("oi")
       .join(silver("orders").alias("o"), "Ord_ID")
-      .join(paymentsAggSales(silver("order_payments")).alias("p"), "Ord_ID")
+      .join(paymentsPerOrder(silver("order_payments")).alias("p"), "Ord_ID")
       .select(
         col("Ord_ID").as("Order_ID"),
         col("oi.Ord_Item_ID").as("Order_Item_ID"),
@@ -48,24 +64,20 @@ object GoldFacts {
         col("oi.Price").as("Sales_Amount"),
         col("oi.Freight_Value").as("Freight_Value"),
         lit(1).as("Quantity"),
-        col("p.Order_Payment_Value").as("Order_Payment_Value"),
+        col("p.Total_Payment_Value").as("Order_Payment_Value"),
         col("o.Ord_Purchase_Time").as("Order_Timestamp"))
-    RelOps.rangedRowNumber(base, "Sales_SK", Seq("Order_ID", "Order_Item_ID"))
+    withYear(RelOps.rangedRowNumber(base, "Sales_SK", Seq("Order_ID", "Order_Item_ID")),
+      "Order_Date_SK", "Order_Year")
   }
 
   /** Fact_Orders, grain: order (`reporting.py:299-363`). */
   def factOrders(silver: Map[String, DataFrame]): DataFrame = {
-    val paymentsAgg = silver("order_payments").groupBy(col("Ord_ID")).agg(
-      sum(col("Payment_Value")).as("Total_Payment_Value"),
-      sum(col("Payment_Installments")).as("Total_Installments"),
-      count(col("Payment_Type")).as("Payment_Methods_Count"),
-      min(col("Payment_Type")).as("Primary_Payment_Type"))
     val itemsAgg = silver("order_items").groupBy(col("Ord_ID")).agg(
       count(col("Ord_Item_ID")).as("Items_Count"),
       sum(col("Price")).as("Items_Total_Value"),
       sum(col("Freight_Value")).as("Total_Freight_Value"))
     val base = silver("orders").alias("o")
-      .join(paymentsAgg.alias("p"), "Ord_ID")
+      .join(paymentsPerOrder(silver("order_payments")).alias("p"), "Ord_ID")
       .join(itemsAgg.alias("i"), "Ord_ID")
       .select(
         col("Ord_ID").as("Order_ID"),
@@ -87,7 +99,7 @@ object GoldFacts {
         col("o.Ord_Estimated_Delivery_Date").as("Estimated_Delivery_Date"),
         datediff(col("o.Ord_Approved_At"), col("o.Ord_Purchase_Time")).as("Approval_Days"),
         datediff(col("o.Ord_Delivered_Customer_Date"), col("o.Ord_Purchase_Time")).as("Total_Delivery_Days"))
-    RelOps.rangedRowNumber(base, "Order_SK", Seq("Order_ID"))
+    withYear(RelOps.rangedRowNumber(base, "Order_SK", Seq("Order_ID")), "Order_Date_SK", "Order_Year")
   }
 
   /** Fact_Reviews, grain: review (`reporting.py:365-409`). */
@@ -111,6 +123,7 @@ object GoldFacts {
         col("r.Rev_Creation_Date").as("Review_Creation_Date"),
         col("r.Rev_Answer_Timestamp").as("Review_Answer_Date"),
         datediff(col("r.Rev_Answer_Timestamp"), col("r.Rev_Creation_Date")).as("Response_Days"))
-    RelOps.rangedRowNumber(base, "Review_SK", Seq("Review_ID", "Order_ID"))
+    withYear(RelOps.rangedRowNumber(base, "Review_SK", Seq("Review_ID", "Order_ID")),
+      "Review_Date_SK", "Review_Year")
   }
 }

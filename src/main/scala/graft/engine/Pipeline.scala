@@ -2,16 +2,17 @@ package graft.engine
 
 import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, ExecutorCompletionService, Executors}
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, expr, lit}
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** End-to-end bronze → silver → gold pipeline — the engine-native replacement
   * for the reference's 10-task Airflow DAG (`Dag/E-commerce_dag.py:220-222`):
   * stage sequencing with concurrent table writes inside each stage, quality
   * gate between silver and gold, Parquet sinks in a medallion directory
   * layout (`out/{bronze,silver,gold}/`), idempotent by overwrite like the
-  * reference's 30-minute re-runs. The gate's violation counts ride on the
-  * silver writes' Observations ([[Quality.rules]]), so it reads no data.
+  * reference's 30-minute re-runs. The gate's violation counts and
+  * `dim_date`'s range ride on the silver writes' Observations
+  * ([[Quality.rules]], [[GoldDims.dateRangeColumns]]), so neither reads data.
   *
   * Side-effect hooks replace the DAG's email notification tasks (O4).
   */
@@ -111,13 +112,14 @@ object Pipeline {
     }
 
     // Silver: 8 cleaned tables, written once each; each write counts its own
-    // rows and its quality rules' violations through an Observation, created
-    // per attempt as it is single-use
+    // rows and its quality rules' violations (orders: also dim_date's range)
+    // through an Observation, created per attempt as it is single-use
     val silver = Silver.transformAll(bronze)
     val silverOut = staged("silver") {
       silver.toSeq.map { case (name, df) => () =>
         val metrics = Observation()
-        Bronze.writeParquet(df.observe(metrics, count(lit(1)).as("rows"), Quality.columns(name): _*),
+        val columns = Quality.columns(name) ++ (if (name == "orders") GoldDims.dateRangeColumns else Nil)
+        Bronze.writeParquet(df.observe(metrics, count(lit(1)).as("rows"), columns: _*),
           s"$outDir/silver/$name")
         // re-read so gold plans scan parquet instead of recomputing the
         // lineage; the schema is the one just written, so no inference job
@@ -133,20 +135,14 @@ object Pipeline {
     val checks = Quality.enforce(Quality.rules.keys.toSeq.flatMap(t => Quality.results(t, observed(t))))
     onStageComplete("quality_checks")
 
-    // Gold: 9 dims + 3 facts, each built inside its own task so dim_date's
-    // driver min/max job overlaps and retries with the writes. Facts are
-    // year-partitioned (derived from the yyyyMMdd date SK) so BI date-range
-    // queries get partition pruning at the file listing level — the scale
-    // lever the reference's unpartitioned JDBC tables never had.
-    def fact(name: String, dateSk: String, partCol: String)(build: => DataFrame) =
-      name -> (() => Bronze.writeParquet(build.withColumn(partCol, expr(s"$dateSk div 10000")),
-        s"$outDir/gold/$name", partitionBy = Seq(partCol)))
-    val gold = GoldDims.builders(spark, silverStored).map { case (name, build) =>
-      name -> (() => Bronze.writeParquet(build(), s"$outDir/gold/$name"))
-    } ++ Seq(
-      fact("fact_sales", "Order_Date_SK", "Order_Year")(GoldFacts.factSales(silverStored)),
-      fact("fact_orders", "Order_Date_SK", "Order_Year")(GoldFacts.factOrders(silverStored)),
-      fact("fact_reviews", "Review_Date_SK", "Review_Year")(GoldFacts.factReviews(silverStored)))
+    // Gold: 9 dims + 3 facts. Building one runs no job (dim_date's range was
+    // observed above), but each is still built inside its own write task so
+    // that the 12 analyses overlap. GoldFacts names each fact's partition.
+    val gold = (GoldDims.builders(spark, silverStored, GoldDims.dateRange(observed("orders"))) ++
+      GoldFacts.builders(silverStored)).map { case (name, build) =>
+      name -> (() => Bronze.writeParquet(build(), s"$outDir/gold/$name",
+        partitionBy = GoldFacts.partitionColumns.get(name).toSeq))
+    }
     staged("gold")(gold.map(_._2))
 
     RunReport(observed.map { case (n, m) => n -> m("rows").asInstanceOf[Long] }, checks,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
-import graft.engine.{Quality, Schemas, Silver}
+import graft.engine.{GoldFacts, Quality, Schemas, Silver}
 
 /** Incremental medallion pipeline: the streaming replacement for the
   * reference's re-run-everything-every-30-minutes model
@@ -63,10 +63,11 @@ object IncrementalPipeline {
 
   /** Partition-level incremental gold refresh: rebuild fact_orders ONLY for
     * the given order years, leaving other year partitions untouched (dynamic
-    * partition overwrite). This is the gold-side complement of the silver
-    * stream: at 100 TB a late-arriving batch touches a handful of partitions,
-    * and rewriting just those — instead of the reference's full-table
-    * overwrite every 30 minutes — is what makes the refresh cost proportional
+    * partition overwrite, set on this write only, never on the session).
+    * This is the gold-side complement of the silver stream: at 100 TB a
+    * late-arriving batch touches a handful of partitions, and rewriting just
+    * those — instead of the reference's full-table overwrite every 30
+    * minutes — is what makes the refresh cost proportional
     * to the change, not the history. The year filter is applied to SILVER
     * ORDERS BEFORE the fact build, so the joins, rollup aggregates, and the
     * surrogate-key window all run over the targeted years only (filtering the
@@ -91,37 +92,23 @@ object IncrementalPipeline {
     * natural key Order_ID. */
   def refreshGoldOrderYears(spark: SparkSession, outDir: String,
       years: Seq[Int]): Unit = {
-    import org.apache.spark.sql.functions.{col, date_format, expr}
-    val yearSet = years.map(Integer.valueOf)
-    val silverTables = Seq("orders", "order_items", "order_payments")
+    import org.apache.spark.sql.functions.{col, year}
+    val silver = Seq("orders", "order_items", "order_payments")
       .map(n => n -> spark.read.parquet(s"$outDir/silver/$n")).toMap
     // restrict ORDERS to the target years up front; items/payments are inner-
     // joined on Ord_ID so the filter propagates through the fact build
-    val scoped = silverTables.updated("orders",
-      silverTables("orders").filter(
-        (date_format(col("Ord_Purchase_Time"), "yyyyMMdd").cast("int") / 10000)
-          .cast("int").isin(yearSet: _*)))
-    val fact = graft.engine.GoldFacts.factOrders(scoped)
-      .withColumn("Order_Year", expr("Order_Date_SK div 10000"))
-      .persist() // the write and the present-years probe below share one pass
+    val scoped = silver.updated("orders", silver("orders").filter(year(col("Ord_Purchase_Time")).isin(years: _*)))
+    val part = GoldFacts.partitionColumns("fact_orders")
+    val fact = GoldFacts.factOrders(scoped).persist() // the write and the present-years probe share one pass
     try {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try fact.write.mode("overwrite").partitionBy("Order_Year")
-        .parquet(s"$outDir/gold/fact_orders")
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      fact.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part).parquet(s"$outDir/gold/fact_orders")
       // deletions LAST: only targeted years absent from the refreshed frame
       // (zero rows) still hold stale files after the overwrite
-      val present = fact.select(col("Order_Year")).distinct()
-        .collect().map(_.getLong(0).toInt).toSet
+      val present = fact.select(col(part)).distinct().collect().map(_.getInt(0)).toSet
       val base = new org.apache.hadoop.fs.Path(s"$outDir/gold/fact_orders")
       val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-      (years.toSet -- present).foreach { y =>
-        fs.delete(new org.apache.hadoop.fs.Path(base, s"Order_Year=$y"), true): Unit
-      }
+      (years.toSet -- present).foreach(y => fs.delete(new org.apache.hadoop.fs.Path(base, s"$part=$y"), true))
     } finally fact.unpersist()
   }
 

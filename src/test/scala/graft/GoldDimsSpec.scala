@@ -94,6 +94,26 @@ class GoldDimsSpec extends SparkSuite {
     assert(sat.getAs[Boolean]("IsWeekend") && sat.getAs[String]("DayName") == "Saturday")
   }
 
+  test("date spine: an empty range (no orders) gives no rows and the same schema") {
+    val empty = GoldDims.dimDateFromRange(spark, null, null)
+    assert(empty.count() == 0)
+    assert(empty.schema == GoldDims.dimDateFromRange(spark,
+      Date.valueOf("2017-03-01"), Date.valueOf("2017-03-02")).schema)
+  }
+
+  test("dim_geography: each zip's survivor does not depend on the input order") {
+    val s = spark; import s.implicits._
+    val rows = Seq((13023, -22.9, -47.06, "Valinhos", "SP"), (13023, -22.91, -47.07, "Campinas", "SP"),
+      (20000, -22.95, -43.2, "Rio De Janeiro", "RJ"))
+    def dim(in: Seq[(Int, Double, Double, String, String)]) = GoldDims.dimGeography(
+      in.toDF("Geo_Zip_Code_Prefix", "Geo_Lat", "Geo_Lng", "Geo_City", "Geo_State"))
+      .orderBy("Geography_SK").collect().toSeq
+    val forward = dim(rows)
+    assert(forward == dim(rows.reverse))
+    assert(forward.map(r => r.getAs[Int]("Zip_Code") -> r.getAs[String]("City")) ==
+      Seq(13023 -> "Campinas", 20000 -> "Rio De Janeiro"))
+  }
+
   test("small dims: status/payment/review classifications + deterministic SKs") {
     val s = spark; import s.implicits._
     val pay = Seq(("o1", 1, "credit_card", 1, 1.0), ("o2", 1, "boleto", 1, 1.0),

@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import graft.engine.{Analytics, Bronze, Pipeline, Quality, Silver}
+import graft.engine.{Analytics, Bronze, GoldDims, GoldFacts, Pipeline, Quality, Silver}
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -143,6 +143,49 @@ class PipelineSpec extends SparkSuite {
     assertEmptyGatedSource("olist_order_reviews_dataset.csv",
       "review_id,order_id,review_score,review_comment_title,review_comment_message,review_creation_date,review_answer_timestamp",
       "order_reviews", "fact_reviews")
+  }
+
+  test("an empty orders: dim_date and the three facts are empty and the run completes without a retry") {
+    fixtures()
+    write("olist_orders_dataset.csv", "order_id,customer_id,order_status,order_purchase_timestamp," +
+      "order_approved_at,order_delivered_carrier_date,order_delivered_customer_date,order_estimated_delivery_date")
+    val emptyOut = "/tmp/graft_olist_empty"
+    val retries = ArrayBuffer.empty[String]
+    val report = Pipeline.run(spark, csvDir, emptyOut,
+      onRetry = (stage, attempt, _) => retries += s"$stage#$attempt")
+    assert(retries.isEmpty, retries)
+    assert(report.silverRows("orders") == 0)
+    assert(report.goldTables.size == 12)
+    assert(spark.read.parquet(s"$emptyOut/gold/dim_date").count() == 0)
+    for (fact <- Seq("fact_sales", "fact_orders", "fact_reviews")) {
+      val files = Files.walk(Paths.get(s"$emptyOut/gold/$fact"))
+      try assert(!files.iterator.asScala.exists(_.toString.endsWith(".parquet")), fact)
+      finally files.close()
+    }
+    rmTree(emptyOut)
+  }
+
+  test("building the 12 gold frames from silver and an observed date range runs no job") {
+    fixtures()
+    val silver = Silver.transformAll(Bronze.readAll(spark, csvDir))
+    val range = (java.sql.Date.valueOf("2017-03-01"), java.sql.Date.valueOf("2017-04-02"))
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val built = try {
+      val frames = (GoldDims.builders(spark, silver, range) ++ GoldFacts.builders(silver))
+        .map { case (name, build) => name -> build() }.toMap
+      TestListenerBus.drain(sc)
+      frames
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 0)
+    assert(built.size == 12)
+    for ((fact, part) <- GoldFacts.partitionColumns)
+      assert(built(fact).columns.last == part, fact)
   }
 
   test("a planted null product_id halts the run before gold, with the scan gate's message") {
