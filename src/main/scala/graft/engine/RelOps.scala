@@ -594,28 +594,36 @@ object RelOps {
         countDistinct(col("k_val")).as("n_distinct_k"))
       .orderBy("event_type")
 
+  /** Two-level grouping-set aggregation over the pair of keys (`a`, `b`),
+    * shared by q42 (ROLLUP), q55 (CUBE) and q84 (explicit GROUPING SETS);
+    * each query passes its own set list. Output: `a`, `b`, the grouping id
+    * `gid` (2·grouping(a) + grouping(b)), the row count `n` and the
+    * `measure` sum as double, ordered by (gid, a, b).
+    *
+    * Why two levels (r13 optimization pass, guide §2.3 "aggregate before you
+    * shuffle"): a direct grouping-set aggregate EXPANDs every fact row once
+    * per set (3-4× the scan feeding the partial aggregate). The finest set
+    * (a, b) determines every coarser one, so aggregate to it FIRST (a plain
+    * map-side-combinable groupBy, no Expand) and expand the few-row
+    * intermediate. Identical output: the sums re-associate exactly in
+    * decimal, and the grouping() bits come from the outer aggregate. */
+  private def twoLevelGroupingSets(fact: DataFrame, a: String, b: String,
+      sets: Seq[Seq[String]], measure: Column, measureName: String): DataFrame =
+    fact.groupBy(col(a), col(b))
+      .agg(count(lit(1)).as("n0"), sum(d2(measure)).as("m0"))
+      .groupingSets(sets.map(_.map(col)), col(a), col(b))
+      .agg(
+        (grouping(col(a)) * 2 + grouping(col(b))).cast("long").as("gid"),
+        sum(col("n0")).as("n"),
+        sum(col("m0")).cast("double").as(measureName))
+      .orderBy(col("gid"), col(a), col(b))
+
   /** ROLLUP grouping sets with an explicit grouping id — subtotals + grand
     * total in one pass (multi-level agg the reference delegates to Power BI). */
-  def rollupAgg(spark: SparkSession, dir: String): DataFrame = {
-    // TWO-LEVEL grouping-set aggregation (r13 optimization pass, guide
-    // §2.3 "aggregate before you shuffle"): a direct rollup EXPANDs every
-    // fact row once per grouping set (3× the scan feeding the partial
-    // aggregate) — the finest set (returnflag, linestatus) already
-    // determines every coarser set, so aggregate to it FIRST (plain
-    // map-side-combinable groupBy, no Expand) and roll up the few-row
-    // intermediate. Identical output (sums re-associate exactly in decimal;
-    // grouping() bits come from the outer rollup), 1/3 the aggregate-update
-    // work and the Expand now triples ~6 rows, not the corpus.
-    val base = Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n0"), sum(Dec.d2(col("l_quantity"))).as("q0"))
-    base.rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        (grouping(col("l_returnflag")) * 2 + grouping(col("l_linestatus"))).cast("long").as("gid"),
-        sum(col("n0")).as("n"),
-        sum(col("q0")).cast("double").as("qty"))
-      .orderBy(col("gid"), col("l_returnflag"), col("l_linestatus"))
-  }
+  def rollupAgg(spark: SparkSession, dir: String): DataFrame =
+    twoLevelGroupingSets(Tables.lineitem(spark, dir), "l_returnflag", "l_linestatus",
+      Seq(Seq("l_returnflag", "l_linestatus"), Seq("l_returnflag"), Seq()),
+      col("l_quantity"), "qty")
 
   /** Pivot: order counts per year x status, fixed pivot values so the output
     * schema is static (F/O/P columns). */
@@ -799,19 +807,11 @@ object RelOps {
       .orderBy("c_nationkey")
 
   /** CUBE grouping sets: all 4 grouping combinations in one pass. */
-  def cubeAgg(spark: SparkSession, dir: String): DataFrame = {
-    // two-level cube — the [[rollupAgg]] rewrite (Expand over the few-row
-    // finest-set aggregate, not over the fact scan)
-    val base = Tables.orders(spark, dir)
-      .groupBy(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n0"), sum(Dec.d2(col("o_totalprice"))).as("t0"))
-    base.cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
-        (grouping(col("o_orderstatus")) * 2 + grouping(col("o_orderpriority"))).cast("long").as("gid"),
-        sum(col("n0")).as("n"),
-        sum(col("t0")).cast("double").as("total"))
-      .orderBy(col("gid"), col("o_orderstatus"), col("o_orderpriority"))
-  }
+  def cubeAgg(spark: SparkSession, dir: String): DataFrame =
+    twoLevelGroupingSets(Tables.orders(spark, dir), "o_orderstatus", "o_orderpriority",
+      Seq(Seq("o_orderstatus", "o_orderpriority"), Seq("o_orderstatus"),
+        Seq("o_orderpriority"), Seq()),
+      col("o_totalprice"), "total")
 
   /** SQL-API entry with correlated + uncorrelated scalar subqueries — Catalyst
     * decorrelates the per-customer COUNT into a join; exercised via
@@ -832,26 +832,12 @@ object RelOps {
   /** Explicit GROUPING SETS — the third grouping-sets form beside
     * [[rollupAgg]]/[[cubeAgg]]: an arbitrary, non-hierarchical set list
     * ((returnflag), (linestatus), ()) that neither ROLLUP nor CUBE expresses.
-    * Via `spark.sql` (the Dataset API exposes only rollup/cube); Catalyst
-    * plans it as one Expand + hash aggregate — a single pass over lineitem,
-    * not one scan per set. */
-  def groupingSetsAgg(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem_v")
-    // two-level grouping sets — the [[rollupAgg]] rewrite in SQL: the
-    // finest base (returnflag, linestatus) is aggregated without Expand,
-    // the three requested sets roll up the few-row intermediate
-    spark.sql(
-      """WITH base AS (
-        |  SELECT l_returnflag, l_linestatus, COUNT(*) AS n0,
-        |         SUM(CAST(l_quantity AS DECIMAL(18,2))) AS q0
-        |  FROM lineitem_v GROUP BY l_returnflag, l_linestatus)
-        |SELECT CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS gid,
-        |  l_returnflag, l_linestatus, SUM(n0) AS n,
-        |  CAST(SUM(q0) AS DOUBLE) AS qty
-        |FROM base
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin)
-  }
+    * Catalyst plans it as one Expand + hash aggregate over the finest-set
+    * aggregate — a single pass over lineitem, not one scan per set. */
+  def groupingSetsAgg(spark: SparkSession, dir: String): DataFrame =
+    twoLevelGroupingSets(Tables.lineitem(spark, dir), "l_returnflag", "l_linestatus",
+      Seq(Seq("l_returnflag"), Seq("l_linestatus"), Seq()),
+      col("l_quantity"), "qty")
 
   /** Value-based RANGE window frame: per-customer trailing-30-day spend.
     * q21's running total is a ROWS frame (physical offsets); this is the

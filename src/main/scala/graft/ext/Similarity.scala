@@ -25,7 +25,8 @@ import graft.functions.Native
   * plane matrices.
   *
   * Dot products use the native codegen'd [[graft.functions.DotProduct]]
-  * expression (`graft_dot`) — see that file for why the HOF form was replaced.
+  * expression (`graft_dot`, one expression for float, double and bigint
+  * arrays) — see that file for why the HOF form was replaced.
   */
 /** One k-means centroid for [[Similarity.kmeansStatePath]]'s per-round
   * assignment literal: quantized integer components `cq`. Field order is the
@@ -43,12 +44,16 @@ object Similarity {
 
   /** embedding as array<double> plus its L2 norm. `cast` (not a `transform`
     * lambda) keeps the projection in codegen; norms and dots use the native
-    * [[graft.functions.DotProduct]] expression. */
-  private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(Native.dot(col("v"), col("v"))))
-  }
+    * [[graft.functions.DotProduct]] expression, the norm over the raw float
+    * embedding (no cast copy). */
+  private def vecs(spark: SparkSession, dir: String): DataFrame =
+    withNorm(Tables.embeddings(spark, dir), col("vec_id"))
+
+  /** `keep`, the embedding cast to array<double> as `v`, and its L2 norm
+    * `nrm`, dotted from the raw float embedding in the same projection. */
+  private[graft] def withNorm(df: DataFrame, keep: Column*): DataFrame =
+    df.select(keep :+ col("embedding").cast("array<double>").as("v") :+
+      sqrt(Native.dot(col("embedding"), col("embedding"))).as("nrm"): _*)
 
   private def cosQN: Column = Native.dot(col("qv"), col("nv")) / (col("qn") * col("nn"))
 
@@ -311,9 +316,7 @@ object Similarity {
     * Output: vec_id, v (double), nrm, prj, bucket. */
   def bucketizeVectors(df: DataFrame, nPlanes: Int = 8,
       dim: Int = DefaultDim): DataFrame = {
-    val base = df
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(Native.dot(col("v"), col("v"))))
+    val base = withNorm(df, col("vec_id"))
     val prjArr = (0 until nPlanes).map { p =>
       s"aggregate(zip_with(v, ${planeLiteral(p, dim)}, (x, s) -> x * s), " +
         "CAST(0 AS DOUBLE), (a, x) -> a + x)"
@@ -759,7 +762,8 @@ object Similarity {
     * The sign matrix is md5-derived per (plane, dim) — deterministic and
     * SQL-reproducible — but computed ONCE driver-side and embedded as
     * nPlanes literal arrays, so the per-row work is nPlanes codegen'd
-    * integer dots ([[LongDotProduct]]): zero per-row hashing, no HOF
+    * integer dots ([[graft.functions.DotProduct]] over array<bigint>): zero
+    * per-row hashing, no HOF
     * lambdas, no shuffle — a pure projection stage.
     *
     * Output carries the JL audit alongside the head of the projection:
@@ -789,12 +793,12 @@ object Similarity {
         s"CASE WHEN size(q) = $dim THEN q ELSE raise_error('jlProjection: expected dim $dim, got ' || size(q)) END"))
     val projected = (0 until nPlanes).foldLeft(q) { (df, k) =>
       df.withColumn(s"p$k",
-        Native.dotLong(col("q"), array((0 until dim).map(d => lit(sign(k, d))): _*)))
+        Native.dot(col("q"), array((0 until dim).map(d => lit(sign(k, d))): _*)))
     }
     val norm2p = (0 until nPlanes).map(k => col(s"p$k") * col(s"p$k"))
       .reduce(_ + _)
     projected
-      .withColumn("norm2_q", Native.dotLong(col("q"), col("q")))
+      .withColumn("norm2_q", Native.dot(col("q"), col("q")))
       .withColumn("norm2_p", norm2p)
       .select(col("vec_id"),
         col("p0").as("proj0"), col("p1").as("proj1"),
@@ -839,7 +843,7 @@ object Similarity {
         s"CASE WHEN size(q) = $dim THEN q ELSE raise_error('jlRecall: expected dim $dim, got ' || size(q)) END"))
     val projected = (0 until nPlanes).foldLeft(qv) { (df, k) =>
       df.withColumn(s"p$k",
-        Native.dotLong(col("q"), array((0 until dim).map(d => lit(jlSign(k, d))): _*)))
+        Native.dot(col("q"), array((0 until dim).map(d => lit(jlSign(k, d))): _*)))
     }.withColumn("p", array((0 until nPlanes).map(k => col(s"p$k")): _*))
       .select(col("vec_id"), col("q"), col("p"))
     def topkIn(space: String): DataFrame = {
@@ -848,7 +852,7 @@ object Similarity {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id")).orderBy(col("dot").desc, col("vec_id"))
       broadcast(queries).crossJoin(projected.select(col("vec_id"), col(space).as("cvec")))
-        .withColumn("dot", Native.dotLong(col("qvec"), col("cvec")))
+        .withColumn("dot", Native.dot(col("qvec"), col("cvec")))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= topK)
         .select(col("query_id"), col("vec_id"))
@@ -1031,14 +1035,14 @@ object Similarity {
           .select(col("cell"))),
         Seq("cell"), "left_semi")
     // self-norms once per VECTOR (n·dim work), not once per pair (n²·dim)
-    val normed = kept.withColumn("dqq", Native.dotLong(col("q"), col("q")))
+    val normed = kept.withColumn("dqq", Native.dot(col("q"), col("q")))
     val a = normed.select(col("cell"), col("vec_id").as("vec_a"),
       col("q").as("qa"), col("dqq").as("daa"))
     val b = normed.select(col("cell"), col("vec_id").as("vec_b"),
       col("q").as("qb"), col("dqq").as("dbb"))
     a.join(b, Seq("cell"))
       .filter(col("vec_a") < col("vec_b"))
-      .withColumn("dab", Native.dotLong(col("qa"), col("qb")))
+      .withColumn("dab", Native.dot(col("qa"), col("qb")))
       .filter(col("dab") > 0 &&
         expr(s"CAST(dab AS DECIMAL(38,0)) * dab * ${tauDen * tauDen}") >
         expr(s"CAST(daa AS DECIMAL(38,0)) * dbb * ${tauNum * tauNum}"))
@@ -1055,10 +1059,7 @@ object Similarity {
     * at-rest LSH index ([[lshProjectionsPath]]) exactly as q34 does. */
   def hardNegatives(spark: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 20): DataFrame = {
-    val all = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(Native.dot(col("v"), col("v"))))
+    val all = withNorm(Tables.embeddings(spark, dir), col("vec_id"), col("label"))
     val q = all.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("label").as("query_label"),
         col("v").as("qv"), col("nrm").as("qn"))

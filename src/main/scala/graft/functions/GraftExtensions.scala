@@ -5,13 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: gives SQL users the engine's native
-  * functions by name ([[GraftExtensions.functions]]) and injects the
-  * [[SpecializeFloatDot]] rewrite, enabled with
+  * functions by name ([[GraftExtensions.functions]]), enabled with
   * `spark.sql.extensions=graft.functions.GraftExtensions`. Every session the
-  * repo builds carries it. The engine itself needs no name: it builds its
-  * native expressions as typed Columns ([[Native]]), so its queries also run
-  * in a session without the extension (the float-dot rewrite is then off,
-  * and the cast form it replaces gives the same bits).
+  * repo builds carries it. It injects no optimizer rule. The engine itself
+  * needs no name: it builds its native expressions as typed Columns
+  * ([[Native]]), so its queries run the same plans in a session without
+  * the extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -19,7 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
     }
-    ext.injectOptimizerRule(_ => SpecializeFloatDot)
   }
 }
 
@@ -38,7 +36,6 @@ object GraftExtensions {
     * driver-collected literal, so they are typed Columns only. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("graft_dot", e => DotProduct(e(0), e(1))),
-    ("graft_dot_long", e => LongDotProduct(e(0), e(1))),
     ("graft_argmax_cell", e => ArgMaxCell(e(0), e(1), e(2))),
     ("graft_bounded_lev", e => BoundedLevenshtein(e(0), e(1), e(2))),
     ("graft_nfc", e => NfcNormalize(e(0))),

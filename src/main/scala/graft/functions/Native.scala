@@ -13,11 +13,12 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   * the SQL names in [[GraftExtensions]] exist only for SQL users. */
 object Native {
 
+  /** Dot product of two array<float>, array<double> or array<bigint>
+    * columns: `double` for float and double elements, `bigint` for bigint
+    * ([[DotProduct]]). Dot float embeddings directly; a cast copy is never
+    * needed. */
   def dot(a: Column, b: Column): Column =
     column(DotProduct(expression(a), expression(b)))
-
-  def dotLong(a: Column, b: Column): Column =
-    column(LongDotProduct(expression(a), expression(b)))
 
   def sq8(v: Column): Column = column(Sq8Codes(expression(v)))
 

@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructType}
 
-/** Native Catalyst expression for the vector-similarity hot path.
+/** Native Catalyst expression for the vector-similarity hot path: the one
+  * dot product, over two `array<float>`, two `array<double>` or two
+  * `array<bigint>`.
   *
   * The composable alternative — `aggregate(zip_with(a, b, (x,y) -> x*y), ...)`
   * — allocates a zipped intermediate array per row and evaluates the lambdas
@@ -15,6 +17,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * (`doGenCode`), keeping the |queries| × |corpus| cosine scan inside
   * WholeStageCodegen. Accumulation is sequential left-to-right, matching the
   * HOF form and the DuckDB oracle's list_sum bit-for-bit.
+  *
+  * The element type picks the element read and the accumulator:
+  *  - `float`: each element widened to double inside the loop, so raw float
+  *    embeddings are dotted in place with no per-row cast copy. The widening
+  *    is exact, so the result has the same bits as the dot of the two
+  *    arrays cast to `array<double>`. Result `double`.
+  *  - `double`: result `double`.
+  *  - `bigint`: the integer domain the quantized k-means/SemDeDup family
+  *    (q188/q189) and the JL projections (q209/q225) run on. Result `bigint`.
+  *    Exactness contract: callers bound |component| (≤ 2^11 for unit-ish
+  *    embeddings at the 2^10 quantization scale), so per-element products
+  *    stay ≤ 2^22 and the sum ≤ 2^22·dim — far inside long; Java long
+  *    arithmetic would wrap silently past 2^63, which is why the BOUND, not
+  *    the type, is the documented safety argument (same discipline as
+  *    [[graft.engine.Analytics]]' moment-magnitude guard).
+  * Any other or mixed element types fail the type check.
   *
   * Preference order per SURVEY §7.3: built-ins first; this is the one operator
   * where the built-in form measurably loses codegen, so a scalar Expression is
@@ -26,94 +44,64 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot requires array<double> inputs, got (${left.dataType}, ${right.dataType})")
+  private def elementType: DataType = left.dataType match {
+    case ArrayType(t, _) => t
+    case t => t
   }
-  override def dataType: DataType = DoubleType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _))
+          if l == r && (l == FloatType || l == DoubleType || l == LongType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        "graft_dot requires two array<float>, two array<double> or two array<bigint> " +
+          s"inputs, got (${left.dataType}, ${right.dataType})")
+    }
+  override def dataType: DataType = if (elementType == LongType) LongType else DoubleType
   override def prettyName: String = "graft_dot"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
     var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
+    elementType match {
+      case LongType =>
+        var s = 0L
+        while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
+        s
+      case FloatType =>
+        var s = 0.0
+        while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+        s
+      case _ =>
+        var s = 0.0
+        while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+        s
+    }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (acc, read): (String, (String, String) => String) = elementType match {
+      case LongType => ("long", (arr, i) => s"$arr.getLong($i)")
+      case FloatType => ("double", (arr, i) => s"((double) $arr.getFloat($i))")
+      case _ => ("double", (arr, i) => s"$arr.getDouble($i)")
+    }
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
+         |$acc $s = 0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
+         |  $s += ${read(a, i)} * ${read(b, i)};
          |}
          |${ev.value} = $s;
        """.stripMargin
     })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[DotProduct]] over array<bigint> — the integer-domain twin the quantized
-  * k-means/SemDeDup family (q188/q189) runs on. Exactness contract: callers
-  * bound |component| (≤ 2^11 for unit-ish embeddings at the 2^10 quantization
-  * scale), so per-element products stay ≤ 2^22 and the sum ≤ 2^22·dim — far
-  * inside long; Java long arithmetic would wrap silently past 2^63, which is
-  * why the BOUND, not the type, is the documented safety argument (same
-  * discipline as [[graft.engine.Analytics]]' moment-magnitude guard). */
-case class LongDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot_long requires array<bigint> inputs, got (${left.dataType}, ${right.dataType})")
   }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_dot_long"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -431,55 +419,4 @@ case class ArgMinCellL2(first: Expression, second: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(first = newLeft, second = newRight)
-}
-
-/** Specialization of [[DotProduct]] for raw float arrays: reads elements with
-  * getFloat and widens to double inside the loop, skipping the per-row
-  * materialization of two casted double arrays. float→double widening is
-  * exact, so results are bit-identical to DotProduct(cast(a), cast(b)) — the
-  * rewrite in [[graft.functions.SpecializeFloatDot]] is semantics-preserving.
-  */
-case class FloatDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"float_dot requires array<float> inputs, got (${left.dataType}, ${right.dataType})")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_float_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -70,10 +70,8 @@ object IncrementalPipeline {
     * minutes — is what makes the refresh cost proportional
     * to the change, not the history. The year filter is applied to SILVER
     * ORDERS BEFORE the fact build, so the joins, rollup aggregates, and the
-    * surrogate-key window all run over the targeted years only (filtering the
-    * finished fact would scan and window-sort the full history first, and the
-    * global row_number would hand out SKs that collide with the untouched
-    * partitions' rows).
+    * surrogate-key numbering all run over the targeted years only (filtering
+    * the finished fact would scan and sort the full history first).
     *
     * Write-then-delete ordering: dynamic partition overwrite replaces every
     * partition PRESENT in the refreshed frame on its own; only a targeted year
@@ -86,28 +84,38 @@ object IncrementalPipeline {
     * Hadoop's FileSystem so the operator works on any storage the session can
     * address, not just `file:`.
     *
-    * Surrogate-key caveat: Order_SK is a deterministic row_number within the
-    * REFRESHED subset (the reference regenerates all SKs every full run, so
-    * this is strictly more stable) — cross-partition joins should use the
-    * natural key Order_ID. */
+    * Surrogate keys: the refreshed rows are numbered in Order_ID order and
+    * continue after the greatest Order_SK of the partitions kept (one
+    * aggregate over the existing fact, pruned to the untargeted years; 0
+    * when no fact exists yet), so Order_SK stays unique across the table.
+    * The refreshed rows' SKs are not the ones a full run would assign (the
+    * reference regenerates all SKs every full run) — joins across refreshes
+    * should use the natural key Order_ID. */
   def refreshGoldOrderYears(spark: SparkSession, outDir: String,
       years: Seq[Int]): Unit = {
-    import org.apache.spark.sql.functions.{col, year}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, max, year}
     val silver = Seq("orders", "order_items", "order_payments")
       .map(n => n -> spark.read.parquet(s"$outDir/silver/$n")).toMap
     // restrict ORDERS to the target years up front; items/payments are inner-
     // joined on Ord_ID so the filter propagates through the fact build
     val scoped = silver.updated("orders", silver("orders").filter(year(col("Ord_Purchase_Time")).isin(years: _*)))
     val part = GoldFacts.partitionColumns("fact_orders")
-    val fact = GoldFacts.factOrders(scoped).persist() // the write and the present-years probe share one pass
+    val built = GoldFacts.factOrders(scoped)
+    val base = new org.apache.hadoop.fs.Path(s"$outDir/gold/fact_orders")
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val skOffset =
+      if (!fs.exists(base)) 0L
+      else spark.read.schema(built.schema).parquet(base.toString)
+        .filter(!col(part).isin(years: _*))
+        .agg(coalesce(max(col("Order_SK")), lit(0L))).head().getLong(0)
+    val fact = built.withColumn("Order_SK", col("Order_SK") + skOffset)
+      .persist() // the write and the present-years probe share one pass
     try {
       fact.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part).parquet(s"$outDir/gold/fact_orders")
+        .partitionBy(part).parquet(base.toString)
       // deletions LAST: only targeted years absent from the refreshed frame
       // (zero rows) still hold stale files after the overwrite
       val present = fact.select(col(part)).distinct().collect().map(_.getInt(0)).toSet
-      val base = new org.apache.hadoop.fs.Path(s"$outDir/gold/fact_orders")
-      val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
       (years.toSet -- present).foreach(y => fs.delete(new org.apache.hadoop.fs.Path(base, s"$part=$y"), true))
     } finally fact.unpersist()
   }

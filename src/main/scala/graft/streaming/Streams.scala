@@ -320,9 +320,8 @@ object Streams {
   def deconStream(spark: SparkSession, srcDir: String,
       benchmarkDir: String, tau: Double = 0.4): DataFrame = {
     val bench = graft.ext.Similarity.evalBenchmark(spark, benchmarkDir)
-    val waves = spark.readStream.schema(vectorSchema).parquet(srcDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(graft.functions.Native.dot(col("v"), col("v"))))
+    val waves = graft.ext.Similarity.withNorm(
+      spark.readStream.schema(vectorSchema).parquet(srcDir), col("vec_id"))
     graft.ext.Similarity.deconScreen(waves, bench, tau)
   }
 

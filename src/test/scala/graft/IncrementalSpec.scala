@@ -85,7 +85,15 @@ class IncrementalSpec extends SparkSuite {
     writeSilver(Seq(
       ("o1", "c1", "Delivered", ts("2017-03-01 14:30:00")),
       ("o2", "c2", "Shipped", ts("2018-05-02 09:10:00"))), "overwrite")
+    // Order_SK is unique after each refresh: the refreshed years continue
+    // after the kept partitions' greatest SK instead of restarting at 1
+    def assertUniqueSks(): Unit = {
+      val f = spark.read.parquet(s"$out/gold/fact_orders")
+      val sks = f.select("Order_ID", "Order_SK").collect().map(r => r.getString(0) -> r.getLong(1))
+      assert(sks.map(_._2).distinct.length == sks.length, s"duplicate Order_SK: ${sks.sorted.mkString(", ")}")
+    }
     IncrementalPipeline.refreshGoldOrderYears(spark, out, Seq(2017, 2018))
+    assertUniqueSks()
     val dir2017 = new java.io.File(s"$out/gold/fact_orders/Order_Year=2017")
     val files2017 = dir2017.listFiles().map(f => f.getName -> f.lastModified()).toSet
     assert(spark.read.parquet(s"$out/gold/fact_orders").count() == 2)
@@ -93,6 +101,7 @@ class IncrementalSpec extends SparkSuite {
     // a late 2018 order arrives — refresh ONLY 2018
     writeSilver(Seq(("o3", "c3", "Invoiced", ts("2018-06-01 10:00:00"))), "append")
     IncrementalPipeline.refreshGoldOrderYears(spark, out, Seq(2018))
+    assertUniqueSks()
     val fact = spark.read.parquet(s"$out/gold/fact_orders")
     assert(fact.count() == 3)
     assert(fact.filter("Order_Year = 2018").count() == 2)
@@ -103,6 +112,7 @@ class IncrementalSpec extends SparkSuite {
     // stale partition must disappear (dynamic overwrite alone would keep it)
     writeSilver(Seq(("o1", "c1", "Delivered", ts("2017-03-01 14:30:00"))), "overwrite")
     IncrementalPipeline.refreshGoldOrderYears(spark, out, Seq(2018))
+    assertUniqueSks()
     val after = spark.read.parquet(s"$out/gold/fact_orders")
     assert(after.filter("Order_Year = 2018").count() == 0, "deleted year fully removed")
     assert(after.count() == 1, "2017 still served")

@@ -1001,4 +1001,24 @@ class PlanSpec extends SparkSuite {
         s"a table past maxRows must fall through to the shuffle join:\n$p3")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
+
+  test("dot queries: no graft_dot reads a cast copy of its input") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import graft.functions.DotProduct
+    val names = Seq("q32_cosine_topk", "q34_ann_topk", "q53_embedding_dedup", "q72_ivf_ann",
+      "q86_ivf_centroids", "q90_ann_recall", "q177_multiprobe_ann", "q189_semdedup",
+      "q190_hard_negatives", "q192_incremental_embedding_dedup", "q209_jl_projection",
+      "q225_jl_recall", "q233_ivf_cell_balance", "q234_semantic_decontaminate")
+    names.foreach { name =>
+      val optimized = Catalog.queries(name)(spark, dir).queryExecution.optimizedPlan
+      val dots = scala.collection.mutable.ArrayBuffer.empty[DotProduct]
+      optimized.foreachWithSubqueries(_.expressions.foreach(_.foreach {
+        case d: DotProduct => dots += d
+        case _ =>
+      }))
+      assert(dots.nonEmpty, s"$name: no graft_dot in the optimized plan:\n$optimized")
+      val casted = dots.filter(_.children.exists(_.isInstanceOf[Cast]))
+      assert(casted.isEmpty, s"$name dots a cast copy: ${casted.mkString("; ")}")
+    }
+  }
 }

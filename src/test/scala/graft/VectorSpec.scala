@@ -1,9 +1,9 @@
 package graft
 
-import graft.functions.{FloatDotProduct, GraftExtensions, Native}
+import graft.functions.{GraftExtensions, Native}
 import org.apache.spark.sql.functions._
 
-/** Native expression + optimizer-rule behavior. */
+/** Native expression behavior. */
 class VectorSpec extends SparkSuite {
 
   test("one function table: each SQL name matches its typed Native builder") {
@@ -13,23 +13,22 @@ class VectorSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.extensions") == classOf[GraftExtensions].getName)
     val registry = spark.sessionState.functionRegistry
     val names = GraftExtensions.functions.map(_._1)
-    assert(names.size == 10 && names.distinct == names)
+    assert(names.size == 9 && names.distinct == names)
     val missing = names.filterNot(n => registry.functionExists(FunctionIdentifier(n)))
     assert(missing.isEmpty, s"injected session lacks $missing")
     val cents = "array(named_struct('cid', 4L, 'cv', array(1D, 0D, 0D), 'cn', 1D), " +
       "named_struct('cid', 2L, 'cv', array(0D, 1D, 0D), 'cn', 1D))"
     val df = Seq(
-      (Seq(1.0, 2.0, 3.0), Seq(-0.5, 0.25, 2.0), Seq(1024L, -7L, 3L), Seq(2L, 5L, -9L),
+      (Seq(1.0, 2.0, 3.0), Seq(-0.5, 0.25, 2.0),
         "kitten", "sitting", "cafe\u0301 оffer", "the quick brown fox jumps"),
-      (Seq(0.1, -0.2, 0.3), Seq(0.3, 0.2, 0.1), Seq(0L, 0L, 1L), Seq(7L, 8L, 9L),
+      (Seq(0.1, -0.2, 0.3), Seq(0.3, 0.2, 0.1),
         "", "abc", "ｏﬀｅｒ caf\u00e9", "a b"),
-      (null, null, null, null, null, null, null, null))
-      .toDF("a", "b", "la", "lb", "s1", "s2", "u", "t")
+      (null, null, null, null, null, null))
+      .toDF("a", "b", "s1", "s2", "u", "t")
       .withColumn("nrm", sqrt(Native.dot(col("a"), col("a"))))
       .withColumn("w", split(col("t"), " "))
     val parity: Seq[(String, String, Column)] = Seq(
       ("graft_dot", "graft_dot(a, b)", Native.dot(col("a"), col("b"))),
-      ("graft_dot_long", "graft_dot_long(la, lb)", Native.dotLong(col("la"), col("lb"))),
       ("graft_argmax_cell", s"graft_argmax_cell(a, nrm, $cents)",
         Native.argmaxCell(col("a"), col("nrm"), expr(cents))),
       ("graft_bounded_lev", "graft_bounded_lev(s1, s2, 2)",
@@ -64,18 +63,18 @@ class VectorSpec extends SparkSuite {
     out.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
 
-  test("graft_dot_long equals the HOF formulation; null array yields null") {
+  test("graft_dot over array<bigint> equals the HOF formulation; null array yields null") {
     val s = spark; import s.implicits._
     val df = Seq(
       (Array(1024L, -512L, 768L), Array(256L, 512L, -64L)),
       (Array(0L, 0L, 0L), Array(7L, 8L, 9L)))
       .toDF("a", "b")
     val out = df.select(
-      expr("graft_dot_long(a, b)").as("native"),
+      expr("graft_dot(a, b)").as("native"),
       expr("aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, x) -> acc + x)").as("hof"))
-      .collect()
-    out.foreach(r => assert(r.getLong(0) == r.getLong(1)))
-    val nul = df.select(expr("graft_dot_long(CAST(NULL AS ARRAY<BIGINT>), b)")).collect()
+    assert(out.schema("native").dataType == org.apache.spark.sql.types.LongType)
+    out.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
+    val nul = df.select(expr("graft_dot(CAST(NULL AS ARRAY<BIGINT>), b)")).collect()
     assert(nul.forall(_.isNullAt(0)))
   }
 
@@ -143,20 +142,36 @@ class VectorSpec extends SparkSuite {
     assert(groups.toSeq == Seq(1L, 2L), "skeleton exact-dedup groups the homoglyph pair")
   }
 
-  test("SpecializeFloatDot rewrites cast form to FloatDotProduct with identical results") {
-    // parquet source (array<float>), so constant folding can't pre-evaluate
+  test("graft_dot over array<float> equals its cast array<double> dot and the HOF form") {
+    val s = spark; import s.implicits._
+    val hof = "aggregate(zip_with(CAST(a AS array<double>), CAST(b AS array<double>), " +
+      "(x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+    def agree(pairs: org.apache.spark.sql.DataFrame): Unit = {
+      val out = pairs.select(
+        Native.dot(col("a"), col("b")).as("float_dot"),
+        Native.dot(col("a").cast("array<double>"), col("b").cast("array<double>")).as("cast_dot"),
+        expr(hof).as("hof"))
+      assert(out.schema("float_dot").dataType == org.apache.spark.sql.types.DoubleType)
+      val rows = out.collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        val bits = (0 to 2).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+        assert(bits.distinct.size == 1, s"float, cast and HOF dots differ: $r")
+      }
+    }
+    // in-memory rows (interpreted eval) and parquet embeddings (generated code)
+    agree(Seq(
+      (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
+      (Array(0.1f, -0.2f, 0.3f), Array(-0.4f, 0.5f, 0.25f)))
+      .toDF("a", "b"))
     val df = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(col("vec_id"),
-        expr("graft_dot(CAST(embedding AS array<double>), CAST(embedding AS array<double>))").as("d"))
-    val optimized = df.queryExecution.optimizedPlan
-    val hasSpecialized = optimized.expressions.exists(_.exists {
-      case _: FloatDotProduct => true
-      case _ => false
-    })
-    assert(hasSpecialized, s"expected FloatDotProduct in optimized plan:\n$optimized")
-    // d = ||v||^2 — spot check positivity and finiteness over real data
-    val vals = df.limit(50).collect().map(_.getDouble(1))
-    assert(vals.forall(v => v > 0 && !v.isNaN && !v.isInfinite))
+    agree(df.select(col("embedding").as("a"), col("embedding").as("b")))
+    agree(df.as("l").join(df.as("r"), col("l.vec_id") + 1 === col("r.vec_id"))
+      .select(col("l.embedding").as("a"), col("r.embedding").as("b")))
+    val mixed = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(Native.dot(col("embedding"), col("embedding").cast("array<double>"))).schema
+    }
+    assert(mixed.getMessage.contains("graft_dot requires"))
   }
 
   test("graft_dot null semantics: null array yields null") {
