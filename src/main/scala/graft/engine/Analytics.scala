@@ -201,7 +201,8 @@ object Analytics {
 
   /** Incremental AGGREGATE maintenance (q216) — the batch materialized-view
     * update every warehouse schedules: a maintained monthly revenue rollup
-    * (at rest, built once per dir over the corpus MINUS the wave) folded
+    * (at rest, built once per orders snapshot over the corpus MINUS the
+    * wave, a [[SessionMemo.atRest]] entry) folded
     * with an arriving order wave's delta (o_orderkey % mod = rem, the
     * ingest-wave convention) by a FULL OUTER merge on month. The oracle is
     * DELIBERATELY the full GROUP BY recompute over all orders — the claim
@@ -218,9 +219,8 @@ object Analytics {
     def rollup(df: DataFrame): DataFrame = df
       .groupBy(expr("date_format(CAST(o_orderdate AS DATE), 'yyyy-MM')").as("month"))
       .agg(count(lit(1)).as("n_orders"), sum(Dec.d2(col("o_totalprice"))).as("rev"))
-    val statePath = Fs.buildOnce(
-      s"graft_mvroll_${Fs.dirTag(dir)}_m${mod}r$rem",
-      spark.sessionState.newHadoopConf()) { p =>
+    val statePath = SessionMemo.atRest(spark, ("mvroll", dir, mod, rem),
+        s"$dir/orders.parquet") { p =>
       rollup(Tables.orders(spark, dir).filter(!isWave))
         .write.mode("overwrite").parquet(p)
     }

@@ -40,25 +40,17 @@ object Bronze {
     * NULL source. The rollup proves the merged read end-to-end: per lang,
     * total rows vs rows that actually carry a source, and the distinct
     * source count (NULL-excluded by COUNT semantics in both engines). The
-    * dataset builds once per source dir ([[graft.engine.Fs.buildOnce]]) —
-    * bench loops reread, never rewrite. */
+    * dataset is built at rest once per documents snapshot
+    * ([[SessionMemo.atRest]]): bench loops reread, never rewrite. */
   def schemaEvolutionRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val p = Fs.buildOnce(
-      s"graft_schevo_${Fs.dirTag(dir)}",
-      spark.sessionState.newHadoopConf()) { root =>
-      // one OVERWRITE per generation dir (not two appends into one dir): a
-      // build that crashed before the top-level marker re-runs, and append
-      // would duplicate the first attempt's rows — overwrite is idempotent
+    val p = SessionMemo.atRest(spark, ("schevo", dir), s"$dir/documents.parquet") { root =>
       val docs = Tables.documents(spark, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"))
-        .write.mode("overwrite").parquet(s"$root/data/g1")
+        .write.parquet(s"$root/data/g1")
       docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("lang"), col("source"))
-        .write.mode("overwrite").parquet(s"$root/data/g2")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.create(new org.apache.hadoop.fs.Path(root, "_SUCCESS"), true).close()
+        .write.parquet(s"$root/data/g2")
     }
     spark.read.option("mergeSchema", "true").parquet(s"$p/data/g1", s"$p/data/g2")
       .groupBy(col("lang"))
@@ -143,12 +135,12 @@ object Bronze {
     * parquet is canonical at rest. Embedded Derby is single-JVM by design,
     * which local[*] satisfies.
     *
-    * The DB dir is a stable per-(dir) scratch location: each invocation
-    * overwrites the TABLE inside the database (transactional in Derby), so
-    * bench loops hold one DB copy, not N. */
+    * The DB dir is a [[SessionMemo.atRest]] entry per nation snapshot: each
+    * invocation overwrites the TABLE inside the database (transactional in
+    * Derby), so bench loops hold one DB copy, not N. */
   def jdbcRoundtripNation(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit, min, sum}
-    val dbDir = Fs.stableScratchDir(s"graft_derby_${Fs.dirTag(dir)}")
+    val dbDir = SessionMemo.atRest(spark, ("derby", dir), s"$dir/nation.parquet")(_ => ())
     System.setProperty("derby.stream.error.file", s"$dbDir/derby.log")
     val url = s"jdbc:derby:$dbDir/db;create=true"
     writeJdbc(Tables.nation(spark, dir), url, "nation", "app", "app", batchSize = 7)

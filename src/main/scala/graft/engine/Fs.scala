@@ -1,8 +1,9 @@
 package graft.engine
 
 /** Local-filesystem scratch helpers shared by the scratch-dir lifecycles in
-  * [[graft.ext.Dedup]], [[Bucketing]], and the test suites (one definition —
-  * the four previous copies each lacked the null guard below).
+  * the engine ([[SessionMemo.atRest]], [[overwriteVersioned]]) and the test
+  * suites (one definition — the four previous copies each lacked the null
+  * guard below).
   *
   * These are for JVM-local scratch/warehouse paths only. Anything that may
   * live on a non-local filesystem (e.g. gold partition directories at cluster
@@ -56,68 +57,38 @@ object Fs {
     else SessionMemo(spark, ("read", spark, path), path)(spark.read.parquet(path))
 
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private val stableDirs =
+  private val versionedDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   Runtime.getRuntime.addShutdownHook(new Thread(() => scratchDirs.forEach(rmTree)))
 
   /** Fresh JVM-lifetime scratch dir (shutdown-hook reclaimed) for operators
     * that materialize intermediate data a returned lazy frame may still read
     * (eager deletion is unsafe; the hook reclaims at JVM exit). The single
-    * queue+hook here is THE scratch lifecycle — [[graft.ext.Dedup]] delegates
-    * to it. Callers that re-run per bench pass should prefer
-    * [[stableScratchDir]] so repeated invocations don't accumulate copies. */
+    * queue+hook here is THE scratch lifecycle: builds kept at rest
+    * ([[SessionMemo.atRest]]) and per-call rewrites ([[overwriteVersioned]])
+    * both write under it. */
   def scratchDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix).toString
     scratchDirs.add(p)
     p
   }
 
-  /** Injective 12-hex tag of a source dir for layout/scratch cache keys —
-    * character sanitization is NOT injective ("/a/b_c" vs "/a/b/c" collide),
-    * and a tag collision silently serves one dataset's cached layout for
-    * another. A mutable-source deployment would tag a snapshot/commit id
-    * instead of the path. */
+  /** Injective 12-hex tag of a path, for scratch prefixes and catalog table
+    * names — character sanitization is NOT injective ("/a/b_c" vs "/a/b/c"
+    * collide). */
   def dirTag(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
-  /** One scratch dir PER PREFIX per JVM (cached): repeated invocations of the
-    * same operator overwrite one location instead of stacking a full table
-    * copy per call — a bench looping a sink-roundtrip query N times holds one
-    * copy, not N. Only safe for WRITE-ONCE callers (the dir is populated on
-    * first use and read-only after — see [[graft.engine.Layout]]); callers
-    * that re-write per invocation must use [[overwriteVersioned]], which a
-    * concurrently-held lazy frame can survive. */
-  def stableScratchDir(prefix: String): String =
-    stableDirs.computeIfAbsent(prefix, p => scratchDir(p))
 
   private val prefixLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private val versions =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Run `body` under the JVM-wide lock for `prefix` — serializes build-or-
-    * reuse decisions on a shared per-prefix dir (two threads racing a
-    * marker-guarded build would otherwise both write it). */
-  def withPrefixLock[A](prefix: String)(body: => A): A =
+  /** Run `body` under the JVM-wide lock for `prefix`: two threads rewriting
+    * one [[overwriteVersioned]] prefix would otherwise interleave. */
+  private def withPrefixLock[A](prefix: String)(body: => A): A =
     prefixLocks.computeIfAbsent(prefix, _ => new Object).synchronized(body)
-
-  /** Build-or-reuse a per-prefix scratch dir guarded by a `_SUCCESS` marker:
-    * the first caller (per JVM per prefix, serialized by [[withPrefixLock]])
-    * runs `write` into the stable dir; later callers — and callers racing on
-    * other threads — reuse the marker-committed build. `write` must commit
-    * the marker itself (every Spark write does). The shared build-once
-    * lifecycle behind the cached layouts ([[Layout]]); one definition so a
-    * marker-protocol fix cannot miss a site. */
-  def buildOnce(prefix: String, hadoopConf: org.apache.hadoop.conf.Configuration)(
-      write: String => Unit): String =
-    withPrefixLock(prefix) {
-      val p = stableScratchDir(prefix)
-      val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-      val fs = marker.getFileSystem(hadoopConf)
-      if (!fs.exists(marker)) write(p)
-      p
-    }
 
   /** Overwrite-safe bounded scratch: each invocation writes a FRESH `vN`
     * subdir under the stable per-prefix dir, and the PREVIOUS version is
@@ -131,7 +102,7 @@ object Fs {
     * suites sharing a JVM cannot interleave writes either. */
   def overwriteVersioned(prefix: String)(write: String => Unit): String =
     withPrefixLock(prefix) {
-      val base = stableDirs.computeIfAbsent(prefix, p => scratchDir(p))
+      val base = versionedDirs.computeIfAbsent(prefix, p => scratchDir(p))
       val prev = Option(versions.get(prefix)).map(_.longValue)
       val n = prev.getOrElse(0L) + 1
       val next = s"$base/v$n"

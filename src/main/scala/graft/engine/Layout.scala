@@ -76,10 +76,8 @@ object Layout {
     * through a real partitioned write is the point of the query, so its cost
     * includes the write. */
   def partitionPrunedScan(spark: SparkSession, dir: String): DataFrame =
-    // one partitioned layout per source dir per session: the write is the
-    // once-per-drop layout cost, the OPERATOR under test is the pruned read.
-    // Fixture dirs are immutable, so dir-keyed reuse cannot serve stale data
-    // (a mutable source would key on a snapshot id).
+    // one partitioned layout per orders snapshot per session: the write is
+    // the once-per-drop layout cost, the OPERATOR under test is the pruned read
     prunedYearRollup(Fs.readParquet(spark, partitionedOrdersPath(spark, dir)))
 
   /** The partitioned-layout writer behind [[partitionPrunedScan]], callable
@@ -99,20 +97,20 @@ object Layout {
       .agg(count(lit(1)).as("n_orders"), Dec.sum2(col("o_totalprice")).as("revenue"))
       .orderBy("o_month")
 
-  /** Build-or-reuse path of the year-partitioned orders layout — the shared
-    * once-per-drop build behind [[partitionPrunedScan]] (q107) and
-    * [[dynamicPrunedJoin]] (q121). */
+  /** Path of the year-partitioned orders layout, a [[SessionMemo.atRest]]
+    * entry — the shared once-per-drop build behind [[partitionPrunedScan]]
+    * (q107) and [[dynamicPrunedJoin]] (q121). */
   def partitionedOrdersPath(spark: SparkSession, dir: String): String =
-    Fs.buildOnce(s"graft_part_${Fs.dirTag(dir)}",
-      spark.sessionState.newHadoopConf())(p => partitionedOrdersWrite(spark, dir, p))
+    SessionMemo.atRest(spark, ("part", dir), s"$dir/orders.parquet")(
+      partitionedOrdersWrite(spark, dir, _))
 
   /** Per-ship-year dim over lineitem (year, returned-item share in ppm),
-    * materialized once per data drop: the small filtered side of
-    * [[dynamicPrunedJoin]]. A real deployment's date/scope dim; built here
-    * from the fixture so the query is self-contained. */
+    * materialized once per lineitem snapshot ([[SessionMemo.atRest]]): the
+    * small filtered side of [[dynamicPrunedJoin]]. A real deployment's
+    * date/scope dim; built here from the fixture so the query is
+    * self-contained. */
   def shipYearDimPath(spark: SparkSession, dir: String): String =
-    Fs.buildOnce(s"graft_ydim_${Fs.dirTag(dir)}",
-      spark.sessionState.newHadoopConf()) { p =>
+    SessionMemo.atRest(spark, ("ydim", dir), s"$dir/lineitem.parquet") { p =>
       Tables.lineitem(spark, dir)
         .groupBy(year(col("l_shipdate")).cast("int").as("o_year"))
         .agg(count(lit(1)).as("n_items"),

@@ -406,7 +406,7 @@ object Dedup {
     * which for integer t_ppm is exactly o/u ≥ t.
     *
     * Scale shape (round 10): the prefix set lives AT REST, bucket-clustered
-    * on tok_h ([[prefixIndexTable]] — built once per (drop, threshold) like
+    * on tok_h ([[prefixIndexTable]] — built once per (snapshot, threshold) like
     * every other index here), so the query itself is a co-located self-join
     * over sorted bucket scans (zero exchange, zero sort) + the position/
     * length filters + the pair-distinct + array verification. */
@@ -475,43 +475,36 @@ object Dedup {
     * shouldn't — the prefix is computed on exactly the deduped class set.
     * Per-doc rarest-first order via an array sort (38-element in-row
     * sorts), not a row_number window (which range-sorts every exploded
-    * row). The table name is a [[graft.engine.SessionMemo]] entry, so a
-    * rebuilt session (a new catalog) builds its own. */
+    * row). The table is a [[graft.engine.SessionMemo.atRest]] entry, so a
+    * rebuilt session (a new catalog) builds its own. Returns its name. */
   def prefixIndexTable(spark: SparkSession, dir: String,
       thresholdPpm: Long): String =
-    graft.engine.SessionMemo(spark, ("ppfx", dir, thresholdPpm),
-      s"$dir/documents.parquet") {
+    graft.engine.Bucketing.tableAt(graft.engine.SessionMemo.atRest(
+        spark, ("ppfx", dir, thresholdPpm), s"$dir/documents.parquet") { p =>
       val docToks = graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
       // layout sizing: ~13 prefix rows per doc at t = 0.8 (plen ≈ 0.2·m + 1,
       // E[m] ≈ 38 on 10-100-token docs) — a heuristic is fine for LAYOUT
       // (bucket count changes no results), and the doc count is a parquet
       // metadata read, not a scan
       val buckets = graft.engine.Bucketing.bucketCountFor(docToks.count() * 13L)
-      val table =
-        s"graft_ppfx_${graft.engine.Fs.dirTag(dir)}_t${thresholdPpm}_b$buckets"
-      graft.engine.Fs.withPrefixLock(table) {
-        if (!spark.catalog.tableExists(table)) {
-          val toks = docToks
-            .select(col("doc_id"), size(col("toks")).cast("long").as("n"),
-              explode(col("toks")).as("tok"))
-            .select(col("doc_id"), col("n"), xxhash64(col("tok")).as("tok_h"))
-          val freq = toks.groupBy(col("tok_h")).agg(count(lit(1)).as("df"))
-          val prefix = toks.join(freq, Seq("tok_h"))
-            .groupBy(col("doc_id"), col("n"))
-            .agg(sort_array(collect_list(struct(col("df"), col("tok_h")))).as("ord"))
-            .withColumn("ordd", array_distinct(col("ord")))
-            .withColumn("m", size(col("ordd")).cast("long"))
-            .withColumn("plen",
-              col("m") - expr(s"($thresholdPpm * m + 999999) div 1000000") + 1)
-            .selectExpr("doc_id", "n", "m",
-              "posexplode(slice(ordd, 1, CAST(plen AS INT))) AS (i, p)")
-            .select(col("doc_id"), col("n"), col("m"),
-              (col("i") + 1).cast("long").as("pos"), col("p.tok_h").as("tok_h"))
-          graft.engine.Bucketing.writeBucketed(prefix, table, "tok_h", buckets)
-        }
-      }
-      table
-    }
+      val toks = docToks
+        .select(col("doc_id"), size(col("toks")).cast("long").as("n"),
+          explode(col("toks")).as("tok"))
+        .select(col("doc_id"), col("n"), xxhash64(col("tok")).as("tok_h"))
+      val freq = toks.groupBy(col("tok_h")).agg(count(lit(1)).as("df"))
+      val prefix = toks.join(freq, Seq("tok_h"))
+        .groupBy(col("doc_id"), col("n"))
+        .agg(sort_array(collect_list(struct(col("df"), col("tok_h")))).as("ord"))
+        .withColumn("ordd", array_distinct(col("ord")))
+        .withColumn("m", size(col("ordd")).cast("long"))
+        .withColumn("plen",
+          col("m") - expr(s"($thresholdPpm * m + 999999) div 1000000") + 1)
+        .selectExpr("doc_id", "n", "m",
+          "posexplode(slice(ordd, 1, CAST(plen AS INT))) AS (i, p)")
+        .select(col("doc_id"), col("n"), col("m"),
+          (col("i") + 1).cast("long").as("pos"), col("p.tok_h").as("tok_h"))
+      graft.engine.Bucketing.writeBucketed(prefix, p, "tok_h", buckets)
+    })
 
   /** The shared EXACT-verification tail of every candidate-then-verify
     * pipeline over the shingle-array index ([[prefixFilterJoin]],
@@ -543,7 +536,8 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
 
   /** Per-document 3-gram shingle ARRAYS at rest — (doc_id, toks), one row per
-    * doc — materialized ONCE per source dir per JVM. The shingle projection
+    * doc — materialized ONCE per documents snapshot per session
+    * ([[graft.engine.SessionMemo.atRest]]). The shingle projection
     * (split + 3-gram transform + array_distinct) is the most expensive
     * row-wise work on the exact-join paths and is consumed on multiple
     * lineage paths per query (prefix machinery + both verification sides in
@@ -552,9 +546,8 @@ object Dedup {
     * model, threshold-independent so every threshold and every consumer
     * shares one build. */
   def shingleTokensPath(spark: SparkSession, dir: String): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_ppjtoks_${graft.engine.Fs.dirTag(dir)}",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("ppjtoks", dir),
+        s"$dir/documents.parquet") { p =>
       Tables.documents(spark, dir)
         .select(col("doc_id"), split(col("text"), " ").as("words"))
         .filter(size(col("words")) >= 3)
@@ -563,14 +556,14 @@ object Dedup {
     }
 
   /** Corpus-side token document frequencies AT REST — (tok_h, df) over the
-    * non-wave docs only, materialized once per (dir, wave id) per JVM: the
-    * maintained corpus statistic the deployed ingest path reuses each wave
+    * non-wave docs only, materialized once per (documents snapshot, wave id)
+    * per session: the maintained corpus statistic the deployed ingest path
+    * reuses each wave
     * (advisor round 6 — the previous form recomputed a global df over
     * corpus ∪ batch per call, a full corpus shuffle per wave). */
   def corpusDfPath(spark: SparkSession, dir: String, mod: Int, rem: Int): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_ppjdf_${graft.engine.Fs.dirTag(dir)}_${mod}_$rem",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("ppjdf", dir, mod, rem),
+        s"$dir/documents.parquet") { p =>
       graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
         .filter(!(col("doc_id") % mod === rem))
         .select(explode(col("toks")).as("tok"))
@@ -596,15 +589,14 @@ object Dedup {
       .select(col("doc_id"), col("n"), col("p.tok_h").as("tok_h"))
 
   /** Corpus-side prefix POSTINGS at rest — (tok_h, doc_id, n) for each
-    * corpus doc's df-ordered prefix head, built once per (dir, threshold,
-    * wave id) per JVM beside [[corpusDfPath]]. This is the index an ingest
-    * pipeline maintains between waves; per-wave work never touches it
-    * beyond the posting-list probe. */
+    * corpus doc's df-ordered prefix head, built once per (documents
+    * snapshot, threshold, wave id) per session beside [[corpusDfPath]]. This
+    * is the index an ingest pipeline maintains between waves; per-wave work
+    * never touches it beyond the posting-list probe. */
   def corpusPrefixPath(spark: SparkSession, dir: String, thresholdPpm: Long,
       mod: Int, rem: Int): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_ppjpre_${graft.engine.Fs.dirTag(dir)}_${thresholdPpm}_${mod}_$rem",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("ppjpre", dir, thresholdPpm, mod, rem),
+        s"$dir/documents.parquet") { p =>
       val dfTab = graft.engine.Fs.readParquet(spark, corpusDfPath(spark, dir, mod, rem))
       val toks = graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
         .filter(!(col("doc_id") % mod === rem))
@@ -668,32 +660,30 @@ object Dedup {
     verifyPairs(cand, docToks, thresholdPpm)
   }
 
-  /** The LSH candidate-pair table materialized ONCE per (source dir, bucket
-    * cap) per JVM — the near-dup stack's at-rest index, the same
-    * once-per-data-drop cost model as [[graft.engine.Layout]]'s cached
-    * layouts: q61/q62/q71/q100/q120/q125/q134 all consume this table, and
-    * the MinHash signature pipeline runs at the FIRST consumer, not once per
-    * query. At 100 TB this is exactly how the stack deploys (the band/pair
-    * index is maintained at rest and appended per batch, see
-    * [[incrementalDedup]]); keyed on the immutable fixture dir — a mutable
-    * deployment keys on a snapshot/commit id instead. */
+  /** The LSH candidate-pair table materialized ONCE per (documents snapshot,
+    * bucket cap) per session ([[graft.engine.SessionMemo.atRest]]) — the
+    * near-dup stack's at-rest index, the same once-per-data-drop cost model
+    * as [[graft.engine.Layout]]'s layouts: q61/q62/q71/q100/q120/q125/q134
+    * all consume this table, and the MinHash signature pipeline runs at the
+    * FIRST consumer, not once per query. At 100 TB this is exactly how the
+    * stack deploys (the band/pair index is maintained at rest and appended
+    * per batch, see [[incrementalDedup]]). */
   def candidatePairsPath(spark: SparkSession, dir: String,
       maxBucketSize: Int = 0): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_cand_${graft.engine.Fs.dirTag(dir)}_m$maxBucketSize",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("cand", dir, maxBucketSize),
+        s"$dir/documents.parquet") { p =>
       minhashCandidatePairs(spark, dir, maxBucketSize)
         .select(col("doc_a"), col("doc_b"), col("n_shared_bands"))
         .write.mode("overwrite").parquet(p)
     }
 
   /** Shingles restricted to candidate docs (left_semi), materialized once
-    * per dir beside [[candidatePairsPath]] — the exact-verification stages
+    * per documents snapshot beside [[candidatePairsPath]] — the
+    * exact-verification stages
     * (q61/q120) read it on three lineage paths. */
   def candidateShinglesPath(spark: SparkSession, dir: String): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_candsh_${graft.engine.Fs.dirTag(dir)}",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("candsh", dir),
+        s"$dir/documents.parquet") { p =>
       val cand = graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
       val candIds = cand.select(col("doc_a").as("doc_id"))
         .union(cand.select(col("doc_b").as("doc_id"))).distinct()
@@ -1293,7 +1283,8 @@ object Dedup {
     * at-rest cluster labels with a BOUNDED recompute, never full-graph CC:
     *
     *  1. base labels = [[clustersFromPairs]] over corpus-only pairs (both
-    *     endpoints outside the wave) — the at-rest state, built once per key;
+    *     endpoints outside the wave) — the at-rest state, built once per
+    *     (pairs snapshot, wave);
     *  2. affected components = base labels of any corpus node a batch pair
     *     touches (the affected-label set is batch-bounded → broadcast);
     *  3. recompute subgraph = batch pairs + corpus pairs INSIDE affected
@@ -1313,19 +1304,19 @@ object Dedup {
     incrementalClustersFrom(spark,
       graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
         .select(col("doc_a"), col("doc_b")),
-      s"graft_ccbase_${graft.engine.Fs.dirTag(dir)}_m${mod}r$rem",
-      mod, rem, maxIters)
+      s"$dir/documents.parquet", mod, rem, maxIters)
 
   /** [[incrementalClusters]]'s machinery over any pair frame — also the
-    * hand-fixture surface. `cacheKey` keys the at-rest base labels
-    * (buildOnce); fixtures pass a unique key per planted graph. */
+    * hand-fixture surface. `fixture` is the path `all` derives from: it keys
+    * the at-rest base labels ([[graft.engine.SessionMemo.atRest]]); a hand
+    * fixture passes a path unique to its planted graph. */
   def incrementalClustersFrom(spark: SparkSession, all: DataFrame,
-      cacheKey: String, mod: Int, rem: Int, maxIters: Int): DataFrame = {
+      fixture: String, mod: Int, rem: Int, maxIters: Int): DataFrame = {
     val isBatchPair = (col("doc_a") % mod === rem) || (col("doc_b") % mod === rem)
     val corpusPairs = all.filter(!isBatchPair)
     val batchPairs = all.filter(isBatchPair)
-    val basePath = graft.engine.Fs.buildOnce(
-      cacheKey, spark.sessionState.newHadoopConf()) { p =>
+    val basePath = graft.engine.SessionMemo.atRest(spark,
+        ("ccbase", fixture, mod, rem, maxIters), fixture) { p =>
       clustersFromPairs(spark, corpusPairs, maxIters)
         .write.mode("overwrite").parquet(p)
     }
@@ -1845,11 +1836,11 @@ object Dedup {
         Seq("fp"), "left")
       .groupBy(col("doc_id"))
       .agg(min(col("c_id")).as("exact_dup_of"))
-    // the at-rest band index, built once per dir (see [[candidatePairsPath]]'s
-    // cost model) — in the deployed form this IS the appended-per-batch table
-    val bandsPath = graft.engine.Fs.buildOnce(
-      s"graft_bands_${graft.engine.Fs.dirTag(dir)}",
-      spark.sessionState.newHadoopConf())(p =>
+    // the at-rest band index, built once per documents snapshot (see
+    // [[candidatePairsPath]]'s cost model) — in the deployed form this IS the
+    // appended-per-batch table
+    val bandsPath = graft.engine.SessionMemo.atRest(spark, ("bands", dir),
+        s"$dir/documents.parquet")(p =>
       bandsUnordered(spark, dir).write.mode("overwrite").parquet(p))
     val bands = graft.engine.Fs.readParquet(spark, bandsPath)
     val near = bands.filter(isBatch)
@@ -2216,7 +2207,8 @@ object Dedup {
     * position-level range join, no explode of the corpus text.
     *
     * Round 11: the spans come from the AT-REST table ([[spansPath]], built
-    * once per (dir, k) per JVM) — the q62/clustersPath discipline: q227
+    * once per (documents snapshot, k) per session) — the q62/clustersPath
+    * discipline: q227
     * runs the span computation live (it IS that query's operator); the
     * CONSUMER reads the materialized table. Recomputing the whole span
     * pipeline inside the rewrite doubled the probe's transient shuffle
@@ -2308,7 +2300,8 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** The clusters table materialized once per (dir, iters, cap) per JVM —
+  /** The clusters table materialized once per (documents snapshot, iters,
+    * cap) per session ([[graft.engine.SessionMemo.atRest]]) —
     * the dedup stack's second at-rest index (the first is
     * [[candidatePairsPath]]): in production the cluster assignment is
     * maintained at rest and consumed by every downstream export, it is not
@@ -2317,22 +2310,21 @@ object Dedup {
     * q100 capstone) read this table. */
   def clustersPath(spark: SparkSession, dir: String, maxIters: Int = 0,
       maxBucketSize: Int = 0): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_cc_${graft.engine.Fs.dirTag(dir)}_i${maxIters}_m$maxBucketSize",
-      spark.sessionState.newHadoopConf())(p =>
+    graft.engine.SessionMemo.atRest(spark, ("cc", dir, maxIters, maxBucketSize),
+        s"$dir/documents.parquet")(p =>
       duplicateClusters(spark, dir, maxIters, maxBucketSize)
         .write.mode("overwrite").parquet(p))
 
-  /** The repeat-span table materialized once per (dir, k) per JVM — the
+  /** The repeat-span table materialized once per (documents snapshot, k) per
+    * session — the
     * dedup stack's third at-rest index (after [[candidatePairsPath]] and
     * [[clustersPath]]): in production the ExactSubstr span table is
     * computed once per corpus snapshot and consumed by every rewrite/audit
     * pass. q227 still computes the spans live (that IS its operator); the
     * CONSUMERS (q228's cut rewrite) read this table. */
   def spansPath(spark: SparkSession, dir: String, k: Int = 5): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_lrs_${graft.engine.Fs.dirTag(dir)}_k$k",
-      spark.sessionState.newHadoopConf())(p =>
+    graft.engine.SessionMemo.atRest(spark, ("lrs", dir, k),
+        s"$dir/documents.parquet")(p =>
       longRepeatSpans(spark, dir, k)
         .write.mode("overwrite").parquet(p))
 }

@@ -108,9 +108,9 @@ object Similarity {
 
   /** ANN top-k: exact cosine ranking restricted to the query's LSH bucket.
     * The bucket table appears on both join sides and is served from the
-    * at-rest index ([[lshProjectionsPath]]) — built once per (dir, planes,
-    * dim) per JVM, so the two sides are two cheap parquet reads, not two
-    * re-runs of the projection pass. */
+    * at-rest index ([[lshProjectionsPath]]) — built once per (embeddings
+    * snapshot, planes, dim) per session, so the two sides are two cheap
+    * parquet reads, not two re-runs of the projection pass. */
   def annTopK(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 20): DataFrame = {
     val all = lshBuckets(spark, dir)
     val q = all.filter(col("vec_id") < nQueries)
@@ -164,22 +164,18 @@ object Similarity {
     * at-rest structure in this engine uses, and exactly how a production
     * vector store lays out its index (clustered by posting/cell key).
     * Results unchanged: layout is not semantics, the oracle agrees row for
-    * row. Built once per (dir, layout) per session; the table name is a
-    * [[graft.engine.SessionMemo]] entry, so a rebuilt session (a new
-    * catalog) builds its own. */
+    * row. Built once per embeddings snapshot per session, a
+    * [[graft.engine.SessionMemo.atRest]] entry, so a rebuilt session (a new
+    * catalog) builds its own. Returns the table name. */
   def lshBucketedTable(spark: SparkSession, dir: String): String =
-    graft.engine.SessionMemo(spark, ("lshbk", dir), s"$dir/embeddings.parquet") {
+    graft.engine.Bucketing.tableAt(graft.engine.SessionMemo.atRest(
+        spark, ("lshbk", dir), s"$dir/embeddings.parquet") { p =>
       val idx = spark.read.parquet(lshProjectionsPath(spark, dir))
         .select(col("vec_id"), col("v"), col("nrm"), col("bucket"))
       // parquet metadata count — no full scan; sizes the file-bucket layout
       val buckets = graft.engine.Bucketing.bucketCountFor(idx.count())
-      val table = s"graft_lshbk_${graft.engine.Fs.dirTag(dir)}_b$buckets"
-      graft.engine.Fs.withPrefixLock(table) {
-        if (!spark.catalog.tableExists(table))
-          graft.engine.Bucketing.writeBucketed(idx, table, "bucket", buckets)
-      }
-      table
-    }
+      graft.engine.Bucketing.writeBucketed(idx, p, "bucket", buckets)
+    })
 
   /** [[embeddingNearDupPairs]]'s pair machinery over any pre-bucketed frame
     * with (vec_id, v, nrm, bucket) — also the planted-degenerate-bucket test
@@ -260,16 +256,16 @@ object Similarity {
     math.max(8, math.min(20, bits))
   }
 
-  /** The LSH projection/bucket table materialized ONCE per (source dir,
-    * nPlanes, dim) per JVM — the vector family's at-rest index, the same
-    * build-once cost model as [[graft.ext.Dedup.candidatePairsPath]]'s band
+  /** The LSH projection/bucket table materialized ONCE per (embeddings
+    * snapshot, nPlanes, dim) per session ([[graft.engine.SessionMemo.atRest]])
+    * — the vector family's at-rest index, the same build-once cost model as
+    * [[graft.ext.Dedup.candidatePairsPath]]'s band
     * index: q33/q34/q53/q90/q144/q177 all read this table instead of each
     * re-running the projection pass (nPlanes × 64-element dot products per
     * vector per consumer). At 100 TB this is exactly how a vector store
     * deploys — buckets are computed at ingest and kept beside the
-    * embeddings; keyed on the immutable fixture dir (a mutable deployment
-    * keys on a snapshot/commit id instead). `nPlanes = 0` (the catalog
-    * default) derives the count from COUNT(*) via [[lshPlanesFor]]; an
+    * embeddings. `nPlanes = 0` (the catalog default) derives the count from
+    * COUNT(*) via [[lshPlanesFor]]; an
     * explicit count pins it (tests, and any deployment that froze the
     * index geometry — a STREAM appending to an existing index must pin the
     * count the index was built with). The derived count is a
@@ -283,9 +279,8 @@ object Similarity {
       else graft.engine.SessionMemo(spark, ("lshPlanes", dir),
         s"$dir/embeddings.parquet")(
         lshPlanesFor(Tables.embeddings(spark, dir).count()))
-    graft.engine.Fs.buildOnce(
-      s"graft_lshprj_${graft.engine.Fs.dirTag(dir)}_p${planes}_d$dim",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("lshprj", dir, planes, dim),
+        s"$dir/embeddings.parquet") { p =>
       lshProjectionsCompute(spark, dir, planes, dim)
         .write.mode("overwrite").parquet(p)
     }
@@ -494,6 +489,15 @@ object Similarity {
     // column reference is not foldable at analysis time
     all.withColumn("cell", Native.argmaxCell(col("v"), col("nrm"), typedlit(cents)))
 
+  /** [[graft.functions.ArgMaxCell]]'s cell as an equi-join key, NOT NULL: a
+    * NULL vector's NULL cell becomes the expression's own -1 "no cell",
+    * which no centroid or eval id (a multiple of a mod ≥ 31) equals, so the
+    * join keeps the same rows. From a nullable key the optimizer infers
+    * `isnotnull(cell)` and pushes it below the projection, where it
+    * evaluated the argmax a second time per corpus row (q72, q234). */
+  private def cellKey(v: Column, nrm: Column, cents: Column): Column =
+    coalesce(Native.argmaxCell(v, nrm, cents), lit(-1L))
+
   /** IVF cell centroids in SQ8 code space — the index-maintenance counterpart
     * of [[ivfTopK]]: per (Voronoi cell, dimension), the count and exact integer
     * sum of the member vectors' SQ8 codes (FAISS's IVF+SQ8 layout). Float
@@ -550,9 +554,9 @@ object Similarity {
     val all = vecs(spark, dir)
     val lits = centroidLits(all, spark)
     val cents = centroidFrame(spark, lits)
-    val assigned = assignCells(all, lits)
+    val assigned = all
       .select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
-        col("nrm").as("nn"), col("cell"))
+        col("nrm").as("nn"), cellKey(col("v"), col("nrm"), typedlit(lits)).as("cell"))
     val byCos = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("centroid_id").asc)
     val probes = all.filter(col("vec_id") < nQueries)
@@ -874,8 +878,9 @@ object Similarity {
     * order-DEPENDENT; sums of longs are not). */
   val KmScale = 1024L
 
-  /** Iterated Lloyd k-means state, materialized ONCE per (dir, iters,
-    * seedMod) per JVM — the IVF-training analog of
+  /** Iterated Lloyd k-means state, materialized ONCE per (embeddings
+    * snapshot, iters, seedMod, k) per session
+    * ([[graft.engine.SessionMemo.atRest]]) — the IVF-training analog of
     * [[graft.ext.Dedup.candidatePairsPath]]'s at-rest cost model. Layout:
     * `q/` quantized vectors, `c0..cN/` per-round centroids, `assign/` the
     * FINAL (vec_id, cell, q) assignment (q rides along so pair consumers
@@ -920,9 +925,8 @@ object Similarity {
     * expression's fold; `ORDER BY dist, cid` in the oracle). */
   def kmeansStatePath(spark: SparkSession, dir: String, iters: Int = 2,
       seedMod: Int = 61, k: Int = 0): String =
-    graft.engine.Fs.buildOnce(
-      s"graft_km_${graft.engine.Fs.dirTag(dir)}_i${iters}_s${seedMod}_k$k",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("km", dir, iters, seedMod, k),
+        s"$dir/embeddings.parquet") { p =>
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), expr(
           s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * ${KmScale}D) AS BIGINT))")
@@ -985,10 +989,6 @@ object Similarity {
             .write.mode("overwrite").parquet(s"$p/c$it")
         }
       }
-      // multi-table state: commit the top-level marker buildOnce guards on
-      val fs = new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
     }
 
   /** q188: the final k-means round's per-(cell, dim) aggregate — cluster
@@ -1162,7 +1162,7 @@ object Similarity {
   def deconScreen(vframe: DataFrame, bench: EvalBenchmark,
       tau: Double = 0.4): DataFrame =
     vframe
-      .withColumn("nearest_eval_id", Native.argmaxCell(col("v"), col("nrm"), bench.evals))
+      .withColumn("nearest_eval_id", cellKey(col("v"), col("nrm"), bench.evals))
       .join(broadcast(bench.evalDim), col("nearest_eval_id") === col("eval_id"))
       .withColumn("cos", Native.dot(col("v"), col("ev")) / (col("nrm") * col("en")))
       .select(col("vec_id"), col("nearest_eval_id"),

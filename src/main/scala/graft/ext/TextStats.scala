@@ -1727,9 +1727,9 @@ object TextStats {
     * at-rest corpus (doc_id % mod ≠ rem) is already packed, its manifest
     * immutable; an arriving wave's docs CONTINUE the token stream — new
     * sequences start at the corpus's total token offset, never repacking
-    * or even rescanning the corpus (the total is a 1-row at-rest seed via
-    * [[graft.engine.Fs.buildOnce]]). Output: the WAVE's sequence manifest,
-    * seq ids continuing the corpus numbering. If the corpus's final
+    * or even rescanning the corpus (the total is a 1-row at-rest seed, a
+    * [[graft.engine.SessionMemo.atRest]] entry). Output: the WAVE's sequence
+    * manifest, seq ids continuing the corpus numbering. If the corpus's final
     * sequence was partial, the first wave sequence starts at the next
     * boundary (standard shard-aligned append: a loader never re-reads a
     * sealed shard to top it up).
@@ -1738,9 +1738,8 @@ object TextStats {
     * arithmetic — linear in the wave, not the corpus. */
   def incrementalPacking(spark: SparkSession, dir: String, seqLen: Int = 256,
       mod: Int = 10, rem: Int = 7): DataFrame = {
-    val base = graft.engine.Fs.buildOnce(
-      s"graft_packoff_${graft.engine.Fs.dirTag(dir)}_${seqLen}_${mod}_$rem",
-      spark.sessionState.newHadoopConf()) { p =>
+    val base = graft.engine.SessionMemo.atRest(spark, ("packoff", dir, seqLen, mod, rem),
+        s"$dir/documents.parquet") { p =>
       Tables.documents(spark, dir)
         .filter(!(col("doc_id") % mod === rem))
         .agg(coalesce(sum(size(split(col("text"), " ")).cast("long")), lit(0L))
@@ -1837,17 +1836,16 @@ object TextStats {
       .orderBy("lang")
   }
 
-  /** The BPE training state at rest, built ONCE per (dir, rounds) per JVM
-    * ([[graft.engine.Fs.buildOnce]] — bench passes reread instead of
-    * retraining): `w0..wN/` per-round dictionaries, `merges/` the merge
-    * table. The training loop itself is documented at [[bpeMerges]]. */
+  /** The BPE training state at rest, built ONCE per (documents snapshot,
+    * rounds) per session ([[graft.engine.SessionMemo.atRest]] — bench passes
+    * reread instead of retraining): `w0..wN/` per-round dictionaries,
+    * `merges/` the merge table. The training loop itself is documented at [[bpeMerges]]. */
   def bpeStatePath(spark: SparkSession, dir: String, rounds: Int = 3): String = {
     import org.apache.spark.sql.Row
     import spark.implicits._
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
-    graft.engine.Fs.buildOnce(
-      s"graft_bpe_${graft.engine.Fs.dirTag(dir)}_r$rounds",
-      spark.sessionState.newHadoopConf()) { p =>
+    graft.engine.SessionMemo.atRest(spark, ("bpe", dir, rounds),
+        s"$dir/documents.parquet") { p =>
       Tables.documents(spark, dir)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
@@ -1898,10 +1896,6 @@ object TextStats {
       }
       merges.toSeq.toDF("merge_idx", "pair", "freq")
         .write.mode("overwrite").parquet(s"$p/merges")
-      // multi-table state: commit the top-level marker buildOnce guards on
-      val fs = new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
     }
   }
 

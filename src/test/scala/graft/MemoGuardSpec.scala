@@ -14,13 +14,19 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * To add a site: put the memo on `SessionMemo`, or add an allowlist entry
   * stating why the map holds no memoized RESULT (scratch paths, locks).
+  *
+  * Derived data at rest follows the same policy through
+  * [[graft.engine.SessionMemo.atRest]]. The second test fails on the
+  * protocol it replaced: a build reused for the life of the JVM whenever
+  * its `_SUCCESS` marker or its catalog table exists, which kept serving
+  * the old build after the fixture was rewritten.
   */
 class MemoGuardSpec extends AnyFunSuite {
 
   /** (file relative to src/main/scala, map field) → why it is not a memo. */
   private val allowlist: Map[(String, String), String] = Map(
-    ("graft/engine/Fs.scala", "stableDirs") ->
-      "scratch directory per prefix: where a build-once writer puts its files, not a computed value",
+    ("graft/engine/Fs.scala", "versionedDirs") ->
+      "scratch directory per overwriteVersioned prefix: where each call writes its version, not a computed value",
     ("graft/engine/Fs.scala", "prefixLocks") ->
       "one lock object per scratch prefix",
     ("graft/engine/Fs.scala", "versions") ->
@@ -52,5 +58,25 @@ class MemoGuardSpec extends AnyFunSuite {
          |allowlist the map in MemoGuardSpec with why it holds no result.""".stripMargin)
     assert(stale.isEmpty,
       s"stale allowlist entries (site gone — prune them): ${stale.mkString(", ")}")
+  }
+
+  test("no build reuses an at-rest dir or table by its marker or name") {
+    // the streaming upsert swap commits its renamed-in target by the marker
+    // (upsertUserProfilesAvailableNow); it is a per-call rewrite, not a reuse
+    val markerOwner = "graft/streaming/IncrementalPipeline.scala"
+    val files = SourceScan.files("src/main/scala")
+    val reuse = for {
+      (rel, src) <- files
+      word <- Seq("buildOnce", "catalog.tableExists") if src.contains(word)
+    } yield s"$rel: $word"
+    val markers = for {
+      (rel, src) <- files if rel != markerOwner
+      (line, lit, _) <- SourceScan.stringLiterals(src) if lit == "_SUCCESS"
+    } yield s"$rel:$line (_SUCCESS marker)"
+    assert((reuse ++ markers).isEmpty,
+      s"""at-rest reuse outside SessionMemo: ${(reuse ++ markers).mkString(", ")}.
+         |Build derived data through graft.engine.SessionMemo.atRest: a fresh
+         |dir per build, published by the memo entry, rebuilt when the fixture
+         |changes and deleted when the entry goes.""".stripMargin)
   }
 }

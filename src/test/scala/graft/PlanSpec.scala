@@ -399,8 +399,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q109 bucketed join: zero hash exchange end-to-end") {
-    val df = engine.Bucketing.bucketedOrderRevenue(spark, dir, numBuckets = 8,
-      tablePrefix = "graft_bk_plan")
+    val df = engine.Bucketing.bucketedOrderRevenue(spark, dir, numBuckets = 8)
     assert(!engine.Bucketing.hasShuffleExchange(df),
       s"bucketed join must not shuffle:\n${df.queryExecution.executedPlan}")
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
@@ -1019,6 +1018,22 @@ class PlanSpec extends SparkSuite {
       assert(dots.nonEmpty, s"$name: no graft_dot in the optimized plan:\n$optimized")
       val casted = dots.filter(_.children.exists(_.isInstanceOf[Cast]))
       assert(casted.isEmpty, s"$name dots a cast copy: ${casted.mkString("; ")}")
+    }
+  }
+
+  test("q72/q234 cell joins: the corpus argmax is evaluated once per row") {
+    // an `isnotnull(cell)` inferred from the cell equi-join and pushed below
+    // the projection would put a second graft_argmax_cell into the scan-side
+    // Filter
+    import graft.functions.ArgMaxCell
+    Seq("q72_ivf_ann", "q234_semantic_decontaminate").foreach { name =>
+      val optimized = Catalog.queries(name)(spark, dir).queryExecution.optimizedPlan
+      var n = 0
+      optimized.foreachWithSubqueries(_.expressions.foreach(_.foreach {
+        case _: ArgMaxCell => n += 1
+        case _ =>
+      }))
+      assert(n == 1, s"$name: $n graft_argmax_cell evaluations per corpus row:\n$optimized")
     }
   }
 }

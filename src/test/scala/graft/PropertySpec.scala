@@ -483,9 +483,10 @@ class PropertySpec extends SparkSuite {
       }
       out.toSeq
     }
-    // bpeStatePath caches at rest per SOURCE DIR (the immutable-fixture
-    // contract every buildOnce index documents) — each random case gets its
-    // own dir so no case reads a predecessor's cached training state
+    // bpeStatePath's training state is a SessionMemo.atRest entry per
+    // (session, source dir), rebuilt when the dir's documents.parquet
+    // changes; each random case still gets its own dir, so no case's answer
+    // depends on that change being detected
     var case_i = 0
     check(Prop.forAll(gen) { words =>
       words.nonEmpty ==> {

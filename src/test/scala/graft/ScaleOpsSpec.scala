@@ -135,8 +135,7 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("q109 bucketed join matches the plain join+rollup") {
-    val bucketed = Bucketing.bucketedOrderRevenue(spark, dir, numBuckets = 8,
-      tablePrefix = "graft_bk_spec")
+    val bucketed = Bucketing.bucketedOrderRevenue(spark, dir, numBuckets = 8)
     val o = Tables.orders(spark, dir)
     val plain = o.join(Tables.lineitem(spark, dir), o("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderkey", "o_totalprice")

@@ -10,17 +10,18 @@ class ScaleSpec extends SparkSuite {
     val s = spark; import s.implicits._
     val orders = graft.engine.Tables.orders(spark, "/root/testdata/sf0.001")
     val li = graft.engine.Tables.lineitem(spark, "/root/testdata/sf0.001")
-    Bucketing.writeBucketed(orders, "b_orders", "o_orderkey", numBuckets = 8)
+    val (bOrders, bLineitem) = ("/tmp/graft_scale_spec/b_orders", "/tmp/graft_scale_spec/b_lineitem")
+    Bucketing.writeBucketed(orders, bOrders, "o_orderkey", numBuckets = 8)
     Bucketing.writeBucketed(
-      li.withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", "o_orderkey", numBuckets = 8)
+      li.withColumnRenamed("l_orderkey", "o_orderkey"), bLineitem, "o_orderkey", numBuckets = 8)
 
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val joined = Bucketing.readTable(spark, "b_orders")
-        .join(Bucketing.readTable(spark, "b_lineitem"), "o_orderkey")
+      val joined = Bucketing.readTable(spark, Bucketing.tableAt(bOrders))
+        .join(Bucketing.readTable(spark, Bucketing.tableAt(bLineitem)), "o_orderkey")
       assert(!Bucketing.hasShuffleExchange(joined), "bucketed join must be exchange-free")
       // and an unbucketed equivalent DOES shuffle — the control
       val plain = orders.join(li, orders("o_orderkey") === li("l_orderkey"))

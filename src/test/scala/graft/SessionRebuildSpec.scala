@@ -20,7 +20,7 @@ class SessionRebuildSpec extends AnyFunSuite {
   private def layouts(spark: SparkSession, dir: String): Seq[Long] = Seq(
     spark.table(graft.ext.Similarity.lshBucketedTable(spark, dir)).count(),
     spark.table(graft.ext.Dedup.prefixIndexTable(spark, dir, 800000L)).count(),
-    Bucketing.bucketedOrderRevenue(spark, dir, tablePrefix = "graft_rebuild_bk").count())
+    Bucketing.bucketedOrderRevenue(spark, dir).count())
 
   test("after the context stops, a rebuilt session rebuilds and reads every layout") {
     val dir = s"$root/fixture"
