@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Dashboard-parity analytics over the gold facts — the YoY / top-N / averages
   * / share-of-total metrics the reference delegates to Power BI DAX
@@ -16,8 +17,8 @@ object Analytics {
   def monthlySalesYoY(factSales: DataFrame): DataFrame = {
     val monthly = factSales
       .groupBy(
-        (col("Order_Date_SK") / 10000).cast("int").as("Year"),
-        ((col("Order_Date_SK") % 10000) / 100).cast("int").as("Month"))
+        (col("Order_Date_SK") / 10000).cast(IntegerType).as("Year"),
+        ((col("Order_Date_SK") % 10000) / 100).cast(IntegerType).as("Month"))
       .agg(sum(col("Sales_Amount")).as("Sales"))
       .coalesce(1) // one row per (year, month): lag window and sort need no exchange
     val w = Window.partitionBy(col("Month")).orderBy(col("Year"))
@@ -196,7 +197,7 @@ object Analytics {
       round(avg(col("Approval_Days")), 2).as("Avg_Approval_Days"),
       round(avg(col("Total_Delivery_Days")), 2).as("Avg_Delivery_Days"),
       sum(when(col("Customer_Delivery_Date") > col("Estimated_Delivery_Date"), 1)
-        .otherwise(0)).cast("long").as("Late_Deliveries"),
+        .otherwise(0)).cast(LongType).as("Late_Deliveries"),
       count(lit(1)).as("Total_Orders"))
 
   /** Incremental AGGREGATE maintenance (q216) — the batch materialized-view

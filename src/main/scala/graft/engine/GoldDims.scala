@@ -4,6 +4,7 @@ import java.sql.Date
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, IntegerType}
 
 /** Gold dimensions: the reference's 9-dim star schema
   * (`spark_jobs/reporting.py:43-247`) as pure functions; building one runs
@@ -42,10 +43,10 @@ object GoldDims {
       if (start == null || end == null) (Date.valueOf("1970-01-01"), 0L)
       else (start, java.time.temporal.ChronoUnit.DAYS.between(start.toLocalDate, end.toLocalDate) + 1)
     spark.range(0, days, 1, 1)
-      .select(date_add(lit(from), col("id").cast("int")).as("date"))
+      .select(date_add(lit(from), col("id").cast(IntegerType)).as("date"))
       .select(
-        date_format(col("date"), "yyyyMMdd").cast("int").as("Date_SK"),
-        col("date").cast("date").as("Date"),
+        date_format(col("date"), "yyyyMMdd").cast(IntegerType).as("Date_SK"),
+        col("date").cast(DateType).as("Date"),
         year(col("date")).as("Year"),
         month(col("date")).as("Month"),
         date_format(col("date"), "MMMM").as("MonthName"),
@@ -69,7 +70,7 @@ object GoldDims {
     * (`reporting.py:96-123`). */
   def dimTime(spark: SparkSession): DataFrame =
     spark.range(24)
-      .select(col("id").cast("int").as("hour"))
+      .select(col("id").cast(IntegerType).as("hour"))
       .select(
         col("hour").as("Time_SK"),
         col("hour").as("Hour_24"),
@@ -188,7 +189,7 @@ object GoldDims {
   /** `reporting.py:218-235`. */
   def dimReviewScores(silverReviews: DataFrame): DataFrame =
     RelOps.rangedRowNumber(
-      silverReviews.select(col("Rev_Score").cast("int").as("Review_Score")).distinct()
+      silverReviews.select(col("Rev_Score").cast(IntegerType).as("Review_Score")).distinct()
         .select(
           col("Review_Score"),
           when(col("Review_Score") === 1, "Very Poor")

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Gold facts: the reference's 3 fact tables (`spark_jobs/reporting.py:249-409`)
   * as pure functions over silver DataFrames.
@@ -36,7 +37,7 @@ object GoldFacts {
     "fact_reviews" -> (() => factReviews(silver)))
 
   private def withYear(df: DataFrame, dateSk: String, yearCol: String): DataFrame =
-    df.withColumn(yearCol, (col(dateSk) / 10000).cast("int"))
+    df.withColumn(yearCol, (col(dateSk) / 10000).cast(IntegerType))
 
   /** Payments rolled up per order (`reporting.py:260-263`): fact_sales and fact_orders join it. */
   private def paymentsPerOrder(silverPayments: DataFrame): DataFrame =
@@ -59,7 +60,7 @@ object GoldFacts {
         col("oi.Sell_ID").as("Seller_ID"),
         col("p.Primary_Payment_Type").as("Payment_Type"),
         col("o.Ord_Status").as("Order_Status"),
-        date_format(col("o.Ord_Purchase_Time"), "yyyyMMdd").cast("int").as("Order_Date_SK"),
+        date_format(col("o.Ord_Purchase_Time"), "yyyyMMdd").cast(IntegerType).as("Order_Date_SK"),
         hour(col("o.Ord_Purchase_Time")).as("Order_Time_SK"),
         col("oi.Price").as("Sales_Amount"),
         col("oi.Freight_Value").as("Freight_Value"),
@@ -84,7 +85,7 @@ object GoldFacts {
         col("o.Cus_ID").as("Customer_ID"),
         col("p.Primary_Payment_Type").as("Payment_Type"),
         col("o.Ord_Status").as("Order_Status"),
-        date_format(col("o.Ord_Purchase_Time"), "yyyyMMdd").cast("int").as("Order_Date_SK"),
+        date_format(col("o.Ord_Purchase_Time"), "yyyyMMdd").cast(IntegerType).as("Order_Date_SK"),
         hour(col("o.Ord_Purchase_Time")).as("Order_Time_SK"),
         col("i.Items_Count").as("Order_Items_Count"),
         col("i.Items_Total_Value").as("Order_Items_Value"),
@@ -110,8 +111,8 @@ object GoldFacts {
         col("r.Rev_ID").as("Review_ID"),
         col("Ord_ID").as("Order_ID"),
         col("o.Cus_ID").as("Customer_ID"),
-        col("r.Rev_Score").cast("int").as("Review_Score"),
-        date_format(col("r.Rev_Creation_Date"), "yyyyMMdd").cast("int").as("Review_Date_SK"),
+        col("r.Rev_Score").cast(IntegerType).as("Review_Score"),
+        date_format(col("r.Rev_Creation_Date"), "yyyyMMdd").cast(IntegerType).as("Review_Date_SK"),
         hour(col("r.Rev_Creation_Date")).as("Review_Time_SK"),
         col("r.Rev_Comment_Title").as("Review_Title"),
         col("r.Rev_Comment_Message").as("Review_Message"),

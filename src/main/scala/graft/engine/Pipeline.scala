@@ -137,9 +137,12 @@ object Pipeline {
 
     // Gold: 9 dims + 3 facts. Building one runs no job (dim_date's range was
     // observed above), but each is still built inside its own write task so
-    // that the 12 analyses overlap. GoldFacts names each fact's partition.
-    val gold = (GoldDims.builders(spark, silverStored, GoldDims.dateRange(observed("orders"))) ++
-      GoldFacts.builders(silverStored)).map { case (name, build) =>
+    // that the 12 analyses overlap. The facts (4-7 jobs each) go first, ahead
+    // of the dims (1-4), so the longest writes do not start last and set
+    // the stage's tail. GoldFacts names each fact's partition.
+    val builders = GoldFacts.builders(silverStored) ++
+      GoldDims.builders(spark, silverStored, GoldDims.dateRange(observed("orders")))
+    val gold = builders.map { case (name, build) =>
       name -> (() => Bronze.writeParquet(build(), s"$outDir/gold/$name",
         partitionBy = GoldFacts.partitionColumns.get(name).toSeq))
     }

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Native
 
 /** Silver layer: per-table clean/rename/filter/dedup, re-expressing
   * `spark_jobs/transformation.py:23-131` as pure DataFrame → DataFrame
@@ -16,7 +17,16 @@ import org.apache.spark.sql.functions._
   *    runs);
   *  - order_items dedup by Ord_ID destroys the order-item grain (reference bug,
   *    `transformation.py:70` vs `reporting.py:250`); `cleanOrderItems` keeps it
-  *    by default for parity, `dedupItems = false` preserves the true grain.
+  *    by default for parity, `dedupItems = false` preserves the true grain;
+  *  - `initcap` is the reference's PySpark 3.5 one ([[Native.initcap]]: lower
+  *    the string, then title-case each space-separated word's first letter,
+  *    per code point), not Spark 4's ICU default. They differ only where a
+  *    case mapping changes length or needs context: "straße ß" stays
+  *    "Straße ß" (ICU: "Straße Ss"), "ﬁnal" stays "ﬁnal" (ICU: "Final"),
+  *    and "İstanbul" is lowered by the JDK (U+0130 becomes "i" + U+0307)
+  *    before its first letter is title-cased back, giving "I" + U+0307 +
+  *    "stanbul" (ICU keeps U+0130). The JDK path also never builds ICU's
+  *    global title-case table, which costs a cold JVM over a second.
   */
 object Silver {
 
@@ -35,7 +45,7 @@ object Silver {
       col("customer_id").as("Cus_ID"),
       col("customer_unique_id").as("Cus_Unique_ID"),
       col("customer_zip_code_prefix").as("Cus_Zip_Code_Prefix"),
-      initcap(col("customer_city")).as("Cus_City"),
+      Native.initcap(col("customer_city")).as("Cus_City"),
       col("customer_state"))
 
   /** `transformation.py:39-49`. */
@@ -43,7 +53,7 @@ object Silver {
     df.select(
       col("order_id").as("Ord_ID"),
       col("customer_id").as("Cus_ID"),
-      initcap(col("order_status")).as("Ord_Status"),
+      Native.initcap(col("order_status")).as("Ord_Status"),
       col("order_purchase_timestamp").as("Ord_Purchase_Time"),
       col("order_approved_at").as("Ord_Approved_At"),
       col("order_delivered_carrier_date").as("Ord_Delivered_Carrier_Date"),
@@ -56,7 +66,7 @@ object Silver {
       col("geolocation_zip_code_prefix").as("Geo_Zip_Code_Prefix"),
       col("geolocation_lat").as("Geo_Lat"),
       col("geolocation_lng").as("Geo_Lng"),
-      initcap(col("geolocation_city")).as("Geo_City"),
+      Native.initcap(col("geolocation_city")).as("Geo_City"),
       col("geolocation_state").as("Geo_State"))
 
   /** `transformation.py:62-70`. `dedupItems = false` keeps the order-item grain
@@ -109,7 +119,7 @@ object Silver {
   def cleanProducts(df: DataFrame): DataFrame =
     df.select(
       col("product_id").as("Prod_ID"),
-      initcap(regexp_replace(col("product_category_name"), "_", " ")).as("Prod_Category_Name"),
+      Native.initcap(regexp_replace(col("product_category_name"), "_", " ")).as("Prod_Category_Name"),
       col("product_photos_qty").as("Prod_Photos_Qty"),
       col("product_weight_g").as("Prod_Weight_G"),
       col("product_length_cm").as("Prod_Length_CM"),
@@ -121,7 +131,7 @@ object Silver {
     df.select(
       col("seller_id").as("Sell_ID"),
       col("seller_zip_code_prefix").as("Sell_Zip_Code_Prefix"),
-      initcap(col("seller_city")).as("Sell_City"),
+      Native.initcap(col("seller_city")).as("Sell_City"),
       col("seller_state").as("Sell_State"))
 
   /** The cleaner of each of the 8 silver tables, keyed by its bronze source

@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 /** The engine's native expressions as typed Columns, built straight from
   * their expression nodes (through [[org.apache.spark.sql.GraftBridge]]):
   * one builder per [[GraftExtensions.functions]] entry, plus the k-means
-  * argmin and the broadcast probes, which no SQL call can carry. Engine
-  * code builds every native expression here, so it runs in any session;
-  * the SQL names in [[GraftExtensions]] exist only for SQL users. */
+  * argmin and the broadcast probes, which no SQL call can carry, and the
+  * silver cleaners' `initcap`. Engine code builds every native expression
+  * here, so it runs in any session; the SQL names in [[GraftExtensions]]
+  * exist only for SQL users. */
 object Native {
 
   /** Dot product of two array<float>, array<double> or array<bigint>
@@ -36,6 +37,10 @@ object Native {
     column(BoundedLevenshtein(expression(a), expression(b), Literal(k)))
 
   def nfc(s: Column): Column = column(NfcNormalize(expression(s)))
+
+  /** Spark 3.5's `initcap` ([[LowerTitleCase]]); no SQL name, as SQL users
+    * have the built-in. */
+  def initcap(s: Column): Column = column(LowerTitleCase(expression(s)))
 
   def skeleton(s: Column): Column = column(ConfusableSkeleton(expression(s)))
 

@@ -95,6 +95,33 @@ case class NfcNormalize(child: Expression)
     copy(child = newChild)
 }
 
+/** Spark 3.5's `initcap`: `UTF8String.toLowerCase()` then `toTitleCase()`,
+  * per code point through the JDK, which is also Spark 4's non-ICU path
+  * (`CollationSupport.InitCap.execBinary`). Spark 4's default ICU path
+  * builds a title-case table over every code point the first time a JVM
+  * calls it; [[graft.engine.Silver]] states where the two differ. Null →
+  * null; codegen is one call, inside whole-stage codegen. */
+case class LowerTitleCase(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"graft_initcap requires a string input, got ${child.dataType}")
+
+  override def dataType: DataType = StringType
+  override def prettyName: String = "graft_initcap"
+
+  override def nullSafeEval(s: Any): Any =
+    s.asInstanceOf[UTF8String].toLowerCase().toTitleCase()
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $s.toLowerCase().toTitleCase();")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Homoglyph skeleton of a string column — the anti-evasion normalization
   * pass layered ON TOP of [[NfcNormalize]]: cross-script homoglyph
   * substitution (Cyrillic 'а' U+0430 for Latin 'a') defeats every

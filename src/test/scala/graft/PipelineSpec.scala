@@ -17,47 +17,9 @@ class PipelineSpec extends SparkSuite {
   private val csvDir = "/tmp/graft_olist_csv"
   private val outDir = "/tmp/graft_olist_out"
 
-  private def write(name: String, content: String): Unit = {
-    Files.createDirectories(Paths.get(csvDir))
-    Files.writeString(Paths.get(s"$csvDir/$name"), content)
-  }
+  private def write(name: String, content: String): Unit = PipelineSpec.write(csvDir, name, content)
 
-  private def fixtures(): Unit = {
-    val id = "x" * 32
-    write("olist_customers_dataset.csv",
-      s"""customer_id,customer_unique_id,customer_zip_code_prefix,customer_city,customer_state
-         |c1,u1,13023,campinas,SP
-         |c2,u2,20000,rio de janeiro,RJ""".stripMargin)
-    write("olist_orders_dataset.csv",
-      s"""order_id,customer_id,order_status,order_purchase_timestamp,order_approved_at,order_delivered_carrier_date,order_delivered_customer_date,order_estimated_delivery_date
-         |o1,c1,delivered,2017-03-01 14:30:00,2017-03-01 15:00:00,2017-03-03 09:00:00,2017-03-06 11:00:00,2017-03-10 00:00:00
-         |o2,c2,shipped,2017-04-02 09:10:00,2017-04-02 10:00:00,,,2017-04-12 00:00:00""".stripMargin)
-    write("olist_order_items_dataset.csv",
-      s"""order_id,order_item_id,product_id,seller_id,shipping_limit_date,price,freight_value
-         |o1,1,p1,s1,2017-03-05 00:00:00,50.0,5.0
-         |o2,1,p1,s1,2017-04-06 00:00:00,20.0,2.0""".stripMargin)
-    write("olist_order_payments_dataset.csv",
-      s"""order_id,payment_sequential,payment_type,payment_installments,payment_value
-         |o1,1,credit_card,3,55.0
-         |o2,1,boleto,1,22.0""".stripMargin)
-    write("olist_order_reviews_dataset.csv",
-      s"""review_id,order_id,review_score,review_comment_title,review_comment_message,review_creation_date,review_answer_timestamp
-         |$id,o1,5,great,loved it,2017-03-07 10:00:00,2017-03-08 09:00:00""".stripMargin)
-    write("olist_products_dataset.csv",
-      s"""product_id,product_category_name,product_name_lenght,product_description_lenght,product_photos_qty,product_weight_g,product_length_cm,product_height_cm,product_width_cm
-         |p1,cama_mesa_banho,40,200,2,800,30,10,20""".stripMargin)
-    write("olist_sellers_dataset.csv",
-      s"""seller_id,seller_zip_code_prefix,seller_city,seller_state
-         |s1,1001,sao paulo,SP""".stripMargin)
-    write("olist_geolocation_dataset.csv",
-      s"""geolocation_zip_code_prefix,geolocation_lat,geolocation_lng,geolocation_city,geolocation_state
-         |13023,-22.9,-47.06,campinas,SP
-         |13023,-22.91,-47.07,campinas,SP
-         |20000,-22.95,-43.2,rio de janeiro,RJ""".stripMargin)
-    write("product_category_name_translation.csv",
-      s"""product_category_name,product_category_name_english
-         |cama_mesa_banho,bed_bath_table""".stripMargin)
-  }
+  private def fixtures(): Unit = PipelineSpec.fixtures(csvDir)
 
   test("pipeline run: all layers written, gates pass, facts and analytics query") {
     fixtures()
@@ -345,5 +307,51 @@ class PipelineSpec extends SparkSuite {
     assert(at("silver") > at("bronze"), "silver ran jobs")
     assert(at("quality_checks") == at("silver"),
       s"gate jobs: ${jobs.slice(at("silver"), at("quality_checks"))}")
+  }
+}
+
+object PipelineSpec {
+
+  def write(csvDir: String, name: String, content: String): Unit = {
+    Files.createDirectories(Paths.get(csvDir))
+    Files.writeString(Paths.get(s"$csvDir/$name"), content)
+  }
+
+  /** Tiny Olist-shaped CSVs, one file per source table, into `csvDir`. */
+  def fixtures(csvDir: String): Unit = {
+    val id = "x" * 32
+    write(csvDir, "olist_customers_dataset.csv",
+      s"""customer_id,customer_unique_id,customer_zip_code_prefix,customer_city,customer_state
+         |c1,u1,13023,campinas,SP
+         |c2,u2,20000,rio de janeiro,RJ""".stripMargin)
+    write(csvDir, "olist_orders_dataset.csv",
+      s"""order_id,customer_id,order_status,order_purchase_timestamp,order_approved_at,order_delivered_carrier_date,order_delivered_customer_date,order_estimated_delivery_date
+         |o1,c1,delivered,2017-03-01 14:30:00,2017-03-01 15:00:00,2017-03-03 09:00:00,2017-03-06 11:00:00,2017-03-10 00:00:00
+         |o2,c2,shipped,2017-04-02 09:10:00,2017-04-02 10:00:00,,,2017-04-12 00:00:00""".stripMargin)
+    write(csvDir, "olist_order_items_dataset.csv",
+      s"""order_id,order_item_id,product_id,seller_id,shipping_limit_date,price,freight_value
+         |o1,1,p1,s1,2017-03-05 00:00:00,50.0,5.0
+         |o2,1,p1,s1,2017-04-06 00:00:00,20.0,2.0""".stripMargin)
+    write(csvDir, "olist_order_payments_dataset.csv",
+      s"""order_id,payment_sequential,payment_type,payment_installments,payment_value
+         |o1,1,credit_card,3,55.0
+         |o2,1,boleto,1,22.0""".stripMargin)
+    write(csvDir, "olist_order_reviews_dataset.csv",
+      s"""review_id,order_id,review_score,review_comment_title,review_comment_message,review_creation_date,review_answer_timestamp
+         |$id,o1,5,great,loved it,2017-03-07 10:00:00,2017-03-08 09:00:00""".stripMargin)
+    write(csvDir, "olist_products_dataset.csv",
+      s"""product_id,product_category_name,product_name_lenght,product_description_lenght,product_photos_qty,product_weight_g,product_length_cm,product_height_cm,product_width_cm
+         |p1,cama_mesa_banho,40,200,2,800,30,10,20""".stripMargin)
+    write(csvDir, "olist_sellers_dataset.csv",
+      s"""seller_id,seller_zip_code_prefix,seller_city,seller_state
+         |s1,1001,sao paulo,SP""".stripMargin)
+    write(csvDir, "olist_geolocation_dataset.csv",
+      s"""geolocation_zip_code_prefix,geolocation_lat,geolocation_lng,geolocation_city,geolocation_state
+         |13023,-22.9,-47.06,campinas,SP
+         |13023,-22.91,-47.07,campinas,SP
+         |20000,-22.95,-43.2,rio de janeiro,RJ""".stripMargin)
+    write(csvDir, "product_category_name_translation.csv",
+      s"""product_category_name,product_category_name_english
+         |cama_mesa_banho,bed_bath_table""".stripMargin)
   }
 }
