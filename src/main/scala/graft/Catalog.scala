@@ -1035,7 +1035,7 @@ object Catalog {
          |FROM c ORDER BY doc_id""".stripMargin),
 
     // IVF ANN: content-addressed coarse centroids, Voronoi cell assignment,
-    // nProbe-cell search (the second scale path beside hyperplane LSH).
+    // 2-cell probe search (the second scale path beside hyperplane LSH).
     q("q72_ivf_ann", (s, d) => ext.Similarity.ivfTopK(s, d),
       s"""WITH $vecsCte,
          |cents AS (SELECT vec_id AS centroid_id, v AS cv, nrm AS cn FROM n

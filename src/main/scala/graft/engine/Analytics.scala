@@ -203,9 +203,9 @@ object Analytics {
   /** Incremental AGGREGATE maintenance (q216) — the batch materialized-view
     * update every warehouse schedules: a maintained monthly revenue rollup
     * (at rest, built once per orders snapshot over the corpus MINUS the
-    * wave, a [[SessionMemo.atRest]] entry) folded
-    * with an arriving order wave's delta (o_orderkey % mod = rem, the
-    * ingest-wave convention) by a FULL OUTER merge on month. The oracle is
+    * wave, a [[SessionMemo.atRest]] entry) folded with an arriving order
+    * wave's delta ([[RelOps.inWave]] on o_orderkey) by a FULL OUTER merge
+    * on month. The oracle is
     * DELIBERATELY the full GROUP BY recompute over all orders — the claim
     * is that state + delta returns the identical rollup without re-scanning
     * the corpus (per-wave cost = wave aggregate + month-domain-sized merge).
@@ -215,12 +215,12 @@ object Analytics {
     * at the output boundary — merging double partials would re-add floats
     * in a different order than the oracle's single SUM and drift. */
   def incrementalRevenueRollup(spark: org.apache.spark.sql.SparkSession,
-      dir: String, mod: Int = 10, rem: Int = 7): DataFrame = {
-    val isWave = col("o_orderkey") % mod === rem
+      dir: String): DataFrame = {
+    val isWave = RelOps.inWave(col("o_orderkey"))
     def rollup(df: DataFrame): DataFrame = df
       .groupBy(expr("date_format(CAST(o_orderdate AS DATE), 'yyyy-MM')").as("month"))
       .agg(count(lit(1)).as("n_orders"), sum(Dec.d2(col("o_totalprice"))).as("rev"))
-    val statePath = SessionMemo.atRest(spark, ("mvroll", dir, mod, rem),
+    val statePath = SessionMemo.atRest(spark, ("mvroll", dir),
         s"$dir/orders.parquet") { p =>
       rollup(Tables.orders(spark, dir).filter(!isWave))
         .write.mode("overwrite").parquet(p)

@@ -76,7 +76,8 @@ object Bucketing {
     * capped at 4096 (past that, per-bucket files at the target size imply
     * a >0.5 TB table per drop — a deployment raises targetRows/partitions
     * the layout by date instead of widening one flat bucket space). */
-  def bucketCountFor(nRows: Long, targetRows: Long = 4000000L): Int = {
+  def bucketCountFor(nRows: Long): Int = {
+    val targetRows = 4000000L
     // overflow-safe ceil-divide: (nRows + targetRows - 1) wraps negative for
     // nRows near Long.MaxValue and the max(32,·) floor would silently hand an
     // astronomically large table the minimum layout

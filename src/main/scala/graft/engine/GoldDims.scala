@@ -67,9 +67,9 @@ object GoldDims {
   }
 
   /** dim_time: 24-hour spine with period/AM-PM/business-hour when-chains
-    * (`reporting.py:96-123`). */
+    * (`reporting.py:96-123`). 24 rows, so one partition (and one file). */
   def dimTime(spark: SparkSession): DataFrame =
-    spark.range(24)
+    spark.range(0, 24, 1, 1)
       .select(col("id").cast(IntegerType).as("hour"))
       .select(
         col("hour").as("Time_SK"),

@@ -20,12 +20,12 @@ import graft.functions.Native
   */
 object Layout {
 
-  /** Morton interleave of the low `bits` bits of two non-negative integer
+  /** Morton interleave of the low 16 bits of two non-negative integer
     * columns: bit i of `a` lands at output bit 2i+1, bit i of `b` at 2i.
     * 16+16 bits fit any dimension-like key; wider keys must be bucketed
     * (e.g. `pmod(hash(c), 65536)`) before interleaving.
     *
-    * A key outside [0, 2^bits) RAISES rather than truncating: silent
+    * A key outside [0, 2^16) RAISES rather than truncating: silent
     * truncation aliases unrelated key ranges onto the same Z-value, which
     * destroys exactly the file-level clustering [[zorderWrite]] exists to
     * provide — with no error and files whose min/max stats simply stop
@@ -33,10 +33,10 @@ object Layout {
     * guard; the guard lives inside the returned column so pruning cannot
     * drop it). Negative keys would be worse still: an arithmetic shift
     * smears the sign bit across every sampled position. */
-  def zValue(a: Column, b: Column, bits: Int = 16): Column = {
-    val max = 1L << bits
+  def zValue(a: Column, b: Column): Column = {
+    val max = 1L << 16
     val (al, bl) = (a.cast("long"), b.cast("long"))
-    val z = (0 until bits).map { i =>
+    val z = (0 until 16).map { i =>
       shiftright(al, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)) +
         shiftright(bl, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i))
     }.reduce(_ + _)
@@ -61,8 +61,8 @@ object Layout {
     * BOTH `a` and `b`, so scans filtering on either column skip files. One
     * range shuffle — the same cost any sorted write pays. */
   def zorderWrite(df: DataFrame, a: String, b: String, path: String,
-      numFiles: Int = 8, bits: Int = 16): Unit =
-    df.withColumn("__z", zValue(col(a), col(b), bits))
+      numFiles: Int = 8): Unit =
+    df.withColumn("__z", zValue(col(a), col(b)))
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
@@ -183,8 +183,8 @@ object Layout {
     * listing (metadata-sized), never data. One cumulative window per
     * partition; bins can overshoot target by at most one file (the classic
     * next-fit guarantee), surfaced as `over_target`. */
-  def compactionPlan(spark: SparkSession, dir: String,
-      targetBytes: Long = 8192L): DataFrame = {
+  def compactionPlan(spark: SparkSession, dir: String): DataFrame = {
+    val targetBytes = 8192L
     val files = Tables.documents(spark, dir)
       .groupBy(col("source"), expr("doc_id div 20").as("file_id"))
       .agg(sum(col("n_chars")).as("bytes"))
@@ -291,8 +291,8 @@ object Layout {
     * engines on identical md5-derived integers), the before-assignment via
     * a conditional max over s < N. Output: per before-shard movement
     * counts in exact ppm. */
-  def rendezvousShards(spark: SparkSession, dir: String, n: Int = 8): DataFrame =
-    rendezvousAssignments(spark, dir, n).groupBy(col("shard_before"))
+  def rendezvousShards(spark: SparkSession, dir: String): DataFrame =
+    rendezvousAssignments(spark, dir).groupBy(col("shard_before"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("shard_after") =!= col("shard_before"), 1L).otherwise(0L))
           .as("n_moved"))

@@ -85,21 +85,18 @@ object Pipeline {
     * The quality gate runs no job: it reads [[Quality.rules]]' violation
     * counts from the silver writes' Observations, and a failed check throws
     * before any gold write.
+    * Each stage gets 2 attempts with no delay between them ([[withRetry]]'s
+    * defaults, O3): the reference also allows 2 attempts but waits 30 minutes,
+    * which would stall a local run.
     * @param onStageComplete notification hook (stage name) — O4 analog.
-    * @param stageRetries    total attempts per stage (O3; reference: 2)
-    * @param retryDelayMs    delay between attempts (reference: 30 min; 0 here
-    *                        so local runs don't stall)
     * @param onRetry         hook fired when a stage attempt fails and will be
     *                        retried */
   def run(spark: SparkSession, csvDir: String, outDir: String,
       onStageComplete: String => Unit = _ => (),
-      stageRetries: Int = 2,
-      retryDelayMs: Long = 0L,
       onRetry: (String, Int, Throwable) => Unit = (_, _, _) => ()): RunReport = {
 
     def staged[T](name: String)(tasks: Seq[() => T]): Seq[T] = {
-      val out = withRetry(name, stageRetries, retryDelayMs, onRetry)(
-        concurrently(spark, name)(tasks))
+      val out = withRetry(name, onRetry = onRetry)(concurrently(spark, name)(tasks))
       onStageComplete(name)
       out
     }

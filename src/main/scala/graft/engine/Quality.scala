@@ -195,12 +195,12 @@ object Quality {
     * both from the same conditional aggregate where possible). The lineitem
     * level derives membership from the purged ORDER key set, never by
     * joining lineitem to customer. */
-  def deletePropagation(spark: org.apache.spark.sql.SparkSession, dir: String,
-      mod: Int = 59, rem: Int = 3): DataFrame = {
+  def deletePropagation(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val doomed = (key: Column) => key % 59 === 3
     val cust = Tables.customer(spark, dir)
     val orders = Tables.orders(spark, dir)
     val li = Tables.lineitem(spark, dir)
-    val doomedOrders = orders.filter(col("o_custkey") % mod === rem)
+    val doomedOrders = orders.filter(doomed(col("o_custkey")))
       .select(col("o_orderkey"))
     def audit(name: String, df: DataFrame, purgedCond: Column): DataFrame =
       df.agg(
@@ -211,8 +211,8 @@ object Quality {
     val liPurged = li.join(doomedOrders,
         li("l_orderkey") === doomedOrders("o_orderkey"), "left")
       .withColumn("purged", col("o_orderkey").isNotNull)
-    audit("customer", cust, col("c_custkey") % mod === rem)
-      .unionByName(audit("orders", orders, col("o_custkey") % mod === rem))
+    audit("customer", cust, doomed(col("c_custkey")))
+      .unionByName(audit("orders", orders, doomed(col("o_custkey"))))
       .unionByName(audit("lineitem", liPurged, col("purged")))
       .orderBy("table_name")
   }

@@ -23,6 +23,11 @@ import Dec._
   */
 object RelOps {
 
+  /** The incremental queries' ingest wave: the arriving batch is the rows
+    * whose key is 7 mod 10 (the oracle SQL's `key % 10 = 7`); every other
+    * row is the corpus already at rest. */
+  def inWave(key: Column): Column = key % 10 === 7
+
   /** Size-guarded broadcast for AGGREGATE outputs the planner cannot size
     * (vocabulary tables, n-gram type tables, per-key degree tables): the
     * round-8 sf10 sweep measured corpus-mass sort-merge joins on few-valued
@@ -101,13 +106,12 @@ object RelOps {
     * every true member survives; callers must tolerate false positives
     * (here: extra candidates that exact downstream verification discards).
     *
-    * Sketch sizing: optimal bits for `fpp` (~1.8 bytes/key at 0.1%),
-    * CAPPED at `maxBytes` — past the cap the fpp degrades gracefully
+    * Sketch sizing: optimal bits for a 0.1% fpp (~1.8 bytes/key), CAPPED
+    * at 384 MB — past the cap the fpp degrades gracefully
     * (more verification work, same exactness) instead of the helper
     * failing or falling back to a probe-mass reshuffle. Returns None for
     * an empty key set (caller should emit a constant-false filter). */
-  def bloomPredicate(keys: DataFrame, keyCol: String, fpp: Double = 0.001,
-      maxBytes: Long = 384L << 20): Option[Broadcast[Array[Byte]]] = {
+  def bloomPredicate(keys: DataFrame, keyCol: String): Option[Broadcast[Array[Byte]]] = {
     val spark = keys.sparkSession
     // NULL keys are dropped here, not trusted away: this is a generic
     // helper, and a null reaching the `getLong(0)` below would surface as
@@ -121,7 +125,7 @@ object RelOps {
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val n = cached.count()
     if (n == 0L) return None
-    // optimal bit count for (n, fpp), capped. Built with a treeAggregate
+    // optimal bit count for (n, 0.1% fpp), capped. Built with a treeAggregate
     // over util.sketch.BloomFilter directly — NOT stat.bloomFilter, whose
     // BloomFilterAggregate path silently CLAMPS the sketch to
     // spark.sql.optimizer.runtime.bloomFilter.maxNumBits (default 2²⁶ bits
@@ -130,11 +134,11 @@ object RelOps {
     // (measured round 11; the sized sketch brings candidates back to
     // dup mass + 0.1%).
     val bits = math.min(
-      org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, fpp),
-      maxBytes * 8L)
+      org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, 0.001),
+      (384L << 20) * 8L)
     // Bound the helper's OWN driver-ward fan-in (round 12, corrected round
     // 13): treeAggregate's final level collects the REMAINING per-partition
-    // SKETCHES — each up to `maxBytes` (235 MB at 130 M sf1000 dup
+    // SKETCHES — each up to the 384 MB cap (235 MB at 130 M sf1000 dup
     // classes) — so its result volume scales with the caller's partition
     // count. With AQE data-sized exchanges upstream, ~17 × 67 MB sketches
     // blew spark.driver.maxResultSize at sf300. coalesce(8) (no shuffle —
@@ -1005,8 +1009,9 @@ object RelOps {
   /** Equi-depth range bucketing (q153): the bounds computation behind a
     * balanced `repartitionByRange` export, made explicit and auditable.
     * From the (dollar-floor) value histogram of o_totalprice — value-domain
-    * cardinality, not row cardinality — the N−1 exact bucket bounds are the
-    * smallest values whose cumulative count reaches ceil(k·n/N); every
+    * cardinality, not row cardinality — the N−1 exact bounds of N = 8
+    * buckets are the smallest values whose cumulative count reaches
+    * ceil(k·n/N); every
     * histogram row then gets its bucket by counting bounds below its value
     * (N−1 bounds, broadcast), and the output is one row per bucket with its
     * actual range, row count, and share in ppm — the skew audit that tells
@@ -1014,7 +1019,8 @@ object RelOps {
     * export shuffle. Spark's own repartitionByRange computes approximate
     * bounds by sampling; this is the exact-arithmetic equivalent, priced in
     * histogram rows. */
-  def equiDepthBuckets(spark: SparkSession, dir: String, nBuckets: Int = 8): DataFrame = {
+  def equiDepthBuckets(spark: SparkSession, dir: String): DataFrame = {
+    val nBuckets = 8
     import org.apache.spark.sql.expressions.Window
     val hist = Tables.orders(spark, dir)
       // explicit floor on BOTH engines: a bare double->bigint CAST truncates

@@ -97,11 +97,10 @@ object Scd2 {
     * dimension AS OF a pre-update date with the CURRENT state in ONE
     * conditional-aggregate pass over the history — never two scans, never a
     * self-join; at 100 TB the history is the big table and this is the only
-    * shape that reads it once. Output: per segment, member count as-of vs
-    * current, with the net drift. */
-  def segmentAsOfDrift(spark: org.apache.spark.sql.SparkSession, dir: String,
-      asOf: java.sql.Date = java.sql.Date.valueOf("2020-03-01")): DataFrame = {
-    val t = lit(asOf)
+    * shape that reads it once. Output: per segment, member count as-of
+    * 2020-03-01 vs current, with the net drift. */
+  def segmentAsOfDrift(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val t = lit(java.sql.Date.valueOf("2020-03-01"))
     customerScd2(spark, dir)
       .groupBy(col("c_mktsegment"))
       .agg(

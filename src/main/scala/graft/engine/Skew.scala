@@ -47,18 +47,18 @@ object Skew {
       .orderBy("s_suppkey")
   }
 
-  /** Exact integer key-share profile (q102): top-N keys by row count with
+  /** Exact integer key-share profile (q102): top-10 keys by row count with
     * their corpus share in ppm. Single-pass (round 10, VERDICT r9 #4 sweep):
     * the top-N keys AND the grand total come from ONE
     * [[graft.functions.TopKCountAggregator]] pass over the per-key counts —
     * the q178-proven shape — instead of a `crossJoin(broadcast(total))`
     * whose total branch executed the fact-scale count lineage a second time
-    * as a separate broadcast job. Partial state is topN rows + one long per
-    * partition; the final sort runs on topN rows. Integer ppm (`div`) keeps
+    * as a separate broadcast job. Partial state is 10 rows + one long per
+    * partition; the final sort runs on 10 rows. Integer ppm (`div`) keeps
     * the share oracle-exact where a rounded double percentage would not be.
     * Requires an integral key column (both catalog/test callers use longs);
     * share_ppm floors like the relational `div`. */
-  def keyShares(df: DataFrame, key: String, topN: Int = 10): DataFrame = {
+  def keyShares(df: DataFrame, key: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     import graft.functions.{KeyedCount, TopKCountAggregator}
@@ -66,7 +66,7 @@ object Skew {
       .select(col(key).cast("long").as("key"), col("n"))
       .as[KeyedCount]
       .groupByKey(_ => 0)
-      .agg(new TopKCountAggregator(topN).toColumn)
+      .agg(new TopKCountAggregator(10).toColumn)
       .flatMap { case (_, (top, tot)) => top.map(kc => (kc.key, kc.n, tot)) }
       .toDF("key", "n_rows", "tot")
       .select(col("key").as(key), col("n_rows"),
@@ -82,8 +82,8 @@ object Skew {
     * ppm) — one profiling implementation, two output units; this form also
     * inherits keyShares' single-pass top-N+total aggregation rather than the
     * single-partition window sum it originally used. */
-  def keyProfile(df: DataFrame, key: String, topN: Int = 10): DataFrame =
-    keyShares(df, key, topN)
+  def keyProfile(df: DataFrame, key: String): DataFrame =
+    keyShares(df, key)
       .withColumn("pct_of_total", round(col("share_ppm") / 10000.0, 2))
       .drop("share_ppm")
 
@@ -93,7 +93,7 @@ object Skew {
     * primitive behind every "why did my join explode" incident: the histogram
     * join runs on |distinct keys| rows (both sides map-side-combined first),
     * so predicting a 100 TB join costs two aggregates and a key-cardinality
-    * join instead of the join itself. Output: the top-N contributing keys
+    * join instead of the join itself. Output: the top-10 contributing keys
     * with their exact match counts and share of the predicted total (the
     * skew diagnosis — a single hot key owning half the output is the salting
     * trigger, see [[saltedJoin]]).
@@ -102,14 +102,14 @@ object Skew {
     * cross-products so a billion-row hot key cannot wrap.
     *
     * Single-pass (round 9 — the round-8 form died on disk at sf100): the
-    * total predicted rows and the top-N keys come from ONE
+    * total predicted rows and the top-10 keys come from ONE
     * [[graft.functions.JoinCardAggregator]] pass over the degree join,
     * instead of a `crossJoin(broadcast(total))` whose unmaterialized
     * lineage re-executed both degree aggregates and kept two copies of
     * their shuffles on disk at once. The degree aggregates leave both
     * sides hash-partitioned on the key, so the degree join itself adds no
     * exchange; the aggregator ships k rows + one long per partition. */
-  def joinCardinality(spark: SparkSession, dir: String, topN: Int = 10): DataFrame = {
+  def joinCardinality(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.{JoinCardAggregator, JoinDegree}
     val a = Tables.orders(spark, dir)
@@ -121,7 +121,7 @@ object Skew {
         expr("CAST(CAST(rows_a AS DECIMAL(38,0)) * rows_b AS BIGINT)").as("join_rows"))
       .as[JoinDegree]
     perKey.groupByKey(_ => 0)
-      .agg(new JoinCardAggregator(topN).toColumn)
+      .agg(new JoinCardAggregator(10).toColumn)
       .flatMap { case (_, (top, total)) =>
         top.map(jd => (jd.key, jd.rows_a, jd.rows_b, jd.join_rows, total)) }
       .toDF("key", "rows_a", "rows_b", "join_rows", "predicted_rows")

@@ -29,16 +29,6 @@ import graft.functions.Native
   */
 object Dedup {
 
-  /** JVM-lifetime scratch dirs for materialized subtrees. The dirs a RETURNED
-    * lazy frame still reads (q61's candidate tables, q62's final labels)
-    * cannot be deleted eagerly; a shutdown hook reclaims them when the
-    * session's JVM exits, so bench/verify/test runs clean up after
-    * themselves. */
-  private object Scratch {
-    def dir(prefix: String): String = graft.engine.Fs.scratchDir(prefix)
-    def delete(path: String): Unit = graft.engine.Fs.rmTree(path)
-  }
-
   /** Universal-hash modulus (2³¹ − 1, prime). */
   val P: Long = 2147483647L
 
@@ -556,16 +546,16 @@ object Dedup {
     }
 
   /** Corpus-side token document frequencies AT REST — (tok_h, df) over the
-    * non-wave docs only, materialized once per (documents snapshot, wave id)
-    * per session: the maintained corpus statistic the deployed ingest path
+    * non-wave docs only ([[graft.engine.RelOps.inWave]]), materialized once
+    * per documents snapshot per session: the maintained corpus statistic the deployed ingest path
     * reuses each wave
     * (advisor round 6 — the previous form recomputed a global df over
     * corpus ∪ batch per call, a full corpus shuffle per wave). */
-  def corpusDfPath(spark: SparkSession, dir: String, mod: Int, rem: Int): String =
-    graft.engine.SessionMemo.atRest(spark, ("ppjdf", dir, mod, rem),
+  def corpusDfPath(spark: SparkSession, dir: String): String =
+    graft.engine.SessionMemo.atRest(spark, ("ppjdf", dir),
         s"$dir/documents.parquet") { p =>
       graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
-        .filter(!(col("doc_id") % mod === rem))
+        .filter(!graft.engine.RelOps.inWave(col("doc_id")))
         .select(explode(col("toks")).as("tok"))
         .groupBy(xxhash64(col("tok")).as("tok_h"))
         .agg(count(lit(1)).as("df"))
@@ -590,16 +580,15 @@ object Dedup {
 
   /** Corpus-side prefix POSTINGS at rest — (tok_h, doc_id, n) for each
     * corpus doc's df-ordered prefix head, built once per (documents
-    * snapshot, threshold, wave id) per session beside [[corpusDfPath]]. This
+    * snapshot, threshold) per session beside [[corpusDfPath]]. This
     * is the index an ingest pipeline maintains between waves; per-wave work
     * never touches it beyond the posting-list probe. */
-  def corpusPrefixPath(spark: SparkSession, dir: String, thresholdPpm: Long,
-      mod: Int, rem: Int): String =
-    graft.engine.SessionMemo.atRest(spark, ("ppjpre", dir, thresholdPpm, mod, rem),
+  def corpusPrefixPath(spark: SparkSession, dir: String, thresholdPpm: Long): String =
+    graft.engine.SessionMemo.atRest(spark, ("ppjpre", dir, thresholdPpm),
         s"$dir/documents.parquet") { p =>
-      val dfTab = graft.engine.Fs.readParquet(spark, corpusDfPath(spark, dir, mod, rem))
+      val dfTab = graft.engine.Fs.readParquet(spark, corpusDfPath(spark, dir))
       val toks = graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
-        .filter(!(col("doc_id") % mod === rem))
+        .filter(!graft.engine.RelOps.inWave(col("doc_id")))
         .select(col("doc_id"), size(col("toks")).cast("long").as("n"),
           explode(col("toks")).as("tok"))
         .select(col("doc_id"), col("n"), xxhash64(col("tok")).as("tok_h"))
@@ -609,8 +598,8 @@ object Dedup {
     }
 
   /** Incremental PPJoin (q204) — the EXACT-join counterpart of q85's
-    * incremental MinHash check: an arriving batch (doc_id % mod = rem, the
-    * repo-wide ingest-wave convention) prefix-joined against the AT-REST
+    * incremental MinHash check: an arriving batch
+    * ([[graft.engine.RelOps.inWave]] on doc_id) prefix-joined against the AT-REST
     * corpus prefix postings ([[corpusPrefixPath]]) only. The corpus is
     * never self-joined, never re-shingled, and — since round 7 — never
     * re-aggregated per wave: df ([[corpusDfPath]]) and the corpus prefix
@@ -634,12 +623,12 @@ object Dedup {
     * verdict stream an ingest pipeline turns into drop/keep decisions
     * (q85's is_new column is this table's emptiness per doc). */
   def incrementalPrefixJoin(spark: SparkSession, dir: String,
-      thresholdPpm: Long = DefaultJaccardPpm, mod: Int = 10, rem: Int = 7): DataFrame = {
+      thresholdPpm: Long = DefaultJaccardPpm): DataFrame = {
     val docToks = graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
-    val corpusDf = graft.engine.Fs.readParquet(spark, corpusDfPath(spark, dir, mod, rem))
+    val corpusDf = graft.engine.Fs.readParquet(spark, corpusDfPath(spark, dir))
     // batch side ONLY is computed per wave: explode, look up the at-rest df
     // (left join — unseen tokens coalesce to df 0), take the prefix head
-    val batchToks = docToks.filter(col("doc_id") % mod === rem)
+    val batchToks = docToks.filter(graft.engine.RelOps.inWave(col("doc_id")))
       .select(col("doc_id"), size(col("toks")).cast("long").as("n"),
         explode(col("toks")).as("tok"))
       .select(col("doc_id"), col("n"), xxhash64(col("tok")).as("tok_h"))
@@ -651,7 +640,7 @@ object Dedup {
     val cand = prefixHeads(batchToks, thresholdPpm)
       .select(col("tok_h"), col("doc_id").as("doc_a"), col("n").as("n_a"))
       .join(graft.engine.Fs.readParquet(spark,
-          corpusPrefixPath(spark, dir, thresholdPpm, mod, rem))
+          corpusPrefixPath(spark, dir, thresholdPpm))
           .select(col("tok_h"), col("doc_id").as("doc_b"), col("n").as("n_b")),
         Seq("tok_h"))
       .filter(least(col("n_a"), col("n_b")) * 1000000L >=
@@ -660,19 +649,18 @@ object Dedup {
     verifyPairs(cand, docToks, thresholdPpm)
   }
 
-  /** The LSH candidate-pair table materialized ONCE per (documents snapshot,
-    * bucket cap) per session ([[graft.engine.SessionMemo.atRest]]) — the
+  /** The LSH candidate-pair table (every bucket kept) materialized ONCE per
+    * documents snapshot per session ([[graft.engine.SessionMemo.atRest]]) — the
     * near-dup stack's at-rest index, the same once-per-data-drop cost model
     * as [[graft.engine.Layout]]'s layouts: q61/q62/q71/q100/q120/q125/q134
     * all consume this table, and the MinHash signature pipeline runs at the
     * FIRST consumer, not once per query. At 100 TB this is exactly how the
     * stack deploys (the band/pair index is maintained at rest and appended
     * per batch, see [[incrementalDedup]]). */
-  def candidatePairsPath(spark: SparkSession, dir: String,
-      maxBucketSize: Int = 0): String =
-    graft.engine.SessionMemo.atRest(spark, ("cand", dir, maxBucketSize),
+  def candidatePairsPath(spark: SparkSession, dir: String): String =
+    graft.engine.SessionMemo.atRest(spark, ("cand", dir),
         s"$dir/documents.parquet") { p =>
-      minhashCandidatePairs(spark, dir, maxBucketSize)
+      minhashCandidatePairs(spark, dir)
         .select(col("doc_a"), col("doc_b"), col("n_shared_bands"))
         .write.mode("overwrite").parquet(p)
     }
@@ -744,7 +732,7 @@ object Dedup {
   }
 
   /** Bounded-prefix edit-distance verification (q125) of LSH candidate
-    * pairs: levenshtein over the first `prefixLen` chars of the
+    * pairs: levenshtein over the first 160 chars of the
     * whitespace-normalized text. Edit distance is O(len²) per pair —
     * unusable corpus-wide, fine as a VERIFICATION stage once candidate
     * generation bounds the pair count and the prefix bounds the per-pair
@@ -753,14 +741,13 @@ object Dedup {
     * shuffled near-dup keeps high Jaccard but gains edit distance).
     * Similarity is integer ppm of the longer prefix, so the output is
     * engine-exact. */
-  def editDistancePairs(spark: SparkSession, dir: String,
-      prefixLen: Int = 160): DataFrame = {
+  def editDistancePairs(spark: SparkSession, dir: String): DataFrame = {
     // explicit whitespace class: Java's \s includes \x0B, RE2's does not —
     // the one character where the two engines' \s sets differ
     val heads = Tables.documents(spark, dir)
       .select(col("doc_id"),
         substring(regexp_replace(col("text"), "[ \\t\\n\\f\\r\\x0B]+", " "),
-          1, prefixLen).as("head"))
+          1, 160).as("head"))
     graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
       .select(col("doc_a"), col("doc_b"))
       .join(heads.select(col("doc_id").as("doc_a"), col("head").as("head_a")), Seq("doc_a"))
@@ -776,16 +763,17 @@ object Dedup {
   /** Budgeted edit-distance gate (q137): [[editDistancePairs]]'s production
     * form — the native banded `graft_bounded_lev` expression
     * ([[graft.functions.BoundedLevenshtein]]) evaluates only the |i−j| ≤ k
-    * DP band, so per-pair cost scales with the edit BUDGET (O(k·len))
-    * instead of the prefix area (O(len²)). Distances ≤ k are exact, k+1 is
+    * DP band (k = 8, over the same 160-char prefixes), so per-pair cost
+    * scales with the edit BUDGET (O(k·len)) instead of the prefix area
+    * (O(len²)). Distances ≤ k are exact, k+1 is
     * the beyond-budget sentinel — which is all a keep/drop dedup gate needs,
     * and exactly what the oracle's `least(levenshtein, k+1)` checks. */
-  def editDistanceGate(spark: SparkSession, dir: String,
-      prefixLen: Int = 160, k: Int = 8): DataFrame = {
+  def editDistanceGate(spark: SparkSession, dir: String): DataFrame = {
+    val k = 8
     val heads = Tables.documents(spark, dir)
       .select(col("doc_id"),
         substring(regexp_replace(col("text"), "[ \\t\\n\\f\\r\\x0B]+", " "),
-          1, prefixLen).as("head"))
+          1, 160).as("head"))
     graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
       .select(col("doc_a"), col("doc_b"))
       .join(heads.select(col("doc_id").as("doc_a"), col("head").as("head_a")), Seq("doc_a"))
@@ -851,19 +839,18 @@ object Dedup {
     * scheme beats output size; real linkage corpora (person/company
     * names) are sparse in their string space and stay match-linear. The
     * verifier stays budgeted either way. */
-  def recordLinkage(spark: SparkSession, dir: String, k: Int = 2,
-      q: Int = 3): DataFrame =
+  def recordLinkage(spark: SparkSession, dir: String): DataFrame =
     recordLinkageOn(
       Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_name"), col("c_nationkey").as("nk"),
-          col("c_mktsegment").as("seg")),
-      k, q)
+          col("c_mktsegment").as("seg")))
 
   /** [[recordLinkage]]'s core over ANY (c_custkey, c_name, nk, seg) frame —
     * split out so the short-string degenerate path can be pinned on
     * synthetic records (the fixture's 18-char names never exercise it). */
-  def recordLinkageOn(recs: DataFrame, k: Int = 2, q: Int = 3): DataFrame = {
+  def recordLinkageOn(recs: DataFrame): DataFrame = {
     val spark = recs.sparkSession
+    val (k, q) = (2, 3)
     val pfx = k * q + 1
     val c = recs
       .withColumn("grams", expr(
@@ -975,7 +962,7 @@ object Dedup {
     * Edges and oriented edges are materialized once (each feeds 2-3 lineage
     * paths). Output: per-doc triangle membership counts. */
   def candidateTriangles(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Scratch.dir("graft_tri")
+    val tmp = graft.engine.Fs.scratchDir("graft_tri")
     val pairs = graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
       .select(col("doc_a"), col("doc_b"))
     val deg = pairs.select(col("doc_a").as("v"))
@@ -1067,7 +1054,7 @@ object Dedup {
   }
 
   /** Iterated damped PageRank (q181) — [[pagerankIteration]] run to
-    * `iters` rounds, the centrality signal actually used for canonical
+    * three rounds, the centrality signal actually used for canonical
     * selection (one round separates hubs from periphery poorly on chains;
     * three rounds is where template-cluster ranks stabilize). Exact integer
     * ppm throughout: per-edge contribution r div deg (truncating, identical
@@ -1081,11 +1068,11 @@ object Dedup {
     * per round and round k re-runs the whole candidate pipeline O(2^k)
     * times; with the round-trip each round is two scans + one shuffle. The
     * oracle unrolls the same three rounds as chained CTEs. */
-  def pagerankConverged(spark: SparkSession, dir: String, iters: Int = 3): DataFrame =
+  def pagerankConverged(spark: SparkSession, dir: String): DataFrame =
     pagerankRounds(spark,
       graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
         .select(col("doc_a"), col("doc_b")),
-      iters)
+      3)
 
   /** [[pagerankConverged]]'s mechanism over any undirected (doc_a, doc_b)
     * pair frame — also the hand-fixture test surface (ExtSpec computes a
@@ -1138,14 +1125,13 @@ object Dedup {
     * label-SUM invariant: labels are per-node monotone non-increasing, so any
     * change strictly decreases the total — one tiny aggregate over the
     * just-written snapshot replaces a join against the previous iteration.
-    * `maxIters` bounds the worst case; 0 (the default) sizes the budget
-    * from the DATA as ceil(log2(nodes)) + 4 — pointer jumping needs
-    * O(log diameter) <= O(log n) rounds, so a fixed budget that was fine at
-    * one SF silently becomes too small when chance LSH collisions knit a
-    * giant component at 10x the corpus (measured at sf1: 59x the candidate
-    * pairs of sf0.1, diameter past a 10-round budget — the round-7 growth
-    * gate caught exactly this). An explicit positive maxIters stays a hard
-    * budget (the fail-loud spec drives it).
+    * A fixed budget of 68 rounds bounds the worst case: pointer jumping
+    * needs O(log diameter) <= O(log n) rounds, and 68 covers any graph
+    * whose node ids fit a BIGINT ([[clustersFromPairs]]). A budget sized
+    * for one SF silently becomes too small when chance LSH collisions knit
+    * a giant component at 10x the corpus (measured at sf1: 59x the
+    * candidate pairs of sf0.1, diameter past a 10-round budget — the
+    * round-7 growth gate caught exactly this).
     *
     * The edge set and each iteration's label frame are MATERIALIZED to
     * parquet (a scratch dir under java.io.tmpdir; at cluster scale this is
@@ -1158,27 +1144,24 @@ object Dedup {
     *
     * Output: (doc_id, cluster_id = min doc_id of the component) for every doc
     * that appears in ≥ 1 candidate pair; docs with no candidates are
-    * implicitly their own singleton cluster.
-    *
-    * @param maxBucketSize forwarded to [[minhashCandidatePairs]] — the LSH
-    *   degenerate-band cap. 0 (default) keeps every bucket, matching the
-    *   exhaustive oracle. */
-  def duplicateClusters(spark: SparkSession, dir: String, maxIters: Int = 0,
-      maxBucketSize: Int = 0): DataFrame =
+    * implicitly their own singleton cluster. Every LSH bucket is kept,
+    * matching the exhaustive oracle. */
+  def duplicateClusters(spark: SparkSession, dir: String): DataFrame =
     clustersFromPairs(spark,
-      graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir, maxBucketSize))
-        .select(col("doc_a"), col("doc_b")),
-      maxIters)
+      graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
+        .select(col("doc_a"), col("doc_b")))
 
   /** [[duplicateClusters]]'s connected-components core over ANY (doc_a,
     * doc_b) pair frame — factored out so the INCREMENTAL maintenance path
     * ([[incrementalClusters]]) can run it on a bounded subgraph, and so
     * fixtures can drive it directly. Same protocol: pointer-jumping
     * min-label propagation, per-round parquet materialization, observed
-    * label-sum convergence confirmed on committed snapshots, fail-loud. */
+    * label-sum convergence confirmed on committed snapshots, fail-loud.
+    * A positive `maxIters` replaces the 68-round budget (the hand-fixture
+    * path of [[incrementalClustersFrom]]). */
   def clustersFromPairs(spark: SparkSession, pairs: DataFrame,
       maxIters: Int = 0): DataFrame = {
-    val tmp = Scratch.dir("graft_cc")
+    val tmp = graft.engine.Fs.scratchDir("graft_cc")
     val edges = pairs
       .union(pairs.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
@@ -1264,22 +1247,23 @@ object Dedup {
       converged = committedSum(spark, s"$tmp/labels$i")
         .compareTo(committedSum(spark, s"$tmp/labels${i - 1}")) == 0
     // Partial propagation is WRONG output (one component reported as two) —
-    // fail loudly rather than return it. Components deeper than maxIters hops
-    // need a larger budget (or pointer-jumping), not silent truncation.
+    // fail loudly rather than return it: a component the budget cannot
+    // cover is an error, not a truncation.
     if (!converged)
       throw new IllegalStateException(
-        s"duplicateClusters did not converge in $iterBudget iterations; " +
-          "raise maxIters (component diameter exceeds the budget)")
+        s"duplicateClusters did not converge within its budget of $iterBudget " +
+          "iterations (component diameter exceeds the budget)")
     // eager scratch cleanup: the returned frame reads ONLY the final labels
     // dir (which the shutdown hook reclaims at JVM exit)
-    Scratch.delete(s"$tmp/pairs")
-    (0 until i).foreach(j => Scratch.delete(s"$tmp/labels$j"))
+    graft.engine.Fs.rmTree(s"$tmp/pairs")
+    (0 until i).foreach(j => graft.engine.Fs.rmTree(s"$tmp/labels$j"))
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .orderBy("doc_id")
   }
 
   /** q195: INCREMENTAL cluster maintenance — a just-ingested wave's candidate
-    * pairs (those touching doc_id % mod == rem) folded into the EXISTING
+    * pairs (those touching a [[graft.engine.RelOps.inWave]] doc_id) folded
+    * into the EXISTING
     * at-rest cluster labels with a BOUNDED recompute, never full-graph CC:
     *
     *  1. base labels = [[clustersFromPairs]] over corpus-only pairs (both
@@ -1299,12 +1283,11 @@ object Dedup {
     * and min-id labels of untouched components cannot change. At 100 TB this
     * is the difference between re-clustering the corpus per ingest wave and
     * recomputing only the components the wave touches. */
-  def incrementalClusters(spark: SparkSession, dir: String, mod: Int = 10,
-      rem: Int = 7, maxIters: Int = 0): DataFrame =
+  def incrementalClusters(spark: SparkSession, dir: String): DataFrame =
     incrementalClustersFrom(spark,
       graft.engine.Fs.readParquet(spark, candidatePairsPath(spark, dir))
         .select(col("doc_a"), col("doc_b")),
-      s"$dir/documents.parquet", mod, rem, maxIters)
+      s"$dir/documents.parquet", 10, 7, 0)
 
   /** [[incrementalClusters]]'s machinery over any pair frame — also the
     * hand-fixture surface. `fixture` is the path `all` derives from: it keys
@@ -1350,18 +1333,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** CCNet-style repeated-SEGMENT dedup statistics: documents are chopped into
-    * fixed `segTokens`-token segments (this corpus has no newlines, so fixed
-    * windows stand in for CCNet's lines/paragraphs), each segment is hashed,
-    * and a segment is boilerplate iff it appears in ≥ 2 DISTINCT documents.
-    * Per doc: segment counts and the integer checksum of the KEPT (non-
-    * boilerplate) segments — the identity of the residual document after
-    * cross-doc paragraph dedup.
-    *
-    * Scale shape: one map-side-combinable groupBy on the segment hash builds
-    * the (unique-keyed) frequency table; docs join it 1:1 per segment — a hot
-    * boilerplate segment is a popular DIM key, never a k² pair blowup. The
-    * per-doc rollup is a second hash aggregate. No window, no self-join. */
   /** Sketch-quality monitor (q120): per LSH candidate pair, the MinHash
     * signature ESTIMATE of Jaccard (equal-slot fraction — the unbiased
     * estimator the sketch is built on) against the EXACT shingle Jaccard,
@@ -1390,13 +1361,32 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  def segmentDedup(spark: SparkSession, dir: String, segTokens: Int = 10): DataFrame = {
-    val segs = Tables.documents(spark, dir)
+  /** The fixed 10-token segments of each doc of at least 10 tokens, in
+    * order — the cut shared by [[segmentDedup]], [[segmentDedupRewrite]]
+    * and [[decontaminateRewrite]]. */
+  private def segments(spark: SparkSession, dir: String,
+      explodeFn: Column => Column): DataFrame =
+    Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .filter(size(col("words")) >= segTokens)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(0, size(words) div $segTokens - 1),
-           |  i -> concat_ws(' ', slice(words, i * $segTokens + 1, $segTokens)))""".stripMargin)).as("seg"))
+      .filter(size(col("words")) >= 10)
+      .select(col("doc_id"), explodeFn(expr(
+        """transform(sequence(0, size(words) div 10 - 1),
+          |  i -> concat_ws(' ', slice(words, i * 10 + 1, 10)))""".stripMargin)))
+
+  /** CCNet-style repeated-SEGMENT dedup statistics: documents are chopped into
+    * fixed 10-token segments ([[segments]]) (this corpus has no newlines, so fixed
+    * windows stand in for CCNet's lines/paragraphs), each segment is hashed,
+    * and a segment is boilerplate iff it appears in ≥ 2 DISTINCT documents.
+    * Per doc: segment counts and the integer checksum of the KEPT (non-
+    * boilerplate) segments — the identity of the residual document after
+    * cross-doc paragraph dedup.
+    *
+    * Scale shape: one map-side-combinable groupBy on the segment hash builds
+    * the (unique-keyed) frequency table; docs join it 1:1 per segment — a hot
+    * boilerplate segment is a popular DIM key, never a k² pair blowup. The
+    * per-doc rollup is a second hash aggregate. No window, no self-join. */
+  def segmentDedup(spark: SparkSession, dir: String): DataFrame = {
+    val segs = segments(spark, dir, explode(_).as("seg"))
       .select(col("doc_id"),
         Native.md5Prefix(col("seg"), 7).as("h"),
         col("seg"))
@@ -1425,15 +1415,8 @@ object Dedup {
     * rebuilt text deterministic under any shuffle layout). Docs whose every
     * segment is boilerplate come out with empty text, not dropped — the
     * downstream length filter decides their fate, same as C4. */
-  def segmentDedupRewrite(spark: SparkSession, dir: String,
-      segTokens: Int = 10): DataFrame = {
-    val segs = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .filter(size(col("words")) >= segTokens)
-      .select(col("doc_id"), posexplode(expr(
-        s"""transform(sequence(0, size(words) div $segTokens - 1),
-           |  i -> concat_ws(' ', slice(words, i * $segTokens + 1, $segTokens)))""".stripMargin))
-        .as(Seq("idx", "seg")))
+  def segmentDedupRewrite(spark: SparkSession, dir: String): DataFrame = {
+    val segs = segments(spark, dir, posexplode(_).as(Seq("idx", "seg")))
     val freq = segs.groupBy(col("seg"))
       .agg(countDistinct(col("doc_id")).as("n_docs_with_seg"))
     segs.join(freq, Seq("seg"))
@@ -1461,15 +1444,8 @@ object Dedup {
     * the segment index — collect_list order is partition-dependent; no
     * window). The benchmark segment set is benchmark-sized → broadcast; the
     * corpus side is one segment explode + one aggregate. */
-  def decontaminateRewrite(spark: SparkSession, dir: String,
-      segTokens: Int = 10): DataFrame = {
-    val segs = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .filter(size(col("words")) >= segTokens)
-      .select(col("doc_id"), posexplode(expr(
-        s"""transform(sequence(0, size(words) div $segTokens - 1),
-           |  i -> concat_ws(' ', slice(words, i * $segTokens + 1, $segTokens)))""".stripMargin))
-        .as(Seq("idx", "seg")))
+  def decontaminateRewrite(spark: SparkSession, dir: String): DataFrame = {
+    val segs = segments(spark, dir, posexplode(_).as(Seq("idx", "seg")))
     // benchmark membership follows the fixed-benchmark law
     // ([[graft.ext.TextStats.benchModFor]], round 10) — the bench segment
     // set is ~1000 docs' segments at ANY corpus size, so this broadcast is
@@ -1494,7 +1470,7 @@ object Dedup {
   /** Sorted-neighborhood near-dup candidates (q219) — the THIRD classic
     * blocking method beside LSH banding (q29) and prefix filtering (q173):
     * sort the corpus by a normalized sort key (here the first 3 words,
-    * lowercased), slide a fixed window of `w` over the sorted order, and
+    * lowercased), slide a fixed window of 4 over the sorted order, and
     * verify exactly the pairs that fall within a window (Hernández &
     * Stolfo, SIGMOD 1995). Where LSH is probabilistic and prefix-filter is
     * threshold-exact, SNM is CHEAP and key-local: it finds near-dups whose
@@ -1508,14 +1484,14 @@ object Dedup {
     * first character (order-aligned), rank within each chunk is a
     * partitioned window, and the cross-chunk offset is a cumulative count
     * over the chunk-count-sized frame — proven equal to the naive global
-    * ROW_NUMBER by the oracle. Neighborhood pairing is w−1 equi-joins on
+    * ROW_NUMBER by the oracle. Neighborhood pairing is 3 equi-joins on
     * rank (rank+j = rank2) — boundary pairs across chunks still pair,
     * because pairing reads rank VALUES, not chunk locality. Verification is
     * the shared `array_intersect` shape on the at-rest shingle arrays
     * ([[shingleTokensPath]]). A pathologically hot first character recurses
     * to a longer prefix — the same escape hatch q184 documents. */
   def sortedNeighborhoodPairs(spark: SparkSession, dir: String,
-      windowSize: Int = 4, thresholdPpm: Long = 500000L): DataFrame = {
+      thresholdPpm: Long = 500000L): DataFrame = {
     val docToks = graft.engine.Fs.readParquet(spark, shingleTokensPath(spark, dir))
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -1534,7 +1510,7 @@ object Dedup {
     // ranks are unique, so the unordered pair at gap g arises from exactly
     // one branch (j = g) exactly once — no dedup pass needed (the oracle's
     // DISTINCT is equally vacuous)
-    val within = (1 until windowSize).map { j =>
+    val within = (1 until 4).map { j =>
       ranked.select(col("doc_id").as("id_a"), (col("r") + j).as("r2"))
         .join(ranked.select(col("doc_id").as("id_b"), col("r").as("r2")), Seq("r2"))
         .select(least(col("id_a"), col("id_b")).as("doc_a"),
@@ -1576,7 +1552,7 @@ object Dedup {
     val lsh = minhashJaccard(spark, dir)
       .filter(expr(s"n_common * 1000000 div (n_a + n_b - n_common) >= $thresholdPpm"))
       .select(col("doc_a"), col("doc_b"))
-    val snm = sortedNeighborhoodPairs(spark, dir, 4, thresholdPpm)
+    val snm = sortedNeighborhoodPairs(spark, dir, thresholdPpm)
       .select(col("doc_a"), col("doc_b"))
     def counted(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_found")).select(lit(name).as("method"), col("n_found"))
@@ -1597,15 +1573,14 @@ object Dedup {
     * every source pair, how many verified near-dup pairs span them (who is
     * mirroring whom), plus each source's within-source count on the
     * diagonal. The pair stream is the at-rest LSH candidate index verified
-    * at the threshold ([[minhashJaccard]]'s columns carry exact counts), so
+    * at [[DefaultJaccardPpm]] ([[minhashJaccard]]'s columns carry exact counts), so
     * the matrix costs two dim-sized joins over an already-bounded pair set
     * — the corpus is never rescanned. Output ordered (src_a ≤ src_b,
     * lexicographic). The release-gate (q200) says IF a source is dirty;
     * this says WITH WHOM. */
-  def crossSourceDupMatrix(spark: SparkSession, dir: String,
-      thresholdPpm: Long = DefaultJaccardPpm): DataFrame = {
+  def crossSourceDupMatrix(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashJaccard(spark, dir)
-      .filter(expr(s"n_common * 1000000 div (n_a + n_b - n_common) >= $thresholdPpm"))
+      .filter(expr(s"n_common * 1000000 div (n_a + n_b - n_common) >= $DefaultJaccardPpm"))
       .select(col("doc_a"), col("doc_b"))
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
     pairs
@@ -1629,19 +1604,19 @@ object Dedup {
     * pays one broadcast semi-join against the request-hit cluster set;
     * un-clustered requested docs (singletons, absent from the pair graph)
     * remove just themselves via the label fallback. */
-  def takedownExpansion(spark: SparkSession, dir: String, mod: Int = 83,
-      rem: Int = 11): DataFrame = {
+  def takedownExpansion(spark: SparkSession, dir: String): DataFrame = {
+    val requested = col("doc_id") % 83 === 11
     val labels = graft.engine.Fs.readParquet(spark, clustersPath(spark, dir))
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     // every doc gets a label: clustered docs their component id, singletons
     // themselves (clustersPath only covers docs in the candidate graph)
     val labeled = docs.join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cl"))
-    val hit = labeled.filter(col("doc_id") % mod === rem)
+    val hit = labeled.filter(requested)
       .groupBy(col("cl")).agg(min(col("doc_id")).as("requested_by"))
     labeled.join(broadcast(hit), Seq("cl"))
       .select(col("doc_id"), col("cl").as("cluster_id"),
-        (col("doc_id") % mod === rem).as("directly_requested"),
+        requested.as("directly_requested"),
         col("requested_by"))
       .orderBy("doc_id")
   }
@@ -1811,7 +1786,7 @@ object Dedup {
 
   /** Incremental (new-batch-vs-corpus) dedup — the shape every continuously
     * ingesting training pipeline actually runs: an incoming shard (here the
-    * content-addressed slice doc_id % `mod` == `rem`) is checked against the
+    * [[graft.engine.RelOps.inWave]] slice of doc_id) is checked against the
     * EXISTING corpus without ever comparing corpus docs to each other.
     * Per batch doc:
     *  - `exact_dup_of`: the min corpus doc_id with an identical normalized
@@ -1826,9 +1801,8 @@ object Dedup {
     * are computed ONCE here (materialized to scratch) and filtered into the
     * two sides — the corpus is never re-signed per batch in the at-rest
     * design. */
-  def incrementalDedup(spark: SparkSession, dir: String, mod: Int = 10,
-      rem: Int = 7): DataFrame = {
-    val isBatch = col("doc_id") % mod === rem
+  def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
+    val isBatch = graft.engine.RelOps.inWave(col("doc_id"))
     val docs = Tables.documents(spark, dir)
     val fps = docs.select(col("doc_id"), TextStats.fingerprint(col("text")).as("fp"))
     val exact = fps.filter(isBatch)
@@ -1866,15 +1840,11 @@ object Dedup {
     * non-survivor set — the corpus scan stays linear, the cluster table is
     * broadcastable at any realistic duplicate rate.
     *
-    * `maxIters`/`maxBucketSize` pass through to [[duplicateClusters]] /
-    * [[minhashCandidatePairs]]: the auto iteration budget (constant fail-loud
-    * backstop, see [[clustersFromPairs]]) covers any component
-    * the graph can contain, and the bucket cap bounds candidate-pair blowup
-    * on boilerplate-heavy corpora — the knobs a 100 TB run tunes instead of
-    * editing this file. */
-  def dedupSurvivors(spark: SparkSession, dir: String, maxIters: Int = 0,
-      maxBucketSize: Int = 0): DataFrame = {
-    val losers = graft.engine.Fs.readParquet(spark, clustersPath(spark, dir, maxIters, maxBucketSize))
+    * The clusters come from [[clustersPath]]: the fixed iteration budget
+    * (a fail-loud backstop, see [[clustersFromPairs]]) covers any component
+    * the graph can contain. */
+  def dedupSurvivors(spark: SparkSession, dir: String): DataFrame = {
+    val losers = graft.engine.Fs.readParquet(spark, clustersPath(spark, dir))
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
     Tables.documents(spark, dir)
@@ -2072,7 +2042,7 @@ object Dedup {
     * method ("Deduplicating Training Data Makes Language Models Better",
     * ACL 2022), the one major LLM-dedup family the fixed-segment (q191) and
     * known-span (q212) cutters don't cover: find MAXIMAL verbatim repeats of
-    * ≥ k tokens at ARBITRARY offsets across the corpus, without a
+    * ≥ k = 5 tokens at ARBITRARY offsets across the corpus, without a
     * driver-memory suffix array.
     *
     * Distributed form: a token position p in doc d is *covered* iff the
@@ -2116,7 +2086,8 @@ object Dedup {
     * maximal run of covered TOKENS — two covered gram starts p1 < p2 merge
     * iff p2 ≤ p1 + k (their token windows overlap or touch), so spans never
     * overlap and each is the maximal contiguous covered stretch. */
-  def longRepeatSpans(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def longRepeatSpans(spark: SparkSession, dir: String): DataFrame = {
+    val k = 5
     def docGrams = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= k)
@@ -2197,7 +2168,7 @@ object Dedup {
     * occurrence (Lee et al. §4.2 note boilerplate repeats are safe to cut
     * wholesale; the conservative keep-one-copy variant is
     * [[repeatCutKeepOne]], a policy choice on top of the same span table).
-    * Docs shorter than k tokens, and docs with no repeated span, pass
+    * Docs shorter than 5 tokens, and docs with no repeated span, pass
     * through verbatim.
     *
     * Scale shape: the span table is joined back per doc as a collected
@@ -2207,15 +2178,14 @@ object Dedup {
     * position-level range join, no explode of the corpus text.
     *
     * Round 11: the spans come from the AT-REST table ([[spansPath]], built
-    * once per (documents snapshot, k) per session) — the q62/clustersPath
-    * discipline: q227
-    * runs the span computation live (it IS that query's operator); the
+    * once per documents snapshot per session) — the q62/clustersPath
+    * discipline: q227 runs the span computation live (it IS that query's operator); the
     * CONSUMER reads the materialized table. Recomputing the whole span
     * pipeline inside the rewrite doubled the probe's transient shuffle
     * mass and is what actually ENOSPC'd the round-11 sf300 attempt after
     * q227 itself fit. */
-  def repeatCutRewrite(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val spans = graft.engine.Fs.readParquet(spark, spansPath(spark, dir, k))
+  def repeatCutRewrite(spark: SparkSession, dir: String): DataFrame = {
+    val spans = graft.engine.Fs.readParquet(spark, spansPath(spark, dir))
       .withColumn("span_end", col("span_start") + col("span_len_tokens") - 1)
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("sp"))
@@ -2263,10 +2233,10 @@ object Dedup {
     * election must pick the same keeper the oracle does, and span strings
     * never ride a corpus-mass exchange (hash-keying would save span-mass
     * bytes at the cost of a collision electing a wrong-content keeper). */
-  def repeatCutKeepOne(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def repeatCutKeepOne(spark: SparkSession, dir: String): DataFrame = {
     val docsW = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
-    val spans = graft.engine.Fs.readParquet(spark, spansPath(spark, dir, k))
+    val spans = graft.engine.Fs.readParquet(spark, spansPath(spark, dir))
     val withContent = spans.join(docsW, Seq("doc_id"))
       .select(col("doc_id"), col("span_start"),
         (col("span_start") + col("span_len_tokens") - 1).as("span_end"),
@@ -2300,31 +2270,29 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** The clusters table materialized once per (documents snapshot, iters,
-    * cap) per session ([[graft.engine.SessionMemo.atRest]]) —
+  /** The clusters table materialized once per documents snapshot per
+    * session ([[graft.engine.SessionMemo.atRest]]) —
     * the dedup stack's second at-rest index (the first is
     * [[candidatePairsPath]]): in production the cluster assignment is
     * maintained at rest and consumed by every downstream export, it is not
     * recomputed per reader. q62 still runs the clustering live (the
     * iteration IS that query's operator); the CONSUMERS (q71 survivors, the
     * q100 capstone) read this table. */
-  def clustersPath(spark: SparkSession, dir: String, maxIters: Int = 0,
-      maxBucketSize: Int = 0): String =
-    graft.engine.SessionMemo.atRest(spark, ("cc", dir, maxIters, maxBucketSize),
+  def clustersPath(spark: SparkSession, dir: String): String =
+    graft.engine.SessionMemo.atRest(spark, ("cc", dir),
         s"$dir/documents.parquet")(p =>
-      duplicateClusters(spark, dir, maxIters, maxBucketSize)
+      duplicateClusters(spark, dir)
         .write.mode("overwrite").parquet(p))
 
-  /** The repeat-span table materialized once per (documents snapshot, k) per
-    * session — the
-    * dedup stack's third at-rest index (after [[candidatePairsPath]] and
+  /** The repeat-span table materialized once per documents snapshot per
+    * session — the dedup stack's third at-rest index (after [[candidatePairsPath]] and
     * [[clustersPath]]): in production the ExactSubstr span table is
     * computed once per corpus snapshot and consumed by every rewrite/audit
     * pass. q227 still computes the spans live (that IS its operator); the
     * CONSUMERS (q228's cut rewrite) read this table. */
-  def spansPath(spark: SparkSession, dir: String, k: Int = 5): String =
-    graft.engine.SessionMemo.atRest(spark, ("lrs", dir, k),
+  def spansPath(spark: SparkSession, dir: String): String =
+    graft.engine.SessionMemo.atRest(spark, ("lrs", dir),
         s"$dir/documents.parquet")(p =>
-      longRepeatSpans(spark, dir, k)
+      longRepeatSpans(spark, dir)
         .write.mode("overwrite").parquet(p))
 }

@@ -125,7 +125,7 @@ object Multimodal {
   /** Frame sampling: split each payload into fixed-size 64-byte "frames"
     * (the video-keyframe access pattern) — posexplode keeps it distributed and
     * 1 output row per frame. */
-  def frameSample(spark: SparkSession, dir: String, frameBytes: Int = 64): DataFrame =
+  def frameSample(spark: SparkSession, dir: String): DataFrame =
     asBinaryTable(spark, dir)
       .select(col("doc_id"), col("payload").cast("string").as("s"))
       // empty payloads yield zero frames (matches integer-floor oracle
@@ -133,7 +133,8 @@ object Multimodal {
       // CAST(-1/64 AS INT) truncates to 0 → would emit one empty frame)
       .filter(length(col("s")) > 0)
       .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, CAST((length(s) - 1) / $frameBytes AS INT)), i -> substring(s, i * $frameBytes + 1, $frameBytes))")))
+        "transform(sequence(0, CAST((length(s) - 1) / 64 AS INT)), " +
+          "i -> substring(s, i * 64 + 1, 64))")))
       .select(
         col("doc_id"),
         col("pos").cast("int").as("frame_idx"),
@@ -330,9 +331,9 @@ object Multimodal {
     * normalization). One output row per (doc, frame); the oracle recomputes
     * every frame energy from the closed-form sample law, so a decoder that
     * dropped samples or mis-framed the stream hash-mismatches. */
-  def audioFrames(spark: SparkSession, dir: String,
-      frameSamples: Int = 128): DataFrame = {
+  def audioFrames(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val frameSamples = 128
     wavTable(spark, dir).select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
@@ -412,14 +413,13 @@ object Multimodal {
   }
 
   /** REAL video-frame sampling + decode over any (doc_id, payload) frame of
-    * GVID containers: parse the frame index, decode every `stride`-th frame
+    * GVID containers: parse the frame index, decode every second frame
     * with the JDK PNG codec, and SKIP the bytes of frames the sample does
     * not want — the point of a frame index is that unsampled frames cost a
     * seek, not a decode. Corrupt containers (bad magic, truncated frames)
     * fail loudly. Partition-parallel projection; one codec context per
     * partition; no shuffle. */
-  def decodeVideoFrames(spark: SparkSession, vids: DataFrame,
-      stride: Int = 2): DataFrame = {
+  def decodeVideoFrames(spark: SparkSession, vids: DataFrame): DataFrame = {
     import spark.implicits._
     vids.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
@@ -433,7 +433,7 @@ object Multimodal {
           val n = in.readInt()
           (0 until n).flatMap { f =>
             val len = in.readInt()
-            if (f % stride == 0) {
+            if (f % 2 == 0) {
               val buf = new Array[Byte](len)
               in.readFully(buf)
               val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(buf))

@@ -30,23 +30,23 @@ object Sampling {
   /** Hash of the key into [0, 100). */
   private def pctBucket(keyCol: String) = u28(keyCol) % 100
 
-  /** ~pct% deterministic sample of documents by doc_id hash. */
-  def hashSample(spark: SparkSession, dir: String, pct: Int = 10): DataFrame = {
+  /** ~10% deterministic sample of documents by doc_id hash. */
+  def hashSample(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
       .withColumn("hash_bucket", pctBucket("doc_id"))
-      .filter(col("hash_bucket") < pct)
+      .filter(col("hash_bucket") < 10)
       .select(col("doc_id"), col("lang"), col("source"), col("hash_bucket"))
       .orderBy("doc_id")
   }
 
-  /** Stratified deterministic sample: `perStratum` docs per language, chosen
+  /** Stratified deterministic sample: 20 docs per language, chosen
     * by hash order (reproducible "random" choice within each stratum). */
-  def stratifiedSample(spark: SparkSession, dir: String, perStratum: Int = 20): DataFrame = {
+  def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("lang"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     Tables.documents(spark, dir)
       .withColumn("pick", row_number().over(w))
-      .filter(col("pick") <= perStratum)
+      .filter(col("pick") <= 20)
       .select(col("lang"), col("pick"), col("doc_id"))
       .orderBy("lang", "pick")
   }
@@ -152,7 +152,7 @@ object Sampling {
       .orderBy("doc_id")
   }
 
-  /** Per-source quota cap (q147): at most `cap` documents per source, chosen
+  /** Per-source quota cap (q147): at most 20 documents per source, chosen
     * by content-addressed priority (md5 of the doc id, ties on the id) — the
     * standard over-represented-domain cap in a curation mix ("no more than N
     * pages from any one host"). Every doc is emitted with its priority rank
@@ -161,13 +161,13 @@ object Sampling {
     * Scale shape: one row_number window partitioned by source — the same
     * per-stratum trim as [[stratifiedSample]]; no global sort, no shuffle
     * beyond the source partitioning. */
-  def sourceQuotaCap(spark: SparkSession, dir: String, cap: Int = 20): DataFrame = {
+  def sourceQuotaCap(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("source"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"))
       .withColumn("priority_rank", row_number().over(w).cast("int"))
-      .withColumn("kept", col("priority_rank") <= cap)
+      .withColumn("kept", col("priority_rank") <= 20)
       .orderBy("doc_id")
   }
 

@@ -87,29 +87,29 @@ object Similarity {
     (1 to dim).map(d => if (planeSign(p, d) > 0) "1D" else "-1D")
       .mkString("array(", ",", ")")
 
-  /** Embedding dimensionality of the testdata `embeddings` table. Callers with
-    * a different corpus pass `dim` explicitly — it must match `size(embedding)`
-    * exactly (a mismatched plane literal would zip to NULL projections). */
-  val DefaultDim = 64
+  /** Embedding dimensionality of the testdata `embeddings` table; it must
+    * match `size(embedding)` exactly (a mismatched plane literal would zip
+    * to NULL projections). */
+  private val EmbeddingDim = 64
 
-  /** 8-bit LSH bucket per vector: bit p = sign of the projection onto
-    * (driver-precomputed) hyperplane p. `dim` is a parameter (not probed with a
-    * per-call `head()` job — that was an extra Spark job per invocation); a
-    * per-row guard raises if the corpus dim disagrees, because a mismatched
-    * plane literal would zip to NULL projections and silently collapse every
-    * vector into bucket 0 (degrading ANN to an all-pairs join). */
-  def lshBuckets(spark: SparkSession, dir: String, nPlanes: Int = 0,
-      dim: Int = DefaultDim): DataFrame =
+  /** LSH bucket per vector ([[lshPlanesFor]] bits): bit p = sign of the
+    * projection onto (driver-precomputed) hyperplane p. The dim is the
+    * constant [[EmbeddingDim]] (not probed with a per-call `head()` job —
+    * that was an extra Spark job per invocation); a per-row guard raises if
+    * the corpus dim disagrees, because a mismatched plane literal would zip
+    * to NULL projections and silently collapse every vector into bucket 0
+    * (degrading ANN to an all-pairs join). */
+  def lshBuckets(spark: SparkSession, dir: String): DataFrame =
     // single source of truth: the bucket is DERIVED from the projection
     // array in [[lshProjections]] (which also owns the dim guard), so the
     // q33/q34/q53 bucketing and q177's multi-probe margins can never
     // disagree on plane signs or guard behavior
-    lshProjections(spark, dir, nPlanes, dim).drop("prj")
+    lshProjections(spark, dir).drop("prj")
 
   /** ANN top-k: exact cosine ranking restricted to the query's LSH bucket.
     * The bucket table appears on both join sides and is served from the
-    * at-rest index ([[lshProjectionsPath]]) — built once per (embeddings
-    * snapshot, planes, dim) per session, so the two sides are two cheap
+    * at-rest index ([[lshProjectionsPath]]) — built once per embeddings
+    * snapshot per session, so the two sides are two cheap
     * parquet reads, not two re-runs of the projection pass. */
   def annTopK(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 20): DataFrame = {
     val all = lshBuckets(spark, dir)
@@ -127,28 +127,16 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate dedup: candidate pairs come from the LSH
-    * buckets (never all-pairs), pairs above `threshold` mark the higher vec_id
+    * buckets (never all-pairs), pairs at cosine ≥ 0.95 mark the higher vec_id
     * as a duplicate of the lower, and survivors are the non-dominated ids.
     * Output: one row per duplicate pair found (may legitimately be empty on
-    * corpora with no near-dups — the oracle computes the same set).
-    *
-    * @param maxBucketSize if > 0, buckets holding more vectors are DROPPED
-    *   before the within-bucket pair join — the same degenerate-bucket guard
-    *   as [[graft.ext.Dedup.minhashCandidatePairs]]. The within-bucket join is
-    *   (n_b²)/2 per bucket; on a skewed embedding distribution (every near-dup
-    *   corpus is skewed — that is why dedup runs at all) one hot bucket
-    *   otherwise produces a pair blowup AQE can split but not shrink. A
-    *   dropped bucket's vectors are that similar to EACH OTHER that the
-    *   hyperplanes cannot separate them — at 100 TB the operational response
-    *   is re-bucketing that slice with more planes, not enumerating its
-    *   pairs. 0 (default) keeps every bucket, matching the exhaustive
-    *   oracle. */
-  def embeddingNearDupPairs(spark: SparkSession, dir: String,
-      threshold: Double = 0.95, maxBucketSize: Long = 0L): DataFrame =
+    * corpora with no near-dups — the oracle computes the same set). Every
+    * bucket is kept, matching the exhaustive oracle. */
+  def embeddingNearDupPairs(spark: SparkSession, dir: String): DataFrame =
     nearDupPairsFromBuckets(
       graft.engine.Bucketing.readTable(spark, lshBucketedTable(spark, dir))
         .hint("merge"),
-      threshold, maxBucketSize)
+      0.95)
 
   /** Bucket-CLUSTERED at-rest form of the LSH index, for the consumers that
     * self-join it on `bucket` (q53). The flat parquet form
@@ -180,7 +168,17 @@ object Similarity {
   /** [[embeddingNearDupPairs]]'s pair machinery over any pre-bucketed frame
     * with (vec_id, v, nrm, bucket) — also the planted-degenerate-bucket test
     * surface (ExtSpec feeds a frame whose vectors all share one bucket and
-    * asserts the cap bounds the candidate pair count). */
+    * asserts the cap bounds the candidate pair count).
+    *
+    * @param maxBucketSize if > 0, buckets holding more vectors are DROPPED
+    *   before the within-bucket pair join — the same degenerate-bucket guard
+    *   as [[graft.ext.Dedup.minhashCandidatePairs]]. The within-bucket join is
+    *   (n_b²)/2 per bucket; on a skewed embedding distribution one hot bucket
+    *   otherwise produces a pair blowup AQE can split but not shrink. A
+    *   dropped bucket's vectors are that similar to EACH OTHER that the
+    *   hyperplanes cannot separate them — at 100 TB the operational response
+    *   is re-bucketing that slice with more planes, not enumerating its
+    *   pairs. */
   def nearDupPairsFromBuckets(all: DataFrame, threshold: Double,
       maxBucketSize: Long = 0L): DataFrame = {
     // the bucket-size frame is ≤ 2^nPlanes rows — broadcast by construction;
@@ -205,15 +203,15 @@ object Similarity {
 
   /** ANN recall@k — the evaluation harness every approximate index needs
     * beside it: per query, how many of the EXACT top-k neighbors
-    * ([[cosineTopK]]) the LSH-bucketed [[annTopK]] recovered. Both sides are
-    * already-scaled pipelines; the eval adds one (query_id, neighbor_id)
-    * equi-join over nQueries·k rows — negligible at any corpus size, so
-    * recall can be monitored continuously in production. */
-  def annRecall(spark: SparkSession, dir: String, k: Int = 3,
-      nQueries: Int = 20): DataFrame = {
-    val exact = cosineTopK(spark, dir, k, nQueries)
+    * ([[cosineTopK]]) the LSH-bucketed [[annTopK]] recovered, for k = 3 and
+    * the first 20 vectors as queries. Both sides are already-scaled
+    * pipelines; the eval adds one (query_id, neighbor_id) equi-join over
+    * 60 rows — negligible at any corpus size, so recall can be monitored
+    * continuously in production. */
+  def annRecall(spark: SparkSession, dir: String): DataFrame = {
+    val exact = cosineTopK(spark, dir, k = 3)
       .select(col("query_id"), col("neighbor_id"))
-    val ann = annTopK(spark, dir, k, nQueries)
+    val ann = annTopK(spark, dir)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
     exact.join(ann, Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
@@ -256,32 +254,27 @@ object Similarity {
     math.max(8, math.min(20, bits))
   }
 
-  /** The LSH projection/bucket table materialized ONCE per (embeddings
-    * snapshot, nPlanes, dim) per session ([[graft.engine.SessionMemo.atRest]])
+  /** The LSH projection/bucket table materialized ONCE per embeddings
+    * snapshot per session ([[graft.engine.SessionMemo.atRest]])
     * — the vector family's at-rest index, the same build-once cost model as
     * [[graft.ext.Dedup.candidatePairsPath]]'s band
     * index: q33/q34/q53/q90/q144/q177 all read this table instead of each
     * re-running the projection pass (nPlanes × 64-element dot products per
     * vector per consumer). At 100 TB this is exactly how a vector store
     * deploys — buckets are computed at ingest and kept beside the
-    * embeddings. `nPlanes = 0` (the catalog default) derives the count from
-    * COUNT(*) via [[lshPlanesFor]]; an
-    * explicit count pins it (tests, and any deployment that froze the
-    * index geometry — a STREAM appending to an existing index must pin the
-    * count the index was built with). The derived count is a
-    * [[graft.engine.SessionMemo]] entry: deriving it runs a COUNT(*) job,
-    * and every consumer of the at-rest index (each invocation) would
-    * otherwise pay that count just to NAME an index already on disk. */
-  def lshProjectionsPath(spark: SparkSession, dir: String, nPlanes: Int = 0,
-      dim: Int = DefaultDim): String = {
-    val planes: Int =
-      if (nPlanes > 0) nPlanes
-      else graft.engine.SessionMemo(spark, ("lshPlanes", dir),
-        s"$dir/embeddings.parquet")(
-        lshPlanesFor(Tables.embeddings(spark, dir).count()))
-    graft.engine.SessionMemo.atRest(spark, ("lshprj", dir, planes, dim),
+    * embeddings. The plane count is derived from COUNT(*) via
+    * [[lshPlanesFor]] (a STREAM appending to an existing index pins the
+    * count the index was built with instead, [[bucketizeVectors]]). The
+    * derived count is a [[graft.engine.SessionMemo]] entry: deriving it runs
+    * a COUNT(*) job, and every consumer of the at-rest index (each
+    * invocation) would otherwise pay that count just to NAME an index
+    * already on disk. */
+  def lshProjectionsPath(spark: SparkSession, dir: String): String = {
+    val planes = graft.engine.SessionMemo(spark, ("lshPlanes", dir),
+      s"$dir/embeddings.parquet")(lshPlanesFor(Tables.embeddings(spark, dir).count()))
+    graft.engine.SessionMemo.atRest(spark, ("lshprj", dir),
         s"$dir/embeddings.parquet") { p =>
-      lshProjectionsCompute(spark, dir, planes, dim)
+      bucketizeVectors(Tables.embeddings(spark, dir), planes)
         .write.mode("overwrite").parquet(p)
     }
   }
@@ -290,18 +283,12 @@ object Similarity {
     * information multi-probe needs. Served from the at-rest index
     * ([[lshProjectionsPath]]); same guard, same plane literals; the bucket is
     * derived FROM the projections so the two can never disagree. */
-  private def lshProjections(spark: SparkSession, dir: String, nPlanes: Int = 0,
-      dim: Int = DefaultDim): DataFrame =
-    graft.engine.Fs.readParquet(spark, lshProjectionsPath(spark, dir, nPlanes, dim))
-
-  /** The projection pass itself (the index BUILD — one corpus scan, pure
-    * codegen'd projection, no shuffle). */
-  private def lshProjectionsCompute(spark: SparkSession, dir: String,
-      nPlanes: Int, dim: Int): DataFrame =
-    bucketizeVectors(Tables.embeddings(spark, dir), nPlanes, dim)
+  private def lshProjections(spark: SparkSession, dir: String): DataFrame =
+    graft.engine.Fs.readParquet(spark, lshProjectionsPath(spark, dir))
 
   /** Bucketize ANY (vec_id, embedding: array<float>) frame with the SHARED
-    * plane literals — the index-build projection exposed on its own, because
+    * plane literals — the index-build projection (one corpus scan, pure
+    * codegen'd projection, no shuffle) exposed on its own, because
     * a streaming ingest (StreamsSpec) must hash an arriving micro-batch with
     * exactly the planes the at-rest index was built with, or its candidate
     * join is garbage. The plane count is EXPLICIT here (not the
@@ -309,8 +296,8 @@ object Similarity {
     * a stream appending to it must pin that frozen count — deriving from a
     * growing corpus mid-stream would silently re-bucket later waves.
     * Output: vec_id, v (double), nrm, prj, bucket. */
-  def bucketizeVectors(df: DataFrame, nPlanes: Int = 8,
-      dim: Int = DefaultDim): DataFrame = {
+  def bucketizeVectors(df: DataFrame, nPlanes: Int = 8): DataFrame = {
+    val dim = EmbeddingDim
     val base = withNorm(df, col("vec_id"))
     val prjArr = (0 until nPlanes).map { p =>
       s"aggregate(zip_with(v, ${planeLiteral(p, dim)}, (x, s) -> x * s), " +
@@ -527,7 +514,8 @@ object Similarity {
   /** IVF (inverted-file) ANN top-k — the second classic scale path beside
     * hyperplane LSH ([[annTopK]]), and the one real vector stores default to:
     * partition the corpus into Voronoi cells around coarse centroids, then
-    * search only the `nProbe` cells nearest each query.
+    * search only the 2 cells nearest each query (the first 20 vectors are
+    * the queries; top-3 neighbors each).
     *
     * Centroids are a content-addressed SAMPLE of the corpus itself
     * (`vec_id % mod == 0` — sampling data points as coarse centroids is
@@ -541,16 +529,15 @@ object Similarity {
     *     [[assignCells]]). At 100 TB this is the partitioning write — each
     *     cell is a parquet partition.
     *  2. probe selection: each query ranks the same broadcast centroid table,
-    *     keeps `nProbe` cells (nQueries × nCents rows — a window is fine at
+    *     keeps 2 cells (20 × nCents rows — a window is fine at
     *     that cardinality).
     *  3. search: queries equi-join the assignment on cell id — the scan
-    *     touches ~nProbe/nCells of the corpus, never all of it. Exact cosine +
+    *     touches ~2/nCells of the corpus, never all of it. Exact cosine +
     *     per-query top-k inside the probed cells only.
     *
     * Each vector lives in exactly one cell, so probing distinct cells can
     * never produce duplicate neighbors. */
-  def ivfTopK(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 20,
-      nProbe: Int = 2): DataFrame = {
+  def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
     val lits = centroidLits(all, spark)
     val cents = centroidFrame(spark, lits)
@@ -559,11 +546,11 @@ object Similarity {
         col("nrm").as("nn"), cellKey(col("v"), col("nrm"), typedlit(lits)).as("cell"))
     val byCos = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val probes = all.filter(col("vec_id") < nQueries)
+    val probes = all.filter(col("vec_id") < 20)
       .crossJoin(broadcast(cents))
       .withColumn("ccos", Native.dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
       .withColumn("crank", row_number().over(byCos))
-      .filter(col("crank") <= nProbe)
+      .filter(col("crank") <= 2)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("centroid_id").as("cell"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
@@ -571,7 +558,7 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos", cosQN)
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= 3)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cell"),
         round(col("cos"), 4).as("cos_sim"))
       .orderBy("query_id", "rank")
@@ -713,20 +700,19 @@ object Similarity {
 
   /** q192: incremental batch-vs-corpus EMBEDDING dedup — the vector twin of
     * [[graft.ext.Dedup.incrementalDedup]] (q85), the shape a streaming ingest
-    * actually needs: a small arriving batch (vec_id % mod == rem stands in
-    * for it) checked against the big at-rest corpus WITHOUT re-pairing the
-    * corpus against itself. Both sides read the at-rest LSH index
+    * actually needs: a small arriving batch ([[graft.engine.RelOps.inWave]]
+    * on vec_id stands in for it) checked against the big at-rest corpus
+    * WITHOUT re-pairing the corpus against itself. Both sides read the at-rest LSH index
     * ([[lshProjectionsPath]]); candidates are an equi-join on the bucket with
     * the BATCH side broadcast, so the corpus makes one hashed pass and is
     * never re-projected per batch. Output: one row per batch vector —
-    * candidate count at `threshold`, the lowest duplicate corpus id, and the
+    * candidate count at cosine ≥ 0.4, the lowest duplicate corpus id, and the
     * is_new verdict; batch vectors with an empty bucket neighborhood come
     * back via the left join, not dropped. */
-  def incrementalEmbeddingDedup(spark: SparkSession, dir: String,
-      threshold: Double = 0.4, mod: Int = 10, rem: Int = 7): DataFrame = {
+  def incrementalEmbeddingDedup(spark: SparkSession, dir: String): DataFrame = {
     val all = lshBuckets(spark, dir)
-    val isBatch = col("vec_id") % mod === rem
-    dedupVerdicts(all.filter(isBatch), all.filter(!isBatch), threshold)
+    val isBatch = graft.engine.RelOps.inWave(col("vec_id"))
+    dedupVerdicts(all.filter(isBatch), all.filter(!isBatch))
   }
 
   /** [[incrementalEmbeddingDedup]]'s verdict join over any two bucketed
@@ -734,15 +720,14 @@ object Similarity {
     * the STREAMING ingest form (StreamsSpec wires it inside foreachBatch
     * against a growing at-rest index). Batch side broadcasts; one hashed
     * corpus pass. */
-  def dedupVerdicts(arriving: DataFrame, corpus: DataFrame,
-      threshold: Double): DataFrame = {
+  def dedupVerdicts(arriving: DataFrame, corpus: DataFrame): DataFrame = {
     val batch = arriving
       .select(col("vec_id"), col("v").as("qv"), col("nrm").as("qn"), col("bucket"))
     val indexed = corpus
       .select(col("bucket"), col("vec_id").as("c_id"), col("v").as("nv"), col("nrm").as("nn"))
     val hits = broadcast(batch).join(indexed, Seq("bucket"))
       .withColumn("cos", cosQN)
-      .filter(col("cos") >= threshold)
+      .filter(col("cos") >= 0.4)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_dup_candidates"), min(col("c_id")).as("dup_of"))
     batch.select(col("vec_id"), col("bucket"))
@@ -758,35 +743,24 @@ object Similarity {
 
   /** Johnson-Lindenstrauss SIGN projection (q209) — the dimensionality
     * reduction a 100 TB vector corpus applies BEFORE the ANN stack: project
-    * each 64-dim embedding onto `nPlanes` ±1 sign vectors (Achlioptas 2003's
+    * each 64-dim embedding onto 16 ±1 sign vectors (Achlioptas 2003's
     * database-friendly JL variant — signs, not Gaussians, so the projection
     * is exact integer arithmetic on the [[KmScale]]-quantized vectors and
     * every engine agrees bit-for-bit).
     *
     * The sign matrix is md5-derived per (plane, dim) — deterministic and
     * SQL-reproducible — but computed ONCE driver-side and embedded as
-    * nPlanes literal arrays, so the per-row work is nPlanes codegen'd
+    * 16 literal arrays, so the per-row work is 16 codegen'd
     * integer dots ([[graft.functions.DotProduct]] over array<bigint>): zero
     * per-row hashing, no HOF
     * lambdas, no shuffle — a pure projection stage.
     *
     * Output carries the JL audit alongside the head of the projection:
-    * `ratio_ppm` = ‖proj‖²·10⁶ / (nPlanes·‖q‖²), whose concentration around
+    * `ratio_ppm` = ‖proj‖²·10⁶ / (16·‖q‖²), whose concentration around
     * 10⁶ (E[(s·x)²] = ‖x‖² per sign plane) is the distance-preservation
     * guarantee downstream ANN relies on. */
-  /** The md5-derived ±1 JL sign matrix entry for (plane k, dim d) — shared
-    * by [[jlProjection]] (q209) and [[jlRecall]] (q225) so the projection
-    * and its retrieval audit can never use different planes. */
-  private[ext] def jlSign(k: Int, d: Int): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"$k:$d".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    if (Integer.parseInt(hex.substring(0, 1), 16) % 2 == 0) 1L else -1L
-  }
-
-  def jlProjection(spark: SparkSession, dir: String,
-      nPlanes: Int = 16, dim: Int = 64): DataFrame = {
-    def sign(k: Int, d: Int): Long = jlSign(k, d)
+  def jlProjection(spark: SparkSession, dir: String): DataFrame = {
+    val (nPlanes, dim) = (JlPlanes, EmbeddingDim)
     val q = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(
         s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * ${KmScale}D) AS BIGINT))")
@@ -797,7 +771,7 @@ object Similarity {
         s"CASE WHEN size(q) = $dim THEN q ELSE raise_error('jlProjection: expected dim $dim, got ' || size(q)) END"))
     val projected = (0 until nPlanes).foldLeft(q) { (df, k) =>
       df.withColumn(s"p$k",
-        Native.dot(col("q"), array((0 until dim).map(d => lit(sign(k, d))): _*)))
+        Native.dot(col("q"), array((0 until dim).map(d => lit(jlSign(k, d))): _*)))
     }
     val norm2p = (0 until nPlanes).map(k => col(s"p$k") * col(s"p$k"))
       .reduce(_ + _)
@@ -814,8 +788,21 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** The JL projection's sign-plane count: 64 → 16 dims. */
+  private val JlPlanes = 16
+
+  /** The md5-derived ±1 JL sign matrix entry for (plane k, dim d) — shared
+    * by [[jlProjection]] (q209) and [[jlRecall]] (q225) so the projection
+    * and its retrieval audit can never use different planes. */
+  private[ext] def jlSign(k: Int, d: Int): Long = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = md.digest(s"$k:$d".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    if (Integer.parseInt(hex.substring(0, 1), 16) % 2 == 0) 1L else -1L
+  }
+
   /** JL retrieval-RECALL audit (q225) — the downstream half of q209's norm
-    * audit: does top-k retrieval in the 16-dim projected space return the
+    * audit: does top-10 retrieval in the 16-dim projected space return the
     * same neighbors as the full 64-dim space? Per query (vec_id < 20, the
     * q190 convention), exact top-k by integer dot product is computed in
     * BOTH spaces (full tie-break dot DESC, vec_id — the self-match ranks
@@ -834,11 +821,11 @@ object Similarity {
     * synthetic RANDOM corpus recall@10 sits near 0.2 — random embeddings
     * have near-uniform pairwise similarity, the regime where JL provably
     * cannot keep fine ranks at 4× reduction. That LOW number is the audit
-    * working: it says "raise nPlanes or skip the reduction for this
+    * working: it says "raise the plane count or skip the reduction for this
     * corpus", which is exactly the decision the operator exists to
     * inform (clustered real-model embeddings score far higher). */
-  def jlRecall(spark: SparkSession, dir: String, topK: Int = 10,
-      nPlanes: Int = 16, dim: Int = 64): DataFrame = {
+  def jlRecall(spark: SparkSession, dir: String): DataFrame = {
+    val (topK, nPlanes, dim) = (10, JlPlanes, EmbeddingDim)
     val qv = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(
         s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * ${KmScale}D) AS BIGINT))")
@@ -992,31 +979,27 @@ object Similarity {
     }
 
   /** q188: the final k-means round's per-(cell, dim) aggregate — cluster
-    * sizes and exact integer centroid components after `iters` Lloyd rounds.
+    * sizes and exact integer centroid components after 2 Lloyd rounds.
     * Empty cells (a seed that lost every member) drop out of the group-by in
     * both engines. */
-  def kmeansCentroidStats(spark: SparkSession, dir: String, iters: Int = 2,
-      seedMod: Int = 61): DataFrame =
-    graft.engine.Fs.readParquet(spark, s"${kmeansStatePath(spark, dir, iters, seedMod)}/stats")
+  def kmeansCentroidStats(spark: SparkSession, dir: String): DataFrame =
+    graft.engine.Fs.readParquet(spark, s"${kmeansStatePath(spark, dir)}/stats")
       .select(col("cell"), col("dim"), col("n_vecs"), col("comp"))
       .orderBy("cell", "dim")
 
   /** q189: SemDeDup (Abbas et al., arXiv:2303.09540) — semantic near-dup
     * pruning where the BLOCKING key is the learned k-means cell rather than a
     * random LSH bucket: within each cell, pairs whose cosine exceeds
-    * tauNum/tauDen mark the higher vec_id as a duplicate of the lower.
+    * 2/5 mark the higher vec_id as a duplicate of the lower.
     * Candidates are only ever generated within a cell (never all-pairs), the
     * cluster structure comes from [[kmeansStatePath]]'s at-rest state, and
     * the cosine test is EXACT integer arithmetic on the quantized vectors:
     * cos > t  ⟺  dab > 0 ∧ den²·dab² > num²·daa·dbb — DECIMAL(38,0) products
     * here (≤ 23 digits for dim ≤ 4096, |v| ≤ 2), HUGEINT in the oracle; both
     * exact, so the engines agree on every boundary. */
-  def semDedupPairs(spark: SparkSession, dir: String, iters: Int = 2,
-      seedMod: Int = 61, tauNum: Long = 2, tauDen: Long = 5,
-      maxCellSize: Long = 0L): DataFrame = {
-    val p = kmeansStatePath(spark, dir, iters, seedMod)
-    semDedupPairsFrom(graft.engine.Fs.readParquet(spark, s"$p/assign"), tauNum, tauDen, maxCellSize)
-  }
+  def semDedupPairs(spark: SparkSession, dir: String): DataFrame =
+    semDedupPairsFrom(
+      graft.engine.Fs.readParquet(spark, s"${kmeansStatePath(spark, dir)}/assign"), 2, 5)
 
   /** [[semDedupPairs]]'s pair machinery over any (vec_id, q, cell) frame —
     * also the planted-degenerate-cell test surface. `maxCellSize` is the
@@ -1051,16 +1034,16 @@ object Similarity {
   }
 
   /** q190: hard-negative mining for contrastive training — per query vector,
-    * the top-k most cosine-similar corpus vectors with a DIFFERENT label
+    * the top-5 most cosine-similar corpus vectors with a DIFFERENT label
+    * (queries: vec_id < 20)
     * (similar-but-wrong is exactly what a contrastive loss needs to see).
     * Same scale shape as [[cosineTopK]]: the tiny query set broadcasts
     * against one linear corpus pass; only candidate rows shuffle for the
     * per-query rank. A production variant swaps the exact pass for the
     * at-rest LSH index ([[lshProjectionsPath]]) exactly as q34 does. */
-  def hardNegatives(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 20): DataFrame = {
+  def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val all = withNorm(Tables.embeddings(spark, dir), col("vec_id"), col("label"))
-    val q = all.filter(col("vec_id") < nQueries)
+    val q = all.filter(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("label").as("query_label"),
         col("v").as("qv"), col("nrm").as("qn"))
     val corpus = all.select(col("vec_id").as("neighbor_id"),
@@ -1072,7 +1055,7 @@ object Similarity {
         col("neighbor_label") =!= col("query_label"))
       .withColumn("cos", cosQN)
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= 5)
       .select(col("query_id"), col("query_label"), col("rank"),
         col("neighbor_id"), col("neighbor_label"),
         round(col("cos"), 4).as("cos_sim"))
@@ -1087,7 +1070,7 @@ object Similarity {
     * data reports). Eval membership is content-addressed (`vec_id % evalMod
     * == 0`, the engine's deterministic-split convention); every train vector
     * reports its nearest eval item, the cosine, and the `contaminated` flag
-    * at `tau` — downstream release gates (q200's shape) consume the flag,
+    * at cosine ≥ 0.4 — downstream release gates (q200's shape) consume the flag,
     * auditors the margin.
     *
     * Scale shape — the bounded-seed pattern (same sanctioned driver-collect
@@ -1113,8 +1096,7 @@ object Similarity {
     *
     * A loud `require` rejects an empty eval sample (a benchmark-less screen
     * would silently pass everything — same guard contract as the IVF seeds). */
-  def semanticDecontaminate(spark: SparkSession, dir: String,
-      tau: Double = 0.4): DataFrame = {
+  def semanticDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val bench = evalBenchmark(spark, dir)
     // the eval members themselves are excluded HERE, not inside the screen:
     // this batch form screens the same corpus the benchmark was sampled
@@ -1123,8 +1105,8 @@ object Similarity {
     // benchmark — an arriving vector whose id merely aliases the
     // benchmark's membership mod must still be screened
     // ([[graft.streaming.Streams.deconStream]] screens every wave row).
-    deconScreen(vecs(spark, dir).filter(col("vec_id") % bench.evalMod =!= 0),
-      bench, tau).orderBy("vec_id")
+    deconScreen(vecs(spark, dir).filter(col("vec_id") % bench.evalMod =!= 0), bench)
+      .orderBy("vec_id")
   }
 
   /** The driver-collected eval benchmark ready for screening: the eval
@@ -1159,13 +1141,12 @@ object Similarity {
     * caller, so a stream screening a foreign corpus can never silently skip
     * an arriving vector whose id aliases the benchmark's membership mod.
     * Unordered; the batch catalog entry adds the output sort. */
-  def deconScreen(vframe: DataFrame, bench: EvalBenchmark,
-      tau: Double = 0.4): DataFrame =
+  def deconScreen(vframe: DataFrame, bench: EvalBenchmark): DataFrame =
     vframe
       .withColumn("nearest_eval_id", cellKey(col("v"), col("nrm"), bench.evals))
       .join(broadcast(bench.evalDim), col("nearest_eval_id") === col("eval_id"))
       .withColumn("cos", Native.dot(col("v"), col("ev")) / (col("nrm") * col("en")))
       .select(col("vec_id"), col("nearest_eval_id"),
         round(col("cos"), 4).as("cos_sim"),
-        (col("cos") >= tau).as("contaminated"))
+        (col("cos") >= 0.4).as("contaminated"))
 }

@@ -178,17 +178,16 @@ object TextStats {
   /** Token co-occurrence matrix (q119): document-frequency counts for pairs
     * of top-vocabulary tokens appearing in the same document — the input
     * statistic for PMI/embedding-style association measures. The self-join
-    * is restricted to the BROADCAST top-`vocabSize` vocabulary BEFORE
-    * pairing, so each document contributes at most C(vocabSize, 2) pairs and
+    * is restricted to the BROADCAST top-50 vocabulary BEFORE
+    * pairing, so each document contributes at most C(50, 2) pairs and
     * the output is bounded by vocab² regardless of corpus size — the join on
-    * doc_id can never blow up on a long document. Top-N by a full tie-break
+    * doc_id can never blow up on a long document. Top-20 by a full tie-break
     * via TakeOrderedAndProject. */
-  def tokenCooccurrence(spark: SparkSession, dir: String, vocabSize: Int = 50,
-      topN: Int = 20): DataFrame = {
+  def tokenCooccurrence(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-      .orderBy(col("df").desc, col("tok")).limit(vocabSize).select("tok")
+      .orderBy(col("df").desc, col("tok")).limit(50).select("tok")
     val vt = toks.join(broadcast(vocab), Seq("tok"))
     vt.select(col("doc_id"), col("tok").as("tok_a"))
       .join(vt.select(col("doc_id"), col("tok").as("tok_b")), Seq("doc_id"))
@@ -196,7 +195,7 @@ object TextStats {
       .groupBy("tok_a", "tok_b")
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("n_docs").desc, col("tok_a"), col("tok_b"))
-      .limit(topN)
+      .limit(20)
   }
 
   /** Corpus snapshot diff (q117): added / removed / changed / unchanged
@@ -228,18 +227,18 @@ object TextStats {
       .orderBy("status")
   }
 
-  /** Per-group top-k (q118): the k longest documents per language, ranked by
-    * a full tie-break. `row_number <= k` over a per-group window gets Spark's
-    * WindowGroupLimit pushdown — each partition keeps only k rows per group
+  /** Per-group top-k (q118): the 3 longest documents per language, ranked by
+    * a full tie-break. `row_number <= 3` over a per-group window gets Spark's
+    * WindowGroupLimit pushdown — each partition keeps only 3 rows per group
     * BEFORE the shuffle, so the window never sees the full corpus
     * (PlanSpec asserts the pushdown). */
-  def topKPerLang(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def topKPerLang(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("n_chars").desc, col("doc_id"))
     Tables.documents(spark, dir)
       .select(col("lang"), col("doc_id"), col("n_chars"))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= 3)
       .orderBy("lang", "rk")
   }
 
@@ -308,7 +307,7 @@ object TextStats {
       .orderBy("doc_id")
   }
 
-  /** Corpus boilerplate share (q130): 3-token shingles present in >= `dfPpm`
+  /** Corpus boilerplate share (q130): 3-token shingles present in >= 1%
     * of documents are boilerplate (disclaimers, navigation chrome, license
     * headers); each document reports what share of its distinct shingles is
     * boilerplate — the corpus-level form of C4's repeated-line removal, and
@@ -317,8 +316,7 @@ object TextStats {
     * doc frequency; the boilerplate set is tiny by construction (high-df
     * tail) so the per-doc re-join broadcasts; threshold compared in exact
     * integers against a broadcast 1-row corpus count — no driver collect. */
-  def boilerplateShare(spark: SparkSession, dir: String,
-      dfPpm: Long = 10000L): DataFrame = {
+  def boilerplateShare(spark: SparkSession, dir: String): DataFrame = {
     // Round 11 (VERDICT r10 #4, the q103 treatment): the df aggregate — the
     // only corpus-mass exchange here — groups on the 64-bit in-row shingle
     // hash instead of the raw string, and the boilerplate set broadcasts as
@@ -337,7 +335,7 @@ object TextStats {
     val nDocs = Tables.documents(spark, dir).agg(count(lit(1)).as("n_total"))
     val boiler = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
-      .filter(col("df") * lit(1000000L) >= lit(dfPpm) * col("n_total"))
+      .filter(col("df") * lit(1000000L) >= lit(10000L) * col("n_total"))
       .select(col("sh"), lit(1L).as("is_boiler"))
     sh.join(broadcast(boiler), Seq("sh"), "left")
       .groupBy("doc_id")
@@ -356,12 +354,13 @@ object TextStats {
       .orderBy("bucket_100ch")
 
   /** Winnowing fingerprint sketch (rolling-hash document fingerprinting):
-    * hash every positional 3-word shingle, slide a w-shingle window, keep the
+    * hash every positional 3-word shingle, slide a w = 4 shingle window, keep the
     * window minima — the classic plagiarism/near-dup sketch (guarantees any
     * shared run of >= w+2 words produces a shared fingerprint). Output is the
     * sketch summary per doc (distinct-minima count + checksum), integers only
     * so the oracle hash-matches. */
-  def winnowingFingerprint(spark: SparkSession, dir: String, w: Int = 4): DataFrame = {
+  def winnowingFingerprint(spark: SparkSession, dir: String): DataFrame = {
+    val w = 4
     // IN-ROW sliding minima (r14 optimization pass — the q63/q150 round-10
     // discipline applied here): a doc's window minima depend only on the
     // doc's OWN shingle-hash array, so the previous posexplode + doc-keyed
@@ -508,9 +507,9 @@ object TextStats {
     * greedily in doc_id order per source stream — the batch form of the
     * pack-to-context-length step before tokenized examples are written. A doc
     * lands in the chunk where it STARTS (cumulative tokens before it /
-    * budget). One window partitioned by source — never a global sort — so the
-    * packing parallelizes across streams at any scale. */
-  def sequencePack(spark: SparkSession, dir: String, budgetTokens: Int = 2048): DataFrame = {
+    * 2048-token budget). One window partitioned by source — never a global
+    * sort — so the packing parallelizes across streams at any scale. */
+  def sequencePack(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -521,7 +520,7 @@ object TextStats {
       .select(
         col("doc_id"), col("source"), col("n_tokens"),
         (col("cum_tokens") - col("n_tokens")).as("tokens_before"),
-        ((col("cum_tokens") - col("n_tokens")) / budgetTokens).cast("long").as("chunk_id"))
+        ((col("cum_tokens") - col("n_tokens")) / 2048).cast("long").as("chunk_id"))
       .orderBy("doc_id")
   }
 
@@ -551,8 +550,8 @@ object TextStats {
     * BPE trainer loops this: the driver holds the (tiny) merge table and
     * re-counts after each merge; the pair COUNT is the only step that
     * touches the corpus, and it is one explode + one map-side-combinable
-    * aggregate + a top-N (TakeOrderedAndProject) here. */
-  def bpePairs(spark: SparkSession, dir: String, topN: Int = 50): DataFrame =
+    * aggregate + a top-50 (TakeOrderedAndProject) here. */
+  def bpePairs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       // explicit whitespace class: Java \s and RE2 \s differ on \x0B
       .select(explode(split(lower(col("text")), "[ \\t\\n\\f\\r\\x0B]+")).as("w"))
@@ -562,7 +561,7 @@ object TextStats {
       .groupBy(col("pair"))
       .agg(count(lit(1)).as("n_pair"))
       .orderBy(col("n_pair").desc, col("pair"))
-      .limit(topN)
+      .limit(50)
 
   /** Content-addressed 100-bucket hash of an id — THE split-bucket primitive;
     * every split derivation (here, [[corpusExport]],
@@ -596,11 +595,10 @@ object TextStats {
     * consumes, in one declarative plan: C4-style quality gates
     * ([[qualityScore]] thresholds) → content-addressed train/val/test split
     * ([[splitAssign]] bands) → token-budget sequence packing
-    * ([[sequencePack]]) per (split, source) stream. Output: one manifest row
+    * ([[sequencePack]], 2048 tokens) per (split, source) stream. Output: one manifest row
     * per surviving doc with its split and chunk assignment. Single window
     * partitioned by (split, source); everything upstream is a linear scan. */
-  def corpusExport(spark: SparkSession, dir: String,
-      budgetTokens: Int = 2048): DataFrame = {
+  def corpusExport(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val gated = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"),
@@ -618,13 +616,13 @@ object TextStats {
     withSplit
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       .select(col("doc_id"), col("split"), col("source"), col("n_tokens"),
-        ((col("cum_tokens") - col("n_tokens")) / budgetTokens).cast("long").as("chunk_id"))
+        ((col("cum_tokens") - col("n_tokens")) / 2048).cast("long").as("chunk_id"))
       .orderBy("doc_id")
   }
 
   /** Bloom-filter benchmark decontamination — the constant-memory scale path
     * beside the exact shingle join of [[decontaminate]]: benchmark shingles
-    * set `kHashes` bit positions in an `mBits`-bit filter; a corpus shingle is
+    * set 3 bit positions in a 65536-bit filter; a corpus shingle is
     * bloom-POSITIVE iff all of its positions are set. At 100 TB the exact join
     * shuffles the full corpus shingle stream against the benchmark set; the
     * bloom form reduces the benchmark side to a bitmap every executor holds
@@ -635,7 +633,7 @@ object TextStats {
     * false negatives are impossible.
     *
     * Hash positions are md5-derived (position j of shingle s =
-    * int(md5("j:" || s)[0:7]) mod mBits), so the DuckDB oracle reproduces the
+    * int(md5("j:" || s)[0:7]) mod 65536), so the DuckDB oracle reproduces the
     * filter bit-for-bit — the bloom decision itself is deterministic, not just
     * statistically characterized.
     *
@@ -644,11 +642,10 @@ object TextStats {
     * the benchmark-side bitmap collect ([[bloomBitmap]]). Callers that only
     * want the plan (plan dumps, Profile phase timings) pay that job on first
     * construction; later constructions reuse the memoized broadcast. */
-  def bloomDecontaminate(spark: SparkSession, dir: String, mBits: Int = 65536,
-      kHashes: Int = 3): DataFrame = {
+  def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val mod = benchModFor(spark, dir)
-    val bc = bloomBitmap(spark, dir, mBits, kHashes)
-    val allSet = shinglePositions(kHashes, mBits)
+    val bc = bloomBitmap(spark, dir, 65536, 3)
+    val allSet = shinglePositions(3, 65536)
       .map(Native.bitmapContains(_, bc)).reduce(_ && _)
     bloomShingles(spark, dir).filter(col("doc_id") % mod =!= 0)
       .groupBy(col("doc_id"))
@@ -672,7 +669,7 @@ object TextStats {
       Native.md5Prefix(concat(lit(s"$j:"), col("sh")), 7) % mBits)
 
   /** The benchmark side of [[bloomDecontaminate]], a [[graft.engine.SessionMemo]]
-    * entry: an EXACT `mBits`-bit bitmap (8 KB at the default, whatever the
+    * entry: an EXACT `mBits`-bit bitmap (8 KB at q74's 65536, whatever the
     * corpus size) of the positions of every shingle in the
     * `doc_id % benchModFor == 0` slice, broadcast. Only that slice is read,
     * so a corpus-side document never changes its bytes. */
@@ -764,15 +761,14 @@ object TextStats {
     * (c(w1)·c(w2)) — is computed instead of its log so the score stays exact
     * integer ppm (monotone in PMI, so the ranking is identical); the triple
     * product runs in DECIMAL(38,0) (HUGEINT on the oracle side). A minimum
-    * pair count keeps rare-pair noise (the classic PMI failure mode) out.
+    * pair count of 5 keeps rare-pair noise (the classic PMI failure mode) out.
     *
     * Scale shape: bigrams are a pure array projection + explode (same shape
     * as [[bigramLmScore]]); unigram counts join the bigram-count table on
     * each endpoint — vocabulary-sized equi-joins the planner broadcasts when
     * the vocab fits and SMJs when it doesn't; the total is a broadcast
-    * scalar; the final top-N is orderBy().limit() → TakeOrderedAndProject. */
-  def pmiCollocations(spark: SparkSession, dir: String,
-      minCount: Long = 5, topN: Int = 25): DataFrame = {
+    * scalar; the final top-25 is orderBy().limit() → TakeOrderedAndProject. */
+  def pmiCollocations(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val bg = docs
       .select(split(col("text"), " ").as("words"))
@@ -785,7 +781,7 @@ object TextStats {
     val uni = docs.select(explode(split(col("text"), " ")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
     val bc = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_xy"))
-      .filter(col("c_xy") >= minCount)
+      .filter(col("c_xy") >= 5L)
     val total = bg.agg(count(lit(1)).as("n"))
     bc
       .join(uni.select(col("w").as("w1"), col("cu").as("cu1")), Seq("w1"))
@@ -795,7 +791,7 @@ object TextStats {
         expr("CAST(CAST(n AS DECIMAL(38,0)) * c_xy * 1000000 div " +
           "(CAST(cu1 AS DECIMAL(38,0)) * cu2) AS BIGINT)").as("pmi_ratio_ppm"))
       .orderBy(col("pmi_ratio_ppm").desc, col("w1"), col("w2"))
-      .limit(topN)
+      .limit(25)
   }
 
   /** Per-source length-outlier detection with EXACT integer arithmetic: doc x
@@ -826,21 +822,15 @@ object TextStats {
 
   /** PII / dictionary scrub — the redaction pass a training corpus takes
     * before release: e-mail addresses and long digit runs are masked by
-    * pattern, a term blocklist by word boundary; counts are reported per doc
+    * pattern, the blocklist terms "customer" and "stream" by word boundary;
+    * counts are reported per doc
     * so downstream can filter "heavily redacted" documents. Pure regexp
     * column expressions (codegen'd, linear scan, no shuffle until the final
-    * orderBy, which exists only for oracle determinism).
-    *
-    * Blocklist terms are treated as LITERALS (each is `Pattern.quote`d before
-    * the alternation is built) — a term like "c++" or "a.b" must not corrupt
-    * the pattern or match as regex. The Catalog oracle covers only the
-    * default blocklist; a caller-supplied list is engine-side behavior. */
-  def piiRedact(spark: SparkSession, dir: String,
-      blocklist: Seq[String] = Seq("customer", "stream")): DataFrame = {
+    * orderBy, which exists only for oracle determinism). */
+  def piiRedact(spark: SparkSession, dir: String): DataFrame = {
     val emailPat = "(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
     val digitPat = "\\d{4,}"
-    val blockPat = blocklist.map(java.util.regex.Pattern.quote)
-      .mkString("\\b(", "|", ")\\b")
+    val blockPat = "\\b(customer|stream)\\b"
     val redacted =
       regexp_replace(
         regexp_replace(
@@ -913,7 +903,8 @@ object TextStats {
 
   /** Largest-remainder apportionment of a sampling budget across sources —
     * the data-mixture step of corpus assembly: each source gets
-    * floor(budget · tokens_s / total) plus one of the `budget − Σfloor`
+    * floor(budget · tokens_s / total) (a budget of 10⁶) plus one of the
+    * `budget − Σfloor`
     * leftovers, awarded by descending fractional remainder (ties to the
     * lexically first source). Pure integer arithmetic, so the allocation is
     * exact and bit-stable (at 100 TB token counts, the products belong in
@@ -921,8 +912,8 @@ object TextStats {
     *
     * The windows run over the per-source rollup — a dim-sized frame (one row
     * per source), never the corpus. */
-  def mixtureAllocation(spark: SparkSession, dir: String,
-      budget: Long = 1000000L): DataFrame = {
+  def mixtureAllocation(spark: SparkSession, dir: String): DataFrame = {
+    val budget = 1000000L
     val tok = Tables.documents(spark, dir)
       .select(col("source"), size(split(col("text"), " ")).cast("long").as("n"))
       .groupBy(col("source"))
@@ -988,15 +979,14 @@ object TextStats {
       .orderBy("doc_id")
   }
 
-  /** Overlapping sliding-window chunking (size `chunkSize` tokens, stride
-    * `stride`) — how long documents become training sequences with context
-    * overlap, vs [[sequencePack]]'s whole-doc packing. Chunk i covers tokens
-    * [i*stride+1, i*stride+chunkSize]; the last chunk may be short. Pure
-    * per-row explode (no shuffle until the determinism orderBy); output
+  /** Overlapping sliding-window chunking (64 tokens, stride 32) — how long
+    * documents become training sequences with context overlap, vs
+    * [[sequencePack]]'s whole-doc packing. Chunk i covers tokens
+    * [i*32+1, i*32+64]; the last chunk may be short. Pure per-row explode
+    * (no shuffle until the determinism orderBy); output
     * carries the chunk md5 so the chunk table is content-addressable. */
-  def chunkOverlap(spark: SparkSession, dir: String, chunkSize: Int = 64,
-      stride: Int = 32): DataFrame =
-    chunkDocs(Tables.documents(spark, dir), chunkSize, stride)
+  def chunkOverlap(spark: SparkSession, dir: String): DataFrame =
+    chunkDocs(Tables.documents(spark, dir))
 
   /** Chunk starts stop once a start no longer extends past the previous
     * chunk's end — the last start is stride·⌈(len − chunkSize)/stride⌉, so a
@@ -1004,7 +994,8 @@ object TextStats {
     * tail would re-inject exact duplicate token spans into the "clean"
     * corpus). The Spark `div` / DuckDB `//` negative-rounding difference is
     * neutralized by the greatest(0, _) clamp. */
-  private def chunkDocs(docs: DataFrame, chunkSize: Int, stride: Int): DataFrame =
+  private def chunkDocs(docs: DataFrame): DataFrame = {
+    val (chunkSize, stride) = (64, 32)
     docs
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), posexplode(expr(
@@ -1015,33 +1006,31 @@ object TextStats {
         size(col("chunk")).cast("int").as("n_chunk_tokens"),
         md5(concat_ws(" ", col("chunk"))).as("chunk_md5"))
       .orderBy("doc_id", "chunk_idx")
+  }
 
   /** The corpus-v2 capstone: near-dup SURVIVORS ([[graft.ext.Dedup
     * .dedupSurvivors]]: corpus minus non-canonical LSH-cluster members)
     * intersected with the C4-style quality gate ([[qualityScore]]), then cut
-    * into overlapping training chunks ([[chunkOverlap]]) — dedup → filter →
+    * into overlapping 64-token training chunks ([[chunkOverlap]]) — dedup → filter →
     * shape, the last mile of a corpus build, in one declarative composition.
     * Each stage keeps its own scale shape (bucketed LSH + iterative
     * components, linear gate scan, per-row explode); the intersection is a
     * left-semi join on doc_id. */
-  def cleanCorpusChunks(spark: SparkSession, dir: String, chunkSize: Int = 64,
-      stride: Int = 32): DataFrame = {
+  def cleanCorpusChunks(spark: SparkSession, dir: String): DataFrame = {
     val survivors = graft.ext.Dedup.dedupSurvivors(spark, dir)
       .select(col("doc_id"))
     val clean = qualityScore(spark, dir)
       .filter(col("passes_quality"))
       .select(col("doc_id"))
       .join(survivors, Seq("doc_id"), "left_semi")
-    chunkDocs(
-      Tables.documents(spark, dir).join(clean, Seq("doc_id"), "left_semi"),
-      chunkSize, stride)
+    chunkDocs(Tables.documents(spark, dir).join(clean, Seq("doc_id"), "left_semi"))
   }
 
   /** Fixed retrieval query terms shared by [[bm25Retrieval]] and the Catalog
     * oracle SQL (single source — the two engines must score the same query). */
   val Bm25QueryTerms: Seq[String] = Seq("spark", "hash", "join", "vector", "stream")
 
-  /** BM25 top-k document retrieval (Okapi, k1 = 1.2, b = 0.75) for the fixed
+  /** BM25 top-15 document retrieval (Okapi, k1 = 1.2, b = 0.75) for the fixed
     * query [[Bm25QueryTerms]] — the keyword-retrieval side of a training-data
     * curation stack (the lexical complement of the embedding ANN path in
     * [[Similarity]]).
@@ -1051,19 +1040,19 @@ object TextStats {
     * the shuffle carries only matching tokens, an inverted-index posting
     * probe, not the corpus. Corpus stats (N, avgdl) are two scalar aggregates
     * broadcast via a 1-row cross join; document lengths join on doc_id; the
-    * final top-k is `orderBy().limit()` (TakeOrderedAndProject — only k rows
-    * per partition cross the shuffle).
+    * final top-15 is `orderBy().limit()` (TakeOrderedAndProject — only 15
+    * rows per partition cross the shuffle).
     *
     * Determinism: scores are IEEE doubles built from exact integer (tf, df,
     * dl) inputs with the same operation tree the oracle SQL spells, rounded
     * to 6 dp at the boundary (same convention as the tf-idf query). Ranking
     * ties break on doc_id. */
-  def bm25Retrieval(spark: SparkSession, dir: String, k: Int = 15): DataFrame = {
+  def bm25Retrieval(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val dl = docs.select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
     bm25RawScores(docs, dl)
       .orderBy(col("raw_score").desc, col("doc_id"))
-      .limit(k)
+      .limit(15)
       .select(col("doc_id"), col("n_terms_matched"),
         round(col("raw_score"), 6).as("score"))
   }
@@ -1128,14 +1117,13 @@ object TextStats {
     *
     * Scale shape: both signals are corpus-linear with broadcast-side joins
     * (q139's shape; the phrase count is one split projection); each signal
-    * is trimmed to its top-`perSignal` via orderBy().limit() —
-    * TakeOrderedAndProject, only perSignal rows per partition cross the
+    * is trimmed to its top-100 via orderBy().limit() —
+    * TakeOrderedAndProject, only 100 rows per partition cross the
     * shuffle — and the rank window then runs over that bounded frame (never
     * a corpus-wide single-partition rank). Fusing per-signal top-N lists is
     * also RRF's production semantics. The fusion itself is a full-outer
-    * join of two ≤ perSignal-row frames. */
-  def rrfFusion(spark: SparkSession, dir: String, k: Int = 10,
-      perSignal: Int = 100): DataFrame = {
+    * join of two ≤ 100-row frames; the fused top-10 is returned. */
+  def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // one shared DEFINITION of the per-doc columns (length for BM25
     // normalization, phrase occurrences for proximity); each consumer still
@@ -1148,14 +1136,14 @@ object TextStats {
         .cast("long").as("phrase_count"))
     val bm25 = bm25RawScores(docs, dlPhrase)
       .orderBy(col("raw_score").desc, col("doc_id"))
-      .limit(perSignal)
+      .limit(100)
       .withColumn("bm25_rank",
         row_number().over(Window.orderBy(col("raw_score").desc, col("doc_id"))).cast("long"))
       .select(col("doc_id"), col("bm25_rank"))
     val phrase = dlPhrase
       .filter(col("phrase_count") > 0)
       .orderBy(col("phrase_count").desc, col("doc_id"))
-      .limit(perSignal)
+      .limit(100)
       .withColumn("phrase_rank",
         row_number().over(Window.orderBy(col("phrase_count").desc, col("doc_id"))).cast("long"))
       .select(col("doc_id"), col("phrase_rank"))
@@ -1166,7 +1154,7 @@ object TextStats {
         (coalesce(expr("1000000 div (60 + bm25_rank)"), lit(0L)) +
           coalesce(expr("1000000 div (60 + phrase_rank)"), lit(0L))).as("rrf_score"))
       .orderBy(col("rrf_score").desc, col("doc_id"))
-      .limit(k)
+      .limit(10)
   }
 
   /** Deterministic count-min sketch over the token stream (d = 4 hash rows ×
@@ -1181,7 +1169,7 @@ object TextStats {
     * top-20 terms' bucket coordinates against it. Everything is exact integer
     * arithmetic: the "estimate" is deterministic because the hash family is
     * (md5 of row:term), not a seeded RNG. */
-  def countMinSketch(spark: SparkSession, dir: String, topN: Int = 20): DataFrame = {
+  def countMinSketch(spark: SparkSession, dir: String): DataFrame = {
     val rows = 4
     val width = 512
     val counts = Tables.documents(spark, dir)
@@ -1207,7 +1195,7 @@ object TextStats {
       .select(col("term"), col("exact_count"), col("cms_estimate"),
         expr("CAST((cms_estimate - exact_count) * 1000000 div exact_count AS BIGINT)").as("over_ppm"))
       .orderBy(col("exact_count").desc, col("term"))
-      .limit(topN)
+      .limit(20)
   }
 
   /** Rank-ensemble quality score: three integer signals — document length,
@@ -1423,7 +1411,7 @@ object TextStats {
     * rest of the corpus. Each bigram carries weight
     * ppm_target(bg) − ppm_rest(bg) (occurrence shares in each slice's
     * bigram mass, integer ppm, absent → 0); a document's importance is the
-    * sum over its bigrams, and the top-k by weight are the docs DSIR-style
+    * sum over its bigrams, and the top-100 by weight are the docs DSIR-style
     * selection would keep. Exact integers end to end — the log-ratio form
     * the paper uses needs floats; the linear difference ranks by the same
     * "looks like the target" signal and is bit-stable across engines.
@@ -1431,8 +1419,8 @@ object TextStats {
     * Scale shape: two map-side-combinable aggregates over the exploded
     * bigrams (slice masses ride along as conditional sums in ONE pass),
     * a broadcast of the two scalar masses, one shuffle to re-join bigram
-    * weights to documents, and a TakeOrdered top-k. */
-  def importanceWeights(spark: SparkSession, dir: String, k: Int = 100): DataFrame = {
+    * weights to documents, and a TakeOrdered top-100. */
+  def importanceWeights(spark: SparkSession, dir: String): DataFrame = {
     // The bigram explode previously fed THREE lineage paths (per-bigram
     // counts, the mass scalars, the doc re-join) and was materialized to
     // parquet per call. With the masses folded into the weights plan (r14,
@@ -1484,7 +1472,7 @@ object TextStats {
       .groupBy(col("doc_id"), col("lang"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("w_ppm")).as("importance_ppm"))
       .orderBy(col("importance_ppm").desc, col("doc_id").asc)
-      .limit(k)
+      .limit(100)
   }
 
   /** q200: per-source RELEASE GATE — the datasheet verdict a training-data
@@ -1566,7 +1554,8 @@ object TextStats {
     * (ties → lexicographically smallest pair, identical in both engines),
     * and REWRITES the dictionary by the literal replace "x y" → "xy" —
     * merged symbols then participate in later rounds' pairs, which is what
-    * makes BPE BPE. Output: one row per merge (merge_idx, pair, freq).
+    * makes BPE BPE. Output: one row per merge (merge_idx, pair, freq) of
+    * 3 rounds.
     *
     * Cross-engine exactness: symbols are plain strings, counts are integers,
     * and literal left-to-right non-overlapping replace behaves identically
@@ -1576,9 +1565,9 @@ object TextStats {
     * driver argmax seed (the A1 pattern) + one projection rewrite,
     * materialized per round ([[graft.engine.Fs.overwriteVersioned]]) so
     * round k never re-derives rounds 1..k−1. */
-  def bpeMerges(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
+  def bpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.engine.Fs.readParquet(spark, s"${bpeStatePath(spark, dir, rounds)}/merges")
+    graft.engine.Fs.readParquet(spark, s"${bpeStatePath(spark, dir)}/merges")
       .select(col("merge_idx").cast("int").as("merge_idx"), col("pair"), col("freq"))
       .orderBy("merge_idx")
   }
@@ -1588,17 +1577,17 @@ object TextStats {
     * while machine-generated/templated corpora flatten (s → 0) or collapse
     * to a few tokens (s ≫ 1). The fit is log-log OLS made ENGINE-EXACT by
     * taking both logs as integer bit lengths (`length(bin(v))` = ⌊log₂ v⌋+1
-    * — identical in both engines) over the top-`topV` terms, with the full
+    * — identical in both engines) over the top-1024 terms, with the full
     * integer-moment slope formula and sign-aware division (the ols2
     * discipline). Restricting to the head keeps the rank window bounded at
-    * `topV` rows (the q67 vocabulary pattern) — the head is where Zipf is
+    * 1024 rows (the q67 vocabulary pattern) — the head is where Zipf is
     * measured anyway; the corpus-sized work is one term-count aggregate. */
-  def zipfSlope(spark: SparkSession, dir: String, topV: Int = 1024): DataFrame = {
+  def zipfSlope(spark: SparkSession, dir: String): DataFrame = {
     val counts = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("term"))
       .filter(length(col("term")) > 0)
       .groupBy(col("term")).agg(count(lit(1)).as("c"))
-    val top = counts.orderBy(col("c").desc, col("term")).limit(topV)
+    val top = counts.orderBy(col("c").desc, col("term")).limit(1024)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("c").desc, col("term"))
     val pts = top.withColumn("r", row_number().over(w))
@@ -1724,7 +1713,8 @@ object TextStats {
 
   /** Incremental sequence packing (q232) — the ingest-wave form of
     * [[sequencePacking]], same append semantics a real packer has: the
-    * at-rest corpus (doc_id % mod ≠ rem) is already packed, its manifest
+    * at-rest corpus (outside [[graft.engine.RelOps.inWave]]) is already
+    * packed, its manifest
     * immutable; an arriving wave's docs CONTINUE the token stream — new
     * sequences start at the corpus's total token offset, never repacking
     * or even rescanning the corpus (the total is a 1-row at-rest seed, a
@@ -1736,12 +1726,12 @@ object TextStats {
     *
     * Per-wave cost: one cumsum over the wave (chunked parallel-prefix) +
     * arithmetic — linear in the wave, not the corpus. */
-  def incrementalPacking(spark: SparkSession, dir: String, seqLen: Int = 256,
-      mod: Int = 10, rem: Int = 7): DataFrame = {
-    val base = graft.engine.SessionMemo.atRest(spark, ("packoff", dir, seqLen, mod, rem),
+  def incrementalPacking(spark: SparkSession, dir: String, seqLen: Int = 256): DataFrame = {
+    val isWave = graft.engine.RelOps.inWave(col("doc_id"))
+    val base = graft.engine.SessionMemo.atRest(spark, ("packoff", dir, seqLen),
         s"$dir/documents.parquet") { p =>
       Tables.documents(spark, dir)
-        .filter(!(col("doc_id") % mod === rem))
+        .filter(!isWave)
         .agg(coalesce(sum(size(split(col("text"), " ")).cast("long")), lit(0L))
           .as("corpus_tokens"))
         .write.mode("overwrite").parquet(p)
@@ -1750,7 +1740,7 @@ object TextStats {
     // sealed-shard alignment: the wave starts at the next sequence boundary
     val offset = ((corpusTokens + seqLen - 1) / seqLen) * seqLen
     val wave = Tables.documents(spark, dir)
-      .filter(col("doc_id") % mod === rem)
+      .filter(isWave)
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n"))
     packDocs(wave, offset, seqLen)
   }
@@ -1767,8 +1757,7 @@ object TextStats {
     * no shuffle, no window function): the ideal 100 TB shape, a pure scan.
     * `sequence(1, n-1)` is guarded for n < 2 (Spark's sequence DESCENDS when
     * hi < lo). */
-  def codeSwitchRate(spark: SparkSession, dir: String,
-      windowTokens: Int = 20): DataFrame = {
+  def codeSwitchRate(spark: SparkSession, dir: String): DataFrame = {
     def cnt(set: Seq[String]): String = {
       val s = set.map(w => s"'$w'").mkString("(", ", ", ")")
       s"size(filter(win, x -> x IN $s))"
@@ -1783,11 +1772,11 @@ object TextStats {
          |     ELSE 'unknown' END""".stripMargin
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .filter(size(col("words")) >= windowTokens)
+      .filter(size(col("words")) >= 20)
       .withColumn("langs", expr(
         s"""transform(
-           |  transform(sequence(0, size(words) div $windowTokens - 1),
-           |    i -> slice(words, i * $windowTokens + 1, $windowTokens)),
+           |  transform(sequence(0, size(words) div 20 - 1),
+           |    i -> slice(words, i * 20 + 1, 20)),
            |  win -> $classify)""".stripMargin))
       .select(
         col("doc_id"),
@@ -1813,8 +1802,8 @@ object TextStats {
     * counts. The dictionary side is word-TYPES (corpus-size-independent, the
     * broadcast side at scale); the corpus side is one word-count aggregate.
     * Integer ppm end to end. */
-  def bpeFertility(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val p = bpeStatePath(spark, dir, rounds)
+  def bpeFertility(spark: SparkSession, dir: String): DataFrame = {
+    val p = bpeStatePath(spark, dir)
     val lastRound = graft.engine.Fs.readParquet(spark, s"$p/merges")
       .agg(coalesce(max(col("merge_idx")), lit(0)).cast("int")).head().getInt(0)
     val dict = graft.engine.Fs.readParquet(spark, s"$p/w$lastRound")
@@ -1836,15 +1825,15 @@ object TextStats {
       .orderBy("lang")
   }
 
-  /** The BPE training state at rest, built ONCE per (documents snapshot,
-    * rounds) per session ([[graft.engine.SessionMemo.atRest]] — bench passes
+  /** The BPE training state at rest (3 rounds), built ONCE per documents
+    * snapshot per session ([[graft.engine.SessionMemo.atRest]] — bench passes
     * reread instead of retraining): `w0..wN/` per-round dictionaries,
     * `merges/` the merge table. The training loop itself is documented at [[bpeMerges]]. */
-  def bpeStatePath(spark: SparkSession, dir: String, rounds: Int = 3): String = {
+  def bpeStatePath(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.Row
     import spark.implicits._
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
-    graft.engine.SessionMemo.atRest(spark, ("bpe", dir, rounds),
+    graft.engine.SessionMemo.atRest(spark, ("bpe", dir),
         s"$dir/documents.parquet") { p =>
       Tables.documents(spark, dir)
         .select(explode(split(col("text"), " ")).as("w"))
@@ -1863,7 +1852,7 @@ object TextStats {
         .write.mode("overwrite").parquet(s"$p/w0")
       var k = 1
       var exhausted = false
-      while (k <= rounds && !exhausted) {
+      while (k <= 3 && !exhausted) {
         val dict = spark.read.parquet(s"$p/w${k - 1}")
         val best: Array[Row] = dict
           .select(col("cnt"), split(trim(col("sp")), "  ").as("syms"))
@@ -1906,8 +1895,8 @@ object TextStats {
     * symbol a character), `after` aggregates the last materialized round's
     * dictionary — on a pair-exhausted corpus that is the unchanged dict,
     * matching the oracle's empty-merge fallback CTEs. One row out. */
-  def bpeCompression(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val p = bpeStatePath(spark, dir, rounds)
+  def bpeCompression(spark: SparkSession, dir: String): DataFrame = {
+    val p = bpeStatePath(spark, dir)
     val lastRound = graft.engine.Fs.readParquet(spark, s"$p/merges")
       .agg(coalesce(max(col("merge_idx")), lit(0)).cast("int")).head().getInt(0)
     def symCount(path: String) =

@@ -293,18 +293,17 @@ object Events {
       .orderBy("user_id", "session_idx")
   }
 
-  /** Top user journeys (q110): each user's first `maxEvents` event types (by
-    * event_id) joined into a path string, then the most common paths. The
-    * per-user state is bounded (`maxEvents` structs, sorted by the explicit
+  /** Top user journeys (q110): each user's first 8 event types (by
+    * event_id) joined into a path string, then the 20 most common paths. The
+    * per-user state is bounded (8 structs, sorted by the explicit
     * `rn` — collect_list alone is ordering-nondeterministic), and the final
     * `orderBy.limit` plans as TakeOrderedAndProject. */
-  def userPaths(spark: SparkSession, dir: String, maxEvents: Int = 8,
-      topN: Int = 20): DataFrame = {
+  def userPaths(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("event_id")
     Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxEvents)
+      .filter(col("rn") <= 8)
       .groupBy("user_id")
       .agg(expr(
         """concat_ws('>', transform(array_sort(collect_list(struct(rn, event_type))),
@@ -312,12 +311,12 @@ object Events {
       .groupBy("path")
       .agg(count(lit(1)).as("n_users"))
       .orderBy(col("n_users").desc, col("path"))
-      .limit(topN)
+      .limit(20)
   }
 
   /** Half-life-decayed engagement score (q156): per user, event values
     * folded with a staircase exponential decay — value_cents div
-    * 2^((ref_day − event_day) div halfLifeDays) — entirely in exact integer
+    * 2^((ref_day − event_day) div 7) (a 7-day half-life) — entirely in exact integer
     * arithmetic (DECIMAL cents, then a power-of-two floor division per
     * halving step). The standard recency weighting for a serving-side
     * engagement/LTV feature, made bit-deterministic: a float pow() decay
@@ -326,8 +325,7 @@ object Events {
     * corpus's max event day (1-row broadcast), so the score is a pure
     * function of the data. Halvings cap at 40 (a 63-bit value is zero long
     * before that). One shuffle on user_id. */
-  def decayedEngagement(spark: SparkSession, dir: String,
-      halfLifeDays: Int = 7): DataFrame = {
+  def decayedEngagement(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"),
         expr("unix_micros(ts) div 86400000000").as("day"),
@@ -335,7 +333,7 @@ object Events {
     val ref = ev.agg(max(col("day")).as("ref_day"))
     ev.crossJoin(broadcast(ref))
       .withColumn("halvings",
-        expr(s"least((ref_day - day) div $halfLifeDays, 40)"))
+        expr("least((ref_day - day) div 7, 40)"))
       .withColumn("decayed_cents",
         expr("cents div shiftleft(CAST(1 AS BIGINT), CAST(halvings AS INT))"))
       .groupBy(col("user_id"))
@@ -346,7 +344,7 @@ object Events {
   }
 
   /** Event debounce / burst collapse (q142): consecutive events of the same
-    * (user, event_type) closer than `gapHours` collapse into one burst — the
+    * (user, event_type) closer than 2 hours collapse into one burst — the
     * retry-storm / double-fire suppression a feature-store ingest applies
     * before counting ("one purchase, not five rapid-fire submits"). Per
     * burst: the representative first event (min event_id — the one a
@@ -362,10 +360,10 @@ object Events {
     * Ordering is (epoch_us, event_id) per the events-table convention —
     * micro-precision ties break on the id, never on sub-micro timestamp
     * detail the two engines read differently. */
-  def eventDebounce(spark: SparkSession, dir: String, gapHours: Int = 2): DataFrame = {
+  def eventDebounce(spark: SparkSession, dir: String): DataFrame = {
     val byKey = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("us"), col("event_id"))
-    val gapMicros = gapHours.toLong * 3600L * 1000000L
+    val gapMicros = 2L * 3600L * 1000000L
     Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("us"))
@@ -394,9 +392,8 @@ object Events {
     * machinery on the day histogram — a calendar-bounded frame), broadcast
     * as a scalar; tagging is then a pure projection. Output: per split,
     * event/user counts and the day range — the datasheet that proves the
-    * split is contiguous, ordered, and gapped by exactly the embargo. */
-  def embargoSplit(spark: SparkSession, dir: String,
-      embargoDays: Int = 2): DataFrame = {
+    * split is contiguous, ordered, and gapped by exactly the 2-day embargo. */
+  def embargoSplit(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"),
         expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)").as("day"))
@@ -410,7 +407,7 @@ object Events {
     ev.crossJoin(broadcast(cut))
       .withColumn("split",
         when(col("day") < col("cut"), "train")
-          .when(col("day") < col("cut") + embargoDays, "embargo_dropped")
+          .when(col("day") < col("cut") + 2, "embargo_dropped")
           .otherwise("test"))
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_events"),

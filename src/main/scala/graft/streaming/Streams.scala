@@ -45,9 +45,9 @@ object Streams {
     * lag/cumsum version ([[Events.sessionize]]) can't express incrementally.
     * Emits a session when the gap is exceeded within a batch or on event-time
     * timeout. */
-  def sessionizeStream(spark: SparkSession, srcDir: String,
-      gapMs: Long = 30L * 60 * 1000): Dataset[SessionOut] = {
+  def sessionizeStream(spark: SparkSession, srcDir: String): Dataset[SessionOut] = {
     import spark.implicits._
+    val gapMs = 30L * 60 * 1000
 
     def flush(state: GroupState[SessionAcc], userId: Long): Iterator[SessionOut] =
       state.getOption.map { acc =>
@@ -136,11 +136,10 @@ object Streams {
     * replay parity is row-subset equality (append mode withholds sessions
     * newer than the final watermark — the same contract the
     * hourly-windows parity test pins). */
-  def sessionWindowStream(spark: SparkSession, srcDir: String,
-      gap: String = "30 minutes"): DataFrame =
+  def sessionWindowStream(spark: SparkSession, srcDir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(srcDir)
       .withWatermark("ts", "2 hours")
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"),
         graft.engine.Dec.sum2(col("value")).as("session_value"))
       .select(col("user_id"),
@@ -184,17 +183,16 @@ object Streams {
 
   /** Streaming debounce — the incremental form of the batch burst collapse
     * ([[Events.eventDebounce]], q142): within the watermark delay (= the
-    * debounce gap), only the FIRST event per (user_id, event_type) survives;
+    * 2-hour debounce gap), only the FIRST event per (user_id, event_type) survives;
     * repeats are suppressed, and the key's state is GC'd once the watermark
     * passes it, so state stays O(active keys within the gap) — never the
     * history. Batch form emits one row per burst with the suppressed count;
     * the stream emits the kept representative (count-of-suppressed is not
     * observable from a dedup operator — a production pipeline wanting counts
     * uses the [[Events.eventDebounce]] rollup over the at-rest copy). */
-  def debounceStream(spark: SparkSession, srcDir: String,
-      gap: String = "2 hours"): DataFrame =
+  def debounceStream(spark: SparkSession, srcDir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(srcDir)
-      .withWatermark("ts", gap)
+      .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
   /** Stream-STATIC enrichment join: the event stream joined to a static
@@ -317,12 +315,11 @@ object Streams {
     * end-to-end exactly-once, the same zero-state contract as
     * [[bandIndexStream]]. At 100 TB/day ingest the benchmark stays in RAM on
     * every executor and each wave costs one linear pass. */
-  def deconStream(spark: SparkSession, srcDir: String,
-      benchmarkDir: String, tau: Double = 0.4): DataFrame = {
+  def deconStream(spark: SparkSession, srcDir: String, benchmarkDir: String): DataFrame = {
     val bench = graft.ext.Similarity.evalBenchmark(spark, benchmarkDir)
     val waves = graft.ext.Similarity.withNorm(
       spark.readStream.schema(vectorSchema).parquet(srcDir), col("vec_id"))
-    graft.ext.Similarity.deconScreen(waves, bench, tau)
+    graft.ext.Similarity.deconScreen(waves, bench)
   }
 
   /** Drain [[deconStream]] into the parquet verdicts at `outPath`
@@ -356,7 +353,7 @@ object Streams {
     * the slices via recursive lookup. AvailableNow + checkpoint: re-invoking
     * drains only newly-landed files. */
   def runVectorIngest(spark: SparkSession, srcDir: String, indexPath: String,
-      verdictPath: String, checkpoint: String, threshold: Double = 0.4): Unit = {
+      verdictPath: String, checkpoint: String): Unit = {
     val q = spark.readStream.schema(vectorSchema).parquet(srcDir).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ss = batch.sparkSession
@@ -369,7 +366,7 @@ object Streams {
         val corpus =
           if (slices.nonEmpty) ss.read.parquet(slices: _*)
           else bucketized.filter(lit(false))
-        graft.ext.Similarity.dedupVerdicts(bucketized, corpus, threshold)
+        graft.ext.Similarity.dedupVerdicts(bucketized, corpus)
           .write.mode("overwrite").parquet(s"$verdictPath/b$batchId")
         bucketized.write.mode("overwrite").parquet(s"$indexPath/b$batchId")
         ()
@@ -557,7 +554,7 @@ object Streams {
     * stream (the one dataset-assembly operator whose streaming twin was
     * missing while its batch form existed — VERDICT r7 #6): each arriving
     * micro-batch of documents CONTINUES the corpus token stream, cut into
-    * fixed `seqLen`-token training sequences that start at the next
+    * fixed 256-token training sequences that start at the next
     * sequence boundary after the at-rest total (sealed-shard append — a
     * loader never re-reads a sealed shard to top it up, so every committed
     * manifest slice is immutable). Per-wave cost: one chunked-prefix
@@ -576,7 +573,8 @@ object Streams {
     * row-identical to [[graft.ext.TextStats.incrementalPacking]] over the
     * same at-rest corpus + wave split (StreamsSpec pins it). */
   def runPackingStream(spark: SparkSession, srcDir: String,
-      manifestPath: String, checkpoint: String, seqLen: Int = 256): Unit = {
+      manifestPath: String, checkpoint: String): Unit = {
+    val seqLen = 256
     val q = spark.readStream.schema(documentSchema).parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -644,7 +642,7 @@ object Streams {
     * only keys the watermark hasn't passed, so each wave's end-of-drain
     * state is O(wave), and stays FLAT as waves accumulate — on an unbounded
     * ingest the state never tracks corpus size (a plain streaming
-    * dropDuplicates would). `dupPct`% of each wave is fed twice (same
+    * dropDuplicates would). 1% of each wave is fed twice (same
     * event_id, same wave) to prove the dedup is actually doing work: the
     * sink must emit each event exactly once.
     *
@@ -653,7 +651,7 @@ object Streams {
     * Telemetry is read from the terminated query's `recentProgress`
     * (max `numRowsTotal` across the drain's micro-batches). */
   def dedupSoak(spark: SparkSession, sfDir: String, scratch: String,
-      waves: Int = 4, dupPct: Int = 1): Seq[SoakWave] = {
+      waves: Int = 4): Seq[SoakWave] = {
     require(waves >= 2, "soak needs at least 2 waves")
     val stage = s"$scratch/stage"; val out = s"$scratch/out"
     val ckpt = s"$scratch/ckpt"
@@ -673,7 +671,7 @@ object Streams {
     }
     (1 to waves).map { i =>
       val wdf = ev.filter(waveFilter(i))
-      val planted = wdf.filter(pmod(col("event_id"), lit(100)) < dupPct)
+      val planted = wdf.filter(pmod(col("event_id"), lit(100)) < 1)
       val fed = wdf.unionAll(planted)
       val nInput = fed.count()
       fed.write.mode("append").parquet(stage)

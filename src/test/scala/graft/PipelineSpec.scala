@@ -308,6 +308,17 @@ class PipelineSpec extends SparkSuite {
     assert(at("quality_checks") == at("silver"),
       s"gate jobs: ${jobs.slice(at("silver"), at("quality_checks"))}")
   }
+
+  test("gold dim_date and dim_time are each written as one data file") {
+    fixtures()
+    Pipeline.run(spark, csvDir, outDir)
+    for (dim <- Seq("dim_date", "dim_time")) {
+      val listing = Files.list(Paths.get(s"$outDir/gold/$dim"))
+      val parts = try listing.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("part-")).toList finally listing.close()
+      assert(parts.size == 1, s"$dim data files: $parts")
+    }
+  }
 }
 
 object PipelineSpec {

@@ -1,27 +1,53 @@
-import json, hashlib, sys
-import duckdb, pandas as pd, pyarrow.parquet as pq
-out_dir, sf_dir, dest = sys.argv[1], sys.argv[2], sys.argv[3]
-TABLES = ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]
-con = duckdb.connect()
-for t in TABLES:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-def canon(df):
-    df = df[sorted(df.columns)]
-    s = df.astype(str)
-    return s.loc[s.sort_values(by=list(s.columns)).index].reset_index(drop=True)
-def h(df):
+#!/usr/bin/env python3
+"""Write a JSON correctness artifact for one `graft.Verify` output directory.
+
+Usage: python3 tools/verify_artifact.py <outDir> <sfDir> <dest.json>
+
+Per query: whether rows, schema and hash match the DuckDB oracle (the same
+canonical form as tools/check.py: columns sorted by name, rows sorted,
+values stringified), the row counts, and `spark_hash`, the md5 of the
+canonical Spark output. The file holds no paths but `sfDir`, so two runs
+over the same fixture (say, a parent commit and a change) have the same
+output exactly when `diff parent.json change.json` prints nothing.
+"""
+import hashlib
+import json
+import os
+import sys
+
+import duckdb
+import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from check import TABLES, canon  # noqa: E402
+
+
+def md5(df):
     return hashlib.md5(df.to_csv(index=False).encode()).hexdigest()
-oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-res = {}
-for name, sql in sorted(oracle.items()):
-    got = canon(pq.read_table(f"{out_dir}/{name}").to_pandas())
-    exp = canon(con.execute(sql).df())
-    res[name] = {
-        "rows_match": len(got) == len(exp),
-        "schema_match": list(got.columns) == list(exp.columns),
-        "hash_match": h(got) == h(exp),
-        "spark_rows": len(got), "oracle_rows": len(exp), "err": None}
-meta = {"sf_dir": sf_dir, "note": "builder-run sf0.1 verify for the hash-keyed n-gram family (VERDICT r12 #1): 64-bit gram-hash collision-freedom re-verified one decade above the driver's sf0.01 gate against the string-keyed DuckDB oracle (tools/check.py canonicalization: columns sorted by name, rows sorted, values stringified)"}
-json.dump({"_meta": meta, **res}, open(dest, "w"), indent=2)
-print(json.dumps(res, indent=1))
+
+
+def main():
+    out_dir, sf_dir, dest = sys.argv[1], sys.argv[2], sys.argv[3]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    res = {}
+    for name, sql in sorted(oracle.items()):
+        got = canon(pq.read_table(f"{out_dir}/{name}").to_pandas())
+        exp = canon(con.execute(sql).df())
+        res[name] = {
+            "rows_match": len(got) == len(exp),
+            "schema_match": list(got.columns) == list(exp.columns),
+            "hash_match": md5(got) == md5(exp),
+            "spark_hash": md5(got),
+            "spark_rows": len(got), "oracle_rows": len(exp), "err": None}
+    json.dump({"_meta": {"sf_dir": sf_dir}, **res}, open(dest, "w"), indent=2)
+    bad = [n for n, r in res.items() if not r["hash_match"]]
+    print(f"{len(res) - len(bad)}/{len(res)} hash-match the oracle"
+          + (f"; mismatched: {bad}" if bad else ""))
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
