@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one way a graft session is built. Every main (Bench, Verify, Profile,
-  * SoakBench, Explain, GenData) and the shared test session start from
+  * Explain, GenData) and the shared test session start from
   * [[builder]], so the configuration the bench measures is the configuration
   * everything else runs; caller-specific settings go on the returned builder
   * or on the live session's runtime conf. */

@@ -152,7 +152,7 @@ object RelOps {
     // re-created the failure it meant to bound; round-12 ADVICE). This is
     // a property of this helper, not of whatever exchange produced the
     // keys; runner sessions also raise spark.driver.maxResultSize to 2g as
-    // belt-and-braces (Bench/Verify/SoakBench builders). The 8-way build
+    // belt-and-braces (GraftSession.settings). The 8-way build
     // pass is hashing
     // 8-byte keys; it is bandwidth-bound, not core-bound.
     val bf = cached.select(col(keyCol)).rdd

@@ -100,11 +100,9 @@ object Dedup {
     bandsProjection(Tables.documents(spark, dir))
       .orderBy("doc_id", "band_idx")
 
-  /** The shuffle-free banding as a reusable PROJECTION over any frame with
-    * (doc_id, text) — the form [[minhashBandsInline]] wraps for the catalog
-    * and [[graft.streaming.Streams.bandIndexStream]] applies per micro-batch
-    * (a pure projection is exactly what the streaming file sink can run
-    * with end-to-end exactly-once semantics and zero state).
+  /** The shuffle-free banding as a PROJECTION over a frame with
+    * (doc_id, text) — the form [[minhashBandsInline]] (q150) wraps for the
+    * catalog and [[lshOccupancyAudit]] (q230) aggregates.
     *
     * The 12-slot signature is ONE native codegen expression
     * ([[graft.functions.MinHashSignature]], `graft_minhash_sig`) rather than
@@ -115,7 +113,7 @@ object Dedup {
     * bit-identical (same md5-prefix base hash, same seed family — the q150
     * oracle recomputes q28's exhaustive form) and keeps the whole signature
     * inside WholeStageCodegen. */
-  def bandsProjection(docs: DataFrame): DataFrame = {
+  private def bandsProjection(docs: DataFrame): DataFrame = {
     val bandCols = (0 until 6).map { j =>
       (element_at(col("sig"), 2 * j + 1) * P + element_at(col("sig"), 2 * j + 2)).as(s"band$j")
     }
@@ -877,21 +875,24 @@ object Dedup {
         1, pfx).as("pg"))
       .select(col("c_custkey"), col("c_name"), col("nk"), col("seg"),
         explode(col("pg.gram")).as("gram"))
-      // EXPLICIT join-key partitioning at cluster parallelism (r14; guide
-      // §2.2/§2.5): the candidate join below fans out ~23× (2.44 M rows
-      // from a 105 k-row prefix stream at sf0.1) and the verifier +
-      // pair-distinct partials run INSIDE the join stage — but AQE sizes
-      // that stage from its INPUT bytes (~6 MB → coalesced to ~6
-      // partitions), so the whole verify phase ran on a fraction of the
-      // cores. AQE cannot see fan-out; an explicit-N repartition is the
-      // documented way to keep it from coalescing a stage whose output,
-      // not input, is the cost. defaultParallelism is cluster-adaptive
-      // (total cores), not a local constant; the join inherits this
-      // distribution (same keys), so no extra exchange is added — the
-      // prefix exchange moves from AQE-sized to parallelism-sized.
-      // Measured min-of-3 probe at sf0.1: join+verify 2.0-2.4 → 1.4 s;
-      // full q155 2.9 → ~1.9 s.
-      .repartition(spark.sparkContext.defaultParallelism,
+      // EXPLICIT join-key partitioning (r14; guide §2.2/§2.5): the
+      // candidate join below fans out ~23× (2.44 M rows from a 105 k-row
+      // prefix stream at sf0.1) and the verifier + pair-distinct partials
+      // run INSIDE the join stage — but AQE sizes that stage from its INPUT
+      // bytes (~6 MB → coalesced to ~6 partitions), so the whole verify
+      // phase ran on a fraction of the cores. AQE cannot see fan-out; an
+      // explicit-N repartition is the documented way to keep it from
+      // coalescing a stage whose output, not input, is the cost. N is the
+      // session's data-sized starting partition count
+      // (`initialPartitionNum`, GraftSession.initialParts: fixture/8 MB
+      // clamped to [cpus, 4096]), so it is bounded below by the cores and
+      // above by 4096 at any scale; a session that does not set it falls
+      // back to the core count. The join inherits this distribution (same
+      // keys), so no extra exchange is added. Measured min-of-3 probe at
+      // sf0.1: join+verify 2.0-2.4 → 1.4 s; full q155 2.9 → ~1.9 s.
+      .repartition(
+        spark.conf.getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+          .fold(spark.sparkContext.defaultParallelism)(_.toInt),
         col("nk"), col("seg"), col("gram"))
     // NOTE (r14, measured and reverted): rewriting this self-join with
     // dataset aliases so the two sides share one ReusedExchange ran 3.20 →

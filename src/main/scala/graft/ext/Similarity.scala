@@ -51,7 +51,7 @@ object Similarity {
 
   /** `keep`, the embedding cast to array<double> as `v`, and its L2 norm
     * `nrm`, dotted from the raw float embedding in the same projection. */
-  private[graft] def withNorm(df: DataFrame, keep: Column*): DataFrame =
+  private def withNorm(df: DataFrame, keep: Column*): DataFrame =
     df.select(keep :+ col("embedding").cast("array<double>").as("v") :+
       sqrt(Native.dot(col("embedding"), col("embedding"))).as("nrm"): _*)
 
@@ -263,10 +263,8 @@ object Similarity {
     * vector per consumer). At 100 TB this is exactly how a vector store
     * deploys — buckets are computed at ingest and kept beside the
     * embeddings. The plane count is derived from COUNT(*) via
-    * [[lshPlanesFor]] (a STREAM appending to an existing index pins the
-    * count the index was built with instead, [[bucketizeVectors]]). The
-    * derived count is a [[graft.engine.SessionMemo]] entry: deriving it runs
-    * a COUNT(*) job, and every consumer of the at-rest index (each
+    * [[lshPlanesFor]] and is a [[graft.engine.SessionMemo]] entry: deriving
+    * it runs a COUNT(*) job, and every consumer of the at-rest index (each
     * invocation) would otherwise pay that count just to NAME an index
     * already on disk. */
   def lshProjectionsPath(spark: SparkSession, dir: String): String = {
@@ -286,17 +284,11 @@ object Similarity {
   private def lshProjections(spark: SparkSession, dir: String): DataFrame =
     graft.engine.Fs.readParquet(spark, lshProjectionsPath(spark, dir))
 
-  /** Bucketize ANY (vec_id, embedding: array<float>) frame with the SHARED
-    * plane literals — the index-build projection (one corpus scan, pure
-    * codegen'd projection, no shuffle) exposed on its own, because
-    * a streaming ingest (StreamsSpec) must hash an arriving micro-batch with
-    * exactly the planes the at-rest index was built with, or its candidate
-    * join is garbage. The plane count is EXPLICIT here (not the
-    * [[lshPlanesFor]] law): an index's geometry is frozen at creation, and
-    * a stream appending to it must pin that frozen count — deriving from a
-    * growing corpus mid-stream would silently re-bucket later waves.
-    * Output: vec_id, v (double), nrm, prj, bucket. */
-  def bucketizeVectors(df: DataFrame, nPlanes: Int = 8): DataFrame = {
+  /** Bucketize a (vec_id, embedding: array<float>) frame with the shared
+    * plane literals — the index-build projection of [[lshProjectionsPath]]
+    * (one corpus scan, pure codegen'd projection, no shuffle). Output:
+    * vec_id, v (double), nrm, prj, bucket. */
+  private def bucketizeVectors(df: DataFrame, nPlanes: Int): DataFrame = {
     val dim = EmbeddingDim
     val base = withNorm(df, col("vec_id"))
     val prjArr = (0 until nPlanes).map { p =>
@@ -699,8 +691,8 @@ object Similarity {
   }
 
   /** q192: incremental batch-vs-corpus EMBEDDING dedup — the vector twin of
-    * [[graft.ext.Dedup.incrementalDedup]] (q85), the shape a streaming ingest
-    * actually needs: a small arriving batch ([[graft.engine.RelOps.inWave]]
+    * [[graft.ext.Dedup.incrementalDedup]] (q85), the shape an incremental
+    * ingest actually needs: a small arriving batch ([[graft.engine.RelOps.inWave]]
     * on vec_id stands in for it) checked against the big at-rest corpus
     * WITHOUT re-pairing the corpus against itself. Both sides read the at-rest LSH index
     * ([[lshProjectionsPath]]); candidates are an equi-join on the bucket with
@@ -712,18 +704,9 @@ object Similarity {
   def incrementalEmbeddingDedup(spark: SparkSession, dir: String): DataFrame = {
     val all = lshBuckets(spark, dir)
     val isBatch = graft.engine.RelOps.inWave(col("vec_id"))
-    dedupVerdicts(all.filter(isBatch), all.filter(!isBatch))
-  }
-
-  /** [[incrementalEmbeddingDedup]]'s verdict join over any two bucketed
-    * frames with (vec_id, v, nrm, bucket) — also the per-micro-batch body of
-    * the STREAMING ingest form (StreamsSpec wires it inside foreachBatch
-    * against a growing at-rest index). Batch side broadcasts; one hashed
-    * corpus pass. */
-  def dedupVerdicts(arriving: DataFrame, corpus: DataFrame): DataFrame = {
-    val batch = arriving
+    val batch = all.filter(isBatch)
       .select(col("vec_id"), col("v").as("qv"), col("nrm").as("qn"), col("bucket"))
-    val indexed = corpus
+    val indexed = all.filter(!isBatch)
       .select(col("bucket"), col("vec_id").as("c_id"), col("v").as("nv"), col("nrm").as("nn"))
     val hits = broadcast(batch).join(indexed, Seq("bucket"))
       .withColumn("cos", cosQN)
@@ -1097,30 +1080,6 @@ object Similarity {
     * A loud `require` rejects an empty eval sample (a benchmark-less screen
     * would silently pass everything — same guard contract as the IVF seeds). */
   def semanticDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val bench = evalBenchmark(spark, dir)
-    // the eval members themselves are excluded HERE, not inside the screen:
-    // this batch form screens the same corpus the benchmark was sampled
-    // from (eval rows would trivially self-match at cos 1.0), but a
-    // streaming ingest screens a DIFFERENT corpus against a collected
-    // benchmark — an arriving vector whose id merely aliases the
-    // benchmark's membership mod must still be screened
-    // ([[graft.streaming.Streams.deconStream]] screens every wave row).
-    deconScreen(vecs(spark, dir).filter(col("vec_id") % bench.evalMod =!= 0), bench)
-      .orderBy("vec_id")
-  }
-
-  /** The driver-collected eval benchmark ready for screening: the eval
-    * vectors as one literal Column (the [[graft.functions.ArgMaxCell]]
-    * table), the eval dimension frame for the cosine fetch, and the derived
-    * membership mod. One value object so the batch screen (q234) and the
-    * streaming ingest screen ([[graft.streaming.Streams.deconStream]]) share
-    * one benchmark artifact — in deployment the benchmark is COLLECTED ONCE
-    * (a fixed artifact) and corpora/waves are screened against it. */
-  case class EvalBenchmark(evals: Column, evalDim: DataFrame, evalMod: Long)
-
-  /** Collect the benchmark from `dir` (see [[semanticDecontaminate]] for the
-    * sizing law and scale argument). */
-  def evalBenchmark(spark: SparkSession, dir: String): EvalBenchmark = {
     val all = vecs(spark, dir)
     val evalMod = math.max(50L, all.count() / 1000L)
     val evalRows = all.filter(col("vec_id") % evalMod === 0)
@@ -1130,23 +1089,17 @@ object Similarity {
     val evalLits = evalRows.toSeq.map(r =>
       IvfCentroidLit(r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
     import spark.implicits._
-    EvalBenchmark(typedlit(evalLits), evalLits.toDF("eval_id", "ev", "en"), evalMod)
-  }
-
-  /** The screen itself over any (vec_id, v, nrm) frame — batch or streaming
-    * micro-batch alike (stateless projection + stream-static broadcast join,
-    * so the streaming form runs under the exactly-once file sink with zero
-    * state). Screens EVERY input row — corpus-membership exclusions (the
-    * batch same-corpus case drops the eval rows themselves) belong to the
-    * caller, so a stream screening a foreign corpus can never silently skip
-    * an arriving vector whose id aliases the benchmark's membership mod.
-    * Unordered; the batch catalog entry adds the output sort. */
-  def deconScreen(vframe: DataFrame, bench: EvalBenchmark): DataFrame =
-    vframe
-      .withColumn("nearest_eval_id", cellKey(col("v"), col("nrm"), bench.evals))
-      .join(broadcast(bench.evalDim), col("nearest_eval_id") === col("eval_id"))
+    val evalDim = evalLits.toDF("eval_id", "ev", "en")
+    // the eval members themselves are excluded: the screen runs over the
+    // same corpus the benchmark was sampled from, and an eval row would
+    // trivially self-match at cos 1.0
+    all.filter(col("vec_id") % evalMod =!= 0)
+      .withColumn("nearest_eval_id", cellKey(col("v"), col("nrm"), typedlit(evalLits)))
+      .join(broadcast(evalDim), col("nearest_eval_id") === col("eval_id"))
       .withColumn("cos", Native.dot(col("v"), col("ev")) / (col("nrm") * col("en")))
       .select(col("vec_id"), col("nearest_eval_id"),
         round(col("cos"), 4).as("cos_sim"),
         (col("cos") >= 0.4).as("contaminated"))
+      .orderBy("vec_id")
+  }
 }

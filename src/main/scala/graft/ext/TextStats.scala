@@ -1688,11 +1688,11 @@ object TextStats {
     packDocs(docs, 0L, seqLen)
   }
 
-  /** Shared pack core of q231/q232 and the streaming packer: a
+  /** Shared pack core of q231/q232: a
     * (doc_id, n)-grain token stream (doc_id order) cut into `seqLen`-token
     * sequences starting at global token `offset`. Doc-grain rows only; the
     * explode factor is 1 + n/seqLen. */
-  private[graft] def packDocs(docs: DataFrame, offset: Long,
+  private def packDocs(docs: DataFrame, offset: Long,
       seqLen: Int): DataFrame =
     graft.engine.RelOps.rangedCumsum(docs, "wcum", Seq("doc_id"), col("n"))
       .withColumn("cum", col("wcum") + lit(offset))

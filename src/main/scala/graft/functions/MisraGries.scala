@@ -20,11 +20,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * matching the broadcast candidate set.
   *
   * The buffer is a plain product of (Map[String, Long], Long) encoded with
-  * the PRODUCT encoder, not Kryo: in
-  * [[graft.streaming.Streams.heavyHitterCandidatesStream]] this buffer
-  * becomes persistent state-store checkpoint format, and a Kryo blob of a
-  * mutable collection is not a stable schema across Scala/Spark upgrades —
-  * the product encoding (MapType(String, Long) + LongType) is.
+  * the PRODUCT encoder, not Kryo: a Kryo blob of a mutable collection is not
+  * a stable schema across Scala/Spark upgrades — the product encoding
+  * (MapType(String, Long) + LongType) is.
   */
 final case class MgBuffer(counts: Map[String, Long], n: Long)
 

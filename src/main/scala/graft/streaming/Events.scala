@@ -10,16 +10,13 @@ import graft.engine.{Dec, Tables}
   *
   * The reference has no streaming (SURVEY §2.9 — its "real-time" is a 30-minute
   * Airflow re-run); these are the extension operators that map that cadence to
-  * real event-time semantics. Each exists in batch form here (oracle-checkable
-  * against DuckDB) and the windowed aggregate also as a Structured Streaming
-  * query in [[Streams]] — same logical plan, `readStream` + watermark instead
-  * of `read`.
+  * real event-time semantics, each in batch form (oracle-checkable against
+  * DuckDB); [[IncrementalPipeline]] maps the re-run cadence itself.
   */
 object Events {
 
-  /** Tumbling 1-hour windowed aggregate (batch form of the streaming query).
-    * `window()` is the same expression Structured Streaming plans — the shuffle
-    * is on (window, event_type), map-side partial aggregation applies. */
+  /** Tumbling 1-hour windowed aggregate (q35). The shuffle is on
+    * (window, event_type); map-side partial aggregation applies. */
   def hourlyWindows(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -353,10 +350,7 @@ object Events {
     *
     * Same lag-gap-cumsum shape as [[sessionize]] but keyed on (user_id,
     * event_type) — one shuffle on the composite key, both window passes and
-    * the final aggregate share that partitioning. The streaming form of this
-    * operator is `dropDuplicatesWithinWatermark` on (user_id, event_type)
-    * (kept-event semantics) — see StreamsSpec — with the gap as the
-    * watermark delay; the batch form here is the oracle-checkable spec.
+    * the final aggregate share that partitioning.
     * Ordering is (epoch_us, event_id) per the events-table convention —
     * micro-precision ties break on the id, never on sub-micro timestamp
     * detail the two engines read differently. */
@@ -445,16 +439,11 @@ object Events {
       Tables.events(spark, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("us"))))
 
-  /** Per-event arrival lateness — the shared core of the batch audit
-    * ([[watermarkLag]]) and the streaming monitor
-    * ([[Streams.runWatermarkLagMonitor]]): input (event_id, us), output one
-    * row per event with its simulated arrival time and ceiling-seconds
-    * lateness vs the maximum event time among strictly-earlier arrivals
-    * (order: arrival_us, then event_id). `carryInUs` is the high-water mark
-    * carried in from everything that arrived BEFORE this frame (prior
-    * micro-batches); the batch form passes Long.MinValue (nothing before). */
-  def arrivalLateness(events: DataFrame,
-      carryInUs: Long = Long.MinValue): DataFrame = {
+  /** Per-event arrival lateness for [[watermarkLag]]: input (event_id, us),
+    * output one row per event with its simulated arrival time and
+    * ceiling-seconds lateness vs the maximum event time among
+    * strictly-earlier arrivals (order: arrival_us, then event_id). */
+  private def arrivalLateness(events: DataFrame): DataFrame = {
     val chunked = events
       .withColumn("arrival_us", col("us") +
         (graft.functions.Native.md5Prefix(col("event_id").cast("string"), 7) % 7200) * 1000000)
@@ -471,8 +460,7 @@ object Events {
     inChunk.join(broadcast(carry), Seq("chunk"))
       .withColumn("run_max", greatest(
         coalesce(col("max_in"), lit(Long.MinValue)),
-        coalesce(col("carry_in"), lit(Long.MinValue)),
-        lit(carryInUs)))
+        coalesce(col("carry_in"), lit(Long.MinValue))))
       .withColumn("late_s",
         when(col("run_max") > col("us"),
           expr("(run_max - us + 999999) div 1000000"))
@@ -483,7 +471,7 @@ object Events {
   /** Lateness-percentile rollup over [[arrivalLateness]] rows — one row:
     * totals + p50/p90/p99/max of the LATE events (counting selection on the
     * lateness-seconds histogram, same machinery as q152). */
-  def latenessPercentiles(late: DataFrame): DataFrame = {
+  private def latenessPercentiles(late: DataFrame): DataFrame = {
     val hist = late.groupBy(col("late_s")).agg(count(lit(1)).as("c"))
     val wCum = Window.orderBy(col("late_s"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -584,6 +585,25 @@ class PlanSpec extends SparkSuite {
       s"nation must be a blocking key:\n$p")
     assert(joinKeys.contains("mktsegment") || joinKeys.contains("seg"),
       s"market segment must be a blocking key:\n$p")
+  }
+
+  test("q155 record linkage: the prefix repartition takes the session's initial partition count") {
+    // the explicit-N repartition before the fan-out join is sized by the
+    // data-sized initialPartitionNum (floor cpus, ceiling 4096), not by the
+    // core count: a value the two differ on shows which one it reads
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val prev = spark.conf.getOption(key)
+    val want = spark.sparkContext.defaultParallelism + 1
+    spark.conf.set(key, want.toString)
+    try {
+      val df = Catalog.queries("q155_record_linkage")(spark, dir)
+      val parts = df.queryExecution.analyzed.collect {
+        case r: RepartitionByExpression => r.numPartitions
+      }
+      assert(parts.nonEmpty && parts.forall(_ == want),
+        s"q155's prefix repartition must have $want partitions, found $parts:\n" +
+          df.queryExecution.analyzed)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("q156 decayed engagement: the reference date broadcasts as a scalar, never a shuffle") {
