@@ -11,19 +11,9 @@ import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
   */
 object Bronze {
 
-  /** CSV → DataFrame with pinned schema (S1). */
+  /** CSV → DataFrame with `table`'s pinned schema ([[Medallion.bronze]], S1). */
   def readCsv(spark: SparkSession, path: String, table: String): DataFrame =
-    spark.read.option("header", "true").schema(Schemas.olist(table)).csv(path)
-
-  /** All 9 Olist sources from a directory of `olist_<t>_dataset.csv` files,
-    * keyed like `ingestion.py:27-37`. */
-  def readAll(spark: SparkSession, dir: String): Map[String, DataFrame] =
-    Schemas.olist.keys.map { t =>
-      val file =
-        if (t == "product_category_name_translation") s"$dir/product_category_name_translation.csv"
-        else s"$dir/olist_${t}_dataset.csv"
-      t -> readCsv(spark, file, t)
-    }.toMap
+    spark.read.option("header", "true").schema(Medallion.named(Medallion.bronze, table).schema).csv(path)
 
   /** Parquet sink (replaces the reference's full-overwrite JDBC writes,
     * `ingestion.py:15-22` — at 100 TB a batchsize-1000 JDBC sink is the
@@ -156,29 +146,23 @@ object Bronze {
   }
 
   /** JDBC sink kept for reference parity (S2/S4 semantics: overwrite, batched,
-    * retry loop with linear backoff — `reporting.py:411-431`).
+    * 3 attempts with linear backoff, 1 s then 2 s — `reporting.py:411-431`),
+    * through [[Pipeline.withRetry]].
     *
     * @param onRetry  observability hook: (attempt just failed 1-based, error) —
     *                 called before each backoff sleep, NOT on the final failure
     * @param sleep    injectable backoff (tests pass a recorder; default real) */
   def writeJdbc(df: DataFrame, url: String, table: String, user: String,
-      password: String, batchSize: Int = 1000, maxRetries: Int = 3,
+      password: String, batchSize: Int = 1000,
       onRetry: (Int, Throwable) => Unit = (_, _) => (),
-      sleep: Long => Unit = Thread.sleep): Unit = {
-    def attempt(remaining: Int): Unit =
-      try df.write.format("jdbc")
+      sleep: Long => Unit = Thread.sleep): Unit =
+    Pipeline.withRetry(s"jdbc:$table", maxRetries = 3, delayMs = 1000L,
+        onRetry = (_, attempt, e) => onRetry(attempt, e), sleep = sleep) {
+      df.write.format("jdbc")
         .option("url", url).option("dbtable", table)
         .option("user", user).option("password", password)
         .option("batchsize", batchSize)
         .option("isolationLevel", "NONE")
         .mode(SaveMode.Overwrite).save()
-      catch {
-        case e: Exception if remaining > 1 =>
-          val attemptNo = maxRetries - remaining + 1
-          onRetry(attemptNo, e)
-          sleep(1000L * attemptNo)
-          attempt(remaining - 1)
-      }
-    attempt(maxRetries)
-  }
+    }
 }

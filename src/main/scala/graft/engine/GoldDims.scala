@@ -23,16 +23,6 @@ import org.apache.spark.sql.types.{DateType, IntegerType}
   */
 object GoldDims {
 
-  /** dim_date's range, the first and last purchase day, as aggregates for an
-    * `Observation` over silver orders; [[dateRange]] reads them back (both
-    * NULL when orders is empty). */
-  val dateRangeColumns: Seq[Column] = Seq(
-    to_date(min(col("Ord_Purchase_Time"))).as("first_purchase_day"),
-    to_date(max(col("Ord_Purchase_Time"))).as("last_purchase_day"))
-
-  def dateRange(metrics: Map[String, Any]): (Date, Date) =
-    (metrics("first_purchase_day").asInstanceOf[Date], metrics("last_purchase_day").asInstanceOf[Date])
-
   /** dim_date: range-source spine + 20 calendar attributes
     * (`reporting.py:55-93`), one row per day from `start` to `end`, none
     * when either is NULL (no orders; a stand-in start keeps the schema). The
@@ -203,18 +193,4 @@ object GoldDims {
             .when(col("Review_Score").isin(4, 5), "Positive")
             .otherwise("Unknown").as("Score_Category")),
       "Review_Score_SK", Seq("Review_Score"))
-
-  /** All 9 dims, keyed like `reporting.py:237-247`, over `silver` and the
-    * observed [[dateRange]], each built (no job) when its function is called. */
-  def builders(spark: SparkSession, silver: Map[String, DataFrame],
-      dateRange: (Date, Date)): Seq[(String, () => DataFrame)] = Seq(
-    "dim_date" -> (() => dimDateFromRange(spark, dateRange._1, dateRange._2)),
-    "dim_time" -> (() => dimTime(spark)),
-    "dim_customers" -> (() => dimCustomers(silver("customers"))),
-    "dim_products" -> (() => dimProducts(silver("products"))),
-    "dim_sellers" -> (() => dimSellers(silver("sellers"))),
-    "dim_geography" -> (() => dimGeography(silver("geolocation"))),
-    "dim_order_status" -> (() => dimOrderStatus(silver("orders"))),
-    "dim_payment_types" -> (() => dimPaymentTypes(silver("order_payments"))),
-    "dim_review_scores" -> (() => dimReviewScores(silver("order_reviews"))))
 }

@@ -25,17 +25,8 @@ import org.apache.spark.sql.types.IntegerType
   */
 object GoldFacts {
 
-  /** Each fact's last column, the year of its yyyyMMdd date SK, partitions its
-    * write: BI date-range queries prune at the file listing, a scale lever
-    * the reference's unpartitioned JDBC tables never had. */
-  val partitionColumns: Map[String, String] =
-    Map("fact_sales" -> "Order_Year", "fact_orders" -> "Order_Year", "fact_reviews" -> "Review_Year")
-
-  /** The 3 facts over `silver`, each built (no job) when its function is called. */
-  def builders(silver: Map[String, DataFrame]): Seq[(String, () => DataFrame)] = Seq(
-    "fact_sales" -> (() => factSales(silver)), "fact_orders" -> (() => factOrders(silver)),
-    "fact_reviews" -> (() => factReviews(silver)))
-
+  /** Appends the int year of the yyyyMMdd `dateSk`: each fact's last column,
+    * its write's partition in [[Medallion.gold]]. */
   private def withYear(df: DataFrame, dateSk: String, yearCol: String): DataFrame =
     df.withColumn(yearCol, (col(dateSk) / 10000).cast(IntegerType))
 

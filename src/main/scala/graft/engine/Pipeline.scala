@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions.{count, lit}
   * stage sequencing with concurrent table writes inside each stage, quality
   * gate between silver and gold, Parquet sinks in a medallion directory
   * layout (`out/{bronze,silver,gold}/`), idempotent by overwrite like the
-  * reference's 30-minute re-runs. The gate's violation counts and
-  * `dim_date`'s range ride on the silver writes' Observations
-  * ([[Quality.rules]], [[GoldDims.dateRangeColumns]]), so neither reads data.
+  * reference's 30-minute re-runs. Every table it writes is an entry of
+  * [[Medallion]]; the gate's violation counts and `dim_date`'s range are
+  * aggregates the silver entries declare, observed on their writes, so
+  * neither reads data.
   *
   * Side-effect hooks replace the DAG's email notification tasks (O4).
   */
@@ -25,8 +26,10 @@ object Pipeline {
 
   /** Stage-level retry (O3 — `Dag/E-commerce_dag.py:92-93`: every task runs
     * with `retries=1, retry_delay=30min`). Re-runs `body` up to `maxRetries`
-    * total attempts; stages are idempotent (overwrite sinks) so a re-run after
-    * a partial failure is safe, same as the reference's Airflow re-run.
+    * total attempts, waiting `delayMs × attempt` after each failed one (linear
+    * backoff; the JDBC sink's 1 s then 2 s); stages are idempotent (overwrite
+    * sinks) so a re-run after a partial failure is safe, same as the
+    * reference's Airflow re-run.
     *
     * @param onRetry observability hook (stage, attempt just failed 1-based, error)
     * @param sleep   injectable delay between attempts (default real sleep) */
@@ -38,7 +41,7 @@ object Pipeline {
       catch {
         case e: Exception if n < maxRetries =>
           onRetry(stage, n, e)
-          if (delayMs > 0) sleep(delayMs)
+          if (delayMs > 0) sleep(delayMs * n)
           attempt(n + 1)
       }
     attempt(1)
@@ -80,11 +83,12 @@ object Pipeline {
     }
   }
 
-  /** Run the full pipeline from an Olist CSV directory. Within each stage the
-    * table writes are independent and run concurrently ([[concurrently]]).
-    * The quality gate runs no job: it reads [[Quality.rules]]' violation
-    * counts from the silver writes' Observations, and a failed check throws
-    * before any gold write.
+  /** Run the full pipeline from an Olist CSV directory: every [[Medallion]]
+    * table, layer by layer, in declaration order. Within each stage the table
+    * writes are independent and run concurrently ([[concurrently]]).
+    * The quality gate runs no job: it reads the silver entries' check counts
+    * from the silver writes' Observations, and a failed check throws before
+    * any gold write.
     * Each stage gets 2 attempts with no delay between them ([[withRetry]]'s
     * defaults, O3): the reference also allows 2 attempts but waits 30 minutes,
     * which would stall a local run.
@@ -102,50 +106,45 @@ object Pipeline {
     }
 
     // Bronze: one session, explicit schemas (vs ingestion.py's session-per-table)
-    val bronze = Bronze.readAll(spark, csvDir)
+    val bronze = Medallion.bronze.map(t => t.name -> Bronze.readCsv(spark, s"$csvDir/${t.file}", t.name)).toMap
     staged("bronze") {
-      bronze.toSeq.map { case (name, df) =>
-        () => Bronze.writeParquet(df, s"$outDir/bronze/$name") }
+      Medallion.bronze.map(t => () => Bronze.writeParquet(bronze(t.name), s"$outDir/bronze/${t.name}"))
     }
 
     // Silver: 8 cleaned tables, written once each; each write counts its own
-    // rows and its quality rules' violations (orders: also dim_date's range)
-    // through an Observation, created per attempt as it is single-use
-    val silver = Silver.transformAll(bronze)
+    // rows, its checks' violations and its other declared aggregates through
+    // an Observation, created per attempt as it is single-use
+    val silver = Medallion.silver.map(t => t -> t.clean(bronze(t.name)))
     val silverOut = staged("silver") {
-      silver.toSeq.map { case (name, df) => () =>
+      silver.map { case (t, df) => () =>
         val metrics = Observation()
-        val columns = Quality.columns(name) ++ (if (name == "orders") GoldDims.dateRangeColumns else Nil)
-        Bronze.writeParquet(df.observe(metrics, count(lit(1)).as("rows"), columns: _*),
-          s"$outDir/silver/$name")
+        Bronze.writeParquet(df.observe(metrics, count(lit(1)).as("rows"), t.checks.map(_._2) ++ t.observed: _*),
+          s"$outDir/silver/${t.name}")
         // re-read so gold plans scan parquet instead of recomputing the
         // lineage; the schema is the one just written, so no inference job
-        (name, spark.read.schema(df.schema).parquet(s"$outDir/silver/$name"), metrics.get)
+        (t, spark.read.schema(df.schema).parquet(s"$outDir/silver/${t.name}"), metrics.get)
       }
     }
-    val silverStored = silverOut.map { case (n, df, _) => n -> df }.toMap
-    val observed = silverOut.map { case (n, _, m) => n -> m }.toMap
+    val silverStored = silverOut.map { case (t, df, _) => t.name -> df }.toMap
+    val observed = silverOut.map { case (t, _, m) => t.name -> m }.toMap
 
     // Quality gate between silver and gold — halts on violation (O2).
     // Deliberately NOT retried: a data-quality violation is deterministic —
     // re-running it would just re-fail after the delay.
-    val checks = Quality.enforce(Quality.rules.keys.toSeq.flatMap(t => Quality.results(t, observed(t))))
+    val checks = Quality.enforce(silverOut.flatMap { case (t, _, m) =>
+      t.checks.map { case (name, _) => Quality.CheckResult(name, m(name).asInstanceOf[Long]) }
+    })
     onStageComplete("quality_checks")
 
     // Gold: 9 dims + 3 facts. Building one runs no job (dim_date's range was
     // observed above), but each is still built inside its own write task so
-    // that the 12 analyses overlap. The facts (4-7 jobs each) go first, ahead
-    // of the dims (1-4), so the longest writes do not start last and set
-    // the stage's tail. GoldFacts names each fact's partition.
-    val builders = GoldFacts.builders(silverStored) ++
-      GoldDims.builders(spark, silverStored, GoldDims.dateRange(observed("orders")))
-    val gold = builders.map { case (name, build) =>
-      name -> (() => Bronze.writeParquet(build(), s"$outDir/gold/$name",
-        partitionBy = GoldFacts.partitionColumns.get(name).toSeq))
+    // that the 12 analyses overlap.
+    staged("gold") {
+      Medallion.gold.map(t => () => Bronze.writeParquet(t.build(spark, silverStored, observed),
+        s"$outDir/gold/${t.name}", partitionBy = t.partition.toSeq))
     }
-    staged("gold")(gold.map(_._2))
 
     RunReport(observed.map { case (n, m) => n -> m("rows").asInstanceOf[Long] }, checks,
-      gold.map(_._1).sorted)
+      Medallion.gold.map(_.name).sorted)
   }
 }

@@ -1,18 +1,17 @@
 package graft.engine
 
-import scala.collection.immutable.ListMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Native
 
 /** Data-quality gates: the reference runs these as SQL in Postgres from Airflow
   * (`Dag/E-commerce_dag.py:11-47`) and raises to halt the DAG (`:49-77`); here
-  * they are one table of Spark aggregates ([[rules]]), halting via exception —
-  * no external store, no process boundary (SURVEY §2.11 O2, §2.5 A5). The
-  * batch pipeline reads them off its silver writes' Observations, the stream
-  * evaluates them on each cleaned batch before the append, and [[gate]]
-  * evaluates them over any silver DataFrames.
+  * each silver table's [[Medallion.SilverTable]] entry declares its checks as
+  * Spark aggregates ([[check]]), halting via exception — no external store,
+  * no process boundary (SURVEY §2.11 O2, §2.5 A5). The batch pipeline reads
+  * them off its silver writes' Observations, the stream evaluates them on each
+  * cleaned batch before the append, and [[gate]] evaluates them over any
+  * silver DataFrames.
   */
 object Quality {
 
@@ -20,40 +19,20 @@ object Quality {
     def passed: Boolean = violations == 0L
   }
 
-  /** Violation count of `cond`: 0, not NULL, over an empty table. */
-  private def violations(cond: Column): Column =
-    coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L))
+  /** A check of the reference's gate (`E-commerce_dag.py:22-37`): its name and
+    * the count of rows where `violates` holds, as an aggregate Column aliased
+    * by that name (0, not NULL, over an empty table), for an `agg` or an
+    * `Observation`. */
+  def check(name: String, violates: Column): (String, Column) =
+    name -> coalesce(sum(when(violates, 1L).otherwise(0L)), lit(0L)).as(name)
 
-  /** The reference's gate (`E-commerce_dag.py:22-37`), declared once: per
-    * silver table, each check's name and its violation count as an aggregate
-    * Column. Declaration order is the order of every gate's results. */
-  val rules: ListMap[String, Seq[(String, Column)]] = ListMap(
-    "order_items" -> Seq(
-      "order_items.Ord_ID not null" -> violations(col("Ord_ID").isNull),
-      "order_items.Prod_ID not null" -> violations(col("Prod_ID").isNull)),
-    "order_reviews" -> Seq(
-      "order_reviews.Rev_ID not null" -> violations(col("Rev_ID").isNull),
-      "order_reviews.Rev_ID length = 32" -> violations(length(col("Rev_ID")) =!= 32)))
-
-  /** `table`'s rules as aggregates aliased by check name: an `agg` or an
-    * `Observation` over them yields the metrics [[results]] reads. */
-  def columns(table: String): Seq[Column] =
-    rules.getOrElse(table, Nil).map { case (name, c) => c.as(name) }
-
-  /** `table`'s check results from a metrics row of its [[columns]]. */
-  def results(table: String, metrics: Map[String, Any]): Seq[CheckResult] =
-    rules.getOrElse(table, Nil).map { case (name, _) =>
-      CheckResult(name, metrics(name).asInstanceOf[Long])
+  /** `checks`' results in one aggregate pass over `df`; no job without checks. */
+  def evaluate(checks: Seq[(String, Column)], df: DataFrame): Seq[CheckResult] =
+    if (checks.isEmpty) Nil
+    else {
+      val row = df.agg(checks.head._2, checks.tail.map(_._2): _*).head()
+      checks.map { case (name, _) => CheckResult(name, row.getAs[Long](name)) }
     }
-
-  /** `table`'s check results in one aggregate pass over `df`; no job for a
-    * table without rules. */
-  def evaluate(table: String, df: DataFrame): Seq[CheckResult] = columns(table) match {
-    case Seq() => Nil
-    case cols =>
-      val row = df.agg(cols.head, cols.tail: _*).head()
-      results(table, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
-  }
 
   /** Halts like the DAG's ValueError (`E-commerce_dag.py:69-77`) when any
     * check failed; returns `results` otherwise. */
@@ -317,8 +296,8 @@ object Quality {
       .orderBy("digit")
   }
 
-  /** Every rule over its table in `silver`, one aggregate pass each; a
-    * missing table throws. */
+  /** Every silver table's checks over its frame in `silver`, one aggregate
+    * pass each; a missing table with checks throws. */
   def gate(silver: Map[String, DataFrame]): Seq[CheckResult] =
-    enforce(rules.keys.toSeq.flatMap(t => evaluate(t, silver(t))))
+    enforce(Medallion.silver.filter(_.checks.nonEmpty).flatMap(t => evaluate(t.checks, silver(t.name))))
 }

@@ -16,8 +16,8 @@ import graft.functions.Native
   *    the first row under a total order (same multiset of keys, stable across
   *    runs);
   *  - order_items dedup by Ord_ID destroys the order-item grain (reference bug,
-  *    `transformation.py:70` vs `reporting.py:250`); `cleanOrderItems` keeps it
-  *    by default for parity, `dedupItems = false` preserves the true grain;
+  *    `transformation.py:70` vs `reporting.py:250`); `cleanOrderItems` keeps
+  *    the bug for parity, so silver and `fact_sales` hold one item per order;
   *  - `initcap` is the reference's PySpark 3.5 one ([[Native.initcap]]: lower
   *    the string, then title-case each space-separated word's first letter,
   *    per code point), not Spark 4's ICU default. They differ only where a
@@ -69,20 +69,18 @@ object Silver {
       Native.initcap(col("geolocation_city")).as("Geo_City"),
       col("geolocation_state").as("Geo_State"))
 
-  /** `transformation.py:62-70`. `dedupItems = false` keeps the order-item grain
-    * (the corrected behavior; default mirrors the reference). */
-  def cleanOrderItems(df: DataFrame, dedupItems: Boolean = true): DataFrame = {
-    val projected = df.select(
-      col("order_id").as("Ord_ID"),
-      col("order_item_id").as("Ord_Item_ID"),
-      col("product_id").as("Prod_ID"),
-      col("seller_id").as("Sell_ID"),
-      col("shipping_limit_date").as("Shipping_Limit_Date"),
-      col("price").as("Price"),
-      col("freight_value").as("Freight_Value"))
-    if (dedupItems) dedupBy(projected, "Ord_ID", Seq("Ord_Item_ID", "Prod_ID"))
-    else projected
-  }
+  /** `transformation.py:62-70`, dedup by Ord_ID included (see above). */
+  def cleanOrderItems(df: DataFrame): DataFrame =
+    dedupBy(
+      df.select(
+        col("order_id").as("Ord_ID"),
+        col("order_item_id").as("Ord_Item_ID"),
+        col("product_id").as("Prod_ID"),
+        col("seller_id").as("Sell_ID"),
+        col("shipping_limit_date").as("Shipping_Limit_Date"),
+        col("price").as("Price"),
+        col("freight_value").as("Freight_Value")),
+      "Ord_ID", Seq("Ord_Item_ID", "Prod_ID"))
 
   /** `transformation.py:74-81`: dedup by order + drop 'not_defined'. */
   def cleanOrderPayments(df: DataFrame): DataFrame =
@@ -133,22 +131,4 @@ object Silver {
       col("seller_zip_code_prefix").as("Sell_Zip_Code_Prefix"),
       Native.initcap(col("seller_city")).as("Sell_City"),
       col("seller_state").as("Sell_State"))
-
-  /** The cleaner of each of the 8 silver tables, keyed by its bronze source
-    * (translation table dropped at silver per the reference); the batch
-    * pipeline and the stream both clean through it. */
-  val cleaners: Map[String, DataFrame => DataFrame] = Map(
-    "customers" -> cleanCustomers,
-    "orders" -> cleanOrders,
-    "geolocation" -> cleanGeolocation,
-    "order_items" -> (df => cleanOrderItems(df)),
-    "order_payments" -> cleanOrderPayments,
-    "order_reviews" -> cleanOrderReviews,
-    "products" -> cleanProducts,
-    "sellers" -> cleanSellers)
-
-  /** All 8 silver tables from their bronze inputs — the shape of
-    * `transform(spark)` (`transformation.py:122-131`). */
-  def transformAll(bronze: Map[String, DataFrame]): Map[String, DataFrame] =
-    cleaners.map { case (table, clean) => table -> clean(bronze(table)) }
 }

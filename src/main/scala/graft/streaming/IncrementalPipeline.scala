@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
-import graft.engine.{GoldFacts, Quality, Schemas, Silver}
+import graft.engine.{Medallion, Quality}
 
 /** Incremental medallion pipeline: the streaming replacement for the
   * reference's re-run-everything-every-30-minutes model
@@ -20,16 +20,16 @@ object IncrementalPipeline {
   /** Incrementally ingest + clean any of the 8 silver tables from `csvDir`
     * into `outDir/silver/<table>` parquet; returns after the backlog drains.
     *
-    * Cleaning runs inside `foreachBatch` (the keyed-dedup cleaners use
-    * row_number windows, which streaming plans don't allow pre-sink) with
-    * [[Silver.cleaners]], the batch pipeline's cleaners. The table's
-    * [[Quality.rules]] then run on the cleaned batch before any write — the
-    * O2 gate moved into the stream: a violation fails the stream with
-    * nothing committed for that batch, halting ingestion exactly like the
-    * DAG's ValueError halts the 30-minute run. Keyed dedup is therefore
-    * per-micro-batch — cross-batch duplicates are handled downstream (gold
-    * rebuilds or [[graft.engine.Scd2]]), same grain the reference's per-run
-    * dropDuplicates has per 30-minute cycle.
+    * The table's [[Medallion.silver]] entry, which the batch pipeline also
+    * writes from, gives the schema, the cleaner and the checks. Cleaning runs
+    * inside `foreachBatch` (the keyed-dedup cleaners use row_number windows,
+    * which streaming plans don't allow pre-sink); the checks then run on the
+    * cleaned batch before any write — the O2 gate moved into the stream: a
+    * violation fails the stream with nothing committed for that batch,
+    * halting ingestion exactly like the DAG's ValueError halts the 30-minute
+    * run. Keyed dedup is therefore per-micro-batch — cross-batch duplicates
+    * are handled downstream (gold rebuilds or [[graft.engine.Scd2]]), same
+    * grain the reference's per-run dropDuplicates has per 30-minute cycle.
     *
     * Failure atomicity: source offsets commit only after the batch function
     * returns, so a gate throw re-presents the same batch on restart. The
@@ -40,18 +40,18 @@ object IncrementalPipeline {
     * tables that need no gate or dedup. */
   def runTableAvailableNow(spark: SparkSession, table: String, csvDir: String,
       outDir: String): Unit = {
-    val clean = Silver.cleaners(table)
+    val t = Medallion.named(Medallion.silver, table)
     val bronze = spark.readStream
       .option("header", "true")
-      .schema(Schemas.olist(table))
+      .schema(t.bronze.schema)
       .csv(csvDir)
     val q = bronze.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
         // persist: the gate aggregate and the write would otherwise each
         // re-run the clean lineage (incl. the dedup window shuffle)
-        val cleaned = clean(batch).persist()
+        val cleaned = t.clean(batch).persist()
         try {
-          Quality.enforce(Quality.evaluate(table, cleaned))
+          Quality.enforce(Quality.evaluate(t.checks, cleaned))
           cleaned.write.mode("append").parquet(s"$outDir/silver/$table")
         } finally cleaned.unpersist()
       }
@@ -99,8 +99,9 @@ object IncrementalPipeline {
     // restrict ORDERS to the target years up front; items/payments are inner-
     // joined on Ord_ID so the filter propagates through the fact build
     val scoped = silver.updated("orders", silver("orders").filter(year(col("Ord_Purchase_Time")).isin(years: _*)))
-    val part = GoldFacts.partitionColumns("fact_orders")
-    val built = GoldFacts.factOrders(scoped)
+    val factOrders = Medallion.named(Medallion.gold, "fact_orders")
+    val part = factOrders.partition.get
+    val built = factOrders.build(spark, scoped, Map.empty)
     val base = new org.apache.hadoop.fs.Path(s"$outDir/gold/fact_orders")
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     val skOffset =
@@ -278,11 +279,12 @@ object IncrementalPipeline {
     * `outDir/silver/orders` parquet via the exactly-once streaming file sink
     * (checkpoint + _spark_metadata). Returns after the backlog is drained. */
   def runOrdersAvailableNow(spark: SparkSession, csvDir: String, outDir: String): Unit = {
+    val orders = Medallion.named(Medallion.silver, "orders")
     val bronze = spark.readStream
       .option("header", "true")
-      .schema(Schemas.orders)
+      .schema(orders.bronze.schema)
       .csv(csvDir)
-    val silver = Silver.cleanOrders(bronze)
+    val silver = orders.clean(bronze)
     val q = silver.writeStream
       .format("parquet")
       .option("path", s"$outDir/silver/orders")

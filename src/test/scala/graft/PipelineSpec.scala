@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import graft.engine.{Analytics, Bronze, GoldDims, GoldFacts, Pipeline, Quality, Silver}
+import graft.engine.{Analytics, Bronze, Medallion, Pipeline, Quality}
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -129,8 +129,12 @@ class PipelineSpec extends SparkSuite {
 
   test("building the 12 gold frames from silver and an observed date range runs no job") {
     fixtures()
-    val silver = Silver.transformAll(Bronze.readAll(spark, csvDir))
-    val range = (java.sql.Date.valueOf("2017-03-01"), java.sql.Date.valueOf("2017-04-02"))
+    val silver = Medallion.silver.map(t =>
+      t.name -> t.clean(Bronze.readCsv(spark, s"$csvDir/${t.bronze.file}", t.name))).toMap
+    // what the silver orders write observes: dim_date's range
+    val orders = Medallion.named(Medallion.silver, "orders")
+    val range = silver("orders").agg(orders.observed.head, orders.observed.tail: _*).head()
+    val observed = Map("orders" -> range.getValuesMap[Any](range.schema.fieldNames.toSeq))
     val sc = spark.sparkContext
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
@@ -139,14 +143,15 @@ class PipelineSpec extends SparkSuite {
     TestListenerBus.drain(sc)
     sc.addSparkListener(listener)
     val built = try {
-      val frames = (GoldDims.builders(spark, silver, range) ++ GoldFacts.builders(silver))
-        .map { case (name, build) => name -> build() }.toMap
+      val frames = Medallion.gold.map(t => t.name -> t.build(spark, silver, observed)).toMap
       TestListenerBus.drain(sc)
       frames
     } finally sc.removeSparkListener(listener)
     assert(jobs.get() == 0)
     assert(built.size == 12)
-    for ((fact, part) <- GoldFacts.partitionColumns)
+    val partitioned = Medallion.gold.flatMap(t => t.partition.map(t.name -> _))
+    assert(partitioned.map(_._1) == Seq("fact_sales", "fact_orders", "fact_reviews"))
+    for ((fact, part) <- partitioned)
       assert(built(fact).columns.last == part, fact)
   }
 
@@ -166,7 +171,7 @@ class PipelineSpec extends SparkSuite {
     assert(stages.toSeq == Seq("bronze", "silver"))
     assert(!Files.exists(Paths.get(s"$badOut/gold")))
     // the silver the run wrote fails a gate that scans it with the same message
-    val silver = Silver.cleaners.keys.map(t => t -> spark.read.parquet(s"$badOut/silver/$t")).toMap
+    val silver = Medallion.silver.map(t => t.name -> spark.read.parquet(s"$badOut/silver/${t.name}")).toMap
     assert(intercept[IllegalArgumentException](Quality.gate(silver)).getMessage == e.getMessage)
     rmTree(badOut)
   }
@@ -179,6 +184,25 @@ class PipelineSpec extends SparkSuite {
       "order_reviews.Rev_ID length = 32"))
     val silver = report.silverRows.keys.map(t => t -> spark.read.parquet(s"$outDir/silver/$t")).toMap
     assert(report.qualityChecks == Quality.gate(silver))
+  }
+
+  test("the written layout is the declaration: 9 bronze, 8 silver and 12 gold table directories") {
+    fixtures()
+    val layoutOut = "/tmp/graft_olist_layout"
+    rmTree(layoutOut)
+    val report = Pipeline.run(spark, csvDir, layoutOut)
+    def written(layer: String): Set[String] = {
+      val listing = Files.list(Paths.get(s"$layoutOut/$layer"))
+      try listing.iterator.asScala.map(_.getFileName.toString).toSet finally listing.close()
+    }
+    for ((layer, tables) <- Seq("bronze" -> Medallion.bronze, "silver" -> Medallion.silver,
+        "gold" -> Medallion.gold))
+      assert(written(layer) == tables.map(_.name).toSet, layer)
+    assert(Seq(Medallion.bronze, Medallion.silver, Medallion.gold).map(_.map(_.name).distinct.size) ==
+      Seq(9, 8, 12))
+    assert(report.silverRows.keySet == Medallion.silver.map(_.name).toSet)
+    assert(report.goldTables == Medallion.gold.map(_.name).sorted)
+    rmTree(layoutOut)
   }
 
   /** Live threads of a stage's write pool. */

@@ -16,7 +16,6 @@ class RetrySpec extends SparkSuite {
     val sleeps = ArrayBuffer[Long]()
     intercept[Exception] {
       Bronze.writeJdbc(df, "jdbc:postgresql://127.0.0.1:1/nope", "t", "u", "p",
-        maxRetries = 3,
         onRetry = (attempt, _) => retried += attempt,
         sleep = sleeps += _)
     }

@@ -69,7 +69,6 @@ class SilverSpec extends SparkSuite {
     val deduped = Silver.cleanOrderItems(df)
     assert(deduped.count() == 2)
     assert(deduped.filter("Ord_ID = 'o1'").head().getAs[Int]("Ord_Item_ID") == 1)
-    assert(Silver.cleanOrderItems(df, dedupItems = false).count() == 3)
   }
 
   test("customers/products: initcap + category underscore cleanup") {
